@@ -561,9 +561,10 @@ object Layout {
       }
     }
     val probe = values.toDF("__graft_probe")
-    val base = spark.read.parquet(path)
+    // the empty frame is built only when nothing is a candidate: its
+    // schema inference is a job of its own
     val result =
-      if (candidates.isEmpty) base.where(lit(false))
+      if (candidates.isEmpty) spark.read.parquet(path).where(lit(false))
       else spark.read.parquet(candidates: _*)
         .join(broadcast(probe), col(keyCol) === col("__graft_probe"), "left_semi")
     BloomLookup(result, candidates, all.size)
@@ -571,9 +572,9 @@ object Layout {
 
   /** [[bloomIndexLookup]] with the probe keys AS A DATAFRAME — the form
     * that survives when the probe set outgrows the driver (a joinable
-    * request table instead of an IN-list): candidate resolution is
-    * [[snapshotPointLookup]]'s distributed shape — the probes' (word,
-    * mask) requirements join the index on the word id, a file is a hit
+    * request table instead of an IN-list): candidate resolution stays
+    * distributed end to end — the probes' (word, mask) requirements are
+    * themselves a frame and join the index on the word id, a file is a hit
     * for probe p iff ALL of p's word-masks are satisfied (counted with
     * one partial-aggregated pass; the probe VALUE doubles as the probe
     * id, so no driver-side need-count map either). Duplicate index rows
@@ -625,9 +626,8 @@ object Layout {
       val name = f.substring(f.lastIndexOf('/') + 1)
       !indexed(name) || satisfied(name) // unindexed: conservative
     }
-    val base = spark.read.parquet(path)
     val result =
-      if (candidates.isEmpty) base.where(lit(false))
+      if (candidates.isEmpty) spark.read.parquet(path).where(lit(false))
       else spark.read.parquet(candidates: _*)
         .join(broadcast(kdf), col(keyCol) === col("__graft_probe"),
           "left_semi")
@@ -655,7 +655,18 @@ object Layout {
     */
   def maintainBloomIndex(spark: org.apache.spark.sql.SparkSession,
       baseRoot: String, idxRoot: String, keyCol: String,
-      mBits: Int = BloomIndexBits): Int = {
+      mBits: Int = BloomIndexBits): Int =
+    maintainBloomIndexInventory(spark, baseRoot, idxRoot, keyCol, mBits)._1
+
+  /** [[maintainBloomIndex]] returning, next to the covered head, the
+    * INVENTORY of base-file names the index holds rows for after the
+    * run — the one distinct pass over the index a maintenance cycle
+    * takes, plus the names this run appended. O(indexed files) names,
+    * never the bit payload.
+    */
+  private def maintainBloomIndexInventory(
+      spark: org.apache.spark.sql.SparkSession, baseRoot: String,
+      idxRoot: String, keyCol: String, mBits: Int): (Int, Set[String]) = {
     import graft.functions.Bloom
     val vs = snapshotVersions(spark, baseRoot)
     require(vs.nonEmpty, s"no snapshots at $baseRoot")
@@ -665,67 +676,57 @@ object Layout {
       if (snapshotVersions(spark, idxRoot).isEmpty) Set.empty
       else readSnapshot(spark, idxRoot).select(col("file")).distinct()
         .collect().map(_.getString(0)).toSet
-    val newFiles = manifestFiles(spark, baseRoot, head)
-      .filterNot(f => have(baseName(f)))
-    if (newFiles.isEmpty) return head
-    val rows = spark.read.parquet(newFiles: _*)
+    val newEntries = manifestEntries(spark, baseRoot, head)
+      .filterNot(e => have(baseName(e.path)))
+    if (newEntries.isEmpty) return (head, have)
+    val newNames = newEntries.map(e => baseName(e.path))
+    val rows = manifestRelation(spark, baseRoot, newEntries,
+        manifestHeader(spark, baseRoot, head))._1
       .select(element_at(split(input_file_name(), "/"), -1).as("file"),
         explode(Bloom.positionsFor(col(keyCol).cast("long"), mBits)).as("pos"))
       .select(col("file"), (col("pos") / 64).cast("int").as("w"),
         call_function("shiftleft", lit(1L), (col("pos") % 64).cast("int")).as("m"))
       .groupBy(col("file"), col("w")).agg(bit_or(col("m")).as("bits"))
-    // files contributing NO positions (empty files, all-null key column)
-    // record a (w=-1, bits=0) MARKER row: "indexed, contains nothing".
-    // Without it such a file never enters the index and stays an
-    // eternal conservative candidate — every point lookup would scan it
-    // forever. No probe requirement ever targets w=-1, so the marker
-    // satisfies nothing and the file prunes on every probe.
+    // every new file records a (w=-1, bits=0) MARKER row: "indexed".
+    // A file contributing NO positions (an empty file) would otherwise
+    // never enter the index and stay an eternal conservative candidate —
+    // every point lookup would scan it forever. No probe requirement ever
+    // targets w=-1, so the marker satisfies nothing; written for every
+    // file, it needs no second pass over the rows to find the empty ones.
     import spark.implicits._
-    val markers = newFiles.map(baseName).toDF("file")
-      .join(rows.select(col("file")).distinct(), Seq("file"), "left_anti")
+    val markers = newNames.toDF("file")
       .select(col("file"), lit(-1).cast("int").as("w"), lit(0L).as("bits"))
     snapshotAppend(spark, idxRoot,
       rows.unionByName(markers).withColumn("base_version", lit(head))
         .coalesce(1))
-    head
+    (head, have ++ newNames)
   }
 
-  /** Point/IN-list lookup on the VERSIONED table through
-    * [[maintainBloomIndex]]'s index — ≡ `readSnapshot(...).filter(keyCol
-    * IN values)`, including MOR delete semantics: candidate files (bloom
-    * hit, or not yet indexed — conservative) are read through the same
-    * MOR-aware subset engine as a partition read, so delete sidecars
-    * still apply; then one broadcast semi-join against the probe set.
-    * No false negatives (bloom contract + conservative unindexed rule)
-    * makes the result exact; false positives cost one wasted file scan.
-    *
-    * Candidate resolution is DISTRIBUTED: the probes' (word, mask)
-    * requirements (broadcast: |values|·k rows) join the index table on
-    * the word id; a file whose bits satisfy ALL k masks of some probe is
-    * a candidate, found with one partial-aggregated pass over the index
-    * — the index NEVER collects to the driver (at 10⁶ files it is
-    * ~16 GB; only the O(candidates) file names come back). The bare-
-    * directory [[bloomIndexLookup]] keeps its driver-side test for
-    * bounded file counts; this is the production form.
-    */
   /** Per-file bloom verdicts for a probe set: file base-name → "might
     * contain some probe". Files absent from the map are UNINDEXED
     * (maintenance lag) — callers must treat them as candidates. The one
-    * distributed candidate-resolution pass shared by
-    * [[snapshotPointLookup]] and the DSv2 scan's equality skipping:
+    * candidate-resolution pass shared by [[snapshotPointLookup]] and the
+    * DSv2 scan's equality skipping, in ONE aggregation over the index:
     *
-    * (probeId, w, m): probe p requires bit m set in word w. k masks per
-    * probe (dedup'd within a word); a file is a hit for p iff ALL its
-    * requirements hold — counted distributively. ONE pass over the
-    * index produces per-file (indexed, hit) status: a left join keeps
-    * index rows matching no requirement word (need null), so every
-    * indexed file surfaces; what returns to the driver is O(indexed
-    * files) NAMES + booleans — name-scale like the manifest itself,
-    * never the 16 KiB/file bit payload. Duplicate index rows (two
-    * overlapping maintenance runs both committing a file's rows —
-    * value-identical, blooms being pure functions of immutable content)
-    * collapse via bit_or over (file, w) before counting, the
-    * no-false-negative guard.
+    *  - the probes' needs (word → mask, k words per probe) are computed
+    *    on the driver through the build's own Catalyst expression — a
+    *    projection over a local relation, folded at optimization, so no
+    *    job;
+    *  - each probe owns a field of `Bloom.K` bits in one of
+    *    ⌈probes / ⌊64 / K⌋⌉ long CHUNKS, one bit per needed word; a
+    *    literal map word → (chunk, bit, need) tags every index row with
+    *    the needs it can satisfy (`bits & need == need`);
+    *  - `groupBy(file)` bit-ORs the satisfied bits per chunk (partial
+    *    aggregation before the one shuffle), and a file is a hit iff
+    *    some probe's field comes back full.
+    *
+    * Every indexed file surfaces (rows needing nothing contribute 0), and
+    * what returns to the driver is O(indexed files) NAMES + booleans —
+    * name-scale like the manifest itself, never the 16 KiB/file bit
+    * payload. Duplicate index rows (two overlapping maintenance runs
+    * both committing a file's rows — value-identical, blooms being pure
+    * functions of immutable content) set the same bits again: bit_or is
+    * idempotent, the no-false-negative guard.
     */
   private[graft] def bloomCandidateStatus(
       spark: org.apache.spark.sql.SparkSession, idxRoot: String,
@@ -733,31 +734,39 @@ object Layout {
       : Map[String, Boolean] = {
     import graft.functions.Bloom
     import spark.implicits._
+    require(values.nonEmpty, "empty probe set")
     if (snapshotVersions(spark, idxRoot).isEmpty) return Map.empty
-    val reqs = values.zipWithIndex.toDF("v", "pid")
-      .select(col("pid"), explode(Bloom.positionsFor(col("v"), mBits)).as("p"))
-      .select(col("pid"), (col("p") / 64).cast("int").as("w"),
-        call_function("shiftleft", lit(1L), (col("p") % 64).cast("int")).as("m"))
-      .groupBy(col("pid"), col("w")).agg(bit_or(col("m")).as("need"))
-    val nNeed: Map[Long, Long] = reqs.groupBy(col("pid"))
-      .agg(count(lit(1)).as("n_need"))
-      .collect().map(r => r.getInt(0).toLong -> r.getLong(1)).toMap
-    readSnapshot(spark, idxRoot)
-      .groupBy(col("file"), col("w")).agg(bit_or(col("bits")).as("bits"))
-      .join(broadcast(reqs), Seq("w"), "left_outer")
-      .groupBy(col("file"), col("pid"))
-      .agg(sum(when(col("need").isNotNull &&
-        (col("bits").bitwiseAND(col("need"))) === col("need"), 1L)
-        .otherwise(0L)).as("n_ok"))
-      .groupBy(col("file"))
-      .agg(collect_list(struct(col("pid"), col("n_ok"))).as("per_probe"))
-      .collect().map { r =>
-        val hit = r.getSeq[org.apache.spark.sql.Row](1).exists { pr =>
-          !pr.isNullAt(0) && nNeed.get(pr.getInt(0).toLong)
-            .contains(pr.getLong(1))
+    val needs: Seq[Map[Int, Long]] = values.distinct.toDF("v")
+      .select(Bloom.positionsFor(col("v"), mBits).as("ps"))
+      .collect().toSeq.map(_.getSeq[Long](0)
+        .groupMapReduce(p => (p / 64).toInt)(p => 1L << (p % 64).toInt)(_ | _))
+    val perChunk = 64 / Bloom.K
+    val nChunks = (needs.size + perChunk - 1) / perChunk
+    def fieldAt(pid: Int) = (pid % perChunk) * Bloom.K
+    val byWord: Map[Int, Seq[(Int, Long, Long)]] = needs.zipWithIndex
+      .flatMap { case (ws, pid) =>
+        ws.toSeq.sortBy(_._1).zipWithIndex.map { case ((w, need), j) =>
+          w -> ((pid / perChunk, 1L << (fieldAt(pid) + j), need))
         }
-        r.getString(0) -> hit
-      }.toMap
+      }.groupMap(_._1)(_._2)
+    val fullByChunk: Map[Int, Seq[Long]] = needs.zipWithIndex
+      .groupMap(_._2 / perChunk) { case (ws, pid) =>
+        ((1L << ws.size) - 1) << fieldAt(pid) }
+    val req = col("__graft_req")
+    val got = when(req.isNotNull &&
+      col("bits").bitwiseAND(req("_3")) === req("_3"), req("_2")).otherwise(0L)
+    val chunkAggs = (0 until nChunks).map(c =>
+      bit_or(when(req("_1") === c, got).otherwise(0L)).as(s"__graft_c$c"))
+    val hit = (0 until nChunks).map { c =>
+      val acc = col(s"__graft_c$c")
+      exists(typedlit(fullByChunk(c)), full => acc.bitwiseAND(full) === full)
+    }.reduce(_ || _)
+    readSnapshot(spark, idxRoot)
+      .select(col("file"), col("bits"),
+        explode_outer(element_at(typedlit(byWord), col("w"))).as("__graft_req"))
+      .groupBy(col("file")).agg(chunkAggs.head, chunkAggs.tail: _*)
+      .select(col("file"), hit)
+      .collect().map(r => r.getString(0) -> r.getBoolean(1)).toMap
   }
 
   /** The CONVENTION index root for [[maintainBloomIndexFor]]'s indexes:
@@ -778,28 +787,22 @@ object Layout {
       root: String, keyCol: String, mBits: Int = BloomIndexBits): Int = {
     import spark.implicits._
     val idxRoot = bloomSnapIdxRoot(root, keyCol)
-    val v = maintainBloomIndex(spark, root, idxRoot, keyCol, mBits)
+    val (v, indexed) =
+      maintainBloomIndexInventory(spark, root, idxRoot, keyCol, mBits)
     // INDEX GC: rows for files the head no longer references (compaction
     // / overwrite victims) are dead weight every candidate-resolution
     // pass re-reads. When the dead outnumber the live, ONE overwrite
     // commit keeps only live files' rows (the index is itself a snapshot
-    // table, so the rewrite is atomic and time-travelable).
+    // table, so the rewrite is atomic and time-travelable). The live and
+    // dead counts come from the run's own inventory against the
+    // manifest — no second pass over the index.
     def baseName(s: String) = s.substring(s.lastIndexOf('/') + 1)
     if (snapshotVersions(spark, idxRoot).isEmpty) return v // nothing indexed
-    val live = manifestFiles(spark, root, v).map(baseName).toDF("file")
-    val idx = readSnapshot(spark, idxRoot)
-    val counts = idx.select(col("file")).distinct()
-      .join(live.withColumn("__graft_live", lit(true)), Seq("file"), "left_outer")
-      // coalesce: an EMPTY index (a fully-truncated table's GC'd index)
-      // sums to null, not 0
-      .agg(coalesce(sum(when(col("__graft_live").isNotNull, 1L)
-          .otherwise(0L)), lit(0L)),
-        coalesce(sum(when(col("__graft_live").isNull, 1L)
-          .otherwise(0L)), lit(0L))).head()
-    val (nLive, nDead) = (counts.getLong(0), counts.getLong(1))
-    if (nDead > nLive)
-      snapshotOverwrite(spark, idxRoot,
-        idx.join(live, Seq("file"), "left_semi").coalesce(1))
+    val live = manifestFiles(spark, root, v).map(baseName).toSet
+    val nLive = indexed.count(live)
+    if (indexed.size - nLive > nLive)
+      snapshotOverwrite(spark, idxRoot, readSnapshot(spark, idxRoot)
+        .join(live.toSeq.toDF("file"), Seq("file"), "left_semi").coalesce(1))
     val declared = manifestHeader(spark, root, snapshotVersions(spark, root).last)
       .get("bloomIndex").map(_.split(",").map(_.trim).toSet)
       .getOrElse(Set.empty)
@@ -809,6 +812,24 @@ object Layout {
     v
   }
 
+  /** Point/IN-list lookup on the VERSIONED table through
+    * [[maintainBloomIndex]]'s index — ≡ `readSnapshot(...).filter(keyCol
+    * IN values)`, including MOR delete semantics: candidate files (bloom
+    * hit, or not yet indexed — conservative) are read through the same
+    * MOR-aware subset engine as a partition read, so delete sidecars
+    * still apply; then one broadcast semi-join against the probe set.
+    * No false negatives (bloom contract + conservative unindexed rule)
+    * makes the result exact; false positives cost one wasted file scan.
+    *
+    * Candidate resolution is [[bloomCandidateStatus]]'s one aggregation
+    * over the index (one shuffle): the probes' needs fold on the driver,
+    * the index NEVER collects to the driver (at 10⁶ files it is ~16 GB;
+    * only O(indexed files) names and booleans come back), and the
+    * candidate read is typed from the manifest — building the result
+    * starts no further job. The bare-directory [[bloomIndexLookup]]
+    * keeps its driver-side test for bounded file counts; this is the
+    * production form.
+    */
   def snapshotPointLookup(spark: org.apache.spark.sql.SparkSession,
       baseRoot: String, idxRoot: String, keyCol: String, values: Seq[Long],
       mBits: Int = BloomIndexBits): BloomLookup = {
@@ -1069,13 +1090,7 @@ object Layout {
   private def manifestSchema(spark: org.apache.spark.sql.SparkSession,
       root: String, version: Int)
       : Option[org.apache.spark.sql.types.StructType] =
-    manifestHeader(spark, root, version).get("schema").flatMap { j =>
-      org.apache.spark.sql.types.DataType.fromJson(
-        java.net.URLDecoder.decode(j, "UTF-8")) match {
-        case st: org.apache.spark.sql.types.StructType => Some(st)
-        case _ => None
-      }
-    }
+    manifestSchemaOf(manifestHeader(spark, root, version))
 
   // Entry wire format: `path` optionally followed by tab-separated
   // tokens `n=<rows>`, one `s=<encCol>:<min>:<max>` per stats column,
@@ -2144,21 +2159,6 @@ object Layout {
     snapshotOverwritePartitions(spark, root, df, values.flatten.toSeq)
   }
 
-  /** Read a snapshot (default: latest). The manifest resolves once here —
-    * the returned frame is pinned to this version's file list.
-    *
-    * MERGE-ON-READ: if the manifest carries delete sidecars
-    * ([[snapshotDeleteMOR]]), the read splits the file list into CLEAN
-    * files (in no sidecar's scope — scanned untouched, zero read-side
-    * cost) and DIRTY files, which take ONE broadcast anti-join against
-    * the union of sidecar (file, key) rows. Scoping is per (file, key):
-    * a key deleted from an old file and later RE-INSERTED by an append
-    * survives, because the new file is outside every sidecar's scope —
-    * the time-ordered semantics a position/equality-delete format gives.
-    * 100 TB: sidecars are O(deleted keys) bytes; the anti-join touches
-    * only dirty files, and compaction ([[snapshotCompact]]) folds them
-    * away so read-side debt is bounded by the maintenance cadence.
-    */
   /** ALTER TABLE ADD COLUMN as a METADATA-ONLY commit: a new version
     * carrying the same files/sidecars/properties and a WIDENED recorded
     * schema (the new columns appended, forced nullable — pre-existing
@@ -2464,6 +2464,24 @@ object Layout {
     v
   }
 
+  /** Read a snapshot (default: latest). The manifest resolves once here —
+    * the returned frame is pinned to this version's file list and typed
+    * from its recorded schema: without delete sidecars, building it
+    * starts no Spark job (header-less legacy history still infers the
+    * schema from footers).
+    *
+    * MERGE-ON-READ: if the manifest carries delete sidecars
+    * ([[snapshotDeleteMOR]]), the read splits the file list into CLEAN
+    * files (in no sidecar's scope — scanned untouched, zero read-side
+    * cost) and DIRTY files, which take ONE broadcast anti-join against
+    * the union of sidecar (file, key) rows. Scoping is per (file, key):
+    * a key deleted from an old file and later RE-INSERTED by an append
+    * survives, because the new file is outside every sidecar's scope —
+    * the time-ordered semantics a position/equality-delete format gives.
+    * 100 TB: sidecars are O(deleted keys) bytes; the anti-join touches
+    * only dirty files, and compaction ([[snapshotCompact]]) folds them
+    * away so read-side debt is bounded by the maintenance cadence.
+    */
   def readSnapshot(spark: org.apache.spark.sql.SparkSession, root: String,
       version: Int = -1, partitions: Seq[String] = Nil): DataFrame = {
     val vs = snapshotVersions(spark, root)
@@ -2725,22 +2743,52 @@ object Layout {
     require(manifestDeleteFiles(spark, root, v).isEmpty,
       "table carries MOR delete sidecars; snapshotCompact before snapshotTable")
     val hdr = manifestHeader(spark, root, v)
-    val entries = manifestEntries(spark, root, v)
-    // manifest-recorded schema keeps relation construction metadata-only
-    // (the whole point at a million files); legacy history falls back to
-    // footer-union inference
-    val schema = manifestSchema(spark, root, v).getOrElse(
-      spark.read.option("mergeSchema", "true")
-        .parquet(entries.map(_.path): _*).schema)
+    val (raw, index) =
+      manifestRelation(spark, root, manifestEntries(spark, root, v), hdr)
     // the relation reads PHYSICAL columns; a renamed table gets a
     // logical alias projection on top — the optimizer rewrites pushed
     // predicates through the aliases, so pruning/pushdown see physical
     // names, exactly what manifest stats and footers record
+    val df = manifestSchemaOf(hdr) match {
+      case Some(sc) if colMapOf(hdr).nonEmpty => toLogicalFrame(raw, hdr, sc)
+      case _ => raw
+    }
+    (df, index)
+  }
+
+  /** The recorded (LOGICAL) schema of a manifest header, if any. */
+  private def manifestSchemaOf(hdr: Map[String, String])
+      : Option[org.apache.spark.sql.types.StructType] =
+    hdr.get("schema").flatMap { j =>
+      org.apache.spark.sql.types.DataType.fromJson(
+        java.net.URLDecoder.decode(j, "UTF-8")) match {
+        case st: org.apache.spark.sql.types.StructType => Some(st)
+        case _ => None
+      }
+    }
+
+  /** `entries` of one version as a Spark relation PRICED FROM THE
+    * MANIFEST — the one constructor under [[snapshotTable]], every
+    * [[readSnapshot]]-family read, MERGE's touched-file read and the
+    * bloom index build: the data schema is the `#schema`
+    * header with `colmap`'s PHYSICAL names, and the file listing comes
+    * from the entries ([[graft.sources.SnapshotFileIndex]]), so building
+    * the frame starts no Spark job (the whole point at a million files).
+    * The frame speaks PHYSICAL column names: dropped columns are simply
+    * not in the schema, header-only columns read null. Legacy
+    * header-less history falls back to footer-union inference
+    * (`mergeSchema`: one job, conflicting types fail loudly).
+    */
+  private def manifestRelation(spark: org.apache.spark.sql.SparkSession,
+      root: String, entries: Seq[FileEntry], hdr: Map[String, String])
+      : (DataFrame, graft.sources.SnapshotFileIndex) = {
     val cmap = colMapOf(hdr)
-    val physSchema =
-      if (cmap.isEmpty) schema
-      else org.apache.spark.sql.types.StructType(schema.fields.map(f =>
+    val physSchema = manifestSchemaOf(hdr) match {
+      case Some(sc) => org.apache.spark.sql.types.StructType(sc.fields.map(f =>
         f.copy(name = cmap.getOrElse(f.name, f.name))))
+      case None => spark.read.option("mergeSchema", "true")
+        .parquet(entries.map(_.path): _*).schema
+    }
     val index = new graft.sources.SnapshotFileIndex(
       spark, root, entries, hdr.get("partCol"),
       hdr.get("partSpec").map(PartSpec.parse).getOrElse(Nil))
@@ -2752,13 +2800,8 @@ object Layout {
       fileFormat =
         new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat(),
       options = Map("mergeSchema" -> "true"))(spark)
-    val raw = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .baseRelationToDataFrame(relation)
-    val df =
-      if (cmap.isEmpty) raw
-      else raw.select(schema.fields.toIndexedSeq.map(f =>
-        col(s"`${cmap.getOrElse(f.name, f.name)}`").as(f.name)): _*)
-    (df, index)
+    (spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .baseRelationToDataFrame(relation), index)
   }
 
   /** Whether a delete-sidecar path is a POSITION sidecar
@@ -2790,12 +2833,13 @@ object Layout {
       root: String, v: Int, hdr: Map[String, String],
       keep: FileEntry => Boolean, lineage: Boolean = false): DataFrame = {
     val lineageCols = Seq("__graft_file", "__graft_pos")
-    val files = manifestEntries(spark, root, v).filter(keep).map(_.path)
-    if (files.isEmpty) {
+    val recorded = manifestSchemaOf(hdr)
+    val kept = manifestEntries(spark, root, v).filter(keep)
+    if (kept.isEmpty) {
       // every file pruned: an empty frame with the version's schema —
       // from the manifest header when recorded (O(1)); footer-union
       // inference only for legacy history
-      val empty = manifestSchema(spark, root, v) match {
+      val empty = recorded match {
         case Some(sc) => spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sc)
         case None => spark.read.option("mergeSchema", "true")
@@ -2808,11 +2852,11 @@ object Layout {
     val dels = manifestDeleteFiles(spark, root, v)
     // SCHEMA EVOLUTION: a version's schema is the union of its files'
     // schemas (appends may ADD columns; rows from pre-evolution files
-    // read the new columns as null; drops/renames are overwrite-class
-    // operations). mergeSchema prices this at one footer per file —
-    // manifest-grade planning metadata; conflicting types fail loudly.
-    def read(fs: Seq[String]) =
-      spark.read.option("mergeSchema", "true").parquet(fs: _*)
+    // read the new columns as null). The header records that union, so
+    // the relation is typed from the manifest with no footer read;
+    // legacy header-less history pays [[manifestRelation]]'s footer
+    // fallback.
+    def read(es: Seq[FileEntry]) = manifestRelation(spark, root, es, hdr)._1
     // lineage helpers ride the scan's hidden file-metadata struct:
     // split-safe, codegen'd, and the row ordinal is the file-physical
     // position a deletion vector addresses
@@ -2829,40 +2873,42 @@ object Layout {
     //  - DROPPED columns ([[snapshotDropColumn]]) — still physically in
     //    old files — project out.
     // Legacy header-less history returns the physical frame unchanged.
-    def align(df: DataFrame): DataFrame =
-      hdr.get("schema").map(j => org.apache.spark.sql.types.DataType
-          .fromJson(java.net.URLDecoder.decode(j, "UTF-8"))) match {
-        case Some(sc: org.apache.spark.sql.types.StructType) =>
-          toLogicalFrame(df, hdr, sc, if (lineage) lineageCols else Nil)
-        case _ => df
-      }
+    def align(df: DataFrame): DataFrame = recorded match {
+      case Some(sc) =>
+        toLogicalFrame(df, hdr, sc, if (lineage) lineageCols else Nil)
+      case None => df
+    }
     if (dels.isEmpty)
-      return align(if (lineage) withMeta(read(files)) else read(files))
+      return align(if (lineage) withMeta(read(kept)) else read(kept))
     val (posDels, eqDels) = dels.partition(isPosSidecar)
+    // sidecar schemas are fixed by their writers — (file, key) with the
+    // key cast to long, (file, pos) with the scan's long row index — so
+    // their reads skip footer inference too
+    def sidecar(paths: Seq[String], second: String) =
+      spark.read.schema(s"file STRING, $second BIGINT").parquet(paths: _*)
     val eqSide = if (eqDels.isEmpty) None else Some(
-      spark.read.parquet(eqDels: _*)
+      sidecar(eqDels, "key")
         .select(col("file").as("__graft_del_file"),
           col("key").as("__graft_del_key")))
     val posSide = if (posDels.isEmpty) None else Some(
-      spark.read.parquet(posDels: _*)
+      sidecar(posDels, "pos")
         .select(col("file").as("__graft_pdel_file"),
           col("pos").as("__graft_pdel_pos")))
     // dirty-file resolution is manifest-grade planning metadata (same
-    // price class as a footer read): O(touched files) names
-    def dirtyOf(side: DataFrame, c: String): Set[String] =
-      side.select(col(c)).distinct().collect().map(_.getString(0)).toSet
-    val eqDirty = eqSide.map(dirtyOf(_, "__graft_del_file"))
-      .getOrElse(Set.empty[String])
-    val posDirty = posSide.map(dirtyOf(_, "__graft_pdel_file"))
-      .getOrElse(Set.empty[String])
-    val dirty = eqDirty ++ posDirty
+    // price class as a footer read): O(touched files) names, both
+    // sidecar kinds in one pass
+    val dirty: Set[String] =
+      (eqSide.map(_.select(col("__graft_del_file"))) ++
+        posSide.map(_.select(col("__graft_pdel_file"))))
+        .reduce(_ union _).distinct().collect().map(_.getString(0)).toSet
     // scope match on the file's BASE NAME: parquet part files carry a
     // per-job UUID, and URI normalization (file:/ vs file:///) must not
     // defeat the join — _metadata.file_name is already the base name
     def baseName(s: String) = s.substring(s.lastIndexOf('/') + 1)
-    val (dirtyFiles, cleanFiles) = files.partition(f => dirty.contains(baseName(f)))
+    val (dirtyFiles, cleanFiles) =
+      kept.partition(e => dirty.contains(baseName(e.path)))
     val cleanRaw =
-      if (cleanFiles.isEmpty) read(files).where(lit(false))
+      if (cleanFiles.isEmpty) read(kept).where(lit(false))
       else read(cleanFiles)
     val cleanDf = if (lineage) withMeta(cleanRaw) else cleanRaw
     val dirtyDf =
@@ -4079,7 +4125,6 @@ object Layout {
       "table carries MOR delete sidecars; snapshotCompact before MERGE")
     val hdr = manifestHeader(spark, root, base)
     val tagged = manifestEntriesTagged(spark, root, base)
-    val files = tagged.map(_._2.path)
     // manifest stats are keyed by PHYSICAL name; the caller's keyCol is
     // logical (identical unless renamed — reserved columns never are)
     val ranges = keyRangesOfEntries(spark, tagged.map(_._2),
@@ -4129,11 +4174,12 @@ object Layout {
       }
     val touchedTagged = tagged.filter(t => touchedSet(t._2.path))
     val dataDir = attemptDir(root, "data", base + 1)
+    // typed from the manifest like every snapshot read: no footer job
     val touchedRaw =
       if (touchedTagged.isEmpty)
-        spark.read.option("mergeSchema", "true").parquet(files: _*).where(lit(false))
-      else spark.read.option("mergeSchema", "true")
-        .parquet(touchedTagged.map(_._2.path): _*)
+        manifestRelation(spark, root, tagged.map(_._2), hdr)._1
+          .where(lit(false))
+      else manifestRelation(spark, root, touchedTagged.map(_._2), hdr)._1
     // COLUMN-MAPPING boundary: `rewrite` (the caller's / SQL MERGE's
     // logic) speaks LOGICAL names; the touched files speak physical.
     // Logicalize in, physicalize out — untouched entries carry verbatim,

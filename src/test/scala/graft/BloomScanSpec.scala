@@ -126,4 +126,38 @@ class BloomScanSpec extends GraftSuite {
     val plain = sql("SELECT ref FROM gbl.t WHERE k = 10")
     assert(plain.collect().length == 1)
   }
+
+  test("duplicate index rows from two overlapping maintenance runs still give no false negatives") {
+    wh
+    import spark.implicits._
+    sql("CREATE TABLE gbl.dup (k BIGINT, ref BIGINT)")
+    for (b <- 0 until 4) {
+      (0 until 250).map(i => ((b * 250 + i).toLong,
+        (i * 4 + b).toLong * 7919L)).toDF("k", "ref")
+        .coalesce(1).createOrReplaceTempView("dup_src")
+      sql("INSERT INTO gbl.dup SELECT * FROM dup_src")
+    }
+    val root = s"$wh/dup"
+    sql("CALL gbl.system.index(table => 'dup', key_col => 'ref')")
+    val idxRoot = Layout.bloomSnapIdxRoot(root, "ref")
+    // a second maintainer that read the same (empty) inventory commits
+    // the same files' rows again: every (file, w) is now duplicated
+    val once = Layout.readSnapshot(spark, idxRoot).count()
+    Layout.snapshotAppend(spark, idxRoot, Layout.readSnapshot(spark, idxRoot))
+    assert(Layout.readSnapshot(spark, idxRoot).count() == 2 * once)
+    val total = Layout.snapshotEntriesFor(spark, root)._2.size
+    // one probe owned by each file, plus one written nowhere
+    val probes = (0 until 4).map(b => (10 * 4 + b).toLong * 7919L)
+    probes.zipWithIndex.foreach { case (p, b) =>
+      val q = sql(s"SELECT k FROM gbl.dup WHERE ref = $p")
+      assert(q.collect().map(_.getLong(0)).toSeq == Seq((b * 250 + 10).toLong),
+        s"probe $p lost its owner")
+      assert(graftScans(q).forall(_.lastPlannedFiles < total),
+        s"duplicates must not defeat pruning: ${graftScans(q).map(_.lastPlannedFiles)}")
+    }
+    val lk = Layout.snapshotPointLookup(spark, root, idxRoot, "ref",
+      probes :+ 999999999L)
+    assert(lk.result.select(col("k")).as[Long].collect().sorted.toSeq ==
+      (0 until 4).map(b => (b * 250 + 10).toLong))
+  }
 }

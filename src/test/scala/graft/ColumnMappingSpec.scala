@@ -198,4 +198,56 @@ class ColumnMappingSpec extends GraftSuite {
     assert(spark.sql("SELECT k FROM gmap.t WHERE label = 'v1001'")
       .head().getLong(0) == 1001L)
   }
+
+  test("manifest-typed reads: renamed, dropped and header-only columns give the same rows on the clean and the MOR dirty-file path") {
+    import spark.implicits._
+    val root = freshRoot("cmapmor")
+    Layout.snapshotAppend(spark, root,
+      Seq((1L, "a", 10.0), (2L, "b", 20.0), (3L, "c", 30.0))
+        .toDF("k", "v", "score").coalesce(1), statsKey = Some("k"))   // file A
+    Layout.snapshotRenameColumn(spark, root, "v", "label")
+    Layout.snapshotDropColumn(spark, root, "score")
+    Layout.snapshotAddColumns(spark, root, org.apache.spark.sql.types
+      .StructType(Seq(org.apache.spark.sql.types.StructField("note",
+        org.apache.spark.sql.types.StringType))))                      // header-only
+    Layout.snapshotAppend(spark, root,
+      Seq((4L, "d", "n4"), (5L, "e", "n5")).toDF("k", "label", "note")
+        .coalesce(1), statsKey = Some("k"))                            // file B
+    def rows(): Seq[(Long, String, Option[String])] = {
+      val df = Layout.readSnapshot(spark, root)
+      assert(df.columns.toSeq == Seq("k", "label", "note"))
+      df.collect().map(r => (r.getLong(0), r.getString(1),
+        Option(r.getString(2)))).sortBy(_._1).toSeq
+    }
+    val all = Seq((1L, "a", None), (2L, "b", None), (3L, "c", None),
+      (4L, "d", Some("n4")), (5L, "e", Some("n5")))
+    assert(rows() == all, "clean path")
+    // A turns dirty, B stays clean: both halves of the split in one read
+    Layout.snapshotDeleteMOR(spark, root, "k", Array(2L))
+    assert(rows() == all.filterNot(_._1 == 2L), "dirty A + clean B")
+    // both files dirty
+    Layout.snapshotDeleteMOR(spark, root, "k", Array(5L))
+    assert(rows() == all.filterNot(r => r._1 == 2L || r._1 == 5L),
+      "dirty A + dirty B")
+  }
+
+  test("a table whose schema header a type conflict dropped still reads through the footer fallback") {
+    import spark.implicits._
+    val root = freshRoot("cmapfallback")
+    Layout.snapshotAppend(spark, root, Seq((1L, 1)).toDF("k", "n")
+      .select(col("k"), struct(col("n").as("a")).as("s")), statsKey = Some("k"))
+    assert(Layout.snapshotMeta(spark, root).schema.isDefined)
+    // a nested field added inside the struct is a type change of `s`
+    Layout.snapshotAppend(spark, root, Seq((2L, 2, 3)).toDF("k", "n", "m")
+      .select(col("k"), struct(col("n").as("a"), col("m").as("b")).as("s")),
+      statsKey = Some("k"))
+    assert(Layout.snapshotMeta(spark, root).schema.isEmpty,
+      "the conflicting append must drop the recorded schema")
+    def rows() = Layout.readSnapshot(spark, root)
+      .select(col("k"), col("s.a"), col("s.b")).collect()
+      .map(r => (r.getLong(0), r.getInt(1), Option(r.get(2)))).sortBy(_._1).toSeq
+    assert(rows() == Seq((1L, 1, None), (2L, 2, Some(3))))
+    Layout.snapshotDeleteMOR(spark, root, "k", Array(1L))
+    assert(rows() == Seq((2L, 2, Some(3))), "the dirty-file path falls back too")
+  }
 }

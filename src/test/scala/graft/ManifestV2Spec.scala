@@ -968,4 +968,97 @@ class ManifestV2Spec extends GraftSuite {
       "NaN satisfies `> 500` in Spark semantics and must never be pruned away")
     assert(big.filter(isnan(col("price"))).count() == 1)
   }
+
+  // ---- JOB-COUNT REGRESSIONS: reads, lookups and maintenance answer
+  // what the manifest already records without Spark jobs of their own
+
+  /** `body`'s result and the call sites of the Spark jobs it started,
+    * counted by a listener on a private job group (jobs of anything else
+    * running in the JVM never carry it).
+    */
+  private def jobsOf[T](body: => T): (T, Seq[String]) = {
+    val sc = spark.sparkContext
+    val group = s"jobcount-${java.util.UUID.randomUUID()}"
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (j.properties != null &&
+            j.properties.getProperty("spark.jobGroup.id") == group)
+          sites.add(j.stageInfos.lastOption.map(_.name).getOrElse("?"))
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "job-count spec")
+    try {
+      val out = body
+      org.apache.spark.GraftListenerBridge.waitUntilListenerBusEmpty(sc)
+      (out, sites.toArray.toSeq.map(_.toString))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  /** A key-clustered table with stats on `k`, a bloom index on `k` at the
+    * convention root, and two appended batches: versions 1, 3 and 4 hold
+    * 12 000, 12 150 and 12 300 rows (version 2 declares the index).
+    */
+  private def indexedTable(tag: String): String = {
+    val root = freshRoot(tag)
+    def rows(lo: Long, hi: Long) = spark.range(lo, hi).select(
+      col("id").as("k"), (col("id") / 8).cast("long").as("okey"),
+      (col("id") % 200).as("part"),
+      (col("id") % 50 + 1).cast("double").as("qty"),
+      (col("id") % 1000 * 1.5).as("price"), lit("N").as("flag"))
+    Layout.snapshotAppend(spark, root,
+      rows(0, 12000).repartitionByRange(4, col("k"))
+        .sortWithinPartitions(col("k")), statsKey = Some("k"))
+    Layout.maintainBloomIndexFor(spark, root, "k")
+    Seq((12000L, 12150L), (12150L, 12300L)).foreach { case (lo, hi) =>
+      Layout.snapshotAppend(spark, root, rows(lo, hi).coalesce(1),
+        statsKey = Some("k"))
+    }
+    root
+  }
+
+  test("readSnapshot of a head with a schema header starts no job before its action") {
+    val root = indexedTable("jobs-read")
+    val (head, headJobs) = jobsOf(Layout.readSnapshot(spark, root))
+    assert(headJobs.isEmpty, s"head read started jobs: $headJobs")
+    assert(head.count() == 12300)
+    val (old, oldJobs) = jobsOf(Layout.readSnapshot(spark, root, 1))
+    assert(oldJobs.isEmpty, s"time-travel read started jobs: $oldJobs")
+    assert(old.count() == 12000)
+  }
+
+  test("snapshotPointLookup resolves bloom candidates in one shuffle: at most 2 jobs before its action") {
+    import spark.implicits._
+    val root = indexedTable("jobs-lookup")
+    val hits = Seq(5L, 777L, 11999L, 12100L)
+    val probe = hits ++ (1 to 16).map(i => 50000000L + i)
+    val (lk, jobs) = jobsOf(Layout.snapshotPointLookup(spark, root,
+      Layout.bloomSnapIdxRoot(root, "k"), "k", probe))
+    assert(jobs.size <= 2, s"lookup started ${jobs.size} jobs: $jobs")
+    assert(lk.result.select(col("k")).as[Long].collect().sorted.toSeq == hits)
+    assert(lk.scannedFiles.size < lk.totalFiles,
+      s"the bloom must prune: ${lk.scannedFiles.size} of ${lk.totalFiles}")
+  }
+
+  test("a snapshotMaintain cycle with a declared index takes the index inventory once") {
+    import spark.implicits._
+    val root = indexedTable("jobs-maintain")
+    Layout.snapshotDeleteMOR(spark, root, "k", Array(6L, 12200L))
+    val (report, jobs) = jobsOf(Layout.snapshotMaintain(spark, root,
+      Layout.MaintenancePolicy(maxDeleteFiles = 1, maxSmallFiles = 12)))
+    assert(report.compactedVersion.isDefined && report.indexedCols == Seq("k"),
+      s"the cycle must compact and advance the index: $report")
+    // 8 jobs here; the bound catches a return of per-read footer
+    // inference or a second pass over the index (20 jobs with both)
+    assert(jobs.size <= 10, s"maintenance ran ${jobs.size} jobs: $jobs")
+    // the refilled index still serves exact lookups
+    val lk = Layout.snapshotPointLookup(spark, root,
+      Layout.bloomSnapIdxRoot(root, "k"), "k", Seq(5L, 6L, 12100L, 12200L))
+    assert(lk.result.select(col("k")).as[Long].collect().sorted.toSeq ==
+      Seq(5L, 12100L))
+  }
 }
