@@ -27,23 +27,13 @@ import org.apache.spark.sql.SparkSession
   */
 /** Measures the calibration probe on THIS machine (run quiet) and prints
   * per-run seconds — the min is what tools/bench_anchor.json commits as
-  * `calibration_sec`. Same session shape as Bench so the timing transfers.
+  * `calibration_sec`. Same session as Bench ([[GraftSession.local]]) —
+  * the probe's runtime is session-shape sensitive (AQE coalesces the
+  * partial-agg stage) — so the timing transfers.
   */
 object Calibrate {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // EXACTLY Bench's session confs — the probe's runtime is session-shape
-    // sensitive (AQE coalesces the partial-agg stage), and the anchor must
-    // be measured under the geometry Bench probes with
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     val times = (1 to 6).map { _ =>
       val t0 = System.nanoTime()
       spark.range(1L << 31).selectExpr("sum(id % 1000003)").collect()
@@ -59,16 +49,7 @@ object Calibrate {
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     // Warm up the JVM/codegen paths once (scheduler, parquet reader,
     // whole-stage codegen compiler) so the first measured query isn't
     // charged the session's one-time costs.

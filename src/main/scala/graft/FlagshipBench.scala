@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev tool: time the flagship curation pipeline, and A/B it against the
@@ -28,13 +27,7 @@ object FlagshipBench {
     val entryMode = args.headOption.contains("entry")
     val rest = if (prod || entryMode) args.drop(1) else args
     val sfDir = rest.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     // SPARK_GRAFT_CKPT=disk routes every operator pin through a
     // reliable disk checkpoint ([[graft.ops.Pin]]) — the single-JVM
     // memory budget knob (local[32] concentrates the whole cluster's
@@ -50,13 +43,6 @@ object FlagshipBench {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", b)
       spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", b)
     }
-    // generic conf hook for A/B diagnosis: SPARK_GRAFT_CONF="k=v;k=v"
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").foreach { kv =>
-      kv.split("=", 2) match {
-        case Array(k, v) if k.nonEmpty => spark.conf.set(k.trim, v.trim)
-        case _ => ()
-      }
-    })
     spark.range(1000).selectExpr("sum(id)").collect() // warm up
 
     if (entryMode) {

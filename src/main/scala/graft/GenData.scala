@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** SF1 CORPUS SYNTHESIS — generates a 10×-sf0.1 rung of the TESTDATA.md
@@ -39,15 +39,8 @@ object GenData {
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("/tmp/graft-sf1")
     val scale = args.lift(1).map(_.toInt).getOrElse(10) // 10 = sf1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local()
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
 
     val nCust = 15000 * scale
     val nOrders = 150000 * scale

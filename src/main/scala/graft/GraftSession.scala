@@ -27,9 +27,27 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
 
+  /** The session every `main` runs in, so each tool times and plans the
+    * same engine: [[builder]] at `local[n]` with `n` shuffle partitions,
+    * where `n` is `SPARK_GRAFT_CPUS` (default: the machine's cores), plus
+    * graft's SQL extensions, UI off and WARN logging. Then each `k=v` of
+    * `SPARK_GRAFT_CONF="k=v;k=v"` is set on the session — the A/B lever
+    * for conf-gated plan shapes.
+    */
   def local(): SparkSession = {
-    val s = builder().getOrCreate()
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors())
+    val s = builder(s"local[$cpus]", shufflePartitions = cpus)
+      .withExtensions(new functions.GraftExtensions)
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").foreach { kv =>
+      kv.split("=", 2) match {
+        case Array(k, v) if k.trim.nonEmpty => s.conf.set(k.trim, v.trim)
+        case _ => ()
+      }
+    })
     s
   }
 }

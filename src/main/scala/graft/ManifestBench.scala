@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev tool: quantify the manifest-v2 planning asymmetry — per-file key
@@ -15,13 +14,7 @@ object ManifestBench {
   def main(args: Array[String]): Unit = {
     val nFiles = args.headOption.map(_.toInt).getOrElse(256)
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     spark.range(1000).selectExpr("sum(id)").collect()
 
     val root = java.nio.file.Files.createTempDirectory("graft-mb").toString + "/t"

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: time (or explain) a subset of SparkEntry.queries without
   * running the whole Bench sweep. Args: query names; `--explain` prints
   * the formatted plan instead of timing.
@@ -10,17 +8,9 @@ import org.apache.spark.sql.SparkSession
 object QueryTimer {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val explain = args.contains("--explain")
     val names = args.filterNot(_.startsWith("--"))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     spark.range(1000).selectExpr("sum(id)").collect() // warm codegen paths
     names.foreach { name =>
       val fn = SparkEntry.queries.getOrElse(name,

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev tool: measure BucketedRangeJoinRule's rewrite vs the un-rewritten
@@ -16,13 +15,7 @@ object RuleBench {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val width = args.lift(1).map(_.toLong).getOrElse(1000L)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     val rule = plans.BucketedRangeJoinRule(spark)
     def timed(tag: String)(df: => org.apache.spark.sql.DataFrame): Long = {
       val t0 = System.nanoTime()
@@ -30,15 +23,11 @@ object RuleBench {
       println(f"$tag: ${(System.nanoTime() - t0) / 1e9}%.2f s ($n rows)")
       n
     }
+    // the session's extensions inject the rule; it fires only while
+    // its width conf is set
     def withRule[A](f: => A): A = {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ rule
       spark.conf.set(rule.WidthConf, width.toString)
-      try f finally {
-        spark.conf.unset(rule.WidthConf)
-        spark.experimental.extraOptimizations =
-          spark.experimental.extraOptimizations.filterNot(_ eq rule)
-      }
+      try f finally spark.conf.unset(rule.WidthConf)
     }
     spark.range(1000).selectExpr("sum(id)").collect() // warm up
 

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool (SURVEY §5.0 round-8 calibration): time the SQL-surface
   * sketch aggregates (A5 misra_gries / A7 kll_quartiles / A8 count_min /
   * A6 hll via approx + the exact tokenized GROUP BY they replace) at the
@@ -13,15 +11,7 @@ import org.apache.spark.sql.SparkSession
 object SketchCalibrate {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    functions.GraftFunctions.register(spark)
+    val spark = GraftSession.local() // its extensions inject the sketch SQL functions
     Tables.registerAll(spark, sfDir)
     val probes = Seq(
       "mg_heavy_hitters" ->

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: time ONE SparkEntry query under Bench's exact session shape,
   * several reps, optionally dumping the formatted physical plan — the
   * harness for adjudicating per-query bench flags without a full sweep.
@@ -13,28 +11,7 @@ object TimeQuery {
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val reps = args.lift(2).map(_.toInt).getOrElse(4)
     val explain = args.lift(3).contains("explain")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // SPARK_GRAFT_EXT=1 builds the session WITH GraftExtensions (Bench's
-    // exact shape) — the A/B for attributing session-extension overhead
-    val b0 = SparkSession.builder()
-    val spark = (if (sys.env.get("SPARK_GRAFT_EXT").contains("1"))
-        b0.withExtensions(new graft.functions.GraftExtensions) else b0)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // generic conf hook (FlagshipBench's): SPARK_GRAFT_CONF="k=v;k=v" —
-    // the A/B lever for conf-gated plan shapes (e.g. the edit-dedup skew
-    // grid's spark.graft.editDedup.gridG)
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").foreach { kv =>
-      kv.split("=", 2) match {
-        case Array(k, v) if k.nonEmpty => spark.conf.set(k.trim, v.trim)
-        case _ => ()
-      }
-    })
+    val spark = GraftSession.local()
     spark.range(1000).selectExpr("sum(id)").collect()
     // SPARK_GRAFT_PRELUDE=a,b,c runs those queries first in the SAME
     // session — reproduces sweep-context effects (accumulated session

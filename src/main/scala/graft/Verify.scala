@@ -1,30 +1,22 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  /** The oracle SQL is PINNED to the default knob geometry (LSH tables/
+    * planes, IVF probe count, bucket count, estimate-mode off): running
+    * the compare with a non-default knob would report a bogus mismatch
+    * instead of flagging the unsupported configuration — fail fast. */
+  val PinnedKeys = Seq("spark.graft.lsh.tables", "spark.graft.lsh.planes",
+    "spark.graft.ivf.probes", "spark.graft.buckets",
+    "spark.graft.rangeJoin.width", "spark.graft.curation.estimateDedup",
+    "spark.graft.curation.editDedup", "spark.graft.editDedup.crossover",
+    "spark.graft.curation.substringDedup")
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // the oracle SQL is PINNED to the default knob geometry (LSH tables/
-    // planes, IVF probe count, bucket count, estimate-mode off): running
-    // the compare with a non-default knob would report a bogus mismatch
-    // instead of flagging the unsupported configuration — fail fast here
-    val knobs = Seq("spark.graft.lsh.tables", "spark.graft.lsh.planes",
-      "spark.graft.ivf.probes", "spark.graft.buckets",
-      "spark.graft.rangeJoin.width", "spark.graft.curation.estimateDedup",
-      "spark.graft.curation.editDedup", "spark.graft.editDedup.crossover",
-      "spark.graft.curation.substringDedup")
-    val set = knobs.flatMap(k => spark.conf.getOption(k).map(v => s"$k=$v"))
+    val spark = GraftSession.local()
+    val set = PinnedKeys.flatMap(k => spark.conf.getOption(k).map(v => s"$k=$v"))
     require(set.isEmpty, "oracle SQL is pinned to the default knobs; unset " +
       set.mkString(", ") + " before running the correctness dump")
     new java.io.File(outDir).mkdirs()

@@ -174,7 +174,7 @@ object Dedup {
     // widen before the 48-bit-per-token SimHash fold (byte-scaled,
     // see [[widen]])
     val docs = widen(Tables(spark, sfDir, "documents")
-      .select(col("doc_id"), col("text")), defaultWidenAmp(spark))
+      .select(col("doc_id"), col("text")), DefaultWidenAmp)
       .select(col("doc_id"), simHashBits(col("text"), SimHashBitsN).as("bits"))
       // Pack each 12-bit block into a long (fold acc*2+bit — exact, so
       // block equality is preserved bit-for-bit, unlike a lossy hash),
@@ -343,7 +343,7 @@ object Dedup {
     // downstream parallelize (see [[widen]])
     val e = widen(Tables(spark, sfDir, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v")),
-      defaultWidenAmp(spark))
+      DefaultWidenAmp)
       .withColumn("norm", sqrt(dot(col("v"), col("v"))))
     hyperplanePairJoin(e, nT, nP, Seq("v", "norm"))
       .withColumn("cos", dot(col("pi.v"), col("pj.v")) /
@@ -515,9 +515,9 @@ object Dedup {
     */
   /** Shared CC engine: iterative min-label propagation over an undirected
     * (i, j) pair list. Returns (<idCol>, cluster, is_kept) for every node
-    * with at least one edge. One join+agg per round, `localCheckpoint` to
-    * truncate the growing lineage, a converged-flag count as the only
-    * driver-side state — the standard large-graph CC loop.
+    * with at least one edge. One join+agg per round, a pin to truncate
+    * the growing lineage, the round's label sum as the only driver-side
+    * state — the standard large-graph CC loop.
     */
   private[graft] def labelClusters(pairs: DataFrame, idCol: String,
       maxRounds: Int = 50): DataFrame = {
@@ -527,41 +527,27 @@ object Dedup {
     // O(n·k) frame — is hash-partitioned on the probe key ONCE and pinned
     // (a localCheckpoint preserves outputPartitioning). Every round's
     // labels side arrives hash-partitioned on the SAME key by construction
-    // (each round's output is keyed by idCol through the agg and the left
-    // join), so when the labels side is too big to broadcast the per-round
-    // probe join plans with ZERO exchanges on the edge list — before, the
-    // edges re-shuffled every round, the d8-family's dominant sf10 term.
+    // (each round's output is keyed by idCol through the agg), so when
+    // the labels side is too big to broadcast the per-round probe join
+    // plans with ZERO exchanges on the edge list — before, the edges
+    // re-shuffled every round, the d8-family's dominant sf10 term.
     // No join hints: the pins carry MEASURED stats, so the planner
     // broadcasts the labels side while it provably fits (the toy-scale
     // fast path, keeps rounds down to 2 stages) and falls back to the
     // co-partitioned merge join — with the edge exchange already paid —
     // when it doesn't. The one exchange left per round is the groupBy
     // transpose, inherent to propagating labels along edges.
-    // conf-gated (A/B lever; default on — the pre-partitioned form):
-    // spark.graft.cc.copartition=false reverts to the lazy-union edges
-    // whose every consumer re-shuffles them.
-    val copart = p.sparkSession.conf
-      .get("spark.graft.cc.copartition", "true") == "true"
     // SELF-LOOP FUSION (round 19, guide §2.4 — remove a join outright):
     // append one (v, v) edge per node, so each round's new label is
-    // min(own, neighbors') from the SINGLE edge join — the former second
-    // join (labels LEFT JOIN neighborMin, carrying the old label for the
-    // convergence count) and its per-round broadcast build disappear.
-    // Convergence instead compares Σ cluster between rounds: labels are
-    // monotonically non-increasing per node under min-propagation, so the
-    // sum is strictly decreasing until the fixed point — equal sums ⟺
-    // zero changed labels (summed exactly in DECIMAL(38,0); a bigint sum
-    // could wrap and false-converge). Output is identical by induction:
-    // min over (neighbors ∪ self) = least(own, min(neighbors)).
-    // conf-gated for A/B: spark.graft.cc.selfloop=false reverts to the
-    // two-join round shape.
-    val selfloop = p.sparkSession.conf
-      .get("spark.graft.cc.selfloop", "true") == "true"
+    // min(own, neighbors') from the SINGLE edge join. Convergence
+    // compares Σ cluster between rounds: labels are monotonically
+    // non-increasing per node under min-propagation, so the sum is
+    // strictly decreasing until the fixed point — equal sums ⟺ zero
+    // changed labels (summed exactly in DECIMAL(38,0); a bigint sum could
+    // wrap and false-converge).
     val edgesSym = p.unionAll(p.select(col("j").as("i"), col("i").as("j")))
-    val edgesRaw = if (selfloop)
-      edgesSym.unionAll(edgesSym.select(col("i")).distinct()
-        .select(col("i"), col("i").as("j")))
-    else edgesSym
+    val edgesRaw = edgesSym.unionAll(edgesSym.select(col("i")).distinct()
+      .select(col("i"), col("i").as("j")))
     // Partition count from the MEASURED pair bytes (the pin's stats), at
     // AQE's own advisory partition size — NOT a flat numShufflePartitions:
     // a toy edge list stays at 1–2 partitions (measured: 32 partitions ×
@@ -573,87 +559,53 @@ object Dedup {
       org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES))
     val nEdge = partitionsForBytes(
       p.queryExecution.optimizedPlan.stats.sizeInBytes, 2, advisory, nPart)
-    val edges = if (copart) {
-      val e = edgesRaw.repartition(nEdge, col("j")).pin()
-      // the pinned edges fully subsume the pinned pairs (round-18 advice:
-      // keeping both resident paid ~3× pair bytes of pinned blocks where
-      // the lazy-union form paid 1×) — release the pair blocks now; every
-      // downstream frame reads `e`, never `p`
-      Pin.unpin(p)
-      e
-    } else edgesRaw
-    val nodes =
-      if (selfloop) edges.filter(col("i") === col("j")) // exactly the node set
-        .select(col("i").as(idCol))
-      else edges.select(col("i").as(idCol)).distinct()
-    def clusterSum(df: DataFrame): Option[Any] =
-      Option(df.agg(sum(col("cluster").cast("decimal(38,0)"))).first().get(0))
+    val edges = edgesRaw.repartition(nEdge, col("j")).pin()
+    // the pinned edges fully subsume the pinned pairs (round-18 advice:
+    // keeping both resident paid ~3× pair bytes of pinned blocks) —
+    // release the pair blocks now; every downstream frame reads `edges`
+    Pin.unpin(p)
+    val nodes = edges.filter(col("i") === col("j")) // exactly the node set
+      .select(col("i").as(idCol))
     // FUSED CONVERGENCE SUM (round 19, guide §2.4): the per-round Σ cluster
     // rides the pin's own materialization job via observe() instead of a
     // second job over the pinned rows — same aggregate over the same rows,
     // so the value is identical whichever path delivers it; on observation
-    // timeout fall back to the legacy second job (see
+    // timeout fall back to that second job (see
     // [[graft.functions.observedOrNone]]). One scheduled job per CC round.
-    val fuse = graft.functions.fusedMetricOn(p.sparkSession)
-    def pinSummed(df: DataFrame): (DataFrame, Option[Any]) =
-      if (selfloop && fuse) {
-        val o = org.apache.spark.sql.Observation()
-        val pinned = df
-          .observe(o, sum(col("cluster").cast("decimal(38,0)")).as("s"))
-          .pin()
-        graft.functions.observedOrNone(o) match {
-          case Some(m) => (pinned, Option(m.getOrElse("s", null)))
-          case None => (pinned, clusterSum(pinned))
-        }
-      } else {
-        val pinned = df.pin()
-        (pinned, if (selfloop) clusterSum(pinned) else None)
+    def pinSummed(df: DataFrame): (DataFrame, Option[Any]) = {
+      val o = org.apache.spark.sql.Observation()
+      val pinned = df
+        .observe(o, sum(col("cluster").cast("decimal(38,0)")).as("s"))
+        .pin()
+      val s = graft.functions.observedOrNone(o) match {
+        case Some(m) => m.getOrElse("s", null)
+        case None =>
+          pinned.agg(sum(col("cluster").cast("decimal(38,0)"))).first().get(0)
       }
-    val (labels0, sum0) = pinSummed(nodes.withColumn("cluster", col(idCol)))
-    var labels = labels0
-    // superseded per-round label pins are released as soon as the next
-    // round's pin materializes — without this the loop holds rounds× the
-    // label bytes resident (O(n) rows per round at the sf10 rung)
-    var prevPin: DataFrame = labels.toDF()
-    var prevSum: Option[Any] = sum0
+      (pinned, Option(s))
+    }
+    var (labels, prevSum) = pinSummed(nodes.withColumn("cluster", col(idCol)))
     var converged = false
     var rounds = 0
     while (!converged && rounds < maxRounds) {
-      if (selfloop) {
-        // one join + one transpose per round; self-loops carry own labels
-        val (next, s) = pinSummed(edges
-          .join(labels.withColumnRenamed(idCol, "j_id"),
-            col("j") === col("j_id"))
-          .groupBy(col("i").as(idCol))
-          .agg(min(col("cluster")).as("cluster")))
-        Pin.unpin(prevPin)
-        prevPin = next.toDF()
-        labels = next
-        converged = s == prevSum
-        prevSum = s
-      } else {
-        val neighborMin = edges
-          .join(labels.withColumnRenamed(idCol, "j_id"),
-            col("j") === col("j_id"))
-          .groupBy(col("i").as(idCol))
-          .agg(min(col("cluster")).as("nmin"))
-        // Plain min-propagation (no pointer doubling): near-dup components
-        // are SHALLOW in practice (dup chains, not long paths), so the
-        // O(diameter) rounds stay small and the extra label-of-label join a
-        // pointer-doubling variant needs per round costs more than the
-        // rounds it saves (measured: d8 5.7 s → 6.1 s at sf0.1).
-        // carry the old label through the SAME join so convergence detection
-        // costs a filter on the checkpointed result, not a second join
-        val joined = labels.join(neighborMin, Seq(idCol), "left")
-          .select(col(idCol), col("cluster").as("old"),
-            least(col("cluster"), coalesce(col("nmin"), col("cluster"))).as("cluster"))
-          .pin()
-        val changes = joined.filter(col("cluster") =!= col("old")).count()
-        Pin.unpin(prevPin)
-        prevPin = joined
-        labels = joined.select(col(idCol), col("cluster"))
-        converged = changes == 0
-      }
+      // one join + one transpose per round; self-loops carry own labels.
+      // Plain min-propagation (no pointer doubling): near-dup components
+      // are SHALLOW in practice (dup chains, not long paths), so the
+      // O(diameter) rounds stay small and the extra label-of-label join a
+      // pointer-doubling variant needs per round costs more than the
+      // rounds it saves (measured: d8 5.7 s → 6.1 s at sf0.1).
+      val (next, s) = pinSummed(edges
+        .join(labels.withColumnRenamed(idCol, "j_id"),
+          col("j") === col("j_id"))
+        .groupBy(col("i").as(idCol))
+        .agg(min(col("cluster")).as("cluster")))
+      // superseded per-round label pins are released as soon as the next
+      // round's pin materializes — without this the loop holds rounds×
+      // the label bytes resident (O(n) rows per round at the sf10 rung)
+      Pin.unpin(labels)
+      labels = next
+      converged = s == prevSum
+      prevSum = s
       rounds += 1
     }
     // the oracle computes the FULL transitive closure — returning
@@ -753,7 +705,7 @@ object Dedup {
     // inside [[segmentsOf]] — the flagship feeds it an already-pinned
     // (and already-wide) shared signature-pass frame
     segmentsOf(widen(Tables(spark, sfDir, "documents")
-      .select(col("doc_id"), col("text")), defaultWidenAmp(spark))
+      .select(col("doc_id"), col("text")), DefaultWidenAmp)
       .select(col("doc_id"), tokens(col("text")).as("t")))
 
   /** [[segments]] on a prebuilt (doc_id, t) token frame — lets the flagship
@@ -1113,7 +1065,7 @@ object Dedup {
     // the heavy per-row step here (see [[widen]])
     val e = widen(Tables(spark, sfDir, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v")),
-      defaultWidenAmp(spark))
+      DefaultWidenAmp)
       .withColumn("sig", sig)
     // the verify payload is the 32-BYTE signature, not the 512-byte
     // vector — the ship-the-sketch story now also holds on the wire:

@@ -92,8 +92,7 @@ package object functions {
     * still saturates the session at the sf10 rung, where a 50 MB
     * single-split documents scan × amp ≥ 64 clears the session width —
     * the sf10 plan this family's widen exists for is unchanged.
-    * Default amp per call site is [[DefaultWidenAmp]]
-    * (`spark.graft.widen.amp`, default 256).
+    * Default amp per call site is [[DefaultWidenAmp]].
     */
   def widen(df: org.apache.spark.sql.DataFrame, amp: Int): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.catalyst.plans.logical._
@@ -124,18 +123,17 @@ package object functions {
   }
 
   /** Work-amplification lower bound the ×10–10² widen call sites pass
-    * (see [[widen]]); `spark.graft.widen.amp` re-tunes it session-wide.
+    * (see [[widen]]).
     */
-  def defaultWidenAmp(spark: org.apache.spark.sql.SparkSession): Int =
-    confInt(spark, "spark.graft.widen.amp", 256)
+  val DefaultWidenAmp = 256
 
   /** Partitions needed for `mult × bytes` of data at `advisory` bytes per
     * partition, clamped to [1, cap] — the shared sizing rule for pinned
     * edge/iteration layouts (labelClusters, pagerank, BFS). All arithmetic
-    * stays in BigInt: with unmeasured stats (`spark.graft.checkpoint.stats
-    * = false`) Catalyst's default estimates can sit near Long.MaxValue,
-    * where a Long multiply overflows negative and would silently collapse
-    * the width to 1 exactly on the largest inputs.
+    * stays in BigInt: with unmeasured stats Catalyst's default estimates
+    * can sit near Long.MaxValue, where a Long multiply overflows negative
+    * and would silently collapse the width to 1 exactly on the largest
+    * inputs.
     */
   def partitionsForBytes(bytes: BigInt, mult: Int, advisory: Long,
       cap: Int): Int =
@@ -154,18 +152,14 @@ package object functions {
     * round schedules exactly one job.
     *
     * The observation listener delivers asynchronously: poll briefly and
-    * return None on timeout — the caller falls back to its legacy
-    * second job (same aggregate, same rows: the value, when it arrives
-    * either way, is identical by construction). A platform whose
+    * return None on timeout — the caller falls back to a second job over
+    * the pinned rows (same aggregate, same rows: the value, when it
+    * arrives either way, is identical by construction). A platform whose
     * checkpoint action does not route QueryExecutionListener events
     * pays the wait ONCE per JVM, not once per round ([[obsBroken]]
-    * memo). Gate: `spark.graft.fusedmetric=false` restores the two-job
-    * rounds (the A/B lever).
+    * memo).
     */
-  @volatile private var obsBroken = false
-
-  def fusedMetricOn(spark: org.apache.spark.sql.SparkSession): Boolean =
-    spark.conf.get("spark.graft.fusedmetric", "true") == "true"
+  @volatile private[graft] var obsBroken = false
 
   def observedOrNone(o: org.apache.spark.sql.Observation,
       timeoutMs: Long = 2000): Option[Map[String, Any]] = {

@@ -391,7 +391,7 @@ object Multimodal {
       decoder: Decoder): DataFrame = {
     val bin = graft.functions.widen(m6Corpus(spark, sfDir)
       .select(col("doc_id"), encode(col("text"), "UTF-8").as("payload")),
-      graft.functions.defaultWidenAmp(spark))
+      graft.functions.DefaultWidenAmp)
     val enc = RowEncoder.encoderFor(dhashSchema)
     val nSlices = M6Bits + 1
     bin.mapPartitions { rows =>

@@ -194,16 +194,14 @@ object Graph {
     // pin's own materialization job via observe() instead of a separate
     // isEmpty job per hop; on observation timeout fall back to isEmpty
     // (same predicate over the same pinned rows).
-    val fuse = graft.functions.fusedMetricOn(spark)
-    def pinCounted(df: DataFrame): (DataFrame, Boolean) =
-      if (fuse) {
-        val o = org.apache.spark.sql.Observation()
-        val pinned = df.observe(o, count(lit(1)).as("n")).pin()
-        graft.functions.observedOrNone(o) match {
-          case Some(m) => (pinned, m.getOrElse("n", 1L) == 0L)
-          case None => (pinned, pinned.isEmpty)
-        }
-      } else { val pinned = df.pin(); (pinned, pinned.isEmpty) }
+    def pinCounted(df: DataFrame): (DataFrame, Boolean) = {
+      val o = org.apache.spark.sql.Observation()
+      val pinned = df.observe(o, count(lit(1)).as("n")).pin()
+      graft.functions.observedOrNone(o) match {
+        case Some(m) => (pinned, m.getOrElse("n", 1L) == 0L)
+        case None => (pinned, pinned.isEmpty)
+      }
+    }
     var (frontier, drained) = pinCounted(s) // nodes first reached last round
     val frontiers = scala.collection.mutable.ListBuffer((frontier, 0L))
     var reachedNodes = frontier // ids only, lazy union of checkpoints

@@ -31,8 +31,7 @@ object Pin {
 
   def apply[T](ds: Dataset[T]): Dataset[T] = {
     val spark = ds.sparkSession
-    val pinned = spark.conf
-      .get("spark.graft.checkpoint.mode", "local") match {
+    measured(spark.conf.get("spark.graft.checkpoint.mode", "local") match {
       case "disk" =>
         val sc = spark.sparkContext
         dirLock.synchronized {
@@ -45,10 +44,7 @@ object Pin {
         }
         ds.checkpoint()
       case _ => ds.localCheckpoint()
-    }
-    if (spark.conf.get("spark.graft.checkpoint.stats", "true") == "true")
-      measured(pinned)
-    else pinned
+    })
   }
 
   /** MEASURED STATISTICS for the pinned frame — the misestimated-
@@ -65,12 +61,7 @@ object Pin {
     * LogicalRDD with the measured Statistics. Genuinely small frames
     * keep broadcasting; big ones stop lying. Scale-correct by
     * construction — the same frame broadcasts at sf0.1 and shuffles at
-    * sf1, each because of its true size. `spark.graft.checkpoint.stats
-    * = false` opts out (saves the measuring pass on latency-critical
-    * loops whose frames never join) — a PERF-ONLY knob: frames revert
-    * to the origin plan's default estimates, which can cost a plan
-    * choice but can never change an answer (no correctness path reads
-    * these statistics; `PinSpec` pins both directions).
+    * sf1, each because of its true size.
     */
   private def measured[T](pinned: Dataset[T]): Dataset[T] = {
     val spark = pinned.sparkSession

@@ -1250,7 +1250,7 @@ object Similarity {
     // buckets and the ×nT explode downstream all parallelize
     val e = widen(Tables(spark, sfDir, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v")),
-      defaultWidenAmp(spark))
+      DefaultWidenAmp)
       .withColumn("norm", sqrt(dot(col("v"), col("v"))))
       // CONTRACT: zero-norm vectors have no cosine direction — they are
       // excluded from the graph (both as node and neighbor) rather than

@@ -1,43 +1,59 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
-/** Round-19 CC self-loop fusion: labelClusters' one-join round (self-loop
-  * edges + Σcluster convergence) must be output-identical to the two-join
-  * round shape it replaced (neighborMin + left-join carry + changed-count)
-  * — the fusion exists to drop a join and a broadcast build per round,
-  * never to change a label. The fixture exercises the shapes that stress
-  * the convergence rule: a diameter-4 chain (multi-round propagation), a
-  * clique (one-round collapse), an isolated pair, and ids chosen so a
-  * WRAPPING bigint sum of labels would collide across rounds only if the
-  * decimal sum were implemented wrong (the sum is exact in DECIMAL(38,0)).
+/** labelClusters' CC round: one self-loop edge per node, so each round's
+  * new label is min(own, neighbors') from a single edge join, and
+  * convergence is an unchanged Σ cluster between rounds. The fixture
+  * exercises the shapes that stress that convergence rule: a diameter-4
+  * chain (multi-round propagation), a clique (one-round collapse), an
+  * isolated pair, and a duplicate edge.
+  *
+  * The round's convergence sum and BFS's frontier count ride each pin's
+  * own job through `Dataset.observe`; when the observation never arrives
+  * ([[graft.functions.observedOrNone]] times out and sets the JVM-wide
+  * `obsBroken` memo) both fall back to a second job over the pinned rows.
+  * The last test forces that fallback and checks it answers the same.
   */
 class CcSelfLoopSpec extends GraftSuite {
 
-  private def run(selfloop: Boolean, pairs: Seq[(Long, Long)]): Seq[(Long, Long, Int)] = {
+  private def run(pairs: Seq[(Long, Long)]): Seq[(Long, Long, Int)] = {
     import spark.implicits._
-    spark.conf.set("spark.graft.cc.selfloop", selfloop.toString)
-    try {
-      dedup.Dedup.labelClusters(pairs.toDF("i", "j"), "id")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
-    } finally spark.conf.unset("spark.graft.cc.selfloop")
+    dedup.Dedup.labelClusters(pairs.toDF("i", "j"), "id")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
   }
 
-  test("self-loop fused CC ≡ two-join CC on chain + clique + pair") {
-    // chain 10-11-12-13-14 (diameter 4), clique {20,21,22}, pair (30,31),
-    // plus a duplicate edge (10,11) — min-label must be 10/20/30
-    val pairs = Seq[(Long, Long)]((10L, 11L), (11L, 12L), (12L, 13L),
-      (13L, 14L), (20L, 21L), (20L, 22L), (21L, 22L), (30L, 31L), (10L, 11L))
-    val fused = run(selfloop = true, pairs)
-    val legacy = run(selfloop = false, pairs)
-    assert(fused.nonEmpty)
-    assert(fused == legacy)
-    // membership sanity: every chain node labels to 10
-    assert(fused.filter(_._1 >= 10L).filter(_._1 <= 14L).forall(_._2 == 10L))
+  // chain 10-11-12-13-14 (diameter 4), clique {20,21,22}, pair (30,31)
+  private val fixture = Seq[(Long, Long)]((10L, 11L), (11L, 12L), (12L, 13L),
+    (13L, 14L), (20L, 21L), (20L, 22L), (21L, 22L), (30L, 31L))
+
+  private val expected = Seq[(Long, Long, Int)](
+    (10L, 10L, 1), (11L, 10L, 0), (12L, 10L, 0), (13L, 10L, 0), (14L, 10L, 0),
+    (20L, 20L, 1), (21L, 20L, 0), (22L, 20L, 0),
+    (30L, 30L, 1), (31L, 30L, 0))
+
+  /** Runs `body` with the observation memo forced to `broken`, restoring
+    * the JVM-wide memo afterwards (every suite shares this JVM). */
+  private def withObsBroken[A](broken: Boolean)(body: => A): A = {
+    val saved = functions.obsBroken
+    functions.obsBroken = broken
+    try body finally functions.obsBroken = saved
+  }
+
+  test("chain, clique and pair label to their min id; a duplicate edge is a no-op") {
+    assert(run(fixture) == expected)
+    assert(run(fixture :+ ((10L, 11L))) == expected)
   }
 
   test("self-loop fused CC handles a single edge and converges") {
-    val fused = run(selfloop = true, Seq((5L, 3L)))
-    assert(fused == Seq((3L, 3L, 1), (5L, 3L, 0)))
+    assert(run(Seq((5L, 3L))) == Seq((3L, 3L, 1), (5L, 3L, 0)))
+  }
+
+  test("observation timeout: the fallback jobs answer as the fused CC and BFS paths") {
+    def bfs() = ops.Graph.q76BfsHops(spark, sf).collect().toSeq
+    val (fusedCc, fusedBfs) = withObsBroken(false)((run(fixture), bfs()))
+    val (fallbackCc, fallbackBfs) = withObsBroken(true)((run(fixture), bfs()))
+    assert(fusedCc == expected)
+    assert(fallbackCc == expected)
+    assert(fusedBfs.nonEmpty)
+    assert(fallbackBfs == fusedBfs)
   }
 }

@@ -6,12 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared SparkSession for all suites (one JVM, fork=true in sbt). */
 object SparkSpec {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
+    val s = GraftSession.builder("local[4]", "graft-test", shufflePartitions = 4)
       .withExtensions(new graft.functions.GraftExtensions)
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-warehouse").toString)

@@ -16,7 +16,7 @@ for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
   ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
 run() { # $1=classpath $2=query
-  SPARK_GRAFT_EXT=1 SPARK_GRAFT_CPUS=32 java $ADD_OPENS -Xmx8g \
+  SPARK_GRAFT_CPUS=32 java $ADD_OPENS -Xmx8g \
     -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
     -cp "$1:/opt/spark/jars/*" graft.TimeQuery "$2" "$SFDIR" 4 \
     2>/dev/null | grep -E "^[a-z0-9_]+:" || true
