@@ -42,12 +42,23 @@ object GraftSession {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").foreach { kv =>
-      kv.split("=", 2) match {
-        case Array(k, v) if k.trim.nonEmpty => s.conf.set(k.trim, v.trim)
-        case _ => ()
-      }
+    sys.env.get("SPARK_GRAFT_CONF").foreach(parseConf(_).foreach {
+      case (k, v) => s.conf.set(k, v)
     })
     s
   }
+
+  /** The `k=v;k=v` pairs of a `SPARK_GRAFT_CONF` value, trimmed. Empty
+    * segments (a trailing `;`) are skipped; any other entry without a
+    * `=` or with an empty key is an error, so a typo fails the run
+    * instead of silently measuring the default.
+    */
+  private[graft] def parseConf(s: String): Seq[(String, String)] =
+    s.split(";").toSeq.filter(_.trim.nonEmpty).map { kv =>
+      kv.split("=", 2) match {
+        case Array(k, v) if k.trim.nonEmpty => k.trim -> v.trim
+        case _ => throw new IllegalArgumentException(
+          s"malformed SPARK_GRAFT_CONF entry '$kv': expected key=value")
+      }
+    }
 }

@@ -159,9 +159,9 @@ object Dedup {
     * d5/d14 rule), the hamming verifies on the join stream as one
     * `bit_count(xor)` over the packed words, and the only pair-level
     * shuffle left is the output-sized orderBy. Dense (blk, sig) buckets
-    * parallelize across the same G×G upper-triangular skew grid as
-    * [[hyperplanePairJoin]] — one saturated block key becomes ~G²/2
-    * independent join cells instead of a single-task straggler. The
+    * parallelize across the G×G upper-triangular skew grid of
+    * [[graft.functions.blockedPairs]] — one saturated block key becomes
+    * ~G²/2 independent join cells instead of a single-task straggler. The
     * candidate SET (pairs sharing ≥1 block, i < j) and the hamming
     * integer are unchanged, so the output is bit-identical.
     */
@@ -184,39 +184,13 @@ object Dedup {
           aggregate(slice(col("bits"), k * blockLen + 1, lit(blockLen)),
             lit(0L), (acc, x) => acc * 2 + x)).as("sigs"),
         aggregate(col("bits"), lit(0L), (acc, x) => acc * 2 + x).as("w"))
-    val side = docs
-      .select(col("doc_id"), col("sigs"), col("w"),
-        posexplode(col("sigs")))
-      .withColumnRenamed("pos", "blk").withColumnRenamed("col", "sig")
-      // skew grid: deterministic sub-block within the (blk, sig) bucket
-      .withColumn("g",
-        pmod(xxhash64(col("doc_id"), lit(909)), lit(SimHashGridG)).cast("int"))
-      .pin() // signatures compute once, not per self-join side
-    val left = side.withColumn("cgb",
-        explode(sequence(col("g"), lit(SimHashGridG - 1))))
-      .withColumnRenamed("g", "cga")
-    val right = side.withColumn("cga", explode(sequence(lit(0), col("g"))))
-      .withColumnRenamed("g", "cgb")
-    // shuffle_hash for the same reason as hyperplanePairJoin: sort-merge
-    // re-iterates its spilled group once per probe row in dense cells
-    left.alias("a").hint("shuffle_hash")
-      .join(right.alias("b"), Seq("blk", "sig", "cga", "cgb"))
-      .filter((col("cga") =!= col("cgb") ||
-          col("a.doc_id") < col("b.doc_id")) &&
-        col("a.doc_id") =!= col("b.doc_id") &&
-        // exactly-once: no block BEFORE blk matches pairwise
-        !prefixCollide(col("a.sigs"), col("b.sigs"), col("blk")))
+    blockedPairs(docs, "doc_id", "sigs", Seq("w"))
       .withColumn("hamming",
-        bit_count(col("a.w").bitwiseXOR(col("b.w"))).cast("long"))
+        bit_count(col("pi.w").bitwiseXOR(col("pj.w"))).cast("long"))
       .filter(col("hamming") <= HammingMax)
-      .select(least(col("a.doc_id"), col("b.doc_id")).as("i"),
-        greatest(col("a.doc_id"), col("b.doc_id")).as("j"), col("hamming"))
+      .select(col("i"), col("j"), col("hamming"))
       .orderBy(col("i"), col("j"))
   }
-
-  /** d3's skew-grid width — same rationale as [[PairGridG]]; named
-    * separately so the two families tune independently. */
-  private val SimHashGridG = 8
 
   val d3Sql: String = {
     val ths = sqlTokenHashes("text")
@@ -345,7 +319,7 @@ object Dedup {
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v")),
       DefaultWidenAmp)
       .withColumn("norm", sqrt(dot(col("v"), col("v"))))
-    hyperplanePairJoin(e, nT, nP, Seq("v", "norm"))
+    hyperplanePairJoin(e, nT, nP, D5Dim, Seq("v", "norm"))
       .withColumn("cos", dot(col("pi.v"), col("pj.v")) /
         (col("pi.norm") * col("pj.norm")))
       .filter(col("cos") >= CosineThreshold)
@@ -354,102 +328,19 @@ object Dedup {
   }
 
   /** OR-amplified hyperplane-bucket PAIR JOIN (i < j, each colliding pair
-    * emitted EXACTLY ONCE) over a (vec_id, v, …) frame — d5's blocking,
-    * shared with d14. Returns (i, j, pi, pj) where pi/pj are structs of
-    * the requested `payload` columns, so the caller verifies (exact
-    * cosine, hamming estimate) ON THE JOIN STREAM and reduces to output
-    * rows with NO pair-level shuffle at all:
-    *
-    *  - payloads ride the bucket rows INLINE — O(n·tables) shuffle —
-    *    instead of joining back per candidate pair (the former
-    *    ids-then-join-back shape shuffled the CANDIDATE multiset, which
-    *    under dense-blob geometry is ~quadratic: the sf10 rung's 200 k
-    *    vectors in 10 fixed label blobs spilled >60 GB and died);
-    *  - cross-table duplicates are dropped STRUCTURALLY, not by a
-    *    distinct: each row carries its full bucket vector `bs`, and a
-    *    pair survives only at its FIRST colliding table (no earlier
-    *    entry of `bs` matches pairwise) — the candidate-distinct that
-    *    was the other quadratic shuffle disappears, exactly.
-    *
-    * The candidate SET is unchanged (same OR-amplified buckets, i < j),
-    * so callers' outputs are bit-identical; only the plan shape moved
-    * from shuffle-bound to stream-bound. In-bucket pair enumeration
-    * stays CPU-quadratic per bucket — inherent to "list all qualifying
-    * pairs" on data whose qualifying pairs are themselves quadratic
-    * (the production escape for that regime is the per-doc form: d12's
-    * estimate gate, d20's degree-bounded kNN clusters).
+    * emitted EXACTLY ONCE, at its first colliding table) over a
+    * (vec_id, v, …) frame of `dim`-d vectors — d5's blocking, shared with
+    * d14 and s15's kNN graph. Returns [[graft.functions.blockedPairs]]'
+    * (i, j, pi, pj) over the per-table bucket vector. The candidate SET
+    * is the OR-amplified bucket collisions; the production escape for
+    * data whose qualifying pairs are themselves quadratic is the per-doc
+    * form (d12's estimate gate, d20's degree-bounded kNN clusters).
     */
-  /** Sub-blocks per bucket for the skew grid below: a bucket's pair
-    * space splits into G(G+1)/2 independently-joinable cells, so one
-    * dense-blob bucket parallelizes across ~G²/2 tasks instead of
-    * serializing on whichever task drew its (t, bucket) key.
-    */
-  private val PairGridG = 8
-
   private[graft] def hyperplanePairJoin(e: DataFrame, nT: Int, nP: Int,
-      payload: Seq[String]): DataFrame =
-    hyperplanePairJoinWith(e, nT, nP, payload, D5Dim)
-
-  /** [[hyperplanePairJoin]] with an explicit vector dimension — the
-    * similarity family (s15's kNN graph) shares the identical bucket
-    * family and pair-join shape.
-    */
-  private[graft] def hyperplanePairJoinWith(e: DataFrame, nT: Int, nP: Int,
-      payload: Seq[String], dim: Int): DataFrame = {
-    val buckets = array((0 until nT).map(t =>
-      hyperplaneBucket(col("v"), nP, dim, t * nP)): _*)
-    // parallelism note: CALLERS widen before the per-row signature/norm
-    // compute (d5/d14/s15 all widen straight off the scan — see
-    // [[graft.functions.widen]]); widening here again would call `.rdd`
-    // on an exchange-bearing plan, which executes the exchange at plan
-    // time under AQE
-    val eb = e
-      .withColumn("bs", buckets)
-      .select(col("vec_id") +: col("bs") +:
-        payload.map(col) :+ posexplode(col("bs")): _*)
-      .withColumnRenamed("pos", "t").withColumnRenamed("col", "bucket")
-      .select(col("vec_id"), col("bs"), col("t"), col("bucket"),
-        struct(payload.map(col): _*).as("p"))
-      // SKEW GRID: deterministic sub-block of each row within its bucket
-      .withColumn("g",
-        pmod(xxhash64(col("vec_id"), lit(909)), lit(PairGridG)).cast("int"))
-      .pin() // buckets compute once, not per self-join side
-    // Each bucket's pair space is enumerated as a G×G upper-triangular
-    // grid of cells: a row in sub-block g plays the LEFT role of cells
-    // (g, g..G-1) and the RIGHT role of cells (0..g, g); a pair with
-    // blocks (gi, gj) meets in exactly ONE cell (min, max) — once for
-    // off-diagonal cells, twice on the diagonal where the id filter
-    // dedups. Without the grid, one dense-blob bucket (the fixed-blob
-    // corpus regimes: 10 label clusters at every SF) serializes its
-    // entire ~quadratic pair space on a single task — measured as a
-    // 27-minute straggler at the sf10 rung.
-    val left = eb.withColumn("cgb",
-      explode(sequence(col("g"), lit(PairGridG - 1))))
-      .withColumnRenamed("g", "cga")
-    val right = eb.withColumn("cga", explode(sequence(lit(0), col("g"))))
-      .withColumnRenamed("g", "cgb")
-    // shuffle_hash: the cells are still equal-key join groups, and a
-    // sort-merge join RE-ITERATES its spilled right-side group once per
-    // left row (disk reads quadratic in cell size); the hash join holds
-    // the partition's build rows in one in-memory map and streams the
-    // probe side once
-    left.alias("a").hint("shuffle_hash")
-      .join(right.alias("b"), Seq("t", "bucket", "cga", "cgb"))
-      .filter((col("cga") =!= col("cgb") ||
-          col("a.vec_id") < col("b.vec_id")) &&
-        col("a.vec_id") =!= col("b.vec_id") &&
-        // first-collision emission: no table BEFORE t bucketed this pair
-        // together (entries 0..t-1 of the carried bucket vectors) — a
-        // codegen'd loop ([[graft.functions.PrefixCollideExpr]]), since
-        // this predicate runs once per in-bucket candidate row
-        !prefixCollide(col("a.bs"), col("b.bs"), col("t")))
-      // id-ordered pair, ROLE-ordered payloads: pi/pj belong to the
-      // a/b roles, not to i/j — callers' verify functions are symmetric
-      // (cosine, hamming), so the roles never matter
-      .select(least(col("a.vec_id"), col("b.vec_id")).as("i"),
-        greatest(col("a.vec_id"), col("b.vec_id")).as("j"),
-        col("a.p").as("pi"), col("b.p").as("pj"))
-  }
+      dim: Int, payload: Seq[String]): DataFrame =
+    blockedPairs(e.withColumn("bs", array((0 until nT).map(t =>
+        hyperplaneBucket(col("v"), nP, dim, t * nP)): _*)),
+      "vec_id", "bs", payload)
 
   val d5Sql: String =
     s"""WITH e AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS norm
@@ -1071,7 +962,7 @@ object Dedup {
     // vector — the ship-the-sketch story now also holds on the wire:
     // bucket rows carry sigs inline and the hamming estimate runs on the
     // join stream (see [[hyperplanePairJoin]] — no pair-level shuffle)
-    hyperplanePairJoin(e, D5Tables, D5Planes, Seq("sig"))
+    hyperplanePairJoin(e, D5Tables, D5Planes, D5Dim, Seq("sig"))
       .withColumn("hamming", bitHamming(col("pi.sig"), col("pj.sig")))
       .filter(col("hamming") <= D14HammingMax)
       .select(col("i"), col("j"), col("hamming"),
@@ -1177,7 +1068,7 @@ object Dedup {
     * (see [[editPairsVerify]]): a hot (seg, part) group parallelizes
     * across G² cells at ×G shuffle replication per side.
     *
-    * PER-ARM DEFAULTS, both measured (round 18): the grid's ×G
+    * PER-ARM CONSTANTS, both measured (round 18): the grid's ×G
     * replication prices the WHOLE exploded side, so it only pays where
     * hot groups actually exist.
     *  - d15's 6-7-char exact segments collide massively on natural text
@@ -1191,12 +1082,9 @@ object Dedup {
     *    the ~1.4k-row/doc variant explode, which ×8 turns into a
     *    >65 GB shuffle at sf10 (measured: disk-full death) and a 2×
     *    slowdown at sf0.1 (measured 10.5 s at G = 1 vs 23.3 s at G = 8).
-    *    The selective arm therefore defaults to G = 1.
-    * Both knobs stay conf-tunable per deployment. */
+    *    The selective arm therefore runs at G = 1. */
   val EditGridG = 8
-  val EditGridGConf = "spark.graft.editDedup.gridG"
   val EditSelectiveGridG = 1
-  val EditSelectiveGridGConf = "spark.graft.editDedup.selectiveGridG"
 
   /** HOT-GROUP grid for the UNGRIDDED (G = 1) arm (round 19, guide §2.5
     * "split hot keys"): the round-19 sf10 probe of d17 caught the
@@ -1222,9 +1110,8 @@ object Dedup {
     * scale no group can be hot enough to matter and the sample pass
     * would be pure overhead (the driver's sf0.1 bench rows are
     * unchanged); at the sf10 rung (500 k docs) and beyond it is on.
-    * All three knobs conf-tunable per deployment. */
+    * The row threshold and the doc gate are conf-tunable per deployment. */
   val EditHotGridG = 16
-  val EditHotGridGConf = "spark.graft.editDedup.hotGridG"
   val EditHotGroupRows = 2048L
   val EditHotGroupRowsConf = "spark.graft.editDedup.hotGroupRows"
   val EditHotMinDocs = 100000L
@@ -1276,8 +1163,9 @@ object Dedup {
     // (seg, part) values concentrate a ~quadratic candidate space on
     // whichever shuffle partition drew them — the r17 sf10 sweep
     // measured d15's join stage collapsing from 32 busy cores to 4
-    // stragglers for over an hour. Same cure as [[hyperplanePairJoin]],
-    // simpler decomposition because index × probe is NOT a self-join:
+    // stragglers for over an hour. Same cure as
+    // [[graft.functions.blockedPairs]], simpler decomposition because
+    // index × probe is NOT a self-join:
     // each side carries its own doc_id sub-block and cross-explodes the
     // other side's G values, so a (seg, part) group's A×B cell grid
     // splits G²-ways with ×G row replication per side and every
@@ -1289,26 +1177,23 @@ object Dedup {
     // with the HOT-GROUP grid (round 19, [[EditHotGridG]]) splitting
     // the few groups that ARE hot at corpus scale.
     val spark = keys.sparkSession
-    val hotG = graft.functions.confInt(spark, EditHotGridGConf, EditHotGridG)
-    val hotMinDocs = graft.functions.confLong(spark, EditHotMinDocsConf,
-      EditHotMinDocs)
-    val useHotGrid = gridG == 1 && hotG > 1 && nDocs >= hotMinDocs
-    val G = gridG
+    val useHotGrid = gridG == 1 && nDocs >= graft.functions.confLong(spark,
+      EditHotMinDocsConf, EditHotMinDocs)
+    def gridded(side: DataFrame, own: String, other: String,
+        width: Column) =
+      side
+        .withColumn(own,
+          pmod(xxhash64(col("doc_id"), lit(311)), width).cast("int"))
+        .withColumn(other, explode(sequence(lit(0), (width - 1).cast("int"))))
     val (a0, b0) = if (!useHotGrid) (
-      indexSide
-        .withColumn("ga",
-          pmod(xxhash64(col("doc_id"), lit(311)), lit(G)).cast("int"))
-        .withColumn("gb", explode(sequence(lit(0), lit(G - 1)))),
-      probeSide
-        .withColumn("gb",
-          pmod(xxhash64(col("doc_id"), lit(311)), lit(G)).cast("int"))
-        .withColumn("ga", explode(sequence(lit(0), lit(G - 1))))
+      gridded(indexSide, "ga", "gb", lit(gridG)),
+      gridded(probeSide, "gb", "ga", lit(gridG))
     ) else {
       // HOT-GROUP grid (see [[EditHotGridG]]): count a deterministic
       // 1-in-EditHotSampleMod doc sample per (seg, part) on the index
       // side, broadcast the hot tail back onto both sides, and grid ONLY
-      // those rows at hotG — replication prices the hot rows, not the
-      // side. Pinned: both side joins read the same hot set (and the
+      // those rows at EditHotGridG — replication prices the hot rows, not
+      // the side. Pinned: both side joins read the same hot set (and the
       // sample-count job runs once).
       val hotRows = graft.functions.confLong(spark, EditHotGroupRowsConf,
         EditHotGroupRows)
@@ -1319,19 +1204,13 @@ object Dedup {
         .filter(col("cnt") * EditHotSampleMod > hotRows)
         .select(col("seg").as("hseg"), col("part").as("hpart"))
         .pin()
-      def gridded(side: DataFrame, own: String, other: String) =
-        side.join(broadcast(hot),
+      def hotGridded(side: DataFrame, own: String, other: String) =
+        gridded(side.join(broadcast(hot),
             col("seg") === col("hseg") && col("part") === col("hpart"),
-            "left_outer")
-          .withColumn("gg",
-            when(col("hseg").isNotNull, lit(hotG)).otherwise(lit(1)))
+            "left_outer"), own, other,
+          when(col("hseg").isNotNull, lit(EditHotGridG)).otherwise(lit(1)))
           .drop("hseg", "hpart")
-          .withColumn(own,
-            pmod(xxhash64(col("doc_id"), lit(311)), col("gg")).cast("int"))
-          .withColumn(other,
-            explode(sequence(lit(0), (col("gg") - 1).cast("int"))))
-          .drop("gg")
-      (gridded(indexSide, "ga", "gb"), gridded(probeSide, "gb", "ga"))
+      (hotGridded(indexSide, "ga", "gb"), hotGridded(probeSide, "gb", "ga"))
     }
     val cand = a0.hint("shuffle_hash").alias("a")
       .join(b0.hint("shuffle_hash").alias("b"),
@@ -1391,9 +1270,7 @@ object Dedup {
     // unhinted planner broadcasts a ~30×-amplified build at every scale.
     // The candidate join is big-big by construction: hint it shuffled.
     // Verify is stream-bound either way — see [[editPairsVerify]].
-    editPairsVerify(keys, indexSide, probeSide, inline,
-      graft.functions.confInt(docs.sparkSession, EditGridGConf, EditGridG),
-      nDocs)
+    editPairsVerify(keys, indexSide, probeSide, inline, EditGridG, nDocs)
   }
 
   /** Oracle: brute-force Levenshtein over all pairs — the blocking must be
@@ -1510,9 +1387,8 @@ object Dedup {
     // ARE hot at corpus scale (the round-19 sf10 probe caught one
     // pinning the verify join on a single core) split via the hot-group
     // grid inside [[editPairsVerify]] instead.
-    editPairsVerify(keys, indexSide, probeSide, inline,
-      graft.functions.confInt(docs.sparkSession, EditSelectiveGridGConf,
-        EditSelectiveGridG), nDocs)
+    editPairsVerify(keys, indexSide, probeSide, inline, EditSelectiveGridG,
+      nDocs)
   }
 
   // ---------------------------------------------------------------- d19
@@ -1546,11 +1422,9 @@ object Dedup {
   def d19EditDedupAuto(spark: SparkSession, sfDir: String): DataFrame =
     d19Pairs(Tables(spark, sfDir, "documents"))
 
-  private[graft] def d19Pairs(docs: DataFrame): DataFrame = {
-    val crossover = graft.functions.confInt(docs.sparkSession,
-      "spark.graft.editDedup.crossover", D19Crossover)
-    if (docs.count() <= crossover) d15Pairs(docs) else d17Pairs(docs)
-  }
+  private[graft] def d19Pairs(docs: DataFrame): DataFrame =
+    if (d19Choice(docs.sparkSession, docs.count()) == "d15") d15Pairs(docs)
+    else d17Pairs(docs)
 
   /** The arm [[d19Pairs]] would take for a corpus of `n` docs — split out
     * so the switch rule itself is spec-assertable without running either

@@ -498,9 +498,9 @@ case class SortedIntersectHeadExpr(left: Expression, right: Expression)
 /** True iff the first `n` entries of two equal-length bigint arrays
   * collide pairwise anywhere — `exists(zip_with(slice(a,1,n), slice(b,1,n),
   *   _ === _), identity)` as one codegen'd loop (no sliced-array or
-  * zipped-array allocation per row). The OR-amplified LSH pair join
-  * ([[graft.dedup.Dedup.hyperplanePairJoin]]) evaluates this on every
-  * in-bucket candidate row for its first-colliding-table exactly-once
+  * zipped-array allocation per row). The blocked pair join
+  * ([[graft.functions.blockedPairs]]) evaluates this on every
+  * in-bucket candidate row for its first-collision exactly-once
   * emission — ~10¹⁰ rows at the sf10 rung's dense-blob geometry, where
   * the higher-order-function form allocates three arrays per row.
   */

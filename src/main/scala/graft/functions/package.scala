@@ -238,6 +238,80 @@ package object functions {
   def prefixCollide(a: Column, b: Column, n: Column): Column =
     native(PrefixCollideExpr(ex(a), ex(b), ex(n)))
 
+  /** Sub-blocks per bucket of [[blockedPairs]]' skew grid: a bucket's
+    * pair space splits into G(G+1)/2 independently-joinable cells, so one
+    * dense bucket parallelizes across ~G²/2 tasks instead of serializing
+    * on whichever task drew its key.
+    */
+  val BlockedPairsGridG = 8
+
+  /** The blocked PAIR SELF-JOIN of the near-dup and similarity family
+    * (d3 simhash blocks, m6/m7 dHash blocks, the d5/d14/s15 hyperplane
+    * tables): two rows are candidates when they share a blocking key at
+    * the same position of their `keys` (a bigint array), and each
+    * candidate pair is emitted EXACTLY ONCE, i < j. Returns (i, j, pi, pj)
+    * where pi/pj are structs of the `payload` columns, so the caller
+    * verifies ON THE JOIN STREAM and reduces to output rows with no
+    * pair-level shuffle at all:
+    *
+    *  - payloads ride the bucket rows INLINE — O(n·|keys|·G) shuffle —
+    *    instead of joining back per candidate pair (an ids-then-join-back
+    *    shape shuffles the CANDIDATE multiset, which under dense-blob or
+    *    saturated-block geometry is ~quadratic: the sf10 rung's 200 k
+    *    vectors in 10 fixed label blobs spilled >60 GB and died);
+    *  - cross-position duplicates are dropped STRUCTURALLY, not by a
+    *    distinct: each row carries its whole `keys` array, and a pair
+    *    survives only at its FIRST colliding position (no earlier entry
+    *    matches pairwise — codegen'd [[PrefixCollideExpr]], since this
+    *    predicate runs once per in-bucket candidate row);
+    *  - SKEW GRID: each row gets a deterministic sub-block g of
+    *    [[BlockedPairsGridG]] within its bucket, and a bucket's pair
+    *    space is enumerated as a G×G upper-triangular grid of cells. A
+    *    row in sub-block g plays the LEFT role of cells (g, g..G-1) and
+    *    the RIGHT role of cells (0..g, g); a pair with blocks (gi, gj) meets
+    *    in exactly ONE cell (min, max) — once off the diagonal, twice on
+    *    it, where the id filter keeps one. Without the grid one dense
+    *    bucket serializes its ~quadratic pair space on a single task
+    *    (measured as a 27-minute straggler at the sf10 rung);
+    *  - shuffle_hash: the cells are still equal-key join groups, and a
+    *    sort-merge join RE-ITERATES its spilled right-side group once per
+    *    left row (disk reads quadratic in cell size); the hash join holds
+    *    the partition's build rows in one map and streams the probe once.
+    *
+    * The pair is id-ordered but the payloads are ROLE-ordered: pi/pj
+    * belong to the a/b join roles, not to i/j — the callers' verifies
+    * (cosine, hamming) are symmetric. In-bucket pair enumeration stays
+    * CPU-quadratic per bucket, inherent to "list all qualifying pairs".
+    * Callers widen BEFORE their per-row signature compute: widening here
+    * would call `.rdd` on a plan the caller may already have shuffled,
+    * which executes the exchange at plan time under AQE.
+    */
+  def blockedPairs(side: org.apache.spark.sql.DataFrame, id: String,
+      keys: String, payload: Seq[String]): org.apache.spark.sql.DataFrame = {
+    val rows = side
+      .select(col(id).as("id"), col(keys).as("keys"),
+        struct(payload.map(col): _*).as("p"), posexplode(col(keys)))
+      .withColumnRenamed("col", "key")
+      .withColumn("g",
+        pmod(xxhash64(col("id"), lit(909)), lit(BlockedPairsGridG))
+          .cast("int"))
+    val pinned = graft.ops.Pin(rows) // keys compute once, not per side
+    val left = pinned
+      .withColumn("cgb",
+        explode(sequence(col("g"), lit(BlockedPairsGridG - 1))))
+      .withColumnRenamed("g", "cga")
+    val right = pinned.withColumn("cga", explode(sequence(lit(0), col("g"))))
+      .withColumnRenamed("g", "cgb")
+    left.alias("a").hint("shuffle_hash")
+      .join(right.alias("b"), Seq("pos", "key", "cga", "cgb"))
+      .filter((col("cga") =!= col("cgb") || col("a.id") < col("b.id")) &&
+        col("a.id") =!= col("b.id") &&
+        !prefixCollide(col("a.keys"), col("b.keys"), col("pos")))
+      .select(least(col("a.id"), col("b.id")).as("i"),
+        greatest(col("a.id"), col("b.id")).as("j"),
+        col("a.p").as("pi"), col("b.p").as("pj"))
+  }
+
   /** Σ bit_count(a[i] xor b[i]) — bit-level hamming over long arrays. */
   def bitHamming(a: Column, b: Column): Column =
     native(BitHammingExpr(ex(a), ex(b)))

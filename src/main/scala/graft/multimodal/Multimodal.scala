@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.Tables
-import graft.functions.prefixCollide
+import graft.functions.blockedPairs
 import graft.ops.Pin.Pinned
 
 /** Multimodal column plumbing (SURVEY.md §2.6).
@@ -354,8 +354,9 @@ object Multimodal {
     * hamming verifies on the join stream as one `bit_count(xor)` over the
     * packed words, and the only pair-level shuffle left is the
     * output-sized orderBy. Dense (blk, sig) buckets parallelize across the
-    * same G×G upper-triangular skew grid as d3. Candidate SET and hamming
-    * are unchanged, so the output is bit-identical.
+    * same G×G skew grid as d3 ([[graft.functions.blockedPairs]]).
+    * Candidate SET and hamming are unchanged, so the output is
+    * bit-identical.
     * 100 TB: dHash is one decoder pass per payload, partition-parallel,
     * 6 bytes of signature shipped per asset (never the media); candidate
     * generation is the (blk, sig) equi-join — shuffle O(n·4·G) longs.
@@ -363,10 +364,6 @@ object Multimodal {
   val M6Bits = 48
   val M6Blocks = 4
   val M6Tau = 3
-
-  /** m6's skew-grid width — same rationale as d3's; named separately so
-    * the media family tunes independently of the text simhash family. */
-  private val M6GridG = 8
 
   private val dhashSchema = StructType(Seq(
     StructField("doc_id", LongType, nullable = false),
@@ -440,31 +437,11 @@ object Multimodal {
         transform(sequence(lit(0), lit(M6Blocks - 1)), b =>
           call_function("shiftright", col("dhash"), b * lit(blockLen))
             .bitwiseAND(lit((1L << blockLen) - 1))).as("sigs"))
-      .select(col("doc_id"), col("w"), col("sigs"), posexplode(col("sigs")))
-      .withColumnRenamed("pos", "blk").withColumnRenamed("col", "sig")
-      // skew grid: deterministic sub-block within the (blk, sig) bucket
-      .withColumn("g",
-        pmod(xxhash64(col("doc_id"), lit(909)), lit(M6GridG)).cast("int"))
-      .pin() // ONE decoder pass feeds both self-join sides
-    val left = side.withColumn("cgb",
-        explode(sequence(col("g"), lit(M6GridG - 1))))
-      .withColumnRenamed("g", "cga")
-    val right = side.withColumn("cga", explode(sequence(lit(0), col("g"))))
-      .withColumnRenamed("g", "cgb")
-    // shuffle_hash for d3's reason: sort-merge re-iterates its spilled
-    // group once per probe row in dense (blk, sig) cells
-    left.alias("a").hint("shuffle_hash")
-      .join(right.alias("b"), Seq("blk", "sig", "cga", "cgb"))
-      .filter((col("cga") =!= col("cgb") ||
-          col("a.doc_id") < col("b.doc_id")) &&
-        col("a.doc_id") =!= col("b.doc_id") &&
-        // exactly-once: no block BEFORE blk matches pairwise
-        !prefixCollide(col("a.sigs"), col("b.sigs"), col("blk")))
+    blockedPairs(side, "doc_id", "sigs", Seq("w"))
       .withColumn("hamming",
-        bit_count(col("a.w").bitwiseXOR(col("b.w"))).cast("int"))
+        bit_count(col("pi.w").bitwiseXOR(col("pj.w"))).cast("int"))
       .filter(col("hamming") <= M6Tau)
-      .select(least(col("a.doc_id"), col("b.doc_id")).as("i"),
-        greatest(col("a.doc_id"), col("b.doc_id")).as("j"), col("hamming"))
+      .select(col("i"), col("j"), col("hamming"))
   }
 
   /** Oracle: brute-force dHash pairs (ASCII text ⟹ byte == codepoint, so

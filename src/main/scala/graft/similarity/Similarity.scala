@@ -1273,8 +1273,8 @@ object Similarity {
     // k rows per (partition, node) ever reach a shuffle. Same geometry,
     // same candidates, same (cos desc, neighbor asc) selection — the
     // negation round-trips bit-exactly, so the output is unchanged.
-    val und = graft.dedup.Dedup.hyperplanePairJoinWith(e, nT, nP,
-      Seq("v", "norm"), Dim)
+    val und = graft.dedup.Dedup.hyperplanePairJoin(e, nT, nP, Dim,
+      Seq("v", "norm"))
       .withColumn("cos", round(dot(col("pi.v"), col("pj.v")) /
         (col("pi.norm") * col("pj.norm")), 9))
       // every node is a query: each undirected pair feeds both endpoints

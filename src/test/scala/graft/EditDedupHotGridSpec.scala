@@ -3,7 +3,7 @@ package graft
 /** The edit-dedup family's hot-group skew grid (round 19): for the
   * ungridded (G = 1) arm, (seg, part) groups whose sampled index-side
   * count extrapolates past `spark.graft.editDedup.hotGroupRows` are split
-  * G²-ways at `spark.graft.editDedup.hotGridG` — and ONLY those groups,
+  * G²-ways at `Dedup.EditHotGridG` — and ONLY those groups,
   * so the replication prices the hot rows rather than the whole exploded
   * side (the blanket grid's measured sf10 failure mode). The contract:
   * the grid is a PLACEMENT decision — the candidate multiset, and
