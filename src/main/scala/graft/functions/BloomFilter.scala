@@ -48,7 +48,7 @@ object Bloom {
   private def positions(item: Column): Column = positionsFor(item, MBits)
 
   /** [[positions]] at an explicit geometry — the per-FILE bloom index
-    * ([[graft.ops.Layout.bloomIndexWrite]]) sizes m to the file row
+    * ([[graft.ops.Layout.maintainBloomIndex]]) sizes m to the file row
     * count instead of this object's bounded-set default (parquet's own
     * column bloom filters parameterize identically, by expected NDV).
     */

@@ -330,9 +330,9 @@ case class HyperplaneBucketExpr(child: Expression, nPlanes: Int, dim: Int,
   * column k lands at position i·n + k, so a sort by the z-value clusters
   * rows that are close in EVERY dimension — the layout primitive behind
   * multi-column min-max file skipping (Delta/Iceberg `OPTIMIZE ZORDER`).
-  * Inputs must already be scaled to [0, 2^bits) (see Layout.zOrderWrite's
-  * min-max binning; a production deployment substitutes quantile ranks
-  * for skewed domains) — out-of-range values error loudly rather than
+  * Inputs must already be scaled to [0, 2^bits) (see
+  * Layout.snapshotCompact's `zOrderBy` mode: min-max binning, or quantile
+  * ranks for skewed domains) — out-of-range values error loudly rather than
   * silently folding, which would break locality.
   */
 case class ZValueExpr(children: Seq[Expression], bits: Int)

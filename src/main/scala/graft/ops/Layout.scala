@@ -49,51 +49,6 @@ class ConcurrentWriteConflictException(val root: String, val base: Int,
   */
 object Layout {
 
-  /** Z-order clustered write (the `OPTIMIZE ZORDER BY` slot): scale each
-    * clustering column to [0, 2^bits) by monotone binning (one agg pass —
-    * broadcast as literals), interleave the bits into a Morton z-value,
-    * range-partition + sort by it, and write with bounded file size. Every
-    * output file then covers a small hyper-rectangle of the clustered
-    * space, so parquet min-max footer stats skip files/row-groups for
-    * predicates on ANY clustered column — a single-column sort only ever
-    * skips on its own column.
-    *
-    * Two binnings:
-    *  - linear (default): (c−mn)·2^bits / range. Overflow-safe: when the
-    *    column range leaves no headroom for the 2^bits multiply (or the
-    *    range itself exceeds Long), the arithmetic switches to doubles —
-    *    double conversion and positive-constant scaling are monotone, so
-    *    the bins stay ordered; a clamp absorbs the last-ulp edge.
-    *  - quantile (`quantile = true`): bin = rank among ≤2^bits−1
-    *    approx-percentile boundaries (computed in the same single agg
-    *    pass, broadcast as an array literal, counted with a codegen'd
-    *    `filter`). This is the skewed-domain production variant: under a
-    *    Zipf/outlier distribution linear binning collapses — one extreme
-    *    value stretches the range so every other row lands in bin 0 and
-    *    that dimension prunes NOTHING — while equal-population bins keep
-    *    every file covering a narrow slice of the data actually present.
-    *    Capped at bits ≤ 10: the per-row cost is O(2^bits) comparisons,
-    *    and 1024 equal-population bins per column already out-resolve any
-    *    realistic file count.
-    *
-    * 100 TB: one extra shuffle at write time (the range partitioning); the
-    * payoff is every subsequent scan. `maxRecordsPerFile` bounds file
-    * granularity — skipping resolution IS file resolution.
-    */
-  def zOrderWrite(df: DataFrame, zcols: Seq[Column], path: String,
-      bits: Int = 16, partitions: Int = 8, maxRecordsPerFile: Long = 0L,
-      quantile: Boolean = false): Unit = {
-    val scaled = if (quantile) quantileBins(df, zcols, bits)
-                 else linearBins(df, zcols, bits)
-    df.withColumn("__zv", zvalue(bits, scaled: _*))
-      .repartitionByRange(partitions, col("__zv"))
-      .sortWithinPartitions(col("__zv"))
-      .drop("__zv")
-      .write.mode("overwrite")
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .parquet(path)
-  }
-
   private def linearBins(df: DataFrame, zcols: Seq[Column], bits: Int): Seq[Column] = {
     val aggs = zcols.zipWithIndex.flatMap { case (c, k) =>
       Seq(min(c.cast("long")).as(s"mn$k"), max(c.cast("long")).as(s"mx$k"))
@@ -136,26 +91,6 @@ object Layout {
     }
   }
 
-  case class CowMergeStats(totalFiles: Int, touched: Seq[String],
-      untouched: Seq[String])
-
-  /** Per-file key range from parquet FOOTER statistics — no data pages are
-    * read, one footer per file (the planning cost a table format pays from
-    * its manifest instead). Returns (path, minKey, maxKey) for a long-typed
-    * key column; files with no rows or missing stats are reported with the
-    * full-range (Long.Min, Long.Max) so pruning stays conservative —
-    * a file we can't prove untouched must be treated as touched.
-    */
-  def fileKeyRanges(spark: org.apache.spark.sql.SparkSession, path: String,
-      keyCol: String): Seq[(String, Long, Long)] = {
-    val hconf = spark.sessionState.newHadoopConf()
-    val dir = new org.apache.hadoop.fs.Path(path)
-    val files = dir.getFileSystem(hconf).listStatus(dir)
-      .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-      .map(_.getPath.toString).toSeq
-    fileKeyRangesOf(spark, files, keyCol)
-  }
-
   /** Per-file (min, max, rowCount) of a long-typed column, read from
     * parquet footers. The serializable result row of [[fileStatsOf]].
     */
@@ -167,6 +102,14 @@ object Layout {
     * this counter untouched.
     */
   private[graft] val footerReads = new java.util.concurrent.atomic.AtomicLong(0)
+
+  /** The file name of a path or URI — the last `/`-separated segment. Data
+    * files and sidecar scopes match on it: parquet part files carry a
+    * per-job UUID, and URI spellings (file:/ vs file:///) must not defeat
+    * the match.
+    */
+  private[graft] def baseName(path: String): String =
+    path.substring(path.lastIndexOf('/') + 1)
 
   /** One file's footer stats over SEVERAL columns in one footer open;
     * static (no Spark capture) so the distributed path can ship it to
@@ -376,80 +319,27 @@ object Layout {
     }
   }
 
-  /** [[fileKeyRanges]] over an EXPLICIT file list — the form a manifest-
-    * resolved snapshot uses (its files never come from a directory
-    * listing).
+  /** Per-file key range from parquet FOOTER statistics for an explicit
+    * file list — no data pages are read, one footer per file (the
+    * planning cost a table format pays from its manifest instead; this is
+    * the stat-less fallback of [[snapshotKeyRanges]]). Returns (path,
+    * minKey, maxKey) for a long-typed key column; files with no rows or
+    * missing stats are reported with the full range (Long.Min, Long.Max)
+    * so pruning stays conservative — a file we can't prove untouched must
+    * be treated as touched.
     */
   def fileKeyRangesOf(spark: org.apache.spark.sql.SparkSession,
       files: Seq[String], keyCol: String): Seq[(String, Long, Long)] =
     fileStatsOf(spark, files, keyCol).map(s => (s.path, s.min, s.max))
 
-  /** Copy-on-write MERGE, the targeted-file-rewrite plan every incremental
-    * table deployment runs daily (q68's scaladoc names it; q68 itself is
-    * the shuffle fallback): changelog match-keys probe each base file's
-    * FOOTER min/max — only files whose key range contains a match key are
-    * re-read and rewritten via `rewrite`; every other file is left BYTE
-    * IDENTICAL on disk (the table, like any COW format, is "untouched
-    * originals + new files", here surfaced through [[CowMergeStats]]).
-    *
-    * Soundness of the split: every base row with key k lives in a file
-    * whose footer range contains k, so a match key that overlaps NO file
-    * range matches no base row — changelog rows landing only in `rewrite`'s
-    * unmatched branch are true inserts, never missed updates. Overlap
-    * without an actual match only costs an unnecessary rewrite (correct,
-    * conservative). Files without usable footer stats count as touched for
-    * the same reason.
-    *
-    * 100 TB: `matchKeys` is the broadcast-small changelog key set (the COW
-    * precondition — a changelog too big to hold keys driver-side belongs on
-    * the q68 shuffle plan); pruning cost is one footer read per file
-    * (manifest-grade metadata, no data I/O), and the rewrite's scan reads
-    * ONLY touched bytes. With a key-clustered layout ([[zOrderWrite]] /
-    * [[compact]]'s clusterBy — non-overlapping per-file ranges) a localized
-    * changelog touches O(changed bytes), not O(table).
-    */
-  def cowMerge(spark: org.apache.spark.sql.SparkSession, basePath: String,
-      keyCol: String, matchKeys: Array[Long],
-      rewrite: DataFrame => DataFrame, outPath: String): CowMergeStats =
-    cowMergeImpl(spark, basePath, keyCol, Left(matchKeys), rewrite, outPath)
-
-  /** Shared COW engine body (mirrors [[snapshotMergeImpl]]'s shape): the
-    * two public forms differ ONLY in how the touched-file set resolves —
-    * sorted-array binary search vs the broadcast range join.
-    */
-  private def cowMergeImpl(spark: org.apache.spark.sql.SparkSession,
-      basePath: String, keyCol: String,
-      keys: Either[Array[Long], DataFrame],
-      rewrite: DataFrame => DataFrame, outPath: String): CowMergeStats = {
-    val ranges = fileKeyRanges(spark, basePath, keyCol)
-    val touchedSet: Set[String] = keys match {
-      case Left(arr) =>
-        val sorted = arr.distinct.sorted
-        def overlaps(mn: Long, mx: Long): Boolean = {
-          val i = java.util.Arrays.binarySearch(sorted, mn)
-          val at = if (i >= 0) i else -i - 1 // first key >= mn
-          at < sorted.length && sorted(at) <= mx
-        }
-        ranges.collect { case (f, mn, mx) if overlaps(mn, mx) => f }.toSet
-      case Right(df) => touchedFilesFor(spark, ranges, df)
-    }
-    val (touched, untouched) = ranges.partition(r => touchedSet(r._1))
-    val touchedDf =
-      if (touched.isEmpty) spark.read.parquet(basePath).where(lit(false))
-      else spark.read.parquet(touched.map(_._1): _*)
-    rewrite(touchedDf).write.mode("overwrite").parquet(outPath)
-    CowMergeStats(ranges.size, touched.map(_._1), untouched.map(_._1))
-  }
-
   /** Touched-file resolution as a JOIN — the changelog stays a DataFrame
     * end to end: probe keys × (small, broadcast) per-file ranges on a
     * BETWEEN condition, distinct the matching file names, collect
-    * O(files) paths. Removes the driver-side O(changelog) key
-    * materialization the Array form forces: the only collect here is the
-    * file list, which the manifest already prices driver-side. The
-    * nested-loop probe is map-side (each key row tests ≤ files ranges);
-    * partial aggregation collapses the distinct to ≤ files rows per
-    * partition before the one tiny shuffle.
+    * O(files) paths. No driver-side O(changelog) key materialization:
+    * the only collect here is the file list, which the manifest already
+    * prices driver-side. The nested-loop probe is map-side (each key row
+    * tests ≤ files ranges); partial aggregation collapses the distinct to
+    * ≤ files rows per partition before the one tiny shuffle.
     */
   private def touchedFilesFor(spark: org.apache.spark.sql.SparkSession,
       ranges: Seq[(String, Long, Long)], keys: DataFrame): Set[String] = {
@@ -465,180 +355,37 @@ object Layout {
       .collect().map(_.getString(0)).toSet
   }
 
-  /** [[cowMerge]] with the changelog keys AS A DATAFRAME — the form that
-    * holds when the changelog outgrows driver memory: the touched-file
-    * set comes from [[touchedFilesFor]]'s broadcast range join instead of
-    * a collected, sorted key array. Same soundness argument (a key
-    * overlapping no file range matches no base row); same
-    * [[CowMergeStats]] contract.
-    */
-  def cowMergeKeys(spark: org.apache.spark.sql.SparkSession, basePath: String,
-      keyCol: String, changeKeys: DataFrame,
-      rewrite: DataFrame => DataFrame, outPath: String): CowMergeStats =
-    cowMergeImpl(spark, basePath, keyCol, Right(changeKeys), rewrite, outPath)
-
   // ------------------------------------------------------- bloom file index
-  /** PER-FILE BLOOM SKIPPING INDEX — file skipping for point lookups on a
-    * HIGH-CARDINALITY, UNCLUSTERED column, the case footer min/max can't
-    * touch (under a hash layout every file's [min,max] spans the whole
-    * keyspace and range pruning keeps everything): one [[graft.functions.Bloom]]
-    * per data file, built in a single partial-aggregated pass
-    * (`input_file_name` → k bit masks → `bit_or` per (file, word)) and
-    * persisted as an `_`-prefixed sidecar directory Spark's file listing
-    * ignores. A lookup evaluates the probe keys' bit positions through
-    * the SAME Catalyst expression the build used (agreement by
-    * construction — one 1-row job), tests each file's bits driver-side
-    * (manifest-grade metadata: [[BloomIndexBits]]/8 bytes per file), and
-    * scans ONLY candidate files; no false negatives makes the result
-    * exactly the full filter's (q91's oracle), false positives cost one
-    * wasted file scan. Files missing from the index count as candidates —
-    * pruning stays conservative, like [[fileKeyRanges]]' no-stats rule.
-    * Geometry: m = 2^17 bits/file, k = 5 → FPP ≈ 0.3% at 10k rows/file;
-    * size m to expected rows-per-file like parquet's own column blooms.
+  /** PER-FILE BLOOM SKIPPING INDEX geometry — file skipping for point
+    * lookups on a HIGH-CARDINALITY, UNCLUSTERED column, the case min/max
+    * stats can't touch (under a hash layout every file's [min,max] spans
+    * the whole keyspace and range pruning keeps everything): one
+    * [[graft.functions.Bloom]] per data file, m = 2^17 bits/file, k = 5 →
+    * FPP ≈ 0.3% at 10k rows/file; size m to expected rows-per-file like
+    * parquet's own column blooms. [[maintainBloomIndex]] builds and
+    * maintains the index, [[snapshotPointLookup]] and the DSv2 scan read
+    * it. Files missing from the index count as candidates — pruning stays
+    * conservative, like the full-range rule for stat-less files.
     * 100 TB: the index is O(files·16 KiB) — petabyte table, gigabyte
     * index — and a point lookup reads O(true hits + FPP·files) files
     * instead of every file; build cost is one scan of the indexed column.
     */
   val BloomIndexBits: Int = 1 << 17
 
-  private def bloomIdxDir(path: String, keyCol: String) =
-    s"$path/_bloomidx_$keyCol"
-
-  def bloomIndexWrite(spark: org.apache.spark.sql.SparkSession, path: String,
-      keyCol: String, mBits: Int = BloomIndexBits): Unit = {
-    import graft.functions.Bloom
-    // cast to long BEFORE hashing: xxhash64 hashes IntegerType and
-    // LongType differently, and the probe side always hashes Longs — an
-    // int-typed key column would otherwise produce silent false
-    // negatives (pruned owning files), breaking the no-FN contract
-    spark.read.parquet(path)
-      .select(element_at(split(input_file_name(), "/"), -1).as("file"),
-        explode(Bloom.positionsFor(col(keyCol).cast("long"), mBits)).as("pos"))
-      .select(col("file"), (col("pos") / 64).cast("int").as("w"),
-        call_function("shiftleft", lit(1L), (col("pos") % 64).cast("int")).as("m"))
-      .groupBy(col("file"), col("w")).agg(bit_or(col("m")).as("bits"))
-      .write.mode("overwrite").parquet(bloomIdxDir(path, keyCol))
-  }
-
-  /** Point/IN-list lookup through the index: returns the filtered rows
-    * (≡ `WHERE keyCol IN values` on the full table) plus which files were
-    * scanned, for the pruning assertion. The Seq form keeps its
-    * driver-side probe test for bounded IN-lists; joinable request
-    * tables ride [[bloomIndexLookupKeys]] (distributed resolution).
+  /** A point/IN-list lookup's result (≡ `WHERE keyCol IN values` on the
+    * full table) plus which files were scanned, for the pruning
+    * assertion.
     */
   case class BloomLookup(result: DataFrame, scannedFiles: Seq[String],
       totalFiles: Int)
 
-  def bloomIndexLookup(spark: org.apache.spark.sql.SparkSession, path: String,
-      keyCol: String, values: Seq[Long],
-      mBits: Int = BloomIndexBits): BloomLookup = {
-    import graft.functions.Bloom
-    import spark.implicits._
-    require(values.nonEmpty, "empty probe set")
-    // the probe keys' bit positions via the build's own expression
-    val probePos: Array[Seq[Long]] = values.toDF("v")
-      .select(Bloom.positionsFor(col("v"), mBits).as("ps"))
-      .collect().map(_.getAs[scala.collection.Seq[Long]]("ps").toSeq)
-    val idx: Map[String, Map[Int, Long]] =
-      spark.read.parquet(bloomIdxDir(path, keyCol))
-        .collect()
-        .groupBy(_.getString(0))
-        .view.mapValues(_.map(r => r.getInt(1) -> r.getLong(2)).toMap).toMap
-    def mightContain(words: Map[Int, Long], ps: Seq[Long]): Boolean =
-      ps.forall { p =>
-        (words.getOrElse((p / 64).toInt, 0L) & (1L << (p % 64).toInt)) != 0L
-      }
-    val hconf = spark.sessionState.newHadoopConf()
-    val dir = new org.apache.hadoop.fs.Path(path)
-    val all = dir.getFileSystem(hconf).listStatus(dir)
-      .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-      .map(_.getPath.toString).toSeq.sorted
-    val candidates = all.filter { f =>
-      val name = f.substring(f.lastIndexOf('/') + 1)
-      idx.get(name) match {
-        case Some(words) => probePos.exists(ps => mightContain(words, ps))
-        case None => true // unindexed file: conservative, scan it
-      }
-    }
-    val probe = values.toDF("__graft_probe")
-    // the empty frame is built only when nothing is a candidate: its
-    // schema inference is a job of its own
-    val result =
-      if (candidates.isEmpty) spark.read.parquet(path).where(lit(false))
-      else spark.read.parquet(candidates: _*)
-        .join(broadcast(probe), col(keyCol) === col("__graft_probe"), "left_semi")
-    BloomLookup(result, candidates, all.size)
-  }
-
-  /** [[bloomIndexLookup]] with the probe keys AS A DATAFRAME — the form
-    * that survives when the probe set outgrows the driver (a joinable
-    * request table instead of an IN-list): candidate resolution stays
-    * distributed end to end — the probes' (word, mask) requirements are
-    * themselves a frame and join the index on the word id, a file is a hit
-    * for probe p iff ALL of p's word-masks are satisfied (counted with
-    * one partial-aggregated pass; the probe VALUE doubles as the probe
-    * id, so no driver-side need-count map either). Duplicate index rows
-    * collapse via bit_or before counting (the no-false-negative guard).
-    * Only O(files) names return to the driver; the rows come back
-    * through one broadcast semi-join against the probe frame.
-    */
-  def bloomIndexLookupKeys(spark: org.apache.spark.sql.SparkSession,
-      path: String, keyCol: String, keys: DataFrame,
-      mBits: Int = BloomIndexBits): BloomLookup = {
-    import graft.functions.Bloom
-    val kdf = keys.select(col(keys.columns.head).cast("long")
-        .as("__graft_probe")).distinct()
-      .pin() // probes feed the requirements AND the semi-join
-    val reqs = kdf
-      .select(col("__graft_probe").as("pid"),
-        explode(Bloom.positionsFor(col("__graft_probe"), mBits)).as("p"))
-      .select(col("pid"), (col("p") / 64).cast("int").as("w"),
-        call_function("shiftleft", lit(1L), (col("p") % 64).cast("int")).as("m"))
-      .groupBy(col("pid"), col("w")).agg(bit_or(col("m")).as("need"))
-      .pin() // read by the hit pass and the need-count pass
-    val needCounts = reqs.groupBy(col("pid")).agg(count(lit(1)).as("n_need"))
-    val idx = spark.read.parquet(bloomIdxDir(path, keyCol))
-      .groupBy(col("file"), col("w")).agg(bit_or(col("bits")).as("bits"))
-      .pin() // hit pass + indexed-file listing
-    val satHits = idx.join(broadcast(reqs), Seq("w"))
-      .filter((col("bits").bitwiseAND(col("need"))) === col("need"))
-      .groupBy(col("file"), col("pid")).agg(count(lit(1)).as("n_ok"))
-      .join(broadcast(needCounts), Seq("pid"))
-      .filter(col("n_ok") === col("n_need"))
-      .select(col("file"))
-    // ONE driver round-trip for both sets (round 19): every indexed file
-    // tagged with whether any probe fully satisfied its bloom — the
-    // former separate `indexed` collect was a second job over the same
-    // pinned index
-    val status = idx.select(col("file"), lit(false).as("sat"))
-      .unionByName(satHits.select(col("file"), lit(true).as("sat")))
-      .groupBy(col("file")).agg(max(col("sat")).as("sat"))
-      .collect()
-    val indexed: Set[String] = status.map(_.getString(0)).toSet
-    val satisfied: Set[String] =
-      status.filter(_.getBoolean(1)).map(_.getString(0)).toSet
-    val hconf = spark.sessionState.newHadoopConf()
-    val dir = new org.apache.hadoop.fs.Path(path)
-    val all = dir.getFileSystem(hconf).listStatus(dir)
-      .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-      .map(_.getPath.toString).toSeq.sorted
-    val candidates = all.filter { f =>
-      val name = f.substring(f.lastIndexOf('/') + 1)
-      !indexed(name) || satisfied(name) // unindexed: conservative
-    }
-    val result =
-      if (candidates.isEmpty) spark.read.parquet(path).where(lit(false))
-      else spark.read.parquet(candidates: _*)
-        .join(broadcast(kdf), col(keyCol) === col("__graft_probe"),
-          "left_semi")
-    BloomLookup(result, candidates, all.size)
-  }
-
-  /** CDF-MAINTAINED BLOOM INDEX over a VERSIONED table — q91's per-file
-    * bloom skipping integrated with the manifest layer, maintained
-    * incrementally: the index is ITSELF a snapshot table of
-    * (file, w, bits, base_version) rows, and one maintenance run scans
-    * ONLY the base files that have no bloom yet. Per-file blooms are
+  /** CDF-MAINTAINED BLOOM INDEX over a VERSIONED table — per-file bloom
+    * skipping ([[BloomIndexBits]]) integrated with the manifest layer,
+    * maintained incrementally: the index is ITSELF a snapshot table of
+    * (file, w, bits, base_version) rows, built in one partial-aggregated
+    * pass (`input_file_name` → k bit masks → `bit_or` per (file, word)),
+    * and one maintenance run scans ONLY the base files that have no
+    * bloom yet. Per-file blooms are
     * IMMUNE to lineage (a data file's content never changes once a
     * manifest references it), so — unlike the sum/join views — even an
     * overwrite/compaction costs only the genuinely new files' scans;
@@ -649,9 +396,9 @@ object Layout {
     * [[maintainSumView]], so it rides [[streamingMaintained]] unchanged.
     * Returns the base head version the index now covers.
     * 100 TB: maintenance is O(new bytes) scan + O(new files · 16 KiB)
-    * index rows; the index table is the petabyte-table/gigabyte-index
-    * ratio of [[bloomIndexWrite]], now versioned, vacuumable, and
-    * exactly-once under streaming ingest.
+    * index rows; the index table keeps the petabyte-table/gigabyte-index
+    * ratio, versioned, vacuumable, and exactly-once under streaming
+    * ingest.
     */
   def maintainBloomIndex(spark: org.apache.spark.sql.SparkSession,
       baseRoot: String, idxRoot: String, keyCol: String,
@@ -671,7 +418,6 @@ object Layout {
     val vs = snapshotVersions(spark, baseRoot)
     require(vs.nonEmpty, s"no snapshots at $baseRoot")
     val head = vs.last
-    def baseName(s: String) = s.substring(s.lastIndexOf('/') + 1)
     val have: Set[String] =
       if (snapshotVersions(spark, idxRoot).isEmpty) Set.empty
       else readSnapshot(spark, idxRoot).select(col("file")).distinct()
@@ -796,7 +542,6 @@ object Layout {
     // table, so the rewrite is atomic and time-travelable). The live and
     // dead counts come from the run's own inventory against the
     // manifest — no second pass over the index.
-    def baseName(s: String) = s.substring(s.lastIndexOf('/') + 1)
     if (snapshotVersions(spark, idxRoot).isEmpty) return v // nothing indexed
     val live = manifestFiles(spark, root, v).map(baseName).toSet
     val nLive = indexed.count(live)
@@ -826,9 +571,7 @@ object Layout {
     * the index NEVER collects to the driver (at 10⁶ files it is ~16 GB;
     * only O(indexed files) names and booleans come back), and the
     * candidate read is typed from the manifest — building the result
-    * starts no further job. The bare-directory [[bloomIndexLookup]]
-    * keeps its driver-side test for bounded file counts; this is the
-    * production form.
+    * starts no further job.
     */
   def snapshotPointLookup(spark: org.apache.spark.sql.SparkSession,
       baseRoot: String, idxRoot: String, keyCol: String, values: Seq[Long],
@@ -840,7 +583,6 @@ object Layout {
     require(vs.nonEmpty, s"no snapshots at $baseRoot")
     val head = vs.last
     val status = bloomCandidateStatus(spark, idxRoot, values, mBits)
-    def baseName(s: String) = s.substring(s.lastIndexOf('/') + 1)
     def isCandidate(e: FileEntry): Boolean =
       // unindexed (maintenance lag): conservative, scan it
       status.getOrElse(baseName(e.path), true)
@@ -1274,7 +1016,7 @@ object Layout {
 
   /** Every data-file entry of a version, tagged with its owning segment
     * name ("" for legacy inline path lines) — segment tags let
-    * [[snapshotMerge]] carry wholly-untouched segments BY REFERENCE.
+    * [[snapshotMergeKeys]] carry wholly-untouched segments BY REFERENCE.
     */
   private def manifestEntriesTagged(spark: org.apache.spark.sql.SparkSession,
       root: String, version: Int): Seq[(String, FileEntry)] = {
@@ -2517,9 +2259,10 @@ object Layout {
     * row-filter, so the result is exactly
     * `readSnapshot(...).filter(keyCol BETWEEN lo AND hi)`. Composes
     * with MOR deletes via the shared subset engine.
-    * 100 TB: on a [[zOrderWrite]]/clustered layout a narrow range opens
-    * O(overlapping files) — the manifest decides from metadata what
-    * footer-based pruning would re-derive from a million file opens.
+    * 100 TB: on a z-ordered/clustered layout ([[snapshotCompact]]) a
+    * narrow range opens O(overlapping files) — the manifest decides from
+    * metadata what footer-based pruning would re-derive from a million
+    * file opens.
     */
   def readSnapshotRange(spark: org.apache.spark.sql.SparkSession,
       root: String, keyCol: String, lo: Long, hi: Long,
@@ -2904,7 +2647,6 @@ object Layout {
     // scope match on the file's BASE NAME: parquet part files carry a
     // per-job UUID, and URI normalization (file:/ vs file:///) must not
     // defeat the join — _metadata.file_name is already the base name
-    def baseName(s: String) = s.substring(s.lastIndexOf('/') + 1)
     val (dirtyFiles, cleanFiles) =
       kept.partition(e => dirty.contains(baseName(e.path)))
     val cleanRaw =
@@ -2974,18 +2716,18 @@ object Layout {
     * equality/position deletes, Delta deletion vectors — same idea,
     * built from first principles on the manifest layer): instead of
     * rewriting touched data files (q82's COW path), commit a SIDECAR of
-    * (file, key) equality-delete rows scoped by parquet FOOTER min/max
-    * pruning, leaving every data file byte-identical. Readers
+    * (file, key) equality-delete rows scoped by per-file key ranges
+    * ([[snapshotKeyRanges]]), leaving every data file byte-identical. Readers
     * ([[readSnapshot]]) apply the sidecar as a broadcast anti-join over
     * only the scoped files; [[snapshotCompact]] folds the debt into
     * clean files and drops the sidecar references.
     *
-    * Soundness: every row with key k lives in a file whose footer range
+    * Soundness: every row with key k lives in a file whose key range
     * contains k, so scoping the delete to range-overlapping files misses
     * nothing; over-scoping (range overlap without an actual row) only
     * adds a file to the anti-join side — correct, conservative.
     *
-    * 100 TB: the commit does NO data I/O — footer reads for pruning plus
+    * 100 TB: the commit does NO data I/O — manifest stats for pruning plus
     * one tiny sidecar write, which is why deletion SLAs are minutes on a
     * MOR table vs a COW rewrite of every touched file; the read-side
     * debt is bounded by compaction cadence. Deletion keys are
@@ -3015,26 +2757,11 @@ object Layout {
     // footer fallback only for stat-less entries
     val scoped = keyRangesOfEntries(spark, entries, keyCol).flatMap {
       case (f, mn, mx) =>
-        val name = f.substring(f.lastIndexOf('/') + 1)
-        overlapping(mn, mx).map(k => (name, k))
+        overlapping(mn, mx).map(k => (baseName(f), k))
     }
-    val v = base + 1
-    val carried = carriedStateOf(spark, root, Some(base))
-    val hdrOut = carried.props ++ schemaHeaderOf(carried.schema)
-    if (scoped.isEmpty) {
-      // no key overlaps any file: nothing to delete — still commit, so
-      // the caller gets one version per request batch (audit trail)
-      commitManifest(spark, root, v, carried.segs, carried.inline,
-        header = hdrOut, deletes = carried.deletes)
-      return v
-    }
-    val delDir = attemptDir(root, "deletes", v)
     import spark.implicits._
-    scoped.toDF("file", "key").coalesce(1).write.mode("error").parquet(delDir)
-    commitManifest(spark, root, v, carried.segs, carried.inline,
-      header = hdrOut + ("deleteKey" -> keyCol),
-      deletes = carried.deletes ++ listDataFiles(spark, delDir))
-    v
+    commitEqualityDelete(spark, root, base, keyCol,
+      scoped.toDF("file", "key"), scoped.isEmpty)
   }
 
   /** [[snapshotDeleteMOR]] with the deletion keys AS A DATAFRAME —
@@ -3056,18 +2783,29 @@ object Layout {
     val entries = manifestEntries(spark, root, base)
     import spark.implicits._
     val rdf = keyRangesOfEntries(spark, entries, keyCol)
-      .map { case (f, mn, mx) =>
-        (f.substring(f.lastIndexOf('/') + 1), mn, mx) }
+      .map { case (f, mn, mx) => (baseName(f), mn, mx) }
       .toDF("file", "__graft_mn", "__graft_mx")
     val kc = keys.columns.head
     val scoped = keys.select(col(kc).cast("long").as("key")).distinct()
       .join(broadcast(rdf),
         col("key") >= col("__graft_mn") && col("key") <= col("__graft_mx"))
       .select(col("file"), col("key"))
+    commitEqualityDelete(spark, root, base, keyCol, scoped, scoped.isEmpty)
+  }
+
+  /** The commit both equality-delete forms end in: version `base + 1`
+    * carries `base`'s state and adds the (file, key) `scoped` rows as one
+    * sidecar. An `empty` scope (no key overlaps any file: nothing to
+    * delete) still commits, so the caller gets one version per request
+    * batch (audit trail).
+    */
+  private def commitEqualityDelete(spark: org.apache.spark.sql.SparkSession,
+      root: String, base: Int, keyCol: String, scoped: DataFrame,
+      empty: Boolean): Int = {
     val v = base + 1
     val carried = carriedStateOf(spark, root, Some(base))
     val hdrOut = carried.props ++ schemaHeaderOf(carried.schema)
-    if (scoped.isEmpty) {
+    if (empty) {
       commitManifest(spark, root, v, carried.segs, carried.inline,
         header = hdrOut, deletes = carried.deletes)
       return v
@@ -3446,7 +3184,7 @@ object Layout {
     * shape) on top of the version diff: every row the `from → to`
     * transition ADDED tagged `insert`, every row it REMOVED tagged
     * `delete` — and, across a COW rewrite whose commit stamped a
-    * `cdcKey` header (every [[snapshotMerge]] does), a key-matched
+    * `cdcKey` header (every [[snapshotMergeKeys]] does), a key-matched
     * changed row surfaces as the `update_preimage`/`update_postimage`
     * PAIR instead, exactly Delta CDF's typing. Multiset-exact either
     * way: {insert, update_postimage} minus {delete, update_preimage}
@@ -3487,7 +3225,7 @@ object Layout {
 
   /** TYPED UPDATES ACROSS A COW REWRITE — the change feed's merge fast
     * path: when the `to` version's commit stamped a `cdcKey` (the merge
-    * key — [[snapshotMergeImpl]] records it, EPHEMERAL like `mvBase`:
+    * key — [[snapshotMergeKeys]] records it, EPHEMERAL like `mvBase`:
     * carried by no later commit, so it asserts only the transition that
     * produced it), the row diff is derivable from the REWRITTEN files
     * alone — carried files are byte-identical on both sides and cancel
@@ -3605,9 +3343,8 @@ object Layout {
         .select(col("file").as("__graft_nf"), col("pos").as("__graft_np"))
       val scopedNames = newSide.select("__graft_nf").distinct()
         .collect().map(_.getString(0)).toSet
-      def bn(s: String) = s.substring(s.lastIndexOf('/') + 1)
       val retracted = readSnapshotSubset(spark, root, fromVersion, hdrFrom,
-        e => scopedNames.contains(bn(e.path)), lineage = true)
+        e => scopedNames.contains(baseName(e.path)), lineage = true)
         .join(newSide,
           col("__graft_file") === col("__graft_nf") &&
             col("__graft_pos") === col("__graft_np"), "left_semi")
@@ -3622,7 +3359,6 @@ object Layout {
     if (fromDel.exists(isPosSidecar)) return None
     val keyCol = manifestHeader(spark, root, toVersion).getOrElse("deleteKey",
       return None)
-    def baseName(s: String) = s.substring(s.lastIndexOf('/') + 1)
     val newSide = spark.read.parquet((toDel -- fromDel).toSeq: _*)
       .select(col("file").as("__graft_nf"), col("key").as("__graft_nk"))
     val scopedNames = newSide.select("__graft_nf").distinct()
@@ -3648,13 +3384,44 @@ object Layout {
     Some(out.drop("__graft_file"))
   }
 
-  /** OPTIMIZE on the versioned table — [[compact]] composed with
-    * [[snapshotOverwrite]]: read the latest version through its manifest,
-    * bin-pack (and optionally re-cluster) it, publish the result as a NEW
-    * version. The pre-compaction version stays time-travelable until
-    * vacuum — the maintenance job never blocks or breaks readers, which
-    * is exactly why table formats express OPTIMIZE as a snapshot commit
-    * rather than an in-place rewrite. Returns the committed version.
+  /** OPTIMIZE on the versioned table: read the latest version through
+    * its manifest, bin-pack (and optionally re-cluster) it, publish the
+    * result as a NEW version. The pre-compaction version stays
+    * time-travelable until vacuum — the maintenance job never blocks or
+    * breaks readers, which is exactly why table formats express OPTIMIZE
+    * as a snapshot commit rather than an in-place rewrite. Streaming
+    * sinks and fine-grained ingests leave thousands of KB-scale files;
+    * at 100 TB a scan pays one open per tiny file, so compaction is the
+    * standing maintenance job every table format schedules.
+    *
+    * Three modes:
+    *  - plain: ZERO-SHUFFLE — the scan itself is the bin-packer. Spark's
+    *    file source first-fit-packs whole small files into read splits of
+    *    up to `spark.sql.files.maxPartitionBytes`; setting that to
+    *    `targetBytes` (and the open-cost padding to 0) in a CLONED
+    *    session makes each read task a ~targetBytes bin, and the write
+    *    emits one file per task.
+    *  - `clusterBy`: `repartitionByRange(n, cols) + sortWithinPartitions`,
+    *    n = ⌈table bytes / targetBytes⌉ — one range shuffle that
+    *    re-establishes non-overlapping per-file key ranges, so stats
+    *    pruning works again after appends interleaved them.
+    *  - `zOrderBy` (`OPTIMIZE ZORDER BY`): scale each column to
+    *    [0, 2^zBits) by monotone binning (one agg pass, broadcast as
+    *    literals), interleave the bits into a Morton z-value, and
+    *    range-partition + sort by it. Every file then covers a small
+    *    hyper-rectangle, so stats skip files for predicates on ANY
+    *    z column — a lexicographic sort only skips on its leading one.
+    *    Linear binning (default) is (c−mn)·2^bits / range, switching to
+    *    doubles when the multiply would overflow Long (monotone; a clamp
+    *    absorbs the last-ulp edge). `zQuantile` bins by rank among
+    *    ≤2^bits−1 approx-percentile boundaries instead: under a Zipf/
+    *    outlier domain one extreme value stretches the linear range so
+    *    every other row lands in bin 0 and that dimension prunes
+    *    NOTHING, while equal-population bins keep every file on a narrow
+    *    slice. Quantile mode caps at 10 bits (O(2^bits) comparisons per
+    *    row).
+    * Sizing reads the real file lengths, so compression-ratio drift
+    * cancels out. Returns the committed version.
     */
   def snapshotCompact(spark: org.apache.spark.sql.SparkSession, root: String,
       targetBytes: Long, clusterBy: Seq[Column] = Nil,
@@ -3677,10 +3444,6 @@ object Layout {
         // (key range × cust range) skip files on either predicate alone
         val n = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
         val df = readSnapshot(spark, root, base)
-        // quantile = equal-population bins ([[zOrderWrite]]'s skew path:
-        // under a Zipf/outlier domain linear binning collapses — one
-        // extreme value stretches the range so every row lands in bin 0
-        // and that dimension prunes nothing)
         val bits = if (zQuantile) math.min(zBits, 10) else zBits
         val scaled = if (zQuantile) quantileBins(df, zOrderBy, bits)
                      else linearBins(df, zOrderBy, bits)
@@ -3689,9 +3452,11 @@ object Layout {
           .sortWithinPartitions(col("__graft_zv"))
           .drop("__graft_zv")
       } else if (clusterBy.isEmpty) {
-        // plain mode = Layout.compact's zero-shuffle bin-packing: a CLONED
-        // session sizes read splits to targetBytes so the scan itself
-        // packs small files and the write emits ~one file per split
+        // plain mode = zero-shuffle bin-packing: a CLONED session (same
+        // SparkContext, separate SQLConf — a concurrent query on the
+        // caller's session keeps its own split geometry) sizes read
+        // splits to targetBytes so the scan itself packs small files and
+        // the write emits ~one file per split
         val scoped = spark.newSession()
         scoped.conf.set("spark.sql.files.maxPartitionBytes", targetBytes.toString)
         scoped.conf.set("spark.sql.files.openCostInBytes", "0")
@@ -4076,10 +3841,10 @@ object Layout {
   }
 
   /** COPY-ON-WRITE MERGE AS A SNAPSHOT COMMIT — `MERGE INTO` on the
-    * versioned table, closing the loop between the COW engine
-    * ([[cowMerge]]'s footer-pruned targeted rewrite) and the manifest
-    * layer: touched files (key-range overlap with the changelog keys)
-    * are rewritten through `rewrite` into the new version's own data
+    * versioned table, the targeted-file-rewrite plan every incremental
+    * table deployment runs daily (q68 is the all-shuffle fallback):
+    * touched files (key-range overlap with the changelog keys) are
+    * rewritten through `rewrite` into the new version's own data
     * directory; UNTOUCHED files are CARRIED BY REFERENCE — zero copy,
     * byte-identical on disk, exactly how Delta/Iceberg publish a MERGE.
     * The pre-merge version stays time-travelable; readers never see a
@@ -4088,34 +3853,29 @@ object Layout {
     * a rewrite that ignored sidecars would resurrect deleted rows; the
     * require makes that impossible rather than wrong).
     * `rewrite` sees ONLY the touched rows and must return their merged
-    * replacement (matched updates + unmatched-changelog inserts);
-    * soundness of the touched/untouched split is [[cowMerge]]'s argument
-    * verbatim. Returns the committed version.
+    * replacement (matched updates + unmatched-changelog inserts).
+    *
+    * The changelog keys stay a DATAFRAME: the touched-file set comes
+    * from [[touchedFilesFor]]'s broadcast range join against the per-file
+    * ranges ([[snapshotKeyRanges]]: manifest stats, footer fallback for
+    * stat-less entries); only O(files) paths ever reach the driver.
+    *
+    * Soundness of the split: every base row with key k lives in a file
+    * whose range contains k, so a changelog key that overlaps NO file
+    * range matches no base row — changelog rows landing only in
+    * `rewrite`'s unmatched branch are true inserts, never missed
+    * updates. Overlap without an actual match only costs an unnecessary
+    * rewrite (correct, conservative). Files without usable stats report
+    * the full range and count as touched for the same reason.
+    *
+    * Returns the committed version.
     * 100 TB: merge I/O is O(touched bytes) + one manifest write; with a
-    * key-clustered layout a localized changelog touches O(changed
-    * bytes), not O(table).
-    */
-  def snapshotMerge(spark: org.apache.spark.sql.SparkSession, root: String,
-      keyCol: String, matchKeys: Array[Long],
-      rewrite: DataFrame => DataFrame): Int =
-    snapshotMergeImpl(spark, root, keyCol, Left(matchKeys), rewrite)
-
-  /** [[snapshotMerge]] with the changelog keys AS A DATAFRAME — removes
-    * the COW engine's last driver-side O(changelog) ceiling: the
-    * touched-file set comes from [[touchedFilesFor]]'s broadcast range
-    * join against the (manifest-stats) file ranges; only O(files) paths
-    * ever reach the driver. Same commit shape, same soundness.
+    * key-clustered layout ([[snapshotCompact]]'s clusterBy — non-
+    * overlapping per-file ranges) a localized changelog touches
+    * O(changed bytes), not O(table).
     */
   def snapshotMergeKeys(spark: org.apache.spark.sql.SparkSession,
       root: String, keyCol: String, changeKeys: DataFrame,
-      rewrite: DataFrame => DataFrame,
-      readsWholeTable: Boolean = false): Int =
-    snapshotMergeImpl(spark, root, keyCol, Right(changeKeys), rewrite,
-      readsWholeTable)
-
-  private def snapshotMergeImpl(spark: org.apache.spark.sql.SparkSession,
-      root: String, keyCol: String,
-      keys: Either[Array[Long], DataFrame],
       rewrite: DataFrame => DataFrame,
       readsWholeTable: Boolean = false): Int = {
     val vs = snapshotVersions(spark, root)
@@ -4129,17 +3889,7 @@ object Layout {
     // logical (identical unless renamed — reserved columns never are)
     val ranges = keyRangesOfEntries(spark, tagged.map(_._2),
       physicalNameOf(hdr, keyCol))
-    val touchedSet: Set[String] = keys match {
-      case Left(arr) =>
-        val sorted = arr.distinct.sorted
-        def overlaps(mn: Long, mx: Long): Boolean = {
-          val i = java.util.Arrays.binarySearch(sorted, mn)
-          val at = if (i >= 0) i else -i - 1
-          at < sorted.length && sorted(at) <= mx
-        }
-        ranges.collect { case (f, mn, mx) if overlaps(mn, mx) => f }.toSet
-      case Right(df) => touchedFilesFor(spark, ranges, df)
-    }
+    val touchedSet: Set[String] = touchedFilesFor(spark, ranges, changeKeys)
     // SEGMENT-GRANULAR CARRY: a segment none of whose files are touched
     // is carried by ONE `seg:` reference; only partially-touched
     // segments have their untouched entries re-serialized (stats and
@@ -4160,18 +3910,6 @@ object Layout {
         .collect { case (seg, e) if seg == "" || touchedSegsNow(seg) => e }
       (carriedSegsNow, residualNow)
     }
-    // do concurrently-appended file ranges overlap this merge's keys?
-    def rangesOverlapKeys(ranges: Seq[(String, Long, Long)]): Boolean =
-      keys match {
-        case Left(arr) =>
-          val sorted = arr.distinct.sorted
-          ranges.exists { case (_, mn, mx) =>
-            val i = java.util.Arrays.binarySearch(sorted, mn)
-            val at = if (i >= 0) i else -i - 1
-            at < sorted.length && sorted(at) <= mx
-          }
-        case Right(df) => touchedFilesFor(spark, ranges, df).nonEmpty
-      }
     val touchedTagged = tagged.filter(t => touchedSet(t._2.path))
     val dataDir = attemptDir(root, "data", base + 1)
     // typed from the manifest like every snapshot read: no footer job
@@ -4252,8 +3990,10 @@ object Layout {
               "this merge's NOT MATCHED BY SOURCE clause reads every " +
                 "target row; concurrently appended rows are inside its " +
                 "read set by definition")
-          if (rangesOverlapKeys(keyRangesOfEntries(spark, added,
-              physicalNameOf(hdr, keyCol))))
+          // do the concurrently-appended file ranges overlap this
+          // merge's keys?
+          if (touchedFilesFor(spark, keyRangesOfEntries(spark, added,
+              physicalNameOf(hdr, keyCol)), changeKeys).nonEmpty)
             throw new ConcurrentWriteConflictException(root, curBase,
               newHead, "MERGE",
               "concurrently appended files carry key ranges this merge " +
@@ -4295,7 +4035,7 @@ object Layout {
     * files whose recorded partition-value set lies entirely within
     * `partitions`, carrying everything else untouched — wholly-foreign
     * segments by reference, partially-touched segments' residual entries
-    * re-serialized (the [[snapshotMerge]] carry machinery). At 100 TB
+    * re-serialized (the [[snapshotMergeKeys]] carry machinery). At 100 TB
     * this is the difference between "compact yesterday's partition after
     * the daily load" (O(one day's bytes)) and rewriting the table; the
     * standing job compacts the hot partition on its cadence and never
@@ -5105,60 +4845,5 @@ object Layout {
         nowMillis - policy.retentionMillis, policy.minKeepVersions)
     }
     MaintenanceReport(nDel, nSmall, compacted, vac, orphans, idxCols)
-  }
-
-  case class CompactStats(filesBefore: Int, filesAfter: Int, bytesBefore: Long)
-
-  /** Small-file compaction (the `OPTIMIZE` slot): bin-pack a directory of
-    * many small parquet files into ~[[targetBytes]]-sized ones. Streaming
-    * sinks and fine-grained ingests leave thousands of KB-scale files per
-    * partition; at 100 TB that means a scan pays one open/footer-read per
-    * tiny file and the NameNode/listing layer drowns — compaction is the
-    * standing maintenance job every table format schedules.
-    *
-    * Two modes, chosen by whether the caller wants clustering back:
-    *  - plain: ZERO-SHUFFLE — the scan itself is the bin-packer. Spark's
-    *    file source first-fit-packs whole small files into read splits of
-    *    up to `spark.sql.files.maxPartitionBytes`; setting that to the
-    *    target size (and the open-cost padding to 0) makes each read task
-    *    a ~targetBytes bin, and the write emits one file per task. No
-    *    coalesce arithmetic, no shuffle, no row movement between
-    *    executors beyond the file reads themselves.
-    *  - clustered: `repartitionByRange(n, cols) + sortWithinPartitions`,
-    *    n = ⌈input bytes / targetBytes⌉ — one range shuffle that
-    *    re-establishes non-overlapping per-file key ranges, so footer
-    *    min-max pruning works again after the compaction (appends
-    *    interleave ranges; plain concat would keep the overlap).
-    * Sizing reads the REAL listing, not a row-count guess, so compression
-    * ratio drift cancels out.
-    */
-  def compact(spark: org.apache.spark.sql.SparkSession, inPath: String,
-      outPath: String, targetBytes: Long,
-      clusterBy: Seq[Column] = Nil): CompactStats = {
-    val hconf = spark.sessionState.newHadoopConf()
-    def list(dir: String) = {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      p.getFileSystem(hconf).listStatus(p)
-        .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-    }
-    val before = list(inPath)
-    val total = before.map(_.getLen).sum
-    // the split sizing runs in a CLONED session (same SparkContext/cache,
-    // separate SQLConf): mutating the caller's session conf would make any
-    // CONCURRENT query on it silently read with the compaction's split
-    // geometry for the duration of the write
-    val scoped = spark.newSession()
-    scoped.conf.set("spark.sql.files.maxPartitionBytes", targetBytes.toString)
-    scoped.conf.set("spark.sql.files.openCostInBytes", "0")
-    val df = scoped.read.parquet(inPath)
-    val packed =
-      if (clusterBy.isEmpty) df
-      else {
-        val n = math.max(1, math.ceil(total.toDouble / targetBytes).toInt)
-        df.repartitionByRange(n, clusterBy: _*)
-          .sortWithinPartitions(clusterBy: _*)
-      }
-    packed.write.mode("overwrite").parquet(outPath)
-    CompactStats(before.length, list(outPath).length, total)
   }
 }

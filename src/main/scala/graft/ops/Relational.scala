@@ -2099,27 +2099,6 @@ object Relational {
       |ORDER BY key""".stripMargin
 
   // ---------------------------------------------------------------- q78
-  /** Copy-on-write MERGE with footer-stats file pruning — the PRODUCTION
-    * form of q68 (whose scaladoc names this plan; q68 stays as the shuffle
-    * fallback for changelogs too large to broadcast). The base table is
-    * written once per session KEY-CLUSTERED (range-partitioned on the merge
-    * key → non-overlapping per-file footer ranges); the changelog localizes
-    * its updates to the bottom fifth of the keyspace (CDC churn is usually
-    * range-localized — recent keys update, deep history does not) plus
-    * brand-new keys past the whole range. [[Layout.cowMerge]] probes each
-    * file's footer min/max against the changelog key set, rewrites ONLY the
-    * overlapping files through q68's full-outer COALESCE merge, and leaves
-    * every other file byte-identical on disk (ScaleFeaturesSpec asserts
-    * untouched files are not rewritten and the result ≡ the all-shuffle
-    * merge). Unmatched changelog rows are true inserts BY CONSTRUCTION:
-    * every base row's key is inside its file's footer range, so a key
-    * overlapping no file exists nowhere in the table.
-    * 100 TB: pruning reads footers (manifest-grade metadata, no data I/O);
-    * the rewrite scans O(touched bytes); untouched history is never
-    * decoded, never shuffled, never rewritten. The returned table is
-    * untouched-files ∪ rewritten-files — exactly a COW table format's
-    * post-MERGE state.
-    */
   /** Scale-adaptive synthetic-insert key offset: the next multiple of
     * 10^7 strictly above the corpus' max key, so merge-fixture inserts
     * CLEAR the keyspace at every scale. At sf ≤ 1 (max key < 10^7) this
@@ -2154,67 +2133,94 @@ object Relational {
     */
   private val baseBuildLock = new Object
 
-  /** Once-per-session+SF key-clustered write of a COW base table under
-    * [[sessionRoot]]; returns (root, baseDir). Shared by q78 (MERGE) and
-    * q82 (targeted DELETE) — both COW demos run against the same layout.
+  /** Once-per-session+SF key-clustered snapshot base shared by q78
+    * (MERGE) and q82 (targeted DELETE): orders as (key, totalprice,
+    * status, change_type = 'unchanged'), range-partitioned on the key so
+    * per-file ranges tile disjointly, with `statsKey = key` so the
+    * touched-file pruning reads manifest stats. Returns the root.
     */
-  private def cowClusteredBase(spark: SparkSession, sfDir: String, tag: String,
-      base: DataFrame): (String, String) = baseBuildLock.synchronized {
-    val root = sessionRoot(sfDir, tag)
-    val baseDir = s"$root/base"
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(baseDir)))
-      base.repartitionByRange(8, col("o_orderkey"))
-        .sortWithinPartitions(col("o_orderkey"))
-        .write.mode("overwrite").parquet(baseDir)
-    (root, baseDir)
+  private def cowTable(spark: SparkSession, sfDir: String): String =
+    baseBuildLock.synchronized {
+      val root = sessionRoot(sfDir, "cow")
+      if (Layout.snapshotVersions(spark, root).isEmpty) {
+        val base = t(spark, sfDir, "orders")
+          .select(col("o_orderkey").as("key"),
+            dec(col("o_totalprice")).cast("double").as("totalprice"),
+            col("o_orderstatus").as("status"),
+            lit("unchanged").as("change_type"))
+        Layout.snapshotAppend(spark, root,
+          base.repartitionByRange(8, col("key")).sortWithinPartitions(col("key")),
+          statsKey = Some("key"))
+      }
+      root
+    }
+
+  /** One run's private copy of [[cowTable]]: a shallow clone (one
+    * manifest write, no data copy) under the query's own directory. The
+    * run merges into the clone, so the shared base never gains a version
+    * and every run starts from the same table. The previous run's clone
+    * is dropped first — only its manifests and rewritten files live
+    * there, the base's files are referenced, not copied — so, like any
+    * overwritten output, a run's result must be consumed before the
+    * query runs again.
+    */
+  private def cowRun(spark: SparkSession, sfDir: String, query: String): String = {
+    val run = new org.apache.hadoop.fs.Path(s"${sessionRoot(sfDir, "cowrun")}/$query")
+    run.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(run, true)
+    Layout.snapshotClone(spark, cowTable(spark, sfDir), run.toString)
+    run.toString
   }
 
+  /** Copy-on-write MERGE with stats-pruned file rewrite — the PRODUCTION
+    * form of q68 (q68 stays as the shuffle fallback for changelogs too
+    * large to broadcast), run as [[Layout.snapshotMergeKeys]] on a clone
+    * of the key-clustered [[cowTable]]. The changelog localizes its
+    * updates to the bottom fifth of the keyspace (CDC churn is usually
+    * range-localized — recent keys update, deep history does not) plus
+    * brand-new keys past the whole range; only files whose key range
+    * overlaps a changelog key are rewritten through q68's full-outer
+    * COALESCE merge, every other file is carried by reference,
+    * byte-identical (ScaleFeaturesSpec asserts untouched files are not
+    * rewritten and the result ≡ the all-shuffle merge). Unmatched
+    * changelog rows are true inserts BY CONSTRUCTION: every base row's
+    * key is inside its file's range, so a key overlapping no file exists
+    * nowhere in the table. The rewrite returns the table schema: the
+    * base's `change_type` is 'unchanged', so carried rows already read
+    * as unchanged. The merge runs inside the query, on every run.
+    * 100 TB: pruning reads manifest stats (no data I/O); the rewrite
+    * scans O(touched bytes); untouched history is never decoded, never
+    * shuffled, never rewritten.
+    */
   def q78CowMerge(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = t(spark, sfDir, "orders")
-      .select(col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"))
-    val (root, baseDir) = cowClusteredBase(spark, sfDir, "cow", base)
-    val outDir = s"$root/merged"
-    val cutoff = base.agg(max(col("o_orderkey"))).head().getLong(0) / 5
-    val updates = base
+    val orders = t(spark, sfDir, "orders")
+    val run = cowRun(spark, sfDir, "q78")
+    val cutoff = orders.agg(max(col("o_orderkey"))).head().getLong(0) / 5
+    val updates = orders
       .filter(col("o_orderkey") % 7 === 0 && col("o_orderkey") <= cutoff)
       .select(col("o_orderkey").as("c_key"),
         (dec(col("o_totalprice")) * lit(1.1).cast("decimal(18,2)")).as("c_price"),
         lit("U").as("c_status"))
-    val inserts = base.filter(col("o_orderkey") % 1000 === 3)
-      .select((col("o_orderkey") + insertOffset(base, "o_orderkey"))
+    val inserts = orders.filter(col("o_orderkey") % 1000 === 3)
+      .select((col("o_orderkey") + insertOffset(orders, "o_orderkey"))
         .as("c_key"),
         dec(col("o_totalprice")).as("c_price"), lit("N").as("c_status"))
     val changes = updates.unionAll(inserts)
-    // the changelog stays a DATAFRAME end to end (cowMergeKeys): the
-    // touched-file set comes from a broadcast range join against the
-    // per-file ranges — no O(changelog) driver collect. ALL changelog
-    // keys probe the ranges — an insert key overlaps no file, so it
-    // prunes nothing extra, and soundness never rests on knowing in
-    // advance which keys are inserts
-    val stats = Layout.cowMergeKeys(spark, baseDir, "o_orderkey",
-      changes.select(col("c_key")),
+    // the changelog stays a DATAFRAME end to end: the touched-file set
+    // comes from a broadcast range join against the per-file ranges — no
+    // O(changelog) driver collect. ALL changelog keys probe the ranges —
+    // an insert key overlaps no file, so it prunes nothing extra, and
+    // soundness never rests on knowing in advance which keys are inserts
+    Layout.snapshotMergeKeys(spark, run, "key", changes.select(col("c_key")),
       touched => touched
-        .join(changes, col("o_orderkey") === col("c_key"), "full_outer")
+        .join(changes, col("key") === col("c_key"), "full_outer")
         .select(
-          coalesce(col("o_orderkey"), col("c_key")).as("key"),
-          coalesce(col("c_price"), dec(col("o_totalprice"))).cast("double").as("totalprice"),
-          coalesce(col("c_status"), col("o_orderstatus")).as("status"),
-          when(col("o_orderkey").isNull, "insert")
+          coalesce(col("key"), col("c_key")).as("key"),
+          coalesce(col("c_price").cast("double"), col("totalprice")).as("totalprice"),
+          coalesce(col("c_status"), col("status")).as("status"),
+          when(col("key").isNull, "insert")
             .when(col("c_key").isNull, "unchanged").otherwise("update")
-            .as("change_type")),
-      outDir)
-    val untouched =
-      if (stats.untouched.isEmpty) spark.read.parquet(baseDir).where(lit(false))
-      else spark.read.parquet(stats.untouched: _*)
-    spark.read.parquet(outDir).unionByName(
-      untouched.select(
-        col("o_orderkey").as("key"),
-        dec(col("o_totalprice")).cast("double").as("totalprice"),
-        col("o_orderstatus").as("status"),
-        lit("unchanged").as("change_type")))
-      .orderBy(col("key"))
+            .as("change_type")))
+    Layout.readSnapshot(spark, run).orderBy(col("key"))
   }
 
   val q78Sql: String =
@@ -2238,53 +2244,40 @@ object Relational {
       |ORDER BY key""".stripMargin
 
   // ---------------------------------------------------------------- q82
-  /** Targeted copy-on-write DELETE with footer-stats file pruning — the
+  /** Targeted copy-on-write DELETE with stats-pruned file rewrite — the
     * right-to-be-forgotten / retention-purge sibling of q78's MERGE, and
     * the operation privacy law makes every corpus deployment run: a
     * deletion-request key set (here range-localized like real churn: every
-    * 13th key in the bottom fifth of the keyspace) probes each file's
-    * footer min/max via [[Layout.cowMerge]]; only overlapping files are
-    * re-read and rewritten through a broadcast LEFT ANTI join against the
-    * request keys, every other file stays BYTE IDENTICAL (deep history
-    * never contains the requested keys, so it is never decoded — the spec
-    * asserts mtime+length equality). The result is untouched ∪ rewritten:
-    * exactly the table a COW format exposes after `DELETE WHERE key IN
-    * (...)`.
+    * 13th key in the bottom fifth of the keyspace) runs as
+    * [[Layout.snapshotMergeKeys]] on a clone of q78's [[cowTable]]; only
+    * files whose key range overlaps a request are re-read and rewritten
+    * through a broadcast LEFT ANTI join against the request keys, every
+    * other file is carried by reference, byte-identical (deep history
+    * never contains the requested keys, so it is never decoded). The
+    * result is the clone's head: exactly the table a COW format exposes
+    * after `DELETE WHERE key IN (...)`.
     * 100 TB: the deletion-request set is the broadcast-small side by
     * nature (requests arrive row-at-a-time, batched daily); pruning reads
-    * footers only; rewrite I/O is O(touched bytes). The anti-join (not a
-    * NOT IN literal filter) keeps the plan size O(1) in the request count
-    * and is the shape that still works when the requests live in their own
-    * table.
+    * manifest stats only; rewrite I/O is O(touched bytes). The anti-join
+    * (not a NOT IN literal filter) keeps the plan size O(1) in the
+    * request count and is the shape that still works when the requests
+    * live in their own table.
     */
   def q82TargetedDelete(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = t(spark, sfDir, "orders")
-      .select(col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"))
-    // SHARE q78's clustered base (same layout, distinct outDirs) — two
-    // byte-identical copies of orders would be pure wasted I/O
-    val (root, baseDir) = cowClusteredBase(spark, sfDir, "cow", base)
-    val outDir = s"$root/kept"
-    val cutoff = base.agg(max(col("o_orderkey"))).head().getLong(0) / 5
-    val requests = base
+    val orders = t(spark, sfDir, "orders")
+    val run = cowRun(spark, sfDir, "q82")
+    val cutoff = orders.agg(max(col("o_orderkey"))).head().getLong(0) / 5
+    val requests = orders
       .filter(col("o_orderkey") % 13 === 1 && col("o_orderkey") <= cutoff)
       .select(col("o_orderkey").as("d_key"))
       .pin() // probes the file ranges AND feeds the anti-join
     // DataFrame changelog end to end: the request set never collects —
     // touched files resolve via the broadcast range join
-    val stats = Layout.cowMergeKeys(spark, baseDir, "o_orderkey", requests,
+    Layout.snapshotMergeKeys(spark, run, "key", requests,
       touched => touched
-        .join(broadcast(requests), col("o_orderkey") === col("d_key"), "left_anti")
-        .select(col("o_orderkey").as("key"),
-          dec(col("o_totalprice")).cast("double").as("totalprice"),
-          col("o_orderstatus").as("status")),
-      outDir)
-    val untouched =
-      if (stats.untouched.isEmpty) spark.read.parquet(baseDir).where(lit(false))
-      else spark.read.parquet(stats.untouched: _*)
-    spark.read.parquet(outDir).unionByName(
-      untouched.select(col("o_orderkey").as("key"),
-        dec(col("o_totalprice")).cast("double").as("totalprice"),
-        col("o_orderstatus").as("status")))
+        .join(broadcast(requests), col("key") === col("d_key"), "left_anti"))
+    Layout.readSnapshot(spark, run)
+      .select(col("key"), col("totalprice"), col("status"))
       .orderBy(col("key"))
   }
 
@@ -2443,17 +2436,16 @@ object Relational {
       |ORDER BY key""".stripMargin
 
   // ---------------------------------------------------------------- q93
-  /** MERGE INTO the versioned table — [[Layout.snapshotMerge]]: q78's
-    * footer-pruned COW merge published AS A SNAPSHOT COMMIT, the form a
-    * production table actually runs (q78 demonstrates the engine on a
-    * bare directory; here untouched files are carried BY REFERENCE into
+  /** MERGE INTO the versioned table — [[Layout.snapshotMergeKeys]], the
+    * engine q78 runs per query, here committed ONCE per session and read
+    * as a plain snapshot: untouched files are carried BY REFERENCE into
     * the new version's manifest, the rewrite lands in the version's own
     * data directory, the commit is the atomic cutover, and the pre-merge
     * version stays time-travelable — `ScaleFeaturesSpec` asserts the
     * carried files are the same paths byte-identical and the old version
-    * still reads exactly). The changelog is q78's shape (range-localized
+    * still reads exactly. The changelog is q78's shape (range-localized
     * updates at +10%, brand-new inserted keys); the rewrite returns the
-    * TABLE schema (a MERGE mutates the table, it does not annotate it).
+    * TABLE schema.
     * 100 TB: O(touched bytes) rewrite + one manifest write; the merge
     * never blocks readers and never loses history.
     */
@@ -3268,46 +3260,43 @@ object Relational {
       |ORDER BY key""".stripMargin
 
   // ---------------------------------------------------------------- q91
-  /** BLOOM-INDEXED POINT LOOKUP — the file-skipping case footer min/max
-    * CANNOT serve: the base table is written HASH-laid-out (every file's
+  /** BLOOM-INDEXED POINT LOOKUP — the file-skipping case min/max stats
+    * CANNOT serve: the base snapshot table is HASH-laid-out (every file's
     * key range spans the whole keyspace — range pruning keeps all files;
     * exactly how an ingest-ordered table looks to a late point query),
-    * and [[Layout.bloomIndexWrite]]'s per-file blooms recover the skipping:
-    * the probe keys (every o_orderkey ≡ 1 mod 7919 — a handful of point
-    * lookups) test each file's 16 KiB bloom driver-side and only
-    * candidate files are scanned ([[Layout.BloomLookup]] reports the
+    * and [[Layout.maintainBloomIndex]]'s per-file blooms recover the
+    * skipping. The probe keys (every o_orderkey ≡ 1 mod 7919 — a handful
+    * of point lookups, O(lookups) on the driver) go through
+    * [[Layout.snapshotPointLookup]], the form q95 and the DSv2 scan use:
+    * only candidate files are scanned ([[Layout.BloomLookup]] reports the
     * pruning; `ScaleFeaturesSpec` asserts candidates ≪ files and result
     * ≡ the full-scan filter). No false negatives ⇒ the oracle is the
-    * plain WHERE-filter, verbatim semantics.
+    * plain WHERE-filter, verbatim semantics. The table and its index are
+    * built once per session; q95's table lacks the status column.
     */
-  private def bloomBase(spark: SparkSession, sfDir: String): String = baseBuildLock.synchronized {
-    val root = sessionRoot(sfDir, "bloomidx")
-    val dataDir = s"$root/orders"
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(dataDir))) {
-      t(spark, sfDir, "orders")
-        .select(col("o_orderkey").as("key"),
-          dec(col("o_totalprice")).cast("double").as("totalprice"),
-          col("o_orderstatus").as("status"))
-        .repartition(8) // hash layout: overlapping ranges, min/max useless
-        .write.mode("overwrite").parquet(dataDir)
-      Layout.bloomIndexWrite(spark, dataDir, "key")
+  private def bloomTable(spark: SparkSession, sfDir: String): (String, String) =
+    baseBuildLock.synchronized {
+      val root = sessionRoot(sfDir, "bloom")
+      val idx = sessionRoot(sfDir, "bloomidx")
+      if (Layout.snapshotVersions(spark, root).isEmpty) {
+        val base = t(spark, sfDir, "orders")
+          .select(col("o_orderkey").as("key"),
+            dec(col("o_totalprice")).cast("double").as("totalprice"),
+            col("o_orderstatus").as("status"))
+          .repartition(8) // hash layout: overlapping ranges, min/max useless
+        Layout.snapshotAppend(spark, root, base)
+        Layout.maintainBloomIndex(spark, root, idx, "key")
+      }
+      (root, idx)
     }
-    dataDir
-  }
 
   def q91BloomLookup(spark: SparkSession, sfDir: String): DataFrame = {
-    val dataDir = bloomBase(spark, sfDir)
-    // DataFrame probe set: candidate resolution is distributed (the
-    // probes' word-masks join the index table), no key collect
-    Layout.bloomIndexLookupKeys(spark, dataDir, "key",
-      t(spark, sfDir, "orders")
-        .filter(col("o_orderkey") % 7919 === 1)
-        .select(col("o_orderkey")))
-      .result
-      .select(col("key"), col("totalprice"), col("status"))
-      .orderBy(col("key"))
+    val (root, idx) = bloomTable(spark, sfDir)
+    val probes = t(spark, sfDir, "orders")
+      .filter(col("o_orderkey") % 7919 === 1)
+      .select(col("o_orderkey")).collect().map(_.getLong(0)).toSeq
+    Layout.snapshotPointLookup(spark, root, idx, "key", probes)
+      .result.orderBy(col("key"))
   }
 
   val q91Sql: String =
@@ -3904,11 +3893,12 @@ object Relational {
       |ORDER BY user_id, hour""".stripMargin
 
   // ---------------------------------------------------------------- q73
-  /** Morton z-value computation (the arithmetic under Layout.zOrderWrite,
-    * oracle-pinned): interleave 16 bits of customer key and order-date day
-    * number. The layout operator itself is spec-gated (file-skipping is a
-    * metrics property, not a result set) — this query pins the bit
-    * interleave both engines must agree on. The % 65536 folds keep the SQL
+  /** Morton z-value computation (the arithmetic under
+    * [[Layout.snapshotCompact]]'s `zOrderBy` mode, oracle-pinned):
+    * interleave 16 bits of customer key and order-date day number. The
+    * layout operator itself is spec-gated (file-skipping is a metrics
+    * property, not a result set) — this query pins the bit interleave
+    * both engines must agree on. The % 65536 folds keep the SQL
     * static across SFs; real layouts scale by min-max/quantile binning
     * instead (folding breaks locality).
     */

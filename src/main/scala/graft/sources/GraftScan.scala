@@ -338,12 +338,11 @@ private[graft] class GraftScan(val root: String, identName: String,
         longsOf(vs).map(a.name -> _)
       case _ => None
     }
-    def baseName(s: String) = s.substring(s.lastIndexOf('/') + 1)
     probes.foldLeft(kept) { case (k, (c, vals)) =>
       val status = Layout.bloomCandidateStatus(SparkSession.active,
         Layout.bloomSnapIdxRoot(root, c), vals)
       if (status.isEmpty) k // no index commits yet: nothing to prune on
-      else k.filter(e => status.getOrElse(baseName(e._1.path), true))
+      else k.filter(e => status.getOrElse(Layout.baseName(e._1.path), true))
     }
   }
 

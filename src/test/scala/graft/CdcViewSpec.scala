@@ -115,7 +115,8 @@ class CdcViewSpec extends GraftSuite {
       .filter(col("status") === "O").select("key")
       .orderBy("key").limit(10).collect().map(_.getLong(0))
     assert(mKeys.nonEmpty)
-    Layout.snapshotMerge(spark, baseR, "key", mKeys, df =>
+    import spark.implicits._
+    Layout.snapshotMergeKeys(spark, baseR, "key", mKeys.toSeq.toDF("key"), df =>
       df.withColumn("price", when(col("key").isin(mKeys.toSeq: _*),
         col("price") + 500.0).otherwise(col("price"))))
     Layout.maintainSumViewCdc(spark, baseR, viewR, "status", "price")
@@ -138,7 +139,8 @@ class CdcViewSpec extends GraftSuite {
     val (kUpd, kDel) = (ks(0), ks(1))
     val kNew = Layout.readSnapshot(spark, root)
       .agg(max(col("key"))).head().getLong(0) + 1000
-    Layout.snapshotMerge(spark, root, "key", Array(kUpd, kDel, kNew), df =>
+    Layout.snapshotMergeKeys(spark, root, "key",
+      Seq(kUpd, kDel, kNew).toDF("key"), df =>
       df.withColumn("price", when(col("key") === kUpd,
           col("price") + 1000.0).otherwise(col("price")))
         .filter(col("key") =!= kDel)
@@ -183,7 +185,7 @@ class CdcViewSpec extends GraftSuite {
     // guess a pairing; both degrade to delete+insert, still exact
     Layout.snapshotAppend(spark, root,
       Seq((kUpd, "D", 2.0)).toDF("key", "status", "price"))       // v3
-    Layout.snapshotMerge(spark, root, "key", Array(kUpd), df =>
+    Layout.snapshotMergeKeys(spark, root, "key", Seq(kUpd).toDF("key"), df =>
       df.withColumn("price", when(col("key") === kUpd,
         col("price") * 2).otherwise(col("price"))))               // v4
     val ch34 = Layout.snapshotChanges(spark, root, 3, 4).localCheckpoint()
@@ -209,7 +211,7 @@ class CdcViewSpec extends GraftSuite {
     // feed types the merge and keeps every pair at its own price
     Layout.snapshotAppend(spark, root,
       Seq((2000001L, "X", 5.0)).toDF("key", "status", "price"))    // v2
-    Layout.snapshotMerge(spark, root, "key", Array(kUpd), df =>
+    Layout.snapshotMergeKeys(spark, root, "key", Seq(kUpd).toDF("key"), df =>
       df.withColumn("price", when(col("key") === kUpd,
         col("price") + 7.0).otherwise(col("price"))))               // v3
     Layout.snapshotAppend(spark, root,
@@ -312,7 +314,8 @@ class CdcViewSpec extends GraftSuite {
             .limit(20).collect().map(_.getLong(0))
           if (ks.nonEmpty) {
             val target = rnd.shuffle(ks.toSeq).take(1 + rnd.nextInt(4))
-            Layout.snapshotMerge(spark, root, "key", target.toArray, df =>
+            import spark.implicits._
+            Layout.snapshotMergeKeys(spark, root, "key", target.toDF("key"), df =>
               df.withColumn("price", when(col("key").isin(target: _*),
                 col("price") * 1.5).otherwise(col("price"))))
           }

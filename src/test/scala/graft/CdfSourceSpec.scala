@@ -151,7 +151,8 @@ class CdfSourceSpec extends GraftSuite {
       Layout.snapshotCompact(spark, root, 128L << 20) // v4
       val uKey = Layout.readSnapshot(spark, root)
         .select("key").orderBy("key").limit(1).head().getLong(0)
-      Layout.snapshotMerge(spark, root, "key", Array(uKey), df =>
+      import spark.implicits._
+      Layout.snapshotMergeKeys(spark, root, "key", Seq(uKey).toDF("key"), df =>
         df.withColumn("price", when(col("key") === uKey,
           col("price") + 77.0).otherwise(col("price")))) // v5
       q.processAllAvailable()

@@ -23,8 +23,9 @@ class ManifestV2Spec extends GraftSuite {
     val before = Layout.readSnapshot(spark, root)
     val maxKey = before.agg(max(col("key"))).head().getLong(0)
     val keys = Array.range(1, (maxKey / 10).toInt, 13).map(_.toLong)
+    import spark.implicits._
     val f0 = Layout.footerReads.get()
-    val v = Layout.snapshotMerge(spark, root, "key", keys,
+    val v = Layout.snapshotMergeKeys(spark, root, "key", keys.toSeq.toDF("key"),
       touched => touched.withColumn("price",
         when(col("key").isin(keys.map(Long.box): _*), col("price") * 2)
           .otherwise(col("price"))))
@@ -77,8 +78,9 @@ class ManifestV2Spec extends GraftSuite {
     val custs = Layout.readSnapshot(spark, root)
       .filter(col("cust") % 17 === 1).select(col("cust"))
       .limit(5).collect().map(_.getLong(0))
+    import spark.implicits._
     val f2 = Layout.footerReads.get()
-    val v = Layout.snapshotMerge(spark, root, "cust", custs,
+    val v = Layout.snapshotMergeKeys(spark, root, "cust", custs.toSeq.toDF("cust"),
       touched => touched.withColumn("price",
         when(col("cust").isin(custs.map(Long.box): _*), col("price") * 2)
           .otherwise(col("price"))))
@@ -99,8 +101,9 @@ class ManifestV2Spec extends GraftSuite {
     val before = Layout.readSnapshot(spark, root)
     val nFiles = before.inputFiles.length
     val keys = Array(1L, 2L, 3L)
+    import spark.implicits._
     val f0 = Layout.footerReads.get()
-    val v = Layout.snapshotMerge(spark, root, "key", keys,
+    val v = Layout.snapshotMergeKeys(spark, root, "key", keys.toSeq.toDF("key"),
       touched => touched.withColumn("price",
         when(col("key").isin(keys.map(Long.box): _*), col("price") * 2)
           .otherwise(col("price"))))
@@ -204,25 +207,33 @@ class ManifestV2Spec extends GraftSuite {
     assert(Layout.readSnapshot(spark, root).count() == batch.count())
   }
 
-  test("snapshotMergeKeys (DataFrame changelog) ≡ snapshotMerge (Array), same touched set") {
+  test("snapshotMergeKeys (DataFrame changelog) rewrites exactly the files whose key ranges hold a changelog key") {
     import spark.implicits._
-    val rootA = freshRoot("mka")
-    val rootB = freshRoot("mkb")
-    Layout.snapshotAppend(spark, rootA, ordersBase, statsKey = Some("key"))
-    Layout.snapshotAppend(spark, rootB, ordersBase, statsKey = Some("key"))
-    val keys = Array(5L, 7L, 11L, 13L, 9999999L) // incl. a no-match insert key
-    val rw = (touched: org.apache.spark.sql.DataFrame) =>
-      touched.withColumn("price", col("price") + 1)
-    val vA = Layout.snapshotMerge(spark, rootA, "key", keys, rw)
-    val vB = Layout.snapshotMergeKeys(spark, rootB, "key", keys.toSeq.toDF("k"), rw)
-    val a = Layout.readSnapshot(spark, rootA, vA)
-    val b = Layout.readSnapshot(spark, rootB, vB)
-    assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
-    // both carried the same number of untouched files by reference
-    def carried(root: String, v: Int) = Layout.readSnapshot(spark, root, v)
-      .inputFiles.count(f => !f.contains(s"/data/v$v-"))
-    assert(carried(rootA, vA) == carried(rootB, vB))
-    assert(carried(rootA, vA) > 0, "a localized changelog must leave untouched files")
+    val root = freshRoot("mk")
+    Layout.snapshotAppend(spark, root, ordersBase, statsKey = Some("key"))
+    val keys = Seq(5L, 7L, 11L, 13L, 9999999L) // incl. a no-match insert key
+    def norm(f: String) = new org.apache.hadoop.fs.Path(f).toUri.getPath
+    // the touched set the per-file ranges predict
+    val owning = Layout.snapshotKeyRanges(spark, root, 1, "key")
+      .filter { case (_, mn, mx) => keys.exists(k => mn <= k && k <= mx) }
+    val predicted = owning.map(r => norm(r._1)).toSet
+    val v = Layout.snapshotMergeKeys(spark, root, "key", keys.toDF("k"),
+      touched => touched.withColumn("price", col("price") + 1))
+    def files(version: Int) = Layout.readSnapshot(spark, root, version)
+      .inputFiles.map(norm).toSet
+    val (v1Files, vFiles) = (files(1), files(v))
+    val carried = v1Files.intersect(vFiles)
+    assert(v1Files -- carried == predicted,
+      s"rewritten files ${v1Files -- carried} != range-predicted $predicted")
+    assert(carried == v1Files -- predicted)
+    assert(carried.nonEmpty, "a localized changelog must leave untouched files")
+    // the rewrite saw exactly the rows of the touched files
+    val inTouched = owning.map { case (_, mn, mx) => col("key").between(mn, mx) }
+      .reduce(_ || _)
+    val expect = Layout.readSnapshot(spark, root, 1).withColumn("price",
+      when(inTouched, col("price") + 1).otherwise(col("price")))
+    val after = Layout.readSnapshot(spark, root, v)
+    assert(after.exceptAll(expect).isEmpty && expect.exceptAll(after).isEmpty)
   }
 
   test("partitioned snapshot: pruned read ≡ filtered read, inputFiles excludes other partitions") {
@@ -721,7 +732,7 @@ class ManifestV2Spec extends GraftSuite {
     // a merge on key treats the full-range file as touched (conservative)
     // and the result is exact: key-less rows pass through the rewrite's
     // otherwise-branch with key null
-    val v = Layout.snapshotMerge(spark, root, "key", Array(2L),
+    val v = Layout.snapshotMergeKeys(spark, root, "key", Seq(2L).toDF("key"),
       touched => touched.withColumn("price",
         when(col("key") === 2L, col("price") * 2).otherwise(col("price"))))
     val after = Layout.readSnapshot(spark, root, v)

@@ -148,8 +148,8 @@ class OptimisticConcurrencySpec extends GraftSuite {
       RacingArbiter.racer = () => Layout.snapshotAppend(spark, root,
         Seq((1000L, "appended")).toDF("k", "v"))
       RacingArbiter.armed = true
-      val committed = Layout.snapshotMerge(spark, root, "k",
-        Array(5L, 6L), df => df.withColumn("v",
+      val committed = Layout.snapshotMergeKeys(spark, root, "k",
+        Seq(5L, 6L).toDF("k"), df => df.withColumn("v",
           when(col("k").isin(5L, 6L), lit("updated")).otherwise(col("v"))))
       assert(committed == 3,
         s"the merge must rebase onto the append and commit v3 (got v$committed)")
@@ -181,8 +181,8 @@ class OptimisticConcurrencySpec extends GraftSuite {
         Seq((5L, "late-arrival")).toDF("k", "v"))
       RacingArbiter.armed = true
       val ex = intercept[ConcurrentWriteConflictException] {
-        Layout.snapshotMerge(spark, root, "k",
-          Array(5L, 6L), df => df.withColumn("v",
+        Layout.snapshotMergeKeys(spark, root, "k",
+          Seq(5L, 6L).toDF("k"), df => df.withColumn("v",
             when(col("k").isin(5L, 6L), lit("updated")).otherwise(col("v"))))
       }
       assert(ex.getMessage.contains("key ranges this merge matches"),
@@ -194,8 +194,8 @@ class OptimisticConcurrencySpec extends GraftSuite {
       assert(head.count() == 101 &&
         head.filter(col("v") === "updated").count() == 0)
       // and the honest remedy works: re-run against the new head
-      val v = Layout.snapshotMerge(spark, root, "k",
-        Array(5L, 6L), df => df.withColumn("v",
+      val v = Layout.snapshotMergeKeys(spark, root, "k",
+        Seq(5L, 6L).toDF("k"), df => df.withColumn("v",
           when(col("k").isin(5L, 6L), lit("updated")).otherwise(col("v"))))
       assert(v == 3 && Layout.readSnapshot(spark, root)
         .filter(col("v") === "updated").count() == 3,

@@ -22,6 +22,50 @@ class ScaleFeaturesSpec extends GraftSuite {
     }
   }
 
+  private def freshRoot(tag: String): String =
+    java.nio.file.Files.createTempDirectory(s"graft-$tag").toString + "/t"
+
+  /** A snapshot table holding `df` (hash-spread over `files` files). */
+  private def snapshotOf(tag: String, df: org.apache.spark.sql.DataFrame,
+      files: Int = 4): String = {
+    val root = freshRoot(tag)
+    ops.Layout.snapshotAppend(spark, root, df.repartition(files))
+    root
+  }
+
+  private def fsPath(f: String) = new org.apache.hadoop.fs.Path(f).toUri.getPath
+
+  /** Local paths of the data files a version references. */
+  private def filesOf(root: String, version: Int): Set[String] =
+    ops.Layout.readSnapshot(spark, root, version).inputFiles.map(fsPath).toSet
+
+  private def headFiles(root: String): Set[String] =
+    filesOf(root, ops.Layout.snapshotVersions(spark, root).last)
+
+  private def tableBytes(root: String): Long =
+    headFiles(root).toSeq.map(f => new java.io.File(f).length).sum
+
+  /** Every parquet file under the table's data directory, with its
+    * (mtime, length) signature.
+    */
+  private def dataListing(root: String): Map[String, (Long, Long)] = {
+    def walk(d: java.io.File): Seq[java.io.File] =
+      if (d.isDirectory) d.listFiles().toSeq.flatMap(walk) else Seq(d)
+    walk(new java.io.File(s"$root/data"))
+      .filter(_.getName.endsWith(".parquet"))
+      .map(f => f.getPath -> (f.lastModified(), f.length())).toMap
+  }
+
+  /** Rows the table scan surfaced after row-group skipping. */
+  private def rowsScanned(df: org.apache.spark.sql.DataFrame): Long = {
+    df.collect() // executes THIS QueryExecution so the metrics populate
+    df.queryExecution.executedPlan.collectFirst {
+      case a: AdaptiveSparkPlanExec =>
+        a.executedPlan.collectFirst { case s: FileSourceScanExec => s }.get
+      case s: FileSourceScanExec => s
+    }.getOrElse(fail("no file scan in plan")).metrics("numOutputRows").value
+  }
+
   test("AQE re-plans the shuffle join to broadcast once the filtered side's true size is known") {
     // static broadcast off entirely — the optimizer must plan a shuffle
     // join; the adaptive threshold is generous, so after the map stage
@@ -112,38 +156,31 @@ class ScaleFeaturesSpec extends GraftSuite {
   }
 
   test("z-order layout skips row groups on the SECOND dimension; a single-column sort cannot") {
-    // the OPTIMIZE ZORDER payoff, measured: write orders (a) sorted by
-    // custkey only and (b) z-ordered on (custkey, order day); a DATE
-    // predicate then reads far fewer rows out of layout (b)'s scan,
-    // because every small file covers a narrow day range too — in (a) the
-    // date spreads across every file and parquet footer stats skip nothing
+    // the OPTIMIZE ZORDER payoff, measured: compact orders (a) clustered
+    // by custkey only and (b) z-ordered on (custkey, order day), both into
+    // ~15 files of ~100 rows; a DATE predicate then reads far fewer rows
+    // out of layout (b)'s scan, because every small file covers a narrow
+    // day range too — in (a) the date spreads across every file and
+    // parquet footer stats skip nothing
     val orders = Tables(spark, sf, "orders")
       .withColumn("days",
         datediff(col("o_orderdate"), lit("1995-01-01")).cast("long"))
     val total = orders.count()
-    val dirA = java.nio.file.Files.createTempDirectory("graft-custsort").toString
-    orders.repartitionByRange(4, col("o_custkey"))
-      .sortWithinPartitions(col("o_custkey"))
-      .write.mode("overwrite").option("maxRecordsPerFile", 100L).parquet(dirA)
-    val dirB = java.nio.file.Files.createTempDirectory("graft-zorder").toString
-    ops.Layout.zOrderWrite(orders, Seq(col("o_custkey"), col("days")), dirB,
-      bits = 16, partitions = 4, maxRecordsPerFile = 100L)
+    val rootA = snapshotOf("custsort", orders)
+    ops.Layout.snapshotCompact(spark, rootA, tableBytes(rootA) / 15,
+      clusterBy = Seq(col("o_custkey")))
+    val rootB = snapshotOf("zorder", orders)
+    ops.Layout.snapshotCompact(spark, rootB, tableBytes(rootB) / 15,
+      zOrderBy = Seq(col("o_custkey"), col("days")), zBits = 16)
+    def head(root: String) = ops.Layout.readSnapshot(spark, root)
 
-    def rowsScanned(df: org.apache.spark.sql.DataFrame): Long = {
-      df.collect() // executes THIS QueryExecution so the metrics populate
-      df.queryExecution.executedPlan.collectFirst {
-        case a: AdaptiveSparkPlanExec =>
-          a.executedPlan.collectFirst { case s: FileSourceScanExec => s }.get
-        case s: FileSourceScanExec => s
-      }.getOrElse(fail("no file scan in plan")).metrics("numOutputRows").value
-    }
     // a ~4%-of-range day window; both layouts answer identically…
     val datePred = col("days").between(400, 499)
-    val a = rowsScanned(spark.read.parquet(dirA).filter(datePred))
-    val b = rowsScanned(spark.read.parquet(dirB).filter(datePred))
-    assert(spark.read.parquet(dirA).filter(datePred).count() ===
-      spark.read.parquet(dirB).filter(datePred).count())
-    // …but the custkey-sorted layout surfaces (nearly) every row to the
+    val a = rowsScanned(head(rootA).filter(datePred))
+    val b = rowsScanned(head(rootB).filter(datePred))
+    assert(head(rootA).filter(datePred).count() ===
+      head(rootB).filter(datePred).count())
+    // …but the custkey-clustered layout surfaces (nearly) every row to the
     // post-scan filter, while z-order's footer stats drop most row groups
     assert(a > total / 2,
       s"expected the single-column sort to scan most of $total rows, got $a")
@@ -153,8 +190,7 @@ class ScaleFeaturesSpec extends GraftSuite {
     // sharply than a dedicated custkey sort would (z-order TRADES
     // single-column selectivity for skipping on every clustered column; at
     // this file granularity a 1/15th custkey window measured ~57% scanned)
-    val bCust = rowsScanned(
-      spark.read.parquet(dirB).filter(col("o_custkey").between(100, 199)))
+    val bCust = rowsScanned(head(rootB).filter(col("o_custkey").between(100, 199)))
     assert(bCust < (total * 7) / 10,
       s"z-order lost first-dimension pruning: $bCust of $total rows scanned")
   }
@@ -174,28 +210,21 @@ class ScaleFeaturesSpec extends GraftSuite {
         .otherwise(col("o_orderkey") % 1000))
     val total = orders.count()
 
-    def written(quantile: Boolean): String = {
-      val dir = java.nio.file.Files.createTempDirectory(
-        s"graft-zq-$quantile").toString
-      ops.Layout.zOrderWrite(orders, Seq(col("skewed"), col("days")), dir,
-        bits = 8, partitions = 8, maxRecordsPerFile = 25L, quantile = quantile)
-      dir
+    // ~60 files of ~25 rows each, z-ordered on (skewed, days)
+    def written(quantile: Boolean): org.apache.spark.sql.DataFrame = {
+      val root = snapshotOf(s"zq-$quantile", orders)
+      ops.Layout.snapshotCompact(spark, root, tableBytes(root) / 60,
+        zOrderBy = Seq(col("skewed"), col("days")), zBits = 8,
+        zQuantile = quantile)
+      ops.Layout.readSnapshot(spark, root)
     }
-    def rowsScanned(df: org.apache.spark.sql.DataFrame): Long = {
-      df.collect()
-      df.queryExecution.executedPlan.collectFirst {
-        case a: AdaptiveSparkPlanExec =>
-          a.executedPlan.collectFirst { case s: FileSourceScanExec => s }.get
-        case s: FileSourceScanExec => s
-      }.getOrElse(fail("no file scan in plan")).metrics("numOutputRows").value
-    }
-    val linDir = written(quantile = false)
-    val quaDir = written(quantile = true)
+    val linear = written(quantile = false)
+    val quant = written(quantile = true)
     val pred = col("skewed").between(100, 199)
-    assert(spark.read.parquet(linDir).filter(pred).count() ===
-      spark.read.parquet(quaDir).filter(pred).count(), "layouts disagree")
-    val lin = rowsScanned(spark.read.parquet(linDir).filter(pred))
-    val qua = rowsScanned(spark.read.parquet(quaDir).filter(pred))
+    assert(linear.filter(pred).count() === quant.filter(pred).count(),
+      "layouts disagree")
+    val lin = rowsScanned(linear.filter(pred))
+    val qua = rowsScanned(quant.filter(pred))
     assert(lin > total / 2,
       s"expected the outlier to defeat linear binning (scan most of $total), got $lin")
     assert(qua * 2 < lin,
@@ -203,111 +232,109 @@ class ScaleFeaturesSpec extends GraftSuite {
   }
 
   test("compaction bin-packs small files shuffle-free and the clustered mode restores pruning ranges") {
-    // a streaming-sink-shaped mess: events scattered across ~60 tiny files
+    // a streaming-sink-shaped mess: events scattered across 60 tiny files
     val events = Tables(spark, sf, "events")
       .select(col("event_id"), col("user_id"), col("value"))
-    val dirIn = java.nio.file.Files.createTempDirectory("graft-smallfiles").toString
-    events.repartition(60).write.mode("overwrite").parquet(dirIn)
-    val sizes = new java.io.File(dirIn).listFiles()
-      .filter(_.getName.endsWith(".parquet")).map(_.length)
-    val target = sizes.sum / 6 // aim for ~6 output files
+    val root = snapshotOf("smallfiles", events, files = 60)
+    assert(headFiles(root).size === 60)
+    val target = tableBytes(root) / 6 // aim for ~6 output files
 
-    // plain mode: zero-shuffle coalesce concat
-    val dirOut = java.nio.file.Files.createTempDirectory("graft-compacted").toString
-    val stats = ops.Layout.compact(spark, dirIn, dirOut, target)
-    assert(stats.filesBefore === 60)
-    assert(stats.filesAfter <= 8 && stats.filesAfter >= 5,
-      s"expected ~6 output files, got ${stats.filesAfter}")
-    val out = spark.read.parquet(dirOut)
+    // plain mode: zero-shuffle bin-packing by the scan's split sizing
+    val v = ops.Layout.snapshotCompact(spark, root, target)
+    val filesAfter = filesOf(root, v).size
+    assert(filesAfter <= 8 && filesAfter >= 5,
+      s"expected ~6 output files, got $filesAfter")
+    val out = ops.Layout.readSnapshot(spark, root, v)
     assert(out.count() === events.count())
     assert(out.exceptAll(events).count() === 0 &&
       events.exceptAll(out).count() === 0, "compaction changed the data")
 
     // clustered mode: per-file event_id ranges must not overlap, so a
     // point/range predicate prunes to one file's worth of rows again
-    val dirClu = java.nio.file.Files.createTempDirectory("graft-clustered").toString
-    ops.Layout.compact(spark, dirIn, dirClu, target, Seq(col("event_id")))
-    val ranges = new java.io.File(dirClu).listFiles()
-      .filter(_.getName.endsWith(".parquet")).map { f =>
-        val r = spark.read.parquet(f.getPath)
+    val rootClu = snapshotOf("clustered", events, files = 60)
+    val vClu = ops.Layout.snapshotCompact(spark, rootClu, target,
+      clusterBy = Seq(col("event_id")))
+    val ranges = filesOf(rootClu, vClu).toSeq.map { f =>
+        val r = spark.read.parquet(f)
           .agg(min(col("event_id")), max(col("event_id"))).head()
         (r.getLong(0), r.getLong(1))
       }.sortBy(_._1)
     ranges.sliding(2).foreach {
-      case Array((_, hi), (lo2, _)) =>
+      case Seq((_, hi), (lo2, _)) =>
         assert(hi < lo2, s"clustered-compaction file ranges overlap: $hi >= $lo2")
       case _ =>
     }
-    assert(spark.read.parquet(dirClu).exceptAll(events).count() === 0)
+    assert(ops.Layout.readSnapshot(spark, rootClu, vClu).exceptAll(events)
+      .count() === 0)
+  }
+
+  /** A key-clustered snapshot base WITHOUT a stats column: 8 files with
+    * non-overlapping key ranges that a merge prunes on from parquet
+    * footers.
+    */
+  private def footerClusteredBase(tag: String,
+      df: org.apache.spark.sql.DataFrame): String = {
+    val root = freshRoot(tag)
+    ops.Layout.snapshotAppend(spark, root,
+      df.repartitionByRange(8, col("key")).sortWithinPartitions(col("key")))
+    assert(headFiles(root).size === 8)
+    root
   }
 
   test("copy-on-write merge rewrites ONLY footer-overlapping files; result equals the all-shuffle merge") {
-    // a key-clustered COW table: 8 files with non-overlapping key ranges
-    val base = Tables(spark, sf, "orders")
-      .select(col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"))
-    val baseDir = java.nio.file.Files.createTempDirectory("graft-cow-base").toString
-    base.repartitionByRange(8, col("o_orderkey"))
-      .sortWithinPartitions(col("o_orderkey"))
-      .write.mode("overwrite").parquet(baseDir)
-    def listing() = new java.io.File(baseDir).listFiles()
-      .filter(_.getName.endsWith(".parquet"))
-      .map(f => f.getPath -> (f.lastModified(), f.length())).toMap
-    val before = listing()
-    assert(before.size === 8)
+    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(18,2)")
+    val orders = Tables(spark, sf, "orders")
+    val base = orders.select(col("o_orderkey").as("key"),
+      dec(col("o_totalprice")).cast("double").as("totalprice"),
+      col("o_orderstatus").as("status"), lit("unchanged").as("change_type"))
+    val root = footerClusteredBase("cow-base", base)
+    val before = dataListing(root)
+    val v1Files = filesOf(root, 1)
 
     // range-localized changelog: updates hit only the bottom fifth of the
     // keyspace; inserts land past every file's range
-    val cutoff = base.agg(max(col("o_orderkey"))).head().getLong(0) / 5
-    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(18,2)")
-    val updates = base
+    val cutoff = orders.agg(max(col("o_orderkey"))).head().getLong(0) / 5
+    val updates = orders
       .filter(col("o_orderkey") % 7 === 0 && col("o_orderkey") <= cutoff)
       .select(col("o_orderkey").as("c_key"),
         (dec(col("o_totalprice")) * lit(1.1).cast("decimal(18,2)")).as("c_price"),
         lit("U").as("c_status"))
-    val inserts = base.filter(col("o_orderkey") % 1000 === 3)
+    val inserts = orders.filter(col("o_orderkey") % 1000 === 3)
       .select((col("o_orderkey") + 10000000L).as("c_key"),
         dec(col("o_totalprice")).as("c_price"), lit("N").as("c_status"))
     val changes = updates.unionAll(inserts)
-    val matchKeys = changes.select(col("c_key")).collect().map(_.getLong(0))
 
     def mergeSelect(df: org.apache.spark.sql.DataFrame) = df
-      .join(changes, col("o_orderkey") === col("c_key"), "full_outer")
+      .join(changes, col("key") === col("c_key"), "full_outer")
       .select(
-        coalesce(col("o_orderkey"), col("c_key")).as("key"),
-        coalesce(col("c_price"), dec(col("o_totalprice"))).cast("double").as("totalprice"),
-        coalesce(col("c_status"), col("o_orderstatus")).as("status"),
-        when(col("o_orderkey").isNull, "insert")
+        coalesce(col("key"), col("c_key")).as("key"),
+        coalesce(col("c_price").cast("double"), col("totalprice")).as("totalprice"),
+        coalesce(col("c_status"), col("status")).as("status"),
+        when(col("key").isNull, "insert")
           .when(col("c_key").isNull, "unchanged").otherwise("update")
           .as("change_type"))
-    val outDir = java.nio.file.Files.createTempDirectory("graft-cow-out").toString
-    val stats = ops.Layout.cowMerge(spark, baseDir, "o_orderkey", matchKeys,
-      mergeSelect, outDir)
+    val v = ops.Layout.snapshotMergeKeys(spark, root, "key",
+      changes.select(col("c_key")), mergeSelect)
 
     // footer pruning actually pruned: most files escaped the rewrite
     // (updates cover ~1/5 of a range-clustered keyspace), and the split
     // accounts for every file exactly once
-    assert(stats.touched.nonEmpty && stats.untouched.nonEmpty)
-    assert(stats.touched.size + stats.untouched.size === stats.totalFiles)
-    assert(stats.untouched.size >= stats.totalFiles / 2,
-      s"expected most files untouched, got ${stats.untouched.size}/${stats.totalFiles}")
-    // the COW contract: untouched files are NOT rewritten — same path, same
-    // mtime, same byte length as before the merge
-    val after = listing()
-    assert(after.keySet === before.keySet, "merge rewrote the base directory")
-    // cowMerge reports hadoop URIs (file:/tmp/...); compare on the fs path
-    stats.untouched.foreach { u =>
-      val p = new org.apache.hadoop.fs.Path(u).toUri.getPath
-      assert(after(p) === before(p), s"untouched file was modified: $p")
-    }
+    val untouched = v1Files.intersect(filesOf(root, v))
+    val touched = v1Files -- untouched
+    assert(touched.nonEmpty && untouched.nonEmpty)
+    assert(touched.size + untouched.size === v1Files.size)
+    assert(untouched.size >= v1Files.size / 2,
+      s"expected most files untouched, got ${untouched.size}/${v1Files.size}")
+    // the COW contract: no base file is rewritten — every v1 file keeps its
+    // path, mtime and byte length, and the untouched ones are what the new
+    // version reads
+    val after = dataListing(root)
+    before.foreach { case (p, sig) =>
+      assert(after.get(p).contains(sig), s"base file was modified: $p") }
 
     // semantics: untouched ∪ rewritten ≡ the all-shuffle merge of the WHOLE
     // base (q68's plan) — file pruning changed I/O, never the answer
-    val cow = spark.read.parquet(outDir).unionByName(
-      spark.read.parquet(stats.untouched: _*).select(
-        col("o_orderkey").as("key"),
-        dec(col("o_totalprice")).cast("double").as("totalprice"),
-        col("o_orderstatus").as("status"),
-        lit("unchanged").as("change_type")))
+    val cow = ops.Layout.readSnapshot(spark, root, v)
     val full = mergeSelect(base)
     assert(cow.count() === full.count())
     assert(cow.exceptAll(full).count() === 0 && full.exceptAll(cow).count() === 0,
@@ -316,50 +343,40 @@ class ScaleFeaturesSpec extends GraftSuite {
 
   test("targeted COW delete rewrites only footer-overlapping files; result equals the anti-join") {
     val base = Tables(spark, sf, "orders")
-      .select(col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"))
-    val baseDir = java.nio.file.Files.createTempDirectory("graft-del-base").toString
-    base.repartitionByRange(8, col("o_orderkey"))
-      .sortWithinPartitions(col("o_orderkey"))
-      .write.mode("overwrite").parquet(baseDir)
-    def listing() = new java.io.File(baseDir).listFiles()
-      .filter(_.getName.endsWith(".parquet"))
-      .map(f => f.getPath -> (f.lastModified(), f.length())).toMap
-    val before = listing()
+      .select(col("o_orderkey").as("key"), col("o_totalprice"), col("o_orderstatus"))
+    val root = footerClusteredBase("del-base", base)
+    val before = dataListing(root)
+    val v1Files = filesOf(root, 1)
 
     // range-localized deletion requests: bottom fifth of the keyspace
-    val cutoff = base.agg(max(col("o_orderkey"))).head().getLong(0) / 5
+    val cutoff = base.agg(max(col("key"))).head().getLong(0) / 5
     val requests = base
-      .filter(col("o_orderkey") % 13 === 1 && col("o_orderkey") <= cutoff)
-      .select(col("o_orderkey").as("d_key"))
-    val delKeys = requests.collect().map(_.getLong(0))
-    assert(delKeys.nonEmpty)
+      .filter(col("key") % 13 === 1 && col("key") <= cutoff)
+      .select(col("key").as("d_key"))
+    val nRequests = requests.count()
+    assert(nRequests > 0)
 
-    val outDir = java.nio.file.Files.createTempDirectory("graft-del-out").toString
-    val stats = ops.Layout.cowMerge(spark, baseDir, "o_orderkey", delKeys,
+    val v = ops.Layout.snapshotMergeKeys(spark, root, "key", requests,
       touched => touched
-        .join(broadcast(requests), col("o_orderkey") === col("d_key"), "left_anti"),
-      outDir)
+        .join(broadcast(requests), col("key") === col("d_key"), "left_anti"))
 
     // pruning pruned: a bottom-fifth request set leaves most files alone,
     // and they are byte-identical afterwards
-    assert(stats.touched.nonEmpty && stats.untouched.size >= stats.totalFiles / 2)
-    val after = listing()
-    assert(after.keySet === before.keySet, "delete rewrote the base directory")
-    stats.untouched.foreach { u =>
-      val p = new org.apache.hadoop.fs.Path(u).toUri.getPath
-      assert(after(p) === before(p), s"untouched file was modified: $p")
-    }
+    val untouched = v1Files.intersect(filesOf(root, v))
+    assert(untouched.size < v1Files.size && untouched.size >= v1Files.size / 2)
+    val after = dataListing(root)
+    before.foreach { case (p, sig) =>
+      assert(after.get(p).contains(sig), s"base file was modified: $p") }
 
     // semantics: untouched ∪ rewritten ≡ the full anti-join, and no
     // requested key survives anywhere
-    val kept = spark.read.parquet(outDir).unionByName(
-      spark.read.parquet(stats.untouched: _*))
+    val kept = ops.Layout.readSnapshot(spark, root, v)
     val full = base.join(broadcast(requests),
-      col("o_orderkey") === col("d_key"), "left_anti")
-    assert(kept.count() === base.count() - delKeys.length)
+      col("key") === col("d_key"), "left_anti")
+    assert(kept.count() === base.count() - nRequests)
     assert(kept.exceptAll(full).count() === 0 && full.exceptAll(kept).count() === 0)
     assert(kept.join(broadcast(requests),
-      col("o_orderkey") === col("d_key"), "left_semi").count() === 0,
+      col("key") === col("d_key"), "left_semi").count() === 0,
       "a deletion-requested key survived the COW delete")
   }
 
@@ -369,19 +386,12 @@ class ScaleFeaturesSpec extends GraftSuite {
       .select(col("o_orderkey").as("key"), col("o_orderstatus").as("status"))
     val v1 = ops.Layout.snapshotAppend(spark, root, orders.repartition(3))
     assert(v1 === 1)
-    def dataListing() = {
-      def walk(d: java.io.File): Seq[java.io.File] =
-        if (d.isDirectory) d.listFiles().toSeq.flatMap(walk) else Seq(d)
-      walk(new java.io.File(s"$root/data"))
-        .filter(_.getName.endsWith(".parquet"))
-        .map(f => f.getPath -> (f.lastModified(), f.length())).toMap
-    }
-    val filesV1 = dataListing()
+    val filesV1 = dataListing(root)
     // v2 appends a delta: every v1 data file stays byte-identical
     val delta = orders.filter(col("key") % 100 === 7)
       .select((col("key") + 5000000L).as("key"), col("status"))
     val v2 = ops.Layout.snapshotAppend(spark, root, delta)
-    val filesV2 = dataListing()
+    val filesV2 = dataListing(root)
     filesV1.foreach { case (p, sig) =>
       assert(filesV2(p) === sig, s"append rewrote referenced file $p") }
     // reads are pinned per version: v1 ≡ orders, v2 ≡ orders ∪ delta
@@ -407,7 +417,7 @@ class ScaleFeaturesSpec extends GraftSuite {
     assert(r3.exceptAll(want2).count() === 0 && want2.exceptAll(r3).count() === 0,
       "vacuum deleted a file the kept version references")
     // the dropped versions' data files are actually gone from disk
-    val remaining = dataListing().keySet
+    val remaining = dataListing(root).keySet
     filesV1.keySet.foreach(p =>
       assert(!remaining.contains(p), s"vacuum left unreferenced file $p"))
   }
@@ -523,26 +533,20 @@ class ScaleFeaturesSpec extends GraftSuite {
       .select(col("o_orderkey").as("key"), col("o_orderstatus").as("status"))
     ops.Layout.snapshotAppend(spark, root,
       orders.repartitionByRange(6, col("key")).sortWithinPartitions(col("key")))
-    def listing() = {
-      def walk(d: java.io.File): Seq[java.io.File] =
-        if (d.isDirectory) d.listFiles().toSeq.flatMap(walk) else Seq(d)
-      walk(new java.io.File(s"$root/data"))
-        .filter(_.getName.endsWith(".parquet"))
-        .map(f => f.getPath -> (f.lastModified(), f.length())).toMap
-    }
-    val filesV1 = listing()
+    val filesV1 = dataListing(root)
     val cutoff = orders.agg(max(col("key"))).head().getLong(0) / 5
     val changes = orders.filter(col("key") % 9 === 2 && col("key") <= cutoff)
       .select(col("key").as("c_key"), lit("M").as("c_status"))
       .localCheckpoint()
     val keys = changes.select(col("c_key")).collect().map(_.getLong(0))
-    val v2 = ops.Layout.snapshotMerge(spark, root, "key", keys,
+    val v2 = ops.Layout.snapshotMergeKeys(spark, root, "key",
+      changes.select(col("c_key")),
       touched => touched.join(changes, col("key") === col("c_key"), "full_outer")
         .select(coalesce(col("key"), col("c_key")).as("key"),
           coalesce(col("c_status"), col("status")).as("status")))
     assert(v2 === 2)
     // untouched v1 files: same paths, byte-identical, REFERENCED by v2
-    val after = listing()
+    val after = dataListing(root)
     filesV1.foreach { case (p, sig) =>
       assert(after(p) === sig, s"merge rewrote or removed base file $p") }
     val v2Files = ops.Layout.readSnapshot(spark, root, 2).inputFiles
@@ -561,7 +565,8 @@ class ScaleFeaturesSpec extends GraftSuite {
     // a MOR-deleted table refuses to merge (sidecars would be ignored)
     ops.Layout.snapshotDeleteMOR(spark, root, "key", Array(keys.head))
     intercept[IllegalArgumentException] {
-      ops.Layout.snapshotMerge(spark, root, "key", keys, identity)
+      ops.Layout.snapshotMergeKeys(spark, root, "key", changes.select(col("c_key")),
+        identity)
     }
   }
 
@@ -595,33 +600,35 @@ class ScaleFeaturesSpec extends GraftSuite {
   }
 
   test("bloom file index prunes a hash layout that min/max cannot, with zero false negatives") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-bloomidx").toString
     val orders = Tables(spark, sf, "orders")
       .select(col("o_orderkey").as("key"), col("o_orderstatus").as("status"))
-    orders.repartition(8).write.mode("overwrite").parquet(dir)
+    val root = snapshotOf("bloom", orders, files = 8)
+    val idx = freshRoot("bloom-idx")
     // hash layout really defeats range pruning: every file spans ~the
     // whole keyspace, so min/max overlap for any probe key
-    val ranges = ops.Layout.fileKeyRanges(spark, dir, "key")
+    val ranges = ops.Layout.snapshotKeyRanges(spark, root, 1, "key")
     val (gmn, gmx) = (ranges.map(_._2).min, ranges.map(_._3).max)
     val mid = (gmn + gmx) / 2
     assert(ranges.forall { case (_, mn, mx) => mn <= mid && mid <= mx },
       "hash layout should give every file an overlapping range")
-    ops.Layout.bloomIndexWrite(spark, dir, "key")
+    ops.Layout.maintainBloomIndex(spark, root, idx, "key")
+    def lookup(keys: Seq[Long]) =
+      ops.Layout.snapshotPointLookup(spark, root, idx, "key", keys)
     // single-key lookups: exactly the owning file (+ rare FP) scans
     val keys = orders.filter(col("key") % 701 === 3)
       .select(col("key")).collect().map(_.getLong(0)).toSeq
     assert(keys.nonEmpty)
-    val one = ops.Layout.bloomIndexLookup(spark, dir, "key", Seq(keys.head))
+    val one = lookup(Seq(keys.head))
     assert(one.totalFiles === 8)
     assert(one.scannedFiles.size < one.totalFiles,
       s"bloom must prune: scanned ${one.scannedFiles.size} of ${one.totalFiles}")
     // no false negatives: the multi-key lookup equals the full filter
-    val multi = ops.Layout.bloomIndexLookup(spark, dir, "key", keys)
+    val multi = lookup(keys)
     val want = orders.filter(col("key").isin(keys: _*))
     assert(multi.result.select(col("key"), col("status")).exceptAll(want).count() === 0 &&
       want.exceptAll(multi.result.select(col("key"), col("status"))).count() === 0)
     // a key absent from the table scans (almost) nothing and returns none
-    val miss = ops.Layout.bloomIndexLookup(spark, dir, "key", Seq(gmx + 999999L))
+    val miss = lookup(Seq(gmx + 999999L))
     assert(miss.result.count() === 0)
     assert(miss.scannedFiles.size < miss.totalFiles)
   }
@@ -685,14 +692,7 @@ class ScaleFeaturesSpec extends GraftSuite {
         col("o_totalprice").cast("double").as("price"))
     ops.Layout.snapshotAppend(spark, root,
       orders.repartitionByRange(6, col("key")).sortWithinPartitions(col("key")))
-    def dataListing() = {
-      def walk(d: java.io.File): Seq[java.io.File] =
-        if (d.isDirectory) d.listFiles().toSeq.flatMap(walk) else Seq(d)
-      walk(new java.io.File(s"$root/data"))
-        .filter(_.getName.endsWith(".parquet"))
-        .map(f => f.getPath -> (f.lastModified(), f.length())).toMap
-    }
-    val filesV1 = dataListing()
+    val filesV1 = dataListing(root)
     val cutoff = orders.agg(max(col("key"))).head().getLong(0) / 5
     val delKeys = orders.filter(col("key") % 13 === 1 && col("key") <= cutoff)
       .select(col("key")).collect().map(_.getLong(0))
@@ -700,7 +700,7 @@ class ScaleFeaturesSpec extends GraftSuite {
     val v2 = ops.Layout.snapshotDeleteMOR(spark, root, "key", delKeys)
     assert(v2 === 2)
     // the delete wrote and rewrote ZERO data files — that's the MOR deal
-    assert(dataListing() === filesV1,
+    assert(dataListing(root) === filesV1,
       "MOR delete must not add or rewrite any data file")
     // sidecar scope: range-localized churn on a clustered table touches a
     // strict subset of files
@@ -771,13 +771,6 @@ class ScaleFeaturesSpec extends GraftSuite {
         col("l_quantity").cast("double").as("qty"),
         col("l_returnflag").as("flag"))
     ops.Layout.snapshotAppend(spark, root, li.repartition(4))
-    def dataListing() = {
-      def walk(d: java.io.File): Seq[java.io.File] =
-        if (d.isDirectory) d.listFiles().toSeq.flatMap(walk) else Seq(d)
-      walk(new java.io.File(s"$root/data"))
-        .filter(_.getName.endsWith(".parquet"))
-        .map(f => f.getPath -> (f.lastModified(), f.length())).toMap
-    }
     def posSidecarRows() = {
       def walk(d: java.io.File): Seq[java.io.File] =
         if (d.isDirectory) d.listFiles().toSeq.flatMap(walk) else Seq(d)
@@ -788,7 +781,7 @@ class ScaleFeaturesSpec extends GraftSuite {
       if (fs.isEmpty) spark.emptyDataFrame
       else spark.read.parquet(fs.map(_.getPath): _*)
     }
-    val filesV1 = dataListing()
+    val filesV1 = dataListing(root)
     val pred = col("flag") === "R" && col("qty") > 30
     assert(li.filter(pred).count() > 0 && // predicate rows share keys with
       li.filter(pred).select("key")       // survivors: no key is unique
@@ -797,7 +790,7 @@ class ScaleFeaturesSpec extends GraftSuite {
     val v2 = ops.Layout.snapshotDeletePositions(spark, root, pred)
     assert(v2 === 2)
     // the deal: ZERO data files written or rewritten
-    assert(dataListing() === filesV1,
+    assert(dataListing(root) === filesV1,
       "position delete must leave every data file byte-identical")
     // the sidecar prices at O(matched rows), exactly
     assert(posSidecarRows().count() === li.filter(pred).count(),
