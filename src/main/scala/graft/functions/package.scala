@@ -157,20 +157,30 @@ package object functions {
     * arrives either way, is identical by construction). A platform whose
     * checkpoint action does not route QueryExecutionListener events
     * pays the wait ONCE per JVM, not once per round ([[obsBroken]]
-    * memo).
+    * memo). Every fallback — the timeout that sets the memo and each
+    * call the memo answers — counts in [[observedFallbacks]], so the
+    * second job a caller then runs is visible rather than silent.
     */
   @volatile private[graft] var obsBroken = false
 
+  /** Calls of [[observedOrNone]] that returned None (the caller ran its
+    * fallback job), since JVM start. */
+  private[graft] val observedFallbacks = new java.util.concurrent.atomic.AtomicLong(0)
+
   def observedOrNone(o: org.apache.spark.sql.Observation,
       timeoutMs: Long = 2000): Option[Map[String, Any]] = {
-    if (obsBroken) return None
+    if (obsBroken) { observedFallbacks.incrementAndGet(); return None }
     val deadline = System.nanoTime() + timeoutMs * 1000000L
     var m = org.apache.spark.sql.GraftObservationBridge.getOrEmpty(o)
     while (m.isEmpty && System.nanoTime() < deadline) {
       Thread.sleep(2)
       m = org.apache.spark.sql.GraftObservationBridge.getOrEmpty(o)
     }
-    if (m.isEmpty) { obsBroken = true; None } else Some(m.toMap)
+    if (m.isEmpty) {
+      obsBroken = true
+      observedFallbacks.incrementAndGet()
+      None
+    } else Some(m.toMap)
   }
 
   // ------------------------------------------------------------ Spark side

@@ -332,27 +332,76 @@ object Layout {
       files: Seq[String], keyCol: String): Seq[(String, Long, Long)] =
     fileStatsOf(spark, files, keyCol).map(s => (s.path, s.min, s.max))
 
-  /** Touched-file resolution as a JOIN — the changelog stays a DataFrame
-    * end to end: probe keys × (small, broadcast) per-file ranges on a
-    * BETWEEN condition, distinct the matching file names, collect
-    * O(files) paths. No driver-side O(changelog) key materialization:
-    * the only collect here is the file list, which the manifest already
-    * prices driver-side. The nested-loop probe is map-side (each key row
-    * tests ≤ files ranges); partial aggregation collapses the distinct to
-    * ≤ files rows per partition before the one tiny shuffle.
+  /** Per-file key ranges prepared for a MAP-SIDE probe: sorted by min,
+    * with the running max of the maxes, so the files whose range holds
+    * key k are one binary search (the last min ≤ k) plus a backward walk
+    * that stops once no earlier range reaches k — ranges may overlap.
+    * Shipped to executors as a broadcast variable, which starts no Spark
+    * job; O(files) names and longs.
+    */
+  private final class RangeProbe(ranges: Seq[(String, Long, Long)])
+      extends Serializable {
+    private val sorted = ranges.sortBy(_._2).toArray
+    val names: Array[String] = sorted.map(_._1)
+    private val mins = sorted.map(_._2)
+    private val maxs = sorted.map(_._3)
+    private val reach = maxs.scanLeft(Long.MinValue)(math.max).tail
+
+    /** Indexes into [[names]] of the ranges holding `k`. */
+    def holding(k: Long): Iterator[Int] = {
+      var lo = 0
+      var hi = mins.length
+      while (lo < hi) {
+        val mid = (lo + hi) >>> 1
+        if (mins(mid) <= k) lo = mid + 1 else hi = mid
+      }
+      Iterator.iterate(lo - 1)(_ - 1)
+        .takeWhile(i => i >= 0 && reach(i) >= k).filter(maxs(_) >= k)
+    }
+  }
+
+  /** A set of names gathered by the tasks of a job — merged on the
+    * driver before the job's action returns, so the value is complete
+    * when the write that fed it finishes. Set semantics make retried
+    * tasks harmless.
+    */
+  private final class NameSetAccumulator
+      extends org.apache.spark.util.AccumulatorV2[String, java.util.Set[String]] {
+    private val names = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    def isZero: Boolean = names.isEmpty
+    def copy(): NameSetAccumulator = {
+      val c = new NameSetAccumulator
+      c.names.addAll(names)
+      c
+    }
+    def reset(): Unit = names.clear()
+    def add(v: String): Unit = names.add(v)
+    def merge(o: org.apache.spark.util.AccumulatorV2[String,
+        java.util.Set[String]]): Unit = names.addAll(o.value)
+    def value: java.util.Set[String] = names
+  }
+
+  /** Touched-file resolution in ONE map-side job — the changelog stays a
+    * DataFrame end to end: each key is probed against the broadcast
+    * [[RangeProbe]], and each partition emits the distinct indexes of
+    * the files it hit. No shuffle, and no driver-side O(changelog) key
+    * materialization: what returns is at most O(files) indexes per
+    * partition, the price class of the manifest itself.
     */
   private def touchedFilesFor(spark: org.apache.spark.sql.SparkSession,
       ranges: Seq[(String, Long, Long)], keys: DataFrame): Set[String] = {
     if (ranges.isEmpty) return Set.empty
-    import spark.implicits._
-    val kc = keys.columns.head
-    val rdf = ranges.toDF("__graft_f", "__graft_mn", "__graft_mx")
-    keys.select(col(kc).cast("long").as("__graft_k"))
-      .join(broadcast(rdf),
-        col("__graft_k") >= col("__graft_mn") &&
-          col("__graft_k") <= col("__graft_mx"))
-      .select(col("__graft_f")).distinct()
-      .collect().map(_.getString(0)).toSet
+    val probe = new RangeProbe(ranges)
+    val bc = spark.sparkContext.broadcast(probe)
+    val hit = keys.select(col(keys.columns.head).cast("long")).rdd
+      .mapPartitions { rows =>
+        val p = bc.value
+        val seen = scala.collection.mutable.BitSet()
+        rows.foreach(r => if (!r.isNullAt(0)) p.holding(r.getLong(0)).foreach(seen += _))
+        seen.iterator
+      }.collect()
+    bc.destroy()
+    hit.iterator.map(i => probe.names(i)).toSet
   }
 
   // ------------------------------------------------------- bloom file index
@@ -395,6 +444,16 @@ object Layout {
     * the same crash-atomic, re-runnable maintainer contract as
     * [[maintainSumView]], so it rides [[streamingMaintained]] unchanged.
     * Returns the base head version the index now covers.
+    *
+    * INVENTORY IN THE HEADER: each index commit records the base head it
+    * covers (`#bloomBase`) and how many files it holds rows for
+    * (`#bloomFiles`), so the next run finds its new files as
+    * files(head) − files(bloomBase) from the base manifests alone — no
+    * pass over the index. A restore can bring back a file the recorded
+    * head no longer lists; it is indexed again, and duplicate index rows
+    * are harmless ([[bloomCandidateStatus]]). An index head without the
+    * header, or whose recorded base head has been vacuumed, takes the
+    * inventory with one distinct pass over the index instead.
     * 100 TB: maintenance is O(new bytes) scan + O(new files · 16 KiB)
     * index rows; the index table keeps the petabyte-table/gigabyte-index
     * ratio, versioned, vacuumable, and exactly-once under streaming
@@ -403,30 +462,46 @@ object Layout {
   def maintainBloomIndex(spark: org.apache.spark.sql.SparkSession,
       baseRoot: String, idxRoot: String, keyCol: String,
       mBits: Int = BloomIndexBits): Int =
-    maintainBloomIndexInventory(spark, baseRoot, idxRoot, keyCol, mBits)._1
+    maintainBloomIndexCore(spark, baseRoot, idxRoot, keyCol, mBits, gc = false)
 
-  /** [[maintainBloomIndex]] returning, next to the covered head, the
-    * INVENTORY of base-file names the index holds rows for after the
-    * run — the one distinct pass over the index a maintenance cycle
-    * takes, plus the names this run appended. O(indexed files) names,
-    * never the bit payload.
+  /** [[maintainBloomIndex]]'s one commit. With `gc`, rows for files the
+    * head no longer references (compaction / overwrite victims) — dead
+    * weight every candidate-resolution pass re-reads — are dropped once
+    * they outnumber the live files' rows: the run then writes ONE
+    * overwrite of live rows ∪ new rows instead of an append. When no
+    * live file was indexed before (a full compaction), that overwrite
+    * holds only the new rows and never reads the old index.
     */
-  private def maintainBloomIndexInventory(
-      spark: org.apache.spark.sql.SparkSession, baseRoot: String,
-      idxRoot: String, keyCol: String, mBits: Int): (Int, Set[String]) = {
+  private def maintainBloomIndexCore(spark: org.apache.spark.sql.SparkSession,
+      baseRoot: String, idxRoot: String, keyCol: String, mBits: Int,
+      gc: Boolean): Int = {
     import graft.functions.Bloom
+    import spark.implicits._
     val vs = snapshotVersions(spark, baseRoot)
     require(vs.nonEmpty, s"no snapshots at $baseRoot")
     val head = vs.last
-    val have: Set[String] =
-      if (snapshotVersions(spark, idxRoot).isEmpty) Set.empty
-      else readSnapshot(spark, idxRoot).select(col("file")).distinct()
-        .collect().map(_.getString(0)).toSet
-    val newEntries = manifestEntries(spark, baseRoot, head)
-      .filterNot(e => have(baseName(e.path)))
-    if (newEntries.isEmpty) return (head, have)
-    val newNames = newEntries.map(e => baseName(e.path))
-    val rows = manifestRelation(spark, baseRoot, newEntries,
+    val headEntries = manifestEntries(spark, baseRoot, head)
+    val live = headEntries.map(e => baseName(e.path)).toSet
+    val idxHead = snapshotVersions(spark, idxRoot).lastOption
+    val idxHdr = idxHead.map(manifestHeader(spark, idxRoot, _))
+      .getOrElse(Map.empty[String, String])
+    // (names the index covers, files it holds rows for)
+    val (covered, nIndexed): (Set[String], Long) =
+      if (idxHead.isEmpty) (Set.empty, 0L)
+      else (for {
+        b <- idxHdr.get("bloomBase").map(_.toInt) if vs.contains(b)
+        n <- idxHdr.get("bloomFiles").map(_.toLong)
+      } yield (manifestFiles(spark, baseRoot, b).map(baseName).toSet, n))
+        .getOrElse {
+          val have = readSnapshot(spark, idxRoot).select(col("file"))
+            .distinct().collect().map(_.getString(0)).toSet
+          (have, have.size.toLong)
+        }
+    val newEntries = headEntries.filterNot(e => covered(baseName(e.path)))
+    val total = nIndexed + newEntries.size
+    val rewrite = gc && total - live.size > live.size
+    if (newEntries.isEmpty && !rewrite) return head
+    def rows = manifestRelation(spark, baseRoot, newEntries,
         manifestHeader(spark, baseRoot, head))._1
       .select(element_at(split(input_file_name(), "/"), -1).as("file"),
         explode(Bloom.positionsFor(col(keyCol).cast("long"), mBits)).as("pos"))
@@ -439,13 +514,26 @@ object Layout {
     // every point lookup would scan it forever. No probe requirement ever
     // targets w=-1, so the marker satisfies nothing; written for every
     // file, it needs no second pass over the rows to find the empty ones.
-    import spark.implicits._
-    val markers = newNames.toDF("file")
+    val markers = newEntries.map(e => baseName(e.path)).toDF("file")
       .select(col("file"), lit(-1).cast("int").as("w"), lit(0L).as("bits"))
-    snapshotAppend(spark, idxRoot,
-      rows.unionByName(markers).withColumn("base_version", lit(head))
-        .coalesce(1))
-    (head, have ++ newNames)
+    val fresh = (if (newEntries.isEmpty) markers else rows.unionByName(markers))
+      .withColumn("base_version", lit(head))
+    def inventory(n: Long) =
+      Map("bloomBase" -> head.toString, "bloomFiles" -> n.toString)
+    if (!rewrite)
+      appendInternal(spark, idxRoot, fresh.coalesce(1), None, None,
+        extraHeader = inventory(total))
+    else {
+      val kept = covered.intersect(live)
+      val out =
+        if (kept.isEmpty) fresh
+        else readSnapshot(spark, idxRoot)
+          .join(kept.toSeq.toDF("file"), Seq("file"), "left_semi")
+          .unionByName(fresh)
+      snapshotOverwrite(spark, idxRoot, out.coalesce(1),
+        extraHeader = inventory(live.size))
+    }
+    head
   }
 
   /** Per-file bloom verdicts for a probe set: file base-name → "might
@@ -531,23 +619,8 @@ object Layout {
     */
   def maintainBloomIndexFor(spark: org.apache.spark.sql.SparkSession,
       root: String, keyCol: String, mBits: Int = BloomIndexBits): Int = {
-    import spark.implicits._
     val idxRoot = bloomSnapIdxRoot(root, keyCol)
-    val (v, indexed) =
-      maintainBloomIndexInventory(spark, root, idxRoot, keyCol, mBits)
-    // INDEX GC: rows for files the head no longer references (compaction
-    // / overwrite victims) are dead weight every candidate-resolution
-    // pass re-reads. When the dead outnumber the live, ONE overwrite
-    // commit keeps only live files' rows (the index is itself a snapshot
-    // table, so the rewrite is atomic and time-travelable). The live and
-    // dead counts come from the run's own inventory against the
-    // manifest — no second pass over the index.
-    if (snapshotVersions(spark, idxRoot).isEmpty) return v // nothing indexed
-    val live = manifestFiles(spark, root, v).map(baseName).toSet
-    val nLive = indexed.count(live)
-    if (indexed.size - nLive > nLive)
-      snapshotOverwrite(spark, idxRoot, readSnapshot(spark, idxRoot)
-        .join(live.toSeq.toDF("file"), Seq("file"), "left_semi").coalesce(1))
+    val v = maintainBloomIndexCore(spark, root, idxRoot, keyCol, mBits, gc = true)
     val declared = manifestHeader(spark, root, snapshotVersions(spark, root).last)
       .get("bloomIndex").map(_.split(",").map(_.trim).toSet)
       .getOrElse(Set.empty)
@@ -743,7 +816,7 @@ object Layout {
     * generalized to user properties and `check.*` constraints).
     */
   private val EphemeralHeaders = Set("ts", "writer", "epoch", "schema",
-    "mvBase", "cdcKey", "publishRef", "publishSrc")
+    "mvBase", "cdcKey", "publishRef", "publishSrc", "bloomBase", "bloomFiles")
 
   /** Engine-owned properties a user must not SET/UNSET directly — each
     * has its own evolution path (declaration at first commit; the
@@ -811,7 +884,8 @@ object Layout {
   /** The carry-forward state of a version, shared by every commit path
     * that extends it (append, idempotent append, MOR delete): segment
     * references, legacy inline entries (which must re-serialize or the
-    * commit silently drops pre-v2 files), delete sidecars, table
+    * commit silently drops pre-v2 files), delete sidecars (their
+    * `delete:` lines verbatim, recorded scopes included), table
     * properties, and the recorded schema.
     */
   private case class CarriedState(segs: Seq[String], inline: Seq[FileEntry],
@@ -824,7 +898,7 @@ object Layout {
     case Some(v0) => CarriedState(
       manifestSegRefs(spark, root, v0),
       manifestEntriesTagged(spark, root, v0).collect { case ("", e) => e },
-      manifestDeleteFiles(spark, root, v0),
+      manifestDeleteRefs(spark, root, v0),
       carriedProps(manifestHeader(spark, root, v0)),
       manifestSchema(spark, root, v0))
   }
@@ -1042,8 +1116,33 @@ object Layout {
     */
   private def manifestDeleteFiles(spark: org.apache.spark.sql.SparkSession,
       root: String, version: Int): Seq[String] =
+    manifestDeleteRefs(spark, root, version).map(deleteRefPath)
+
+  /** The `delete:` lines of a manifest as written: the sidecar path,
+    * optionally followed by a tab and `scope=<enc,enc,...>`, the base
+    * names of the data files the sidecar has rows for, recorded by the
+    * delete that wrote it. Commits carry these lines verbatim, so a
+    * recorded scope travels with its sidecar through appends, restores,
+    * clones and branch publishes. A line without a scope (sidecars
+    * written before the scope was recorded) is still read: the reader
+    * derives its scope with one distinct pass ([[deleteScopeOf]]).
+    */
+  private def manifestDeleteRefs(spark: org.apache.spark.sql.SparkSession,
+      root: String, version: Int): Seq[String] =
     manifestLines(spark, root, version).filter(_.startsWith("delete:"))
       .map(_.stripPrefix("delete:"))
+
+  private def deleteRefPath(ref: String): String = ref.takeWhile(_ != '\t')
+
+  private def deleteRef(path: String, scope: Set[String]): String =
+    s"$path\tscope=" + scope.toSeq.sorted
+      .map(java.net.URLEncoder.encode(_, "UTF-8")).mkString(",")
+
+  private def deleteRefScope(ref: String): Option[Set[String]] =
+    ref.split('\t').drop(1).collectFirst {
+      case t if t.startsWith("scope=") => t.stripPrefix("scope=").split(",")
+        .filter(_.nonEmpty).map(java.net.URLDecoder.decode(_, "UTF-8")).toSet
+    }
 
   /** `#key=value` header entries of a manifest (writer identity etc.). */
   private def manifestHeader(spark: org.apache.spark.sql.SparkSession,
@@ -1565,7 +1664,8 @@ object Layout {
       extraProps: Map[String, String] = Map.empty,
       partSpec: Option[String] = None,
       ndvKey: Option[String] = None,
-      histKey: Option[String] = None): Int = {
+      histKey: Option[String] = None,
+      extraHeader: Map[String, String] = Map.empty): Int = {
     require(extraProps.keySet.intersect(ReservedProps).isEmpty,
       s"extraProps must not set engine-owned keys: " +
         extraProps.keySet.intersect(ReservedProps).mkString(", "))
@@ -1711,9 +1811,11 @@ object Layout {
         if (head.isEmpty) mergeSchemas(None, df.schema)
         else carried.schema.flatMap(ps => mergeSchemas(Some(ps), df.schema))
       try {
+        // extraHeader: PER-COMMIT metadata (EphemeralHeaders — never
+        // carried), e.g. the bloom index's covered base head
         commitManifest(spark, root, attemptV, carried.segs,
           carried.inline ++ entries,
-          header = effProps ++ schemaHeaderOf(schema),
+          header = effProps ++ extraHeader ++ schemaHeaderOf(schema),
           deletes = carried.deletes)
         return attemptV
       } catch {
@@ -2557,6 +2659,31 @@ object Layout {
   private def isPosSidecar(p: String): Boolean =
     p.contains("/deletes/pos-")
 
+  /** Sidecar files as one frame. Their schemas are fixed by their
+    * writers — (file, key) with the key cast to long, (file, pos) with
+    * the scan's long row index — so the read skips footer inference.
+    */
+  private def readSidecars(spark: org.apache.spark.sql.SparkSession,
+      paths: Seq[String]): DataFrame = {
+    val second = if (paths.forall(isPosSidecar)) "pos" else "key"
+    spark.read.schema(s"file STRING, $second BIGINT").parquet(paths: _*)
+  }
+
+  /** The base names of the data files that `refs`' sidecars hold rows
+    * for: the union of their recorded scopes, plus one distinct pass
+    * over the file column of any sidecar whose `delete:` line records
+    * none (written before scopes were recorded).
+    */
+  private def deleteScopeOf(spark: org.apache.spark.sql.SparkSession,
+      refs: Seq[String]): Set[String] = {
+    val (scoped, legacy) = refs.partition(deleteRefScope(_).isDefined)
+    val recorded = scoped.flatMap(deleteRefScope(_).get).toSet
+    if (legacy.isEmpty) recorded
+    else recorded ++ legacy.map(deleteRefPath).groupBy(isPosSidecar).values
+      .map(ps => readSidecars(spark, ps).select(col("file")))
+      .reduce(_ union _).distinct().collect().map(_.getString(0))
+  }
+
   /** MOR-aware read of the SUBSET of a version's files passing `keep` —
     * the shared engine under [[readSnapshot]]'s partition pruning and
     * [[snapshotPointLookup]]'s bloom candidates: delete sidecars still
@@ -2592,7 +2719,8 @@ object Layout {
       else empty.withColumn("__graft_file", lit(null).cast("string"))
         .withColumn("__graft_pos", lit(null).cast("long"))
     }
-    val dels = manifestDeleteFiles(spark, root, v)
+    val refs = manifestDeleteRefs(spark, root, v)
+    val dels = refs.map(deleteRefPath)
     // SCHEMA EVOLUTION: a version's schema is the union of its files'
     // schemas (appends may ADD columns; rows from pre-evolution files
     // read the new columns as null). The header records that union, so
@@ -2624,26 +2752,18 @@ object Layout {
     if (dels.isEmpty)
       return align(if (lineage) withMeta(read(kept)) else read(kept))
     val (posDels, eqDels) = dels.partition(isPosSidecar)
-    // sidecar schemas are fixed by their writers — (file, key) with the
-    // key cast to long, (file, pos) with the scan's long row index — so
-    // their reads skip footer inference too
-    def sidecar(paths: Seq[String], second: String) =
-      spark.read.schema(s"file STRING, $second BIGINT").parquet(paths: _*)
     val eqSide = if (eqDels.isEmpty) None else Some(
-      sidecar(eqDels, "key")
+      readSidecars(spark, eqDels)
         .select(col("file").as("__graft_del_file"),
           col("key").as("__graft_del_key")))
     val posSide = if (posDels.isEmpty) None else Some(
-      sidecar(posDels, "pos")
+      readSidecars(spark, posDels)
         .select(col("file").as("__graft_pdel_file"),
           col("pos").as("__graft_pdel_pos")))
-    // dirty-file resolution is manifest-grade planning metadata (same
-    // price class as a footer read): O(touched files) names, both
-    // sidecar kinds in one pass
-    val dirty: Set[String] =
-      (eqSide.map(_.select(col("__graft_del_file"))) ++
-        posSide.map(_.select(col("__graft_pdel_file"))))
-        .reduce(_ union _).distinct().collect().map(_.getString(0)).toSet
+    // dirty-file resolution reads the scopes the deletes recorded on
+    // their `delete:` lines — no job; only sidecars without a recorded
+    // scope pay a distinct pass over their file names
+    val dirty = deleteScopeOf(spark, refs)
     // scope match on the file's BASE NAME: parquet part files carry a
     // per-job UUID, and URI normalization (file:/ vs file:///) must not
     // defeat the join — _metadata.file_name is already the base name
@@ -2760,17 +2880,24 @@ object Layout {
         overlapping(mn, mx).map(k => (baseName(f), k))
     }
     import spark.implicits._
-    commitEqualityDelete(spark, root, base, keyCol,
-      scoped.toDF("file", "key"), scoped.isEmpty)
+    commitEqualityDelete(spark, root, base, keyCol, { dir =>
+      if (scoped.nonEmpty)
+        scoped.toDF("file", "key").coalesce(1).write.mode("error").parquet(dir)
+      scoped.map(_._1).toSet
+    })
   }
 
   /** [[snapshotDeleteMOR]] with the deletion keys AS A DATAFRAME —
-    * removes the driver-side O(requests) ceiling: scoping is the same
-    * broadcast range join the COW changelog path uses
-    * ([[touchedFilesFor]]'s shape), producing the (file, key) sidecar
-    * rows DISTRIBUTED; only the O(files) range table ever touches the
-    * driver. Same commit shape, same soundness (a key overlapping no
-    * file range owns no row), same audit-trail empty commit.
+    * removes the driver-side O(requests) ceiling: scoping is a MAP-SIDE
+    * probe of the manifest key ranges ([[RangeProbe]], the same probe as
+    * [[touchedFilesFor]]), producing the (file, key) sidecar rows
+    * DISTRIBUTED; only the O(files) range table ever touches the driver.
+    * The sidecar write is the one job: it also gathers the scoped file
+    * names, which both tell whether anything was scoped and become the
+    * sidecar's recorded scope. Duplicate request keys are not removed —
+    * a duplicated (file, key) row is harmless to the reader's anti-join.
+    * Same commit shape, same soundness (a key overlapping no file range
+    * owns no row), same audit-trail empty commit.
     */
   def snapshotDeleteMORKeys(spark: org.apache.spark.sql.SparkSession,
       root: String, keyCol: String, keys: DataFrame): Int = {
@@ -2782,39 +2909,55 @@ object Layout {
       s"table already carries deletes on '$k'; mixed delete keys need a compaction first"))
     val entries = manifestEntries(spark, root, base)
     import spark.implicits._
-    val rdf = keyRangesOfEntries(spark, entries, keyCol)
+    val ranges = keyRangesOfEntries(spark, entries, keyCol)
       .map { case (f, mn, mx) => (baseName(f), mn, mx) }
-      .toDF("file", "__graft_mn", "__graft_mx")
+    val bc = spark.sparkContext.broadcast(new RangeProbe(ranges))
+    val scope = new NameSetAccumulator
+    spark.sparkContext.register(scope)
     val kc = keys.columns.head
-    val scoped = keys.select(col(kc).cast("long").as("key")).distinct()
-      .join(broadcast(rdf),
-        col("key") >= col("__graft_mn") && col("key") <= col("__graft_mx"))
-      .select(col("file"), col("key"))
-    commitEqualityDelete(spark, root, base, keyCol, scoped, scoped.isEmpty)
+    val scoped = keys.select(col(kc).cast("long").as("key"))
+      .where(col("key").isNotNull).as[Long]
+      .flatMap { k =>
+        val p = bc.value
+        p.holding(k).map { i => scope.add(p.names(i)); (p.names(i), k) }
+      }.toDF("file", "key")
+    import scala.jdk.CollectionConverters._
+    val v = commitEqualityDelete(spark, root, base, keyCol, { dir =>
+      scoped.coalesce(1).write.mode("error").parquet(dir)
+      scope.value.asScala.toSet
+    })
+    bc.destroy()
+    v
   }
 
   /** The commit both equality-delete forms end in: version `base + 1`
-    * carries `base`'s state and adds the (file, key) `scoped` rows as one
-    * sidecar. An `empty` scope (no key overlaps any file: nothing to
-    * delete) still commits, so the caller gets one version per request
-    * batch (audit trail).
+    * carries `base`'s state and adds one (file, key) sidecar, which
+    * `write` writes into the directory it is given, returning the base
+    * names of the files it scoped. Its `delete:` line records them
+    * ([[manifestDeleteRefs]]), so readers split clean files from dirty
+    * ones without a job. An empty scope (no key overlaps any file:
+    * nothing to delete) still commits, so the caller gets one version
+    * per request batch (audit trail) — with no `delete:` line, and no
+    * sidecar directory left behind.
     */
   private def commitEqualityDelete(spark: org.apache.spark.sql.SparkSession,
-      root: String, base: Int, keyCol: String, scoped: DataFrame,
-      empty: Boolean): Int = {
+      root: String, base: Int, keyCol: String,
+      write: String => Set[String]): Int = {
     val v = base + 1
     val carried = carriedStateOf(spark, root, Some(base))
     val hdrOut = carried.props ++ schemaHeaderOf(carried.schema)
-    if (empty) {
+    val delDir = attemptDir(root, "deletes", v)
+    val names = write(delDir)
+    if (names.isEmpty) {
+      fsOf(spark, delDir).delete(new org.apache.hadoop.fs.Path(delDir), true)
       commitManifest(spark, root, v, carried.segs, carried.inline,
         header = hdrOut, deletes = carried.deletes)
       return v
     }
-    val delDir = attemptDir(root, "deletes", v)
-    scoped.coalesce(1).write.mode("error").parquet(delDir)
     commitManifest(spark, root, v, carried.segs, carried.inline,
       header = hdrOut + ("deleteKey" -> keyCol),
-      deletes = carried.deletes ++ listDataFiles(spark, delDir))
+      deletes = carried.deletes ++
+        listDataFiles(spark, delDir).map(deleteRef(_, names)))
     v
   }
 
@@ -3337,14 +3480,15 @@ object Layout {
     // re-retract. Mixed new-kind commits (eq + pos in one span) fall
     // back (no committer writes both kinds in one commit today).
     val newDels = (toDel -- fromDel).toSeq
+    // the new sidecars' scopes, as their `delete:` lines record them
+    lazy val newScope = deleteScopeOf(spark, manifestDeleteRefs(spark, root,
+      toVersion).filterNot(r => fromDel(deleteRefPath(r))))
     if (newDels.forall(isPosSidecar)) {
       val hdrFrom = manifestHeader(spark, root, fromVersion)
       val newSide = spark.read.parquet(newDels: _*)
         .select(col("file").as("__graft_nf"), col("pos").as("__graft_np"))
-      val scopedNames = newSide.select("__graft_nf").distinct()
-        .collect().map(_.getString(0)).toSet
       val retracted = readSnapshotSubset(spark, root, fromVersion, hdrFrom,
-        e => scopedNames.contains(baseName(e.path)), lineage = true)
+        e => newScope.contains(baseName(e.path)), lineage = true)
         .join(newSide,
           col("__graft_file") === col("__graft_nf") &&
             col("__graft_pos") === col("__graft_np"), "left_semi")
@@ -3361,9 +3505,7 @@ object Layout {
       return None)
     val newSide = spark.read.parquet((toDel -- fromDel).toSeq: _*)
       .select(col("file").as("__graft_nf"), col("key").as("__graft_nk"))
-    val scopedNames = newSide.select("__graft_nf").distinct()
-      .collect().map(_.getString(0)).toSet
-    val scoped = toFilesSeq.filter(f => scopedNames.contains(baseName(f)))
+    val scoped = toFilesSeq.filter(f => newScope.contains(baseName(f)))
     if (scoped.isEmpty)
       return Some(readSnapshot(spark, root, toVersion).where(lit(false)))
     val rows = spark.read.option("mergeSchema", "true").parquet(scoped: _*)
@@ -3420,21 +3562,33 @@ object Layout {
     *    NOTHING, while equal-population bins keep every file on a narrow
     *    slice. Quantile mode caps at 10 bits (O(2^bits) comparisons per
     *    row).
-    * Sizing reads the real file lengths, so compression-ratio drift
-    * cancels out. Returns the committed version.
+    * Sizing (the clusterBy and zOrderBy modes) reads the real file
+    * lengths, so compression-ratio drift cancels out. Returns the
+    * committed version.
     */
   def snapshotCompact(spark: org.apache.spark.sql.SparkSession, root: String,
       targetBytes: Long, clusterBy: Seq[Column] = Nil,
       zOrderBy: Seq[Column] = Nil, zBits: Int = 16,
-      zQuantile: Boolean = false): Int = {
+      zQuantile: Boolean = false): Int =
+    compactWithLengths(spark, root, targetBytes, clusterBy, zOrderBy, zBits,
+      zQuantile, Map.empty)
+
+  /** [[snapshotCompact]] given the file lengths its caller already
+    * stat-ed (path → bytes); files missing from `lengths` are stat-ed
+    * here, and only when a mode sizes its output.
+    */
+  private def compactWithLengths(spark: org.apache.spark.sql.SparkSession,
+      root: String, targetBytes: Long, clusterBy: Seq[Column],
+      zOrderBy: Seq[Column], zBits: Int, zQuantile: Boolean,
+      lengths: Map[String, Long]): Int = {
     require(clusterBy.isEmpty || zOrderBy.isEmpty,
       "clusterBy (lexicographic) and zOrderBy (interleaved) are exclusive")
     val vs = snapshotVersions(spark, root)
     require(vs.nonEmpty, s"no snapshots at $root")
     val base = vs.last
-    val bytes = manifestFiles(spark, root, base)
-      .map(f => fsOf(spark, root)
-        .getFileStatus(new org.apache.hadoop.fs.Path(f)).getLen).sum
+    lazy val bytes = manifestFiles(spark, root, base)
+      .map(f => lengths.getOrElse(f, fsOf(spark, root)
+        .getFileStatus(new org.apache.hadoop.fs.Path(f)).getLen)).sum
     val packed =
       if (zOrderBy.nonEmpty) {
         // Z-ORDER mode (Delta's OPTIMIZE ZORDER BY): interleave the
@@ -3856,7 +4010,7 @@ object Layout {
     * replacement (matched updates + unmatched-changelog inserts).
     *
     * The changelog keys stay a DATAFRAME: the touched-file set comes
-    * from [[touchedFilesFor]]'s broadcast range join against the per-file
+    * from [[touchedFilesFor]]'s one map-side probe of the per-file
     * ranges ([[snapshotKeyRanges]]: manifest stats, footer fallback for
     * stat-less entries); only O(files) paths ever reach the driver.
     *
@@ -4159,7 +4313,7 @@ object Layout {
     commitManifest(spark, dstRoot, 1, Nil, manifestEntries(spark, srcRoot, v),
       header = carriedProps(manifestHeader(spark, srcRoot, v)) ++
         schemaHeaderOf(manifestSchema(spark, srcRoot, v)),
-      deletes = manifestDeleteFiles(spark, srcRoot, v))
+      deletes = manifestDeleteRefs(spark, srcRoot, v))
     1
   }
 
@@ -4391,7 +4545,7 @@ object Layout {
           manifestSegRefs(spark, bRoot, bHead), rebaseAdds,
           header = carriedProps(manifestHeader(spark, bRoot, bHead)) ++
             schemaHeaderOf(manifestSchema(spark, bRoot, bHead)),
-          deletes = manifestDeleteFiles(spark, bRoot, bHead))
+          deletes = manifestDeleteRefs(spark, bRoot, bHead))
         bHead + 1
       }
     commitManifest(spark, root, mainHead + 1, Nil,
@@ -4399,7 +4553,7 @@ object Layout {
       header = carriedProps(manifestHeader(spark, bRoot, pubHead)) ++
         schemaHeaderOf(manifestSchema(spark, bRoot, pubHead)) ++
         Map("publishRef" -> name, "publishSrc" -> pubHead.toString),
-      deletes = manifestDeleteFiles(spark, bRoot, pubHead))
+      deletes = manifestDeleteRefs(spark, bRoot, pubHead))
     writeRef(spark, root, SnapshotRef(name, "branch", mainHead + 1),
       overwrite = true)
     mainHead + 1
@@ -4746,10 +4900,11 @@ object Layout {
 
   /** Thresholds the standing maintenance job measures the table head
     * against — the policy every table format ships as OPTIMIZE/VACUUM
-    * scheduling knobs, decided here from MANIFEST METADATA only (file
-    * counts, sidecar counts, commit stamps): the decision itself costs
-    * zero data I/O, which is what lets one maintenance driver poll
-    * thousands of tables.
+    * scheduling knobs, decided from the manifest (file lists, sidecar
+    * counts, commit stamps) plus one file-system length stat per live
+    * file, taken once per cycle and reused by the compaction's sizing:
+    * the decision starts no Spark job and reads no data, which is what
+    * lets one maintenance driver poll thousands of tables.
     *
     *  - `maxDeleteFiles`: MOR sidecar debt — every sidecar is a
     *    broadcast anti-join every reader pays; past this count the debt
@@ -4790,8 +4945,8 @@ object Layout {
     * on its cadence (Delta's auto-optimize + vacuum slot, Iceberg's
     * maintenance actions): measure the head's debt against the policy,
     * compact if past threshold, expire aged history, sweep orphans.
-    * Decisions are manifest-metadata-priced; only a triggered compaction
-    * touches data, and it commits as a NEW version via
+    * Decisions read the manifest and one length stat per live file
+    * ([[MaintenancePolicy]]); only a triggered compaction touches data, and it commits as a NEW version via
     * [[snapshotCompact]]'s optimistic-concurrency path — a concurrent
     * writer's commit makes the compaction fail LOUDLY (caller's next
     * cycle retries against the new head) rather than erase it.
@@ -4815,16 +4970,17 @@ object Layout {
     val head = vs.last
     val fs = fsOf(spark, root)
     val nDel = manifestDeleteFiles(spark, root, head).size
-    val nSmall = manifestFiles(spark, root, head).count { f =>
-      fs.getFileStatus(new org.apache.hadoop.fs.Path(f))
-        .getLen < policy.smallCutoff
-    }
+    // one length stat per live file per cycle: the small-file count here
+    // and the compaction's sizing below
+    val lengths = manifestFiles(spark, root, head).map(f =>
+      f -> fs.getFileStatus(new org.apache.hadoop.fs.Path(f)).getLen).toMap
+    val nSmall = lengths.values.count(_ < policy.smallCutoff)
     // compaction folds BOTH debts at once (sidecars anti-join during the
     // read, bin-packing during the write) — one rewrite, never two
     val compacted =
       if (nDel >= policy.maxDeleteFiles || nSmall >= policy.maxSmallFiles)
-        Some(snapshotCompact(spark, root, policy.targetFileBytes,
-          policy.clusterBy, policy.zOrderBy, zQuantile = policy.zQuantile))
+        Some(compactWithLengths(spark, root, policy.targetFileBytes,
+          policy.clusterBy, policy.zOrderBy, 16, policy.zQuantile, lengths))
       else None
     val vac = vacuumSnapshotsOlderThan(spark, root,
       nowMillis - policy.retentionMillis, policy.minKeepVersions)

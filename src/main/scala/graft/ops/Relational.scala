@@ -2206,7 +2206,7 @@ object Relational {
         dec(col("o_totalprice")).as("c_price"), lit("N").as("c_status"))
     val changes = updates.unionAll(inserts)
     // the changelog stays a DATAFRAME end to end: the touched-file set
-    // comes from a broadcast range join against the per-file ranges — no
+    // comes from a map-side probe of the per-file ranges — no
     // O(changelog) driver collect. ALL changelog keys probe the ranges —
     // an insert key overlaps no file, so it prunes nothing extra, and
     // soundness never rests on knowing in advance which keys are inserts
@@ -2272,7 +2272,7 @@ object Relational {
       .select(col("o_orderkey").as("d_key"))
       .pin() // probes the file ranges AND feeds the anti-join
     // DataFrame changelog end to end: the request set never collects —
-    // touched files resolve via the broadcast range join
+    // touched files resolve via the map-side range probe
     Layout.snapshotMergeKeys(spark, run, "key", requests,
       touched => touched
         .join(broadcast(requests), col("key") === col("d_key"), "left_anti"))
@@ -2470,7 +2470,7 @@ object Relational {
             col("totalprice").as("c_price"), lit("N").as("c_status")))
         .pin() // the touched-file probe + rewrite both read it
       // DataFrame changelog interface: touched files resolve via the
-      // manifest-stats range join; no key array ever materializes
+      // manifest-stats range probe; no key array ever materializes
       Layout.snapshotMergeKeys(spark, root, "key",
         changes.select(col("c_key")),
         touched => touched

@@ -10,8 +10,9 @@ package graft
   * The round's convergence sum and BFS's frontier count ride each pin's
   * own job through `Dataset.observe`; when the observation never arrives
   * ([[graft.functions.observedOrNone]] times out and sets the JVM-wide
-  * `obsBroken` memo) both fall back to a second job over the pinned rows.
-  * The last test forces that fallback and checks it answers the same.
+  * `obsBroken` memo) both fall back to a second job over the pinned rows,
+  * and `observedFallbacks` counts each such call. The last test forces
+  * that fallback, checks it answers the same and that it was counted.
   */
 class CcSelfLoopSpec extends GraftSuite {
 
@@ -50,7 +51,18 @@ class CcSelfLoopSpec extends GraftSuite {
   test("observation timeout: the fallback jobs answer as the fused CC and BFS paths") {
     def bfs() = ops.Graph.q76BfsHops(spark, sf).collect().toSeq
     val (fusedCc, fusedBfs) = withObsBroken(false)((run(fixture), bfs()))
-    val (fallbackCc, fallbackBfs) = withObsBroken(true)((run(fixture), bfs()))
+    // every CC round and BFS hop that ran its fallback job counts it:
+    // the chain takes at least four rounds to label 14 with 10, and BFS
+    // at least one hop
+    def counted[A](body: => A): (A, Long) = {
+      val before = functions.observedFallbacks.get()
+      val out = withObsBroken(true)(body)
+      (out, functions.observedFallbacks.get() - before)
+    }
+    val (fallbackCc, ccFallbacks) = counted(run(fixture))
+    val (fallbackBfs, bfsFallbacks) = counted(bfs())
+    assert(ccFallbacks >= 4, s"CC fallbacks counted: $ccFallbacks")
+    assert(bfsFallbacks >= 1, s"BFS fallbacks counted: $bfsFallbacks")
     assert(fusedCc == expected)
     assert(fallbackCc == expected)
     assert(fusedBfs.nonEmpty)

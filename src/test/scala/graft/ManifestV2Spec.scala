@@ -983,33 +983,6 @@ class ManifestV2Spec extends GraftSuite {
   // ---- JOB-COUNT REGRESSIONS: reads, lookups and maintenance answer
   // what the manifest already records without Spark jobs of their own
 
-  /** `body`'s result and the call sites of the Spark jobs it started,
-    * counted by a listener on a private job group (jobs of anything else
-    * running in the JVM never carry it).
-    */
-  private def jobsOf[T](body: => T): (T, Seq[String]) = {
-    val sc = spark.sparkContext
-    val group = s"jobcount-${java.util.UUID.randomUUID()}"
-    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (j.properties != null &&
-            j.properties.getProperty("spark.jobGroup.id") == group)
-          sites.add(j.stageInfos.lastOption.map(_.name).getOrElse("?"))
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "job-count spec")
-    try {
-      val out = body
-      org.apache.spark.GraftListenerBridge.waitUntilListenerBusEmpty(sc)
-      (out, sites.toArray.toSeq.map(_.toString))
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
-
   /** A key-clustered table with stats on `k`, a bloom index on `k` at the
     * convention root, and two appended batches: versions 1, 3 and 4 hold
     * 12 000, 12 150 and 12 300 rows (version 2 declares the index).
@@ -1063,13 +1036,54 @@ class ManifestV2Spec extends GraftSuite {
       Layout.MaintenancePolicy(maxDeleteFiles = 1, maxSmallFiles = 12)))
     assert(report.compactedVersion.isDefined && report.indexedCols == Seq("k"),
       s"the cycle must compact and advance the index: $report")
-    // 8 jobs here; the bound catches a return of per-read footer
-    // inference or a second pass over the index (20 jobs with both)
-    assert(jobs.size <= 10, s"maintenance ran ${jobs.size} jobs: $jobs")
+    // 4 jobs here, all compaction and index-rebuild work: the dirty-file
+    // split reads the delete's recorded scope and the index inventory
+    // its recorded base head, so neither pays a job (8 jobs before both
+    // were recorded, 20 with per-read footer inference on top)
+    assert(jobs.size <= 4, s"maintenance ran ${jobs.size} jobs: $jobs")
     // the refilled index still serves exact lookups
     val lk = Layout.snapshotPointLookup(spark, root,
       Layout.bloomSnapIdxRoot(root, "k"), "k", Seq(5L, 6L, 12100L, 12200L))
     assert(lk.result.select(col("k")).as[Long].collect().sorted.toSeq ==
       Seq(5L, 12100L))
+  }
+
+  test("snapshotMergeKeys picks touched files in one map-side job: at most 4 jobs") {
+    import spark.implicits._
+    val root = indexedTable("jobs-merge")
+    val upd = Seq(5L, 3001L, 12100L)
+    val ins = Seq(20000L, 20001L)
+    val changes = spark.createDataFrame(spark.sparkContext.parallelize(
+      (upd ++ ins).map(k => (k, 99.0)), 1)).toDF("c_k", "c_qty")
+    val (v, jobs) = jobsOf(Layout.snapshotMergeKeys(spark, root, "k",
+      changes.select(col("c_k")), touched =>
+        touched.join(changes, col("k") === col("c_k"), "full_outer").select(
+          coalesce(col("k"), col("c_k")).as("k"),
+          coalesce(col("okey"), floor(col("c_k") / 8)).cast("long").as("okey"),
+          coalesce(col("part"), lit(0L)).as("part"),
+          coalesce(col("c_qty"), col("qty")).as("qty"),
+          coalesce(col("price"), lit(0.0)).as("price"),
+          coalesce(col("flag"), lit("U")).as("flag"))))
+    // one touched-file probe, then the rewrite (its join's map stages and
+    // the write); the parent took 6
+    assert(jobs.size <= 4, s"merge ran ${jobs.size} jobs: $jobs")
+    val after = Layout.readSnapshot(spark, root, v)
+    assert(after.count() == 12302)
+    assert(after.where(col("qty") === 99.0).select(col("k")).as[Long]
+      .collect().sorted.toSeq == upd ++ ins)
+  }
+
+  test("snapshotDeleteMORKeys writes its sidecar in one job: at most 2 jobs") {
+    import spark.implicits._
+    val root = indexedTable("jobs-delete")
+    // a duplicated key and a key outside every file range ride along
+    val keys = spark.createDataFrame(spark.sparkContext.parallelize(
+      Seq(6L, 6L, 12200L, 90000000L).map(Tuple1(_)), 1)).toDF("k")
+    val (v, jobs) = jobsOf(Layout.snapshotDeleteMORKeys(spark, root, "k", keys))
+    assert(jobs.size <= 2, s"delete ran ${jobs.size} jobs: $jobs")
+    val (after, readJobs) = jobsOf(Layout.readSnapshot(spark, root, v))
+    assert(readJobs.isEmpty, s"the dirty-file split started jobs: $readJobs")
+    assert(after.count() == 12298)
+    assert(after.where(col("k").isin(6L, 12200L)).count() == 0)
   }
 }
