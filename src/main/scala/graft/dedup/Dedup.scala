@@ -1988,12 +1988,11 @@ object Dedup {
       .groupBy(md5(col("text").cast("binary")).as("text_hash"))
       .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_copies"))
     val newState =
-      if (!(processed > 0 &&
-          Layout.snapshotAppendLineage(spark, baseRoot, processed, head))) {
+      if (!Layout.snapshotAppendLineage(spark, baseRoot, processed, head)) {
         rollup(Layout.readSnapshot(spark, baseRoot, head))
       } else {
-        val delta = rollup(
-          Layout.snapshotDeltasUnion(spark, baseRoot, processed, head))
+        val delta = rollup(Layout.changeInserts(
+          Layout.snapshotChangesUnion(spark, baseRoot, processed, head)))
         Layout.readSnapshot(spark, viewRoot)
           .select(col("text_hash"), col("keep_id").as("old_keep"),
             col("n_copies").as("old_n"))

@@ -3005,12 +3005,15 @@ object Layout {
     val base = vs.last
     val hdr = manifestHeader(spark, root, base)
     // pin = the single evaluation of the predicate scan; every later
-    // action (count, write) reads the materialized blocks
+    // action (per-file count, write) reads the materialized blocks
     val matched = Pin(readSnapshotSubset(spark, root, base, hdr, _ => true,
       lineage = true)
       .filter(predicate)
       .select(col("__graft_file").as("file"), col("__graft_pos").as("pos")))
-    val nMatched = matched.count()
+    // counting per file costs the job a plain count would and yields the
+    // sidecar's scope, so readers split dirty files with no job
+    val perFile = matched.groupBy(col("file")).count().collect()
+    val nMatched = perFile.map(_.getLong(1)).sum
     val v = base + 1
     val carried = carriedStateOf(spark, root, Some(base))
     val hdrOut = carried.props ++ schemaHeaderOf(carried.schema)
@@ -3032,8 +3035,10 @@ object Layout {
       else matched.repartitionByRange(nShards.toInt, col("file"), col("pos"))
     out.sortWithinPartitions(col("file"), col("pos"))
       .write.mode("error").parquet(delDir)
+    val scope = perFile.map(_.getString(0)).toSet
     commitManifest(spark, root, v, carried.segs, carried.inline,
-      header = hdrOut, deletes = carried.deletes ++ listDataFiles(spark, delDir))
+      header = hdrOut, deletes = carried.deletes ++
+        listDataFiles(spark, delDir).map(deleteRef(_, scope)))
     v
   }
 
@@ -3278,91 +3283,86 @@ object Layout {
       .start()
   }
 
-  /** CHANGE DATA FEED between two snapshot versions — what an incremental
-    * consumer reads instead of the whole table: for APPEND lineage (v1's
-    * file set ⊆ v2's — the common case; every file is immutable once
-    * referenced, so set inclusion is exact evidence the old rows are
-    * untouched) the delta is read from ONLY the files v2 added — zero
-    * bytes of v1 are scanned, the metadata-priced diff a table format's
-    * CDF sells. Across an OVERWRITE (compaction/COW rewrote files) the
-    * file diff no longer equals the row diff, so the reader falls back to
-    * the row-level `exceptAll` — correct for any lineage, priced at two
-    * scans. The returned rows are exactly "in v2, not in v1" (multiset
-    * semantics on the fallback path).
-    */
-  def snapshotDiff(spark: org.apache.spark.sql.SparkSession, root: String,
-      fromVersion: Int, toVersion: Int): DataFrame = {
-    require(fromVersion < toVersion, s"diff needs from < to")
-    val from = manifestFiles(spark, root, fromVersion)
-    val to = manifestFiles(spark, root, toVersion)
-    // a MOR delete changes no data file, only sidecars — the file-set
-    // test alone would call it "append lineage, zero added files" and
-    // report an empty (wrong) delta; sidecar inequality forces the
-    // row-level path (readSnapshot applies the deletes on both sides)
-    val delsEqual = manifestDeleteFiles(spark, root, fromVersion).toSet ==
-      manifestDeleteFiles(spark, root, toVersion).toSet
-    if (delsEqual && from.forall(to.toSet)) {
-      val added = to.filterNot(from.toSet)
-      val raw =
-        if (added.isEmpty)
-          spark.read.parquet(to: _*).where(org.apache.spark.sql.functions.lit(false))
-        else spark.read.option("mergeSchema", "true").parquet(added: _*)
-      // the fast path reads raw files (PHYSICAL names, file-local
-      // schema); align to the TO version's recorded LOGICAL schema like
-      // every other read — without this a delta crossing a RENAME (or an
-      // ADD COLUMN the batch didn't populate) surfaces the physical name
-      // and a downstream unionByName silently null-fills the "missing"
-      // logical column
-      manifestSchema(spark, root, toVersion) match {
-        case Some(sc) =>
-          toLogicalFrame(raw, manifestHeader(spark, root, toVersion), sc)
-        case None => raw
-      }
-    } else
-      readSnapshot(spark, root, toVersion)
-        .exceptAll(readSnapshot(spark, root, fromVersion))
-  }
-
-  /** OP-TYPED CHANGE FEED — the `_change_type` surface (Delta CDF's
-    * shape) on top of the version diff: every row the `from → to`
-    * transition ADDED tagged `insert`, every row it REMOVED tagged
-    * `delete` — and, across a COW rewrite whose commit stamped a
+  /** OP-TYPED CHANGE FEED — the one per-transition diff of the table
+    * layer, in Delta CDF's `_change_type` shape: every row the
+    * `from → to` transition ADDED tagged `insert`, every row it REMOVED
+    * tagged `delete` — and, across a COW rewrite whose commit stamped a
     * `cdcKey` header (every [[snapshotMergeKeys]] does), a key-matched
     * changed row surfaces as the `update_preimage`/`update_postimage`
     * PAIR instead, exactly Delta CDF's typing. Multiset-exact either
     * way: {insert, update_postimage} minus {delete, update_preimage}
     * IS the version diff — replaying consumers must treat the two
-    * addition types (and the two retraction types) together.
-    * APPEND lineage (file-set inclusion + unchanged sidecars)
-    * short-circuits the delete side to empty with ZERO extra scans —
-    * the common case stays metadata-priced; MOR-delete lineage prices
-    * at O(scoped files); a cdcKey COW rewrite prices at O(rewritten +
-    * added files) via [[cowTypedChanges]]; only untyped overwrite
-    * lineage (compaction, INSERT OVERWRITE) pays the two-scan
-    * row-level diff, correct for every history.
+    * addition types (and the two retraction types) together; the
+    * untyped delta is the addition side ([[changeInserts]]).
+    *
+    * Priced by lineage:
+    *  - APPEND (every `from` file still referenced, sidecars unchanged —
+    *    files are immutable once referenced, so set inclusion is exact
+    *    evidence the old rows are untouched): inserts only, read from
+    *    ONLY the files `to` added — zero bytes of `from` scanned;
+    *  - MOR delete: deletes only, O(scoped files) ([[morOnlyDeletes]]);
+    *  - cdcKey COW rewrite: O(rewritten + added files)
+    *    ([[cowTypedChanges]]);
+    *  - anything else (compaction, INSERT OVERWRITE): the two-scan
+    *    row-level diff, correct for every history.
+    * `from` 0 means "since before the table existed": all of `to` is
+    * inserts.
     */
   def snapshotChanges(spark: org.apache.spark.sql.SparkSession, root: String,
       fromVersion: Int, toVersion: Int): DataFrame = {
     require(fromVersion < toVersion, s"changes need from < to")
-    import org.apache.spark.sql.functions.lit
-    // from 0 = "since before the table existed": everything is an insert
-    val ins = (if (fromVersion == 0) readSnapshot(spark, root, toVersion)
-               else snapshotDiff(spark, root, fromVersion, toVersion))
-      .withColumn("_change_type", lit("insert"))
-    val appendOnly = snapshotAppendLineage(spark, root, fromVersion, toVersion)
-    if (appendOnly || fromVersion == 0) ins
-    else morOnlyDeletes(spark, root, fromVersion, toVersion) match {
-      case Some(dels) =>
-        // MOR-ONLY lineage: zero inserts, and the retracted rows
-        // resolve from the NEW sidecar entries alone — O(scoped files)
-        dels.withColumn("_change_type", lit("delete"))
+    def typed(df: DataFrame, t: String) = df.withColumn("_change_type", lit(t))
+    if (fromVersion == 0)
+      typed(readSnapshot(spark, root, toVersion), "insert")
+    else if (snapshotAppendLineage(spark, root, fromVersion, toVersion)) {
+      val fromFiles = manifestFiles(spark, root, fromVersion).toSet
+      typed(readFilesLogical(spark, root, toVersion, e => !fromFiles(e.path))
+        .drop("__graft_file"), "insert")
+    } else morOnlyDeletes(spark, root, fromVersion, toVersion) match {
+      case Some(dels) => typed(dels, "delete")
       case None =>
-        cowTypedChanges(spark, root, fromVersion, toVersion).getOrElse(
-          ins.unionByName(
-            readSnapshot(spark, root, fromVersion)
-              .exceptAll(readSnapshot(spark, root, toVersion))
-              .withColumn("_change_type", lit("delete")),
-            allowMissingColumns = true))
+        cowTypedChanges(spark, root, fromVersion, toVersion).getOrElse {
+          def minus(a: Int, b: Int) =
+            readSnapshot(spark, root, a).exceptAll(readSnapshot(spark, root, b))
+          typed(minus(toVersion, fromVersion), "insert").unionByName(
+            typed(minus(fromVersion, toVersion), "delete"),
+            allowMissingColumns = true)
+        }
+    }
+  }
+
+  /** The INSERT SIDE of a change feed: its {insert, update_postimage}
+    * rows without `_change_type` — the untyped delta "rows in `to`, not
+    * in `from`", as a multiset `readSnapshot(to) exceptAll
+    * readSnapshot(from)` on every lineage. Each branch of
+    * [[snapshotChanges]] stamps its type as a literal, so the optimizer
+    * prunes the retraction branches before anything runs: an append's
+    * insert side reads only the added files, a MOR delete's reads none.
+    */
+  def changeInserts(changes: DataFrame): DataFrame = changes
+    .where(col("_change_type").isin("insert", "update_postimage"))
+    .drop("_change_type")
+
+  /** The files of version `v` that `keep` selects, read as `v`'s LOGICAL
+    * frame with no delete sidecar applied, plus each row's file base
+    * name in `__graft_file` — the one raw read under the change feed's
+    * fast paths (an append's added files, a COW rewrite's removed and
+    * added files, an equality delete's scoped files). Typed from the
+    * manifest like every snapshot read, so a feed crossing a RENAME
+    * speaks the logical names, never the physical ones files store.
+    */
+  private def readFilesLogical(spark: org.apache.spark.sql.SparkSession,
+      root: String, v: Int, keep: FileEntry => Boolean): DataFrame = {
+    val hdr = manifestHeader(spark, root, v)
+    val kept = manifestEntries(spark, root, v).filter(keep)
+    if (kept.isEmpty)
+      return readSnapshotSubset(spark, root, v, hdr, _ => false)
+        .withColumn("__graft_file", lit(null).cast("string"))
+    val raw = manifestRelation(spark, root, kept, hdr)._1
+      .withColumn("__graft_file", col("_metadata.file_name"))
+    manifestSchemaOf(hdr) match {
+      case Some(sc) => toLogicalFrame(raw, hdr, sc, Seq("__graft_file"))
+      case None => raw
     }
   }
 
@@ -3395,28 +3395,19 @@ object Layout {
     */
   private def cowTypedChanges(spark: org.apache.spark.sql.SparkSession,
       root: String, fromVersion: Int, toVersion: Int): Option[DataFrame] = {
-    import org.apache.spark.sql.functions._
     val key = manifestHeader(spark, root, toVersion).getOrElse("cdcKey",
       return None)
     if (manifestDeleteFiles(spark, root, fromVersion).nonEmpty ||
         manifestDeleteFiles(spark, root, toVersion).nonEmpty) return None
-    val fromFiles = manifestFiles(spark, root, fromVersion)
-    val toFiles = manifestFiles(spark, root, toVersion)
-    val removed = fromFiles.filterNot(toFiles.toSet)
-    val added = toFiles.filterNot(fromFiles.toSet)
+    val fromFiles = manifestFiles(spark, root, fromVersion).toSet
+    val toFiles = manifestFiles(spark, root, toVersion).toSet
+    val removed = fromFiles -- toFiles
+    val added = toFiles -- fromFiles
     if (removed.isEmpty || added.isEmpty) return None
-    // each side reads its own version's files ALIGNED to that version's
-    // recorded logical schema — same contract as snapshotDiff's fast path
-    def readScoped(version: Int, files: Seq[String]): DataFrame = {
-      val raw = spark.read.option("mergeSchema", "true").parquet(files: _*)
-      manifestSchema(spark, root, version) match {
-        case Some(sc) =>
-          toLogicalFrame(raw, manifestHeader(spark, root, version), sc)
-        case None => raw
-      }
-    }
-    val pre = readScoped(fromVersion, removed)
-    val post = readScoped(toVersion, added)
+    val pre = readFilesLogical(spark, root, fromVersion, e => removed(e.path))
+      .drop("__graft_file")
+    val post = readFilesLogical(spark, root, toVersion, e => added(e.path))
+      .drop("__graft_file")
     // schema divergence across the span must compare TYPES, not just
     // names: a type evolution with the same column names would make the
     // exceptAll below throw instead of degrading to the two-scan diff
@@ -3466,13 +3457,11 @@ object Layout {
     */
   private def morOnlyDeletes(spark: org.apache.spark.sql.SparkSession,
       root: String, fromVersion: Int, toVersion: Int): Option[DataFrame] = {
-    import org.apache.spark.sql.functions._
     val fromFiles = manifestFiles(spark, root, fromVersion).toSet
-    val toFilesSeq = manifestFiles(spark, root, toVersion)
     val fromDel = manifestDeleteFiles(spark, root, fromVersion).toSet
     val toDel = manifestDeleteFiles(spark, root, toVersion).toSet
-    if (fromFiles != toFilesSeq.toSet || !fromDel.subsetOf(toDel) ||
-        fromDel == toDel) return None
+    if (fromFiles != manifestFiles(spark, root, toVersion).toSet ||
+        !fromDel.subsetOf(toDel) || fromDel == toDel) return None
     // POSITION-sidecar growth has its own exact fast path: the retracted
     // multiset is `from`'s logical content AT the new ordinals — one
     // lineage read of only the scoped files, semi-joined on (file, pos).
@@ -3485,7 +3474,7 @@ object Layout {
       toVersion).filterNot(r => fromDel(deleteRefPath(r))))
     if (newDels.forall(isPosSidecar)) {
       val hdrFrom = manifestHeader(spark, root, fromVersion)
-      val newSide = spark.read.parquet(newDels: _*)
+      val newSide = readSidecars(spark, newDels)
         .select(col("file").as("__graft_nf"), col("pos").as("__graft_np"))
       val retracted = readSnapshotSubset(spark, root, fromVersion, hdrFrom,
         e => newScope.contains(baseName(e.path)), lineage = true)
@@ -3503,21 +3492,17 @@ object Layout {
     if (fromDel.exists(isPosSidecar)) return None
     val keyCol = manifestHeader(spark, root, toVersion).getOrElse("deleteKey",
       return None)
-    val newSide = spark.read.parquet((toDel -- fromDel).toSeq: _*)
+    val newSide = readSidecars(spark, newDels)
       .select(col("file").as("__graft_nf"), col("key").as("__graft_nk"))
-    val scoped = toFilesSeq.filter(f => newScope.contains(baseName(f)))
-    if (scoped.isEmpty)
-      return Some(readSnapshot(spark, root, toVersion).where(lit(false)))
-    val rows = spark.read.option("mergeSchema", "true").parquet(scoped: _*)
-      .withColumn("__graft_file",
-        element_at(split(input_file_name(), "/"), -1))
+    val rows = readFilesLogical(spark, root, toVersion,
+      e => newScope.contains(baseName(e.path)))
     val newlyDead = rows.join(broadcast(newSide),
         rows("__graft_file") === col("__graft_nf") &&
           rows(keyCol) === col("__graft_nk"), "left_semi")
     val out =
       if (fromDel.isEmpty) newlyDead
       else {
-        val oldSide = spark.read.parquet(fromDel.toSeq: _*)
+        val oldSide = readSidecars(spark, fromDel.toSeq)
           .select(col("file").as("__graft_of"), col("key").as("__graft_ok"))
         newlyDead.join(broadcast(oldSide),
           newlyDead("__graft_file") === col("__graft_of") &&
@@ -3684,83 +3669,45 @@ object Layout {
     -1 // unreachable
   }
 
-  /** Poll-based incremental consumer: every (version, delta) committed
-    * AFTER `sinceVersion`, oldest first — what a downstream job calls on
-    * its schedule to stay incremental ("give me everything since the
-    * version I last processed"). Each delta is [[snapshotDiff]] of
-    * consecutive versions, so append lineage is metadata-priced and
-    * overwrite lineage is row-exact.
+  /** THE VERSION WALK under every change-feed consumer: `(v, changes)`
+    * for each committed version `v` in `(since, head]`, oldest first,
+    * each the [[snapshotChanges]] from the previous committed version
+    * (`since` for the first; 0 = "from the beginning", so the first
+    * version arrives whole as inserts). Every transition is priced by
+    * its OWN lineage, so a span mixing appends and merges never
+    * collapses to the endpoint two-scan diff.
+    *
+    * CAPPED AT `head`, never "whatever is committed by now": a
+    * maintainer reads head, then the feed — a commit landing between
+    * the two reads would otherwise ride into this advance while the
+    * view is stamped with the OLDER head, and the next advance
+    * re-applies it (double-count). The CDF-stream spec (ST34)
+    * reproduces exactly that interleaving.
     */
-  def snapshotDeltasSince(spark: org.apache.spark.sql.SparkSession,
-      root: String, sinceVersion: Int): Seq[(Int, DataFrame)] = {
-    val vs = snapshotVersions(spark, root).filter(_ > sinceVersion)
-    var prev = sinceVersion
-    vs.map { v =>
-      // sinceVersion 0 = "from the beginning": the first delta is the
-      // whole first version (there is no v0 manifest to diff against)
-      val d = if (prev == 0) readSnapshot(spark, root, v)
-              else snapshotDiff(spark, root, prev, v)
-      prev = v
-      v -> d
-    }
+  private[graft] def snapshotChangesWalk(
+      spark: org.apache.spark.sql.SparkSession, root: String, since: Int,
+      head: Int): Seq[(Int, DataFrame)] = {
+    val vs = snapshotVersions(spark, root).filter(v => v > since && v <= head)
+    vs.zip(since +: vs).map { case (v, prev) =>
+      v -> snapshotChanges(spark, root, prev, v) }
   }
 
-  /** The union of every delta after `since`, as one frame — the input of
-    * every CDF-driven maintainer. `allowMissingColumns`: additive schema
-    * evolution can widen the base mid-gap, leaving consecutive deltas
-    * with different column sets; the maintainer must see the widened
-    * schema with nulls, exactly like [[readSnapshot]] does, not an
-    * AnalysisException. Empty when nothing advanced (schema'd off the
-    * head).
-    */
-  def snapshotDeltasUnion(spark: org.apache.spark.sql.SparkSession,
-      root: String, since: Int, head: Int): DataFrame = {
-    // CAP AT `head`, never "whatever is committed by now": a maintainer
-    // reads head, then the deltas — a commit landing between the two
-    // reads would otherwise ride into this advance while the view is
-    // stamped with the OLDER head, and the next advance re-applies it
-    // (double-count). The CDF-stream spec (ST34) reproduces exactly
-    // that interleaving.
-    val ds = snapshotDeltasSince(spark, root, since)
-      .filter(_._1 <= head).map(_._2)
-    if (ds.isEmpty)
-      readSnapshot(spark, root, head)
-        .where(org.apache.spark.sql.functions.lit(false))
-    else ds.reduce(_.unionByName(_, allowMissingColumns = true))
-  }
-
-  /** The OP-TYPED change feed over a multi-commit span, priced PER
-    * COMMIT — the Delta-CDF contract, and the walking twin of
-    * [[snapshotDeltasUnion]]: each consecutive pair contributes
-    * [[snapshotChanges]] under ITS OWN lineage (append → metadata-only
-    * insert delta; MOR delete → O(scoped files) retractions; cdcKey
-    * COW merge → typed update pairs from rewritten files), so a span
-    * mixing appends and merges never collapses to the endpoint
-    * two-full-scan diff the single-call form falls back to (the
-    * endpoints' header can't prove anything about the middle).
+  /** The op-typed change feed over `(since, head]` as one frame — the
+    * [[snapshotChangesWalk]] unioned, the input of every CDF-driven
+    * maintainer ([[changeInserts]] of it for the append-only ones).
     * Telescoping makes it exact: Σ (vᵢ₊₁ − vᵢ) as a signed multiset IS
-    * v_head − v_since, and every consumer already treats
-    * {insert, update_postimage} / {delete, update_preimage} as the two
-    * sets. A compaction pair still pays its row-diff (which proves
-    * empty — content-preserving), same price as the endpoint form.
-    * Same `head` cap discipline as [[snapshotDeltasUnion]].
+    * v_head − v_since. `allowMissingColumns`: additive schema evolution
+    * can widen the base mid-span, leaving consecutive transitions with
+    * different column sets; consumers see the widened schema with
+    * nulls, exactly like [[readSnapshot]] does. Empty when nothing
+    * advanced (schema'd off the head).
     */
   def snapshotChangesUnion(spark: org.apache.spark.sql.SparkSession,
-      root: String, since: Int, head: Int): DataFrame = {
-    import org.apache.spark.sql.functions.lit
-    val vs = snapshotVersions(spark, root)
-      .filter(v => v > since && v <= head)
-    if (vs.isEmpty)
-      return readSnapshot(spark, root, head).where(lit(false))
-        .withColumn("_change_type", lit("insert"))
-    var prev = since
-    val ds = vs.map { v =>
-      val d = snapshotChanges(spark, root, prev, v)
-      prev = v
-      d
-    }
-    ds.reduce(_.unionByName(_, allowMissingColumns = true))
-  }
+      root: String, since: Int, head: Int): DataFrame =
+    snapshotChangesWalk(spark, root, since, head).map(_._2)
+      .reduceOption(_.unionByName(_, allowMissingColumns = true))
+      .getOrElse(readSnapshot(spark, root, head).where(lit(false))
+        .withColumn("_change_type", lit("insert")))
 
   /** The base version a maintainer's view table currently reflects —
     * from the view head's `mvBase` commit header when present (an
@@ -3783,13 +3730,6 @@ object Layout {
         .head().getInt(0))
   }
 
-  /** Append-only lineage test between two versions: every `from` data
-    * file still referenced at `to` AND no delete-sidecar change (a MOR
-    * delete removes rows without touching data files). This is the
-    * precondition every merge-only incremental maintainer checks before
-    * trusting the CDF deltas ([[maintainSumView]], [[maintainJoinView]],
-    * the dedup registry).
-    */
   /** LOGICAL CONFLICT ANALYSIS for read-dependent committers: what did
     * the commits interleaved between `base` and `head` change? Returns
     * `Right(addedEntries)` when EVERY interleaved effect is a pure
@@ -3828,6 +3768,14 @@ object Layout {
     else Right(entriesH.filterNot(e => filesB(e.path)))
   }
 
+  /** Append-only lineage test between two versions: every `from` data
+    * file still referenced at `to` AND no delete-sidecar change (a MOR
+    * delete removes rows without touching data files). This is the
+    * precondition every merge-only incremental maintainer checks before
+    * trusting the insert side of the change feed ([[maintainSumView]],
+    * [[maintainJoinView]], the dedup registry, the ANN index), and the
+    * test that sends [[snapshotChanges]] down its added-files path.
+    */
   def snapshotAppendLineage(spark: org.apache.spark.sql.SparkSession,
       root: String, from: Int, to: Int): Boolean =
     from == to || (from > 0 &&
@@ -3837,137 +3785,95 @@ object Layout {
         manifestDeleteFiles(spark, root, to).toSet)
 
   /** INCREMENTAL MATERIALIZED VIEW over a versioned table — q80's
-    * mergeable-partial discipline driven by the CDF ([[snapshotDeltasSince]])
-    * instead of a hand-fed delta batch: maintain a per-group (sum, count)
-    * rollup of `valCol` grouped by `groupCol`, advancing from the last
-    * processed base version to the current head.
+    * mergeable-partial discipline driven by the change feed
+    * ([[snapshotChangesUnion]]) instead of a hand-fed delta batch:
+    * maintain a per-group (sum, count) rollup of `valCol` grouped by
+    * `groupCol`, advancing from the last processed base version to the
+    * current head.
     *
     * CRASH-ATOMIC BY CONSTRUCTION: the view is ITSELF a snapshot table,
     * and one maintenance run is ONE manifest commit whose rows carry the
     * base version they reflect (`base_version` column). A crash anywhere
     * before the commit leaves the previous view version intact; the next
-    * run re-reads the same old state + the same deltas (deterministic)
+    * run re-reads the same old state + the same feed (deterministic)
     * and publishes the same result — no double-apply window, no side
     * transaction log.
     *
-    * Lineage rule: the sum-merge is only valid over APPEND deltas
-    * (removals can't be subtracted from a lossy rollup), so when the base
-    * lineage since the last processed version is not append-only (an
-    * overwrite/compaction intervened) the maintainer falls back to a FULL
-    * recompute of the head — correct for any lineage, priced at one base
-    * scan. Returns the base version the view now reflects.
+    * Lineage rule: this maintainer merges only over APPEND lineage;
+    * when the base lineage since the last processed version is not
+    * append-only (an overwrite, compaction or MOR delete intervened) it
+    * recomputes the head in full — correct for any lineage, priced at
+    * one base scan, and bit-identical to a fresh rollup, which is what
+    * its callers compare against. [[maintainSumViewCdc]] merges on every
+    * lineage instead; its incrementally merged double sums drift from a
+    * recompute in the last bits, so the two stay separate entry points.
+    * Returns the base version the view now reflects.
     * 100 TB: the common path scans O(new bytes) + O(groups) state; the
     * view table is O(groups) rows per version and vacuums like any
     * snapshot table.
     */
   def maintainSumView(spark: org.apache.spark.sql.SparkSession,
       baseRoot: String, viewRoot: String,
-      groupCol: String, valCol: String): Int = {
-    import org.apache.spark.sql.functions._
-    val baseVs = snapshotVersions(spark, baseRoot)
-    require(baseVs.nonEmpty, s"no base snapshots at $baseRoot")
-    val head = baseVs.last
-    val processed = viewProcessedVersion(spark, viewRoot)
-    if (processed == head) return head
-    // layout: sum_v (NULL iff the group has no non-null values — SQL SUM
-    // semantics), n = COUNT(*), nn = COUNT(valCol). nn is the AVG
-    // denominator (AVG divides by the NON-NULL count, not the row count)
-    // and the guard that keeps sum_v NULL-preserving through merges.
-    def rollup(df: DataFrame): DataFrame = df
-      .groupBy(col(groupCol))
-      .agg(sum(col(valCol).cast("double")).as("sum_v"),
-        count(lit(1)).as("n"), count(col(valCol)).as("nn"))
-    // ONE view read serves the legacy check and the merge's old state
-    val viewDf =
-      if (processed > 0) Some(readSnapshot(spark, viewRoot)) else None
-    val appendLineage = processed > 0 &&
-      snapshotAppendLineage(spark, baseRoot, processed, head) &&
-      // LEGACY MIGRATION: a view committed before the nn column existed
-      // cannot merge incrementally (old.select("nn") would crash) — one
-      // full recompute migrates it to the current layout
-      viewDf.exists(_.columns.contains("nn"))
-    val newState =
-      if (!appendLineage) {
-        // overwrite in the lineage (or first run): one full head scan
-        rollup(readSnapshot(spark, baseRoot, head))
-      } else {
-        val deltaAgg = rollup(
-          snapshotDeltasUnion(spark, baseRoot, processed, head))
-        val old = viewDf.get
-          .select(col(groupCol), col("sum_v").as("old_sum"),
-            col("n").as("old_n"), col("nn").as("old_nn"))
-        // q80's combine: full-outer on the group key, coalesce-add the
-        // MERGEABLE partials (sum/count merge; an avg would be re-derived).
-        // sum_v stays NULL when the merged non-null count is 0 — an
-        // all-NULL group must answer SUM with NULL, never a coalesced 0.
-        val mergedNn = coalesce(col("old_nn"), lit(0L)) +
-          coalesce(col("nn"), lit(0L))
-        old.join(deltaAgg, Seq(groupCol), "full_outer")
-          .select(col(groupCol),
-            when(mergedNn === 0L, lit(null).cast("double"))
-              .otherwise(coalesce(col("old_sum"), lit(0.0)) +
-                coalesce(col("sum_v"), lit(0.0))).as("sum_v"),
-            (coalesce(col("old_n"), lit(0L)) +
-              coalesce(col("n"), lit(0L))).as("n"),
-            mergedNn.as("nn"))
-      }
-    snapshotOverwrite(spark, viewRoot,
-      newState.withColumn("base_version", lit(head)),
-      extraHeader = Map("mvBase" -> head.toString))
-    head
-  }
+      groupCol: String, valCol: String): Int =
+    maintainSum(spark, baseRoot, viewRoot, groupCol, valCol, retract = false)
 
-  /** [[maintainSumView]] WITH RETRACTIONS — the op-typed change feed
-    * ([[snapshotChanges]]) upgrades the non-append path: where the
-    * plain maintainer answers an MOR delete with a FULL head rescan,
-    * sum/count are SIGNED-mergeable, so this maintainer absorbs deletes
-    * as NEGATIVE partials — and the MOR fast path inside
-    * [[snapshotChanges]] prices the delete delta at O(scoped files).
-    * A deletion request against a 100 TB corpus thus propagates to the
-    * standing rollup in O(scoped + groups), the property privacy-purge
-    * SLAs actually need. (min/max-style aggs are NOT subtractable —
-    * they keep the full-recompute maintainer; this being a separate
-    * entry point makes that distinction explicit rather than silent.)
-    * Groups whose count reaches zero DROP from the view, exactly as a
-    * full recompute would produce. True overwrite lineage (compaction,
-    * INSERT OVERWRITE) still falls back to the row-level diff inside
-    * [[snapshotChanges]] — correct for every history. Same crash-atomic
-    * contract as [[maintainSumView]]: one overwrite commit stamped with
-    * the base version it reflects.
+  /** [[maintainSumView]] WITH RETRACTIONS — sum/count are SIGNED-
+    * mergeable, so this maintainer merges the op-typed change feed on
+    * every lineage: deletes and update preimages enter as NEGATIVE
+    * partials, and the MOR fast path inside [[snapshotChanges]] prices a
+    * delete at O(scoped files). A deletion request against a 100 TB
+    * corpus thus propagates to the standing rollup in O(scoped +
+    * groups), the property privacy-purge SLAs actually need. (min/max-
+    * style aggs are NOT subtractable — they keep the full-recompute
+    * maintainer; this being a separate entry point makes that
+    * distinction explicit rather than silent.) Groups whose count
+    * reaches zero DROP from the view, exactly as a full recompute would
+    * produce. True overwrite lineage (compaction, INSERT OVERWRITE)
+    * pays the row-level diff inside [[snapshotChanges]] — correct for
+    * every history. Same crash-atomic contract as [[maintainSumView]].
     */
   def maintainSumViewCdc(spark: org.apache.spark.sql.SparkSession,
       baseRoot: String, viewRoot: String,
-      groupCol: String, valCol: String): Int = {
-    import org.apache.spark.sql.functions._
+      groupCol: String, valCol: String): Int =
+    maintainSum(spark, baseRoot, viewRoot, groupCol, valCol, retract = true)
+
+  /** The body of both sum-view maintainers: merge the signed change
+    * feed into the view's partials when `retract` is set or the lineage
+    * is append-only, recompute the head otherwise. Layout: sum_v (NULL
+    * iff the group has no non-null values — SQL SUM semantics),
+    * n = COUNT(*), nn = COUNT(valCol). nn is the AVG denominator (AVG
+    * divides by the NON-NULL count) and the guard that keeps sum_v
+    * NULL-preserving through merges.
+    */
+  private def maintainSum(spark: org.apache.spark.sql.SparkSession,
+      baseRoot: String, viewRoot: String, groupCol: String, valCol: String,
+      retract: Boolean): Int = {
     val baseVs = snapshotVersions(spark, baseRoot)
     require(baseVs.nonEmpty, s"no base snapshots at $baseRoot")
     val head = baseVs.last
     val processed = viewProcessedVersion(spark, viewRoot)
     if (processed == head) return head
     // ONE view read serves the legacy check and the merge's old state.
-    // LEGACY MIGRATION: a pre-nn view cannot merge deltas (its select
-    // of nn would crash) — one full recompute migrates the layout
+    // LEGACY MIGRATION: a view committed before the nn column existed
+    // cannot merge (its select of nn would crash) — one full recompute
+    // migrates it to the current layout
     val viewDf =
       if (processed > 0) Some(readSnapshot(spark, viewRoot)) else None
-    val canMerge = viewDf.exists(_.columns.contains("nn"))
+    val canMerge = viewDf.exists(_.columns.contains("nn")) &&
+      (retract || snapshotAppendLineage(spark, baseRoot, processed, head))
     val newState =
-      if (!canMerge) {
+      if (!canMerge)
         readSnapshot(spark, baseRoot, head)
           .groupBy(col(groupCol))
           .agg(sum(col(valCol).cast("double")).as("sum_v"),
             count(lit(1)).as("n"), count(col(valCol)).as("nn"))
-      } else {
-        // PER-COMMIT walking feed: a span mixing appends and merges
-        // prices each commit by its own lineage instead of falling
-        // back to the endpoint two-scan diff
-        val ch = snapshotChangesUnion(spark, baseRoot, processed, head)
+      else {
         // additions are {insert, update_postimage}, retractions
-        // {delete, update_preimage} — a COW MERGE's typed feed merges
-        // incrementally here instead of falling back on merge lineage
+        // {delete, update_preimage} — on append lineage every row adds
         val sign = when(col("_change_type")
             .isin("insert", "update_postimage"), lit(1))
           .otherwise(lit(-1))
-        val deltaAgg = ch
+        val deltaAgg = snapshotChangesUnion(spark, baseRoot, processed, head)
           .groupBy(col(groupCol))
           .agg(sum(col(valCol).cast("double") * sign).as("d_sum"),
             sum(sign.cast("long")).as("d_n"),
@@ -3976,6 +3882,10 @@ object Layout {
         val old = viewDf.get
           .select(col(groupCol), col("sum_v").as("old_sum"),
             col("n").as("old_n"), col("nn").as("old_nn"))
+        // q80's combine: full-outer on the group key, coalesce-add the
+        // MERGEABLE partials. sum_v stays NULL when the merged non-null
+        // count is 0 — an all-NULL group must answer SUM with NULL,
+        // never a coalesced 0.
         val mergedNn = coalesce(col("old_nn"), lit(0L)) +
           coalesce(col("d_nn"), lit(0L))
         old.join(deltaAgg, Seq(groupCol), "full_outer")
@@ -4642,8 +4552,8 @@ object Layout {
     * textbook IVM identity for inner equi-joins) made exact by the
     * snapshot layer: `L_old` is a TIME-TRAVEL read of the left table at
     * the version the view last processed — not an approximation, the
-    * actual bytes — and the deltas come from the CDF
-    * ([[snapshotDeltasSince]]), so under append lineage on both sides a
+    * actual bytes — and the deltas are the insert side of the change
+    * feed ([[changeInserts]]), so under append lineage on both sides a
     * maintenance run joins O(new-left · right) + O(old-left · new-right)
     * and scans none of the unchanged-×-unchanged quadrant. The
     * decomposition L_new⋈R_new = V_old ⊎ ΔL⋈R_new ⊎ L_old⋈ΔR is a
@@ -4678,15 +4588,12 @@ object Layout {
         (r.getInt(0), r.getInt(1))
       }
     if (pL == lHead && pR == rHead) return (lHead, rHead)
-    def appendLineage(root: String, processed: Int, head: Int): Boolean =
-      processed == head ||
-        (processed > 0 && snapshotAppendLineage(spark, root, processed, head))
     val stamp = (df: DataFrame) => df
       .withColumn("base_l", lit(lHead)).withColumn("base_r", lit(rHead))
-    if (pL > 0 && appendLineage(leftRoot, pL, lHead) &&
-        appendLineage(rightRoot, pR, rHead)) {
-      val dL = snapshotDeltasUnion(spark, leftRoot, pL, lHead)
-      val dR = snapshotDeltasUnion(spark, rightRoot, pR, rHead)
+    if (snapshotAppendLineage(spark, leftRoot, pL, lHead) &&
+        snapshotAppendLineage(spark, rightRoot, pR, rHead)) {
+      val dL = changeInserts(snapshotChangesUnion(spark, leftRoot, pL, lHead))
+      val dR = changeInserts(snapshotChangesUnion(spark, rightRoot, pR, rHead))
       val rNew = readSnapshot(spark, rightRoot, rHead)
       val lOld = readSnapshot(spark, leftRoot, pL) // time travel IS L_old
       val dV = dL.join(rNew, Seq(key))

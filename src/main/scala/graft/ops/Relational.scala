@@ -2345,19 +2345,20 @@ object Relational {
 
   // ---------------------------------------------------------------- q85
   /** Snapshot CHANGE DATA FEED — the incremental-consumer read on q83's
-    * versioned table: rows in v2 that v1 lacks, via
-    * [[Layout.snapshotDiff]]. On append lineage (this table) the delta
-    * reads ONLY the files v2 added — `inputFiles` of the returned frame
-    * is exactly the v2-minus-v1 file set, zero v1 bytes scanned
-    * (`ScaleFeaturesSpec` asserts it) — a metadata-priced diff; across an
-    * overwrite the reader falls back to a row-level exceptAll (spec'd
-    * correct there too). Downstream, this is what keeps q80's IVM, ST22's
-    * refreshing dims, and any derived table INCREMENTAL instead of
-    * re-reading the base.
+    * versioned table: rows in v2 that v1 lacks, the insert side
+    * ([[Layout.changeInserts]]) of [[Layout.snapshotChanges]]. On append
+    * lineage (this table) the delta reads ONLY the files v2 added —
+    * `inputFiles` of the returned frame is exactly the v2-minus-v1 file
+    * set, zero v1 bytes scanned (`ScaleFeaturesSpec` asserts it) — a
+    * metadata-priced diff; across an overwrite the reader falls back to
+    * a row-level exceptAll (spec'd correct there too). Downstream, this
+    * is what keeps q80's IVM, ST22's refreshing dims, and any derived
+    * table INCREMENTAL instead of re-reading the base.
     */
   def q85SnapshotCdf(spark: SparkSession, sfDir: String): DataFrame = {
     val root = snapTable(spark, sfDir)
-    Layout.snapshotDiff(spark, root, 1, 2).orderBy(col("key"))
+    Layout.changeInserts(Layout.snapshotChanges(spark, root, 1, 2))
+      .orderBy(col("key"))
   }
 
   val q85Sql: String =

@@ -1062,9 +1062,9 @@ object Similarity {
     val cents = stubCentroids(Layout.readSnapshot(spark, baseRoot, 1))
     require(cents.size == NLists,
       s"v1 must carry the $NLists coarse seed vectors (got ${cents.size})")
-    if (processed > 0 &&
-        Layout.snapshotAppendLineage(spark, baseRoot, processed, head)) {
-      val delta = Layout.snapshotDeltasUnion(spark, baseRoot, processed, head)
+    if (Layout.snapshotAppendLineage(spark, baseRoot, processed, head)) {
+      val delta = Layout.changeInserts(
+        Layout.snapshotChangesUnion(spark, baseRoot, processed, head))
       Layout.snapshotAppend(spark, indexRoot,
         residualEncode(delta, cents).withColumn("base_version", lit(head)))
     } else {

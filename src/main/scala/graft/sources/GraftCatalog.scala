@@ -653,7 +653,8 @@ case class GraftTable(root: String, identName: String, pinnedVersion: Int)
   * `graft.t.history` (per-version commit log), `graft.t.files` (the
   * head's per-file stats inventory), and `graft.t.changes` (the FULL
   * op-typed change feed, Delta's `table_changes` TVF as a plain table:
-  * every version's [[Layout.snapshotChanges]] delta stamped
+  * every version's [[Layout.snapshotChanges]] delta, one
+  * [[Layout.snapshotChangesWalk]], stamped
   * `_graft_version`, `_change_type` ∈ {insert, delete,
   * update_preimage, update_postimage}). history/files
   * are manifest-priced (planning and execution never touch a data
@@ -783,15 +784,16 @@ case class GraftMetaTable(root: String, kind: String, identName: String)
             override def schema: StructType = outSchema
             override def buildScan(): org.apache.spark.rdd.RDD[Row] = {
               import org.apache.spark.sql.functions.{col, lit}
-              val all = Layout.snapshotVersions(tbl.spark, tbl.root)
               val stamps = Layout.snapshotTimestamps(tbl.spark, tbl.root)
-                .toMap
-              val wanted = all.filter(v => v >= lo && v <= hi)
-              val deltas = wanted.map { v =>
-                val prev = all.takeWhile(_ < v).lastOption.getOrElse(0)
-                Layout.snapshotChanges(tbl.spark, tbl.root, prev, v)
-                  .withColumn("_graft_version", lit(v))
-                  .withColumn("_commit_ts", lit(stamps.getOrElse(v, 0L)))
+              val all = stamps.map(_._1)
+              // the walk starts at the last version below the range and
+              // stops at the last version this scan saw stamped
+              val since = all.takeWhile(_ < lo).lastOption.getOrElse(0)
+              val ts = stamps.toMap
+              val deltas = Layout.snapshotChangesWalk(tbl.spark, tbl.root,
+                  since, math.min(hi, all.lastOption.getOrElse(0))).map {
+                case (v, ch) => ch.withColumn("_graft_version", lit(v))
+                  .withColumn("_commit_ts", lit(ts(v)))
               }
               val unioned = deltas
                 .reduceOption(_.unionByName(_, allowMissingColumns = true))

@@ -12,11 +12,12 @@ import graft.ops.Layout
 /** `readStream` SOURCE OVER THE SNAPSHOT CDF — the Delta-streaming-
   * source slot: the manifest-versioned table becomes a Structured
   * Streaming input, each micro-batch carrying exactly the rows the
-  * commits in `(lastOffset, head]` added
-  * ([[Layout.snapshotDeltasSince]] — append lineage is metadata-priced,
-  * overwrite lineage row-exact), stamped with their commit version in
-  * `_graft_version`. Incremental consumers (maintained views, indexes,
-  * downstream curation) stop polling and ride engine triggers:
+  * commits in `(lastOffset, head]` added (the insert side,
+  * [[Layout.changeInserts]], of the change feed — append lineage is
+  * metadata-priced, overwrite lineage row-exact), stamped with their
+  * commit version in `_graft_version`. Incremental consumers
+  * (maintained views, indexes, downstream curation) stop polling and
+  * ride engine triggers:
   *
   * {{{
   * spark.readStream.format("graft-cdf").option("path", root).load()
@@ -193,25 +194,10 @@ class CdfSource(sqlContext: SQLContext, root: String,
     val since = start.map(versionOf).getOrElse(startingVersion)
     val endV = versionOf(end)
     if (endV > lastOffered) lastOffered = endV
-    val deltas =
-      if (!cdc)
-        Layout.snapshotDeltasSince(spark, root, since)
-          .filter(_._1 <= endV)
-          .map { case (v, df) =>
-            df.withColumn(CdfSource.VersionCol, lit(v)) }
-      else {
-        // CDC: per committed version, the OP-TYPED change set — inserts
-        // AND deletes ([[Layout.snapshotChanges]]); append lineage stays
-        // metadata-priced, overwrites/MOR deletes pay the row diff
-        val vs = Layout.snapshotVersions(spark, root)
-          .filter(v => v > since && v <= endV)
-        var prev = since
-        vs.map { v =>
-          val d = Layout.snapshotChanges(spark, root, prev, v)
-          prev = v
-          d.withColumn(CdfSource.VersionCol, lit(v))
-        }
-      }
+    val deltas = Layout.snapshotChangesWalk(spark, root, since, endV).map {
+      case (v, ch) => (if (cdc) ch else Layout.changeInserts(ch))
+        .withColumn(CdfSource.VersionCol, lit(v))
+    }
     val dataCols = declaredSchema.fields
     val unioned =
       if (deltas.isEmpty)

@@ -91,7 +91,8 @@ class ColumnMappingSpec extends GraftSuite {
     Layout.snapshotAppend(spark, root, Seq((1L, "a")).toDF("k", "v"))   // v1
     Layout.snapshotRenameColumn(spark, root, "v", "label")             // v2
     Layout.snapshotAppend(spark, root, Seq((2L, "b")).toDF("k", "label")) // v3
-    val deltas = Layout.snapshotDeltasSince(spark, root, 1)
+    val deltas = Layout.snapshotChangesWalk(spark, root, 1, 3)
+      .map { case (v, ch) => v -> Layout.changeInserts(ch) }
     assert(deltas.map(_._1) == Seq(2, 3))
     // every delta speaks the head's LOGICAL name — a maintainer's
     // unionByName must see ONE column, never v-and-label halves
@@ -106,6 +107,29 @@ class ColumnMappingSpec extends GraftSuite {
       .reduce(_.unionByName(_, allowMissingColumns = true))
     assert(merged.filter(col("label").isNull).count() == 0,
       "no silent null-fill from a physical-name leak")
+  }
+
+  test("equality-delete change rows after a rename carry the logical names, so a retracting view retracts real values") {
+    import spark.implicits._
+    val root = freshRoot("cdcdelren")
+    val view = freshRoot("cdcdelren-view")
+    Layout.snapshotAppend(spark, root, Seq((1L, "a", 10.0), (2L, "a", 5.0),
+      (3L, "b", 7.0)).toDF("k", "g", "v"))                           // v1
+    Layout.maintainSumViewCdc(spark, root, view, "g", "v")
+    Layout.snapshotRenameColumn(spark, root, "v", "amount")          // v2
+    Layout.snapshotDeleteMOR(spark, root, "k", Array(1L))            // v3
+    val logical = Seq("k", "g", "amount", "_change_type")
+    val ch = Layout.snapshotChanges(spark, root, 2, 3)
+    assert(ch.columns.toSeq == logical, ch.columns.mkString(","))
+    val walked = Layout.snapshotChangesUnion(spark, root, 1, 3)
+    assert(walked.columns.toSeq == logical, walked.columns.mkString(","))
+    assert(walked.collect().map(r => (r.getLong(0), r.getDouble(2),
+      r.getString(3))).toSeq == Seq((1L, 10.0, "delete")))
+    Layout.maintainSumViewCdc(spark, root, view, "g", "amount")
+    val got = Layout.readSnapshot(spark, view).collect()
+      .map(r => r.getAs[String]("g") -> ((r.getAs[Double]("sum_v"),
+        r.getAs[Long]("n"), r.getAs[Long]("nn")))).toMap
+    assert(got == Map("a" -> ((5.0, 1L, 1L)), "b" -> ((7.0, 1L, 1L))), got)
   }
 
   test("reserved (pruning-identity) columns refuse rename and drop") {

@@ -431,7 +431,9 @@ class ScaleFeaturesSpec extends GraftSuite {
       .select((col("key") + 5000000L).as("key"), col("status"))
     ops.Layout.snapshotAppend(spark, root, delta)
     // fast path: the diff's input files are EXACTLY v2 \ v1 — no v1 bytes
-    val diff = ops.Layout.snapshotDiff(spark, root, 1, 2)
+    def inserts(from: Int, to: Int) =
+      ops.Layout.changeInserts(ops.Layout.snapshotChanges(spark, root, from, to))
+    val diff = inserts(1, 2)
     assert(diff.exceptAll(delta).count() === 0 && delta.exceptAll(diff).count() === 0)
     def norm(p: String) = new org.apache.hadoop.fs.Path(p).toUri.getPath
     val v1Files = ops.Layout.readSnapshot(spark, root, 1).inputFiles.map(norm).toSet
@@ -443,7 +445,7 @@ class ScaleFeaturesSpec extends GraftSuite {
     val v3data = orders.unionByName(delta)
       .unionByName(delta.select((col("key") + 9000000L).as("key"), col("status")))
     ops.Layout.snapshotOverwrite(spark, root, v3data.repartition(2))
-    val diff13 = ops.Layout.snapshotDiff(spark, root, 1, 3)
+    val diff13 = inserts(1, 3)
     val want13 = v3data.exceptAll(orders)
     assert(diff13.exceptAll(want13).count() === 0 &&
       want13.exceptAll(diff13).count() === 0,
@@ -451,11 +453,14 @@ class ScaleFeaturesSpec extends GraftSuite {
 
     // poll-based consumer: deltas since v1 are exactly (v2's append,
     // v3's overwrite delta), oldest first; since 0 starts with all of v1
-    val since1 = ops.Layout.snapshotDeltasSince(spark, root, 1)
+    def deltasSince(since: Int) = ops.Layout.snapshotChangesWalk(spark, root,
+      since, ops.Layout.snapshotVersions(spark, root).last)
+      .map { case (v, ch) => v -> ops.Layout.changeInserts(ch) }
+    val since1 = deltasSince(1)
     assert(since1.map(_._1) === Seq(2, 3))
     assert(since1.head._2.exceptAll(delta).count() === 0 &&
       delta.exceptAll(since1.head._2).count() === 0)
-    val since0 = ops.Layout.snapshotDeltasSince(spark, root, 0)
+    val since0 = deltasSince(0)
     assert(since0.map(_._1) === Seq(1, 2, 3))
     assert(since0.head._2.exceptAll(orders).count() === 0 &&
       orders.exceptAll(since0.head._2).count() === 0)
@@ -728,7 +733,8 @@ class ScaleFeaturesSpec extends GraftSuite {
       "re-inserted row must survive; the originally deleted row must not")
     // CDF across the delete must NOT take the file fast path (file sets
     // are equal there): row-level fallback, exact
-    val diff13 = ops.Layout.snapshotDiff(spark, root, 1, 3)
+    val diff13 = ops.Layout.changeInserts(
+      ops.Layout.snapshotChanges(spark, root, 1, 3))
     val want13 = ops.Layout.readSnapshot(spark, root, 3)
       .exceptAll(ops.Layout.readSnapshot(spark, root, 1))
     assert(diff13.exceptAll(want13).count() === 0 &&

@@ -116,6 +116,29 @@ class WriteMetadataSpec extends GraftSuite {
     assert(rowsOf(Layout.readSnapshot(spark, root, v)) == expected)
   }
 
+  test("a position delete records its scope: its head reads with no job, and its change rows are exactly the deleted rows") {
+    val (root, base) = seeded("posdel", 300)
+    val before = head(root)
+    val v = Layout.snapshotDeletePositions(spark, root,
+      col("qty") === 7.0 && col("k") < 200)
+    val gone = base.filter { case (k, (_, q)) => q == 7.0 && k < 200 }
+    assert(gone.nonEmpty)
+    val scopes = manifestText(root, v).filter(_.startsWith("delete:"))
+      .map(_.split("\tscope=", 2))
+    assert(scopes.nonEmpty && scopes.forall(_.length == 2),
+      s"the delete must record its scope: ${scopes.map(_.toSeq)}")
+    val scoped = scopes.flatMap(_(1).split(",")).toSet
+    assert(scoped.nonEmpty && scoped.size < liveNames(root).size,
+      s"rows of two key ranges scope part of the table: $scoped")
+    val (read, jobs) = jobsOf(Layout.readSnapshot(spark, root))
+    assert(jobs.isEmpty, s"a scoped position-deleted head started jobs: $jobs")
+    assert(rowsOf(read) == base -- gone.keys)
+    val ch = Layout.snapshotChanges(spark, root, before, v)
+    assert(ch.select("_change_type").distinct().collect().map(_.getString(0))
+      .toSeq == Seq("delete"))
+    assert(ch.count() == gone.size && rowsOf(ch) == gone)
+  }
+
   test("a delete whose keys overlap no file range commits its audit version with no delete line and no sidecar directory") {
     val (root, base) = seeded("empty-delete", 200)
     val before = head(root)
