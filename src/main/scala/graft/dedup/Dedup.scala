@@ -1967,10 +1967,9 @@ object Dedup {
     * append lineage a maintenance run prices at O(new bytes + registry)
     * and the result is EXACTLY the full recompute — d1's oracle SQL
     * verbatim certifies the final registry after three interleaved
-    * appends. Broken lineage (compaction / MOR delete — a removal can't
-    * be subtracted from a count) falls back to one full scan, the
-    * [[graft.ops.Layout.maintainSumView]] contract. Crash-atomic the
-    * same way: one registry commit per advance, stamped `base_version`.
+    * appends. Runs through [[graft.ops.Layout.maintainView]] (rows
+    * stamped `base_version`, header `mvBase`): broken lineage (a removal
+    * can't be subtracted from a count) recomputes with one full scan.
     * 100 TB: the registry shuffles 32-char hashes, never documents; the
     * daily delta maintenance replaces the full-corpus GROUP BY re-run.
     */
@@ -1979,21 +1978,16 @@ object Dedup {
   def maintainDedupRegistry(spark: SparkSession, baseRoot: String,
       viewRoot: String): Int = {
     import graft.ops.Layout
-    val baseVs = Layout.snapshotVersions(spark, baseRoot)
-    require(baseVs.nonEmpty, s"no base snapshots at $baseRoot")
-    val head = baseVs.last
-    val processed = Layout.viewProcessedVersion(spark, viewRoot)
-    if (processed == head) return head
     def rollup(df: DataFrame): DataFrame = df
       .groupBy(md5(col("text").cast("binary")).as("text_hash"))
       .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_copies"))
-    val newState =
-      if (!Layout.snapshotAppendLineage(spark, baseRoot, processed, head)) {
-        rollup(Layout.readSnapshot(spark, baseRoot, head))
-      } else {
-        val delta = rollup(Layout.changeInserts(
-          Layout.snapshotChangesUnion(spark, baseRoot, processed, head)))
-        Layout.readSnapshot(spark, viewRoot)
+    Layout.maintainView(spark, Seq(baseRoot), viewRoot, Seq("base_version"),
+      appendOnly = true)(
+      recompute = heads => rollup(Layout.readSnapshot(spark, baseRoot, heads.head)),
+      fold = (processed, heads) => {
+        val delta = rollup(Layout.changeInserts(Layout.snapshotChangesUnion(
+          spark, baseRoot, processed.head, heads.head)))
+        Some(Layout.ViewUpdate(Layout.readSnapshot(spark, viewRoot)
           .select(col("text_hash"), col("keep_id").as("old_keep"),
             col("n_copies").as("old_n"))
           .join(delta, Seq("text_hash"), "full_outer")
@@ -2001,12 +1995,8 @@ object Dedup {
             least(col("old_keep"), col("keep_id"))
               .as("keep_id"), // least() skips nulls: min-merge of partials
             (coalesce(col("old_n"), lit(0L)) +
-              coalesce(col("n_copies"), lit(0L))).as("n_copies"))
-      }
-    Layout.snapshotOverwrite(spark, viewRoot,
-      newState.withColumn("base_version", lit(head)),
-      extraHeader = Map("mvBase" -> head.toString))
-    head
+              coalesce(col("n_copies"), lit(0L))).as("n_copies")), append = false))
+      }).head
   }
 
   /** d24's driver demo: the d1 corpus (documents ∪ their +1e6-shifted

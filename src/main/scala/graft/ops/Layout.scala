@@ -471,6 +471,11 @@ object Layout {
     * overwrite of live rows ∪ new rows instead of an append. When no
     * live file was indexed before (a full compaction), that overwrite
     * holds only the new rows and never reads the old index.
+    * It stays off [[maintainView]]: its fold keys on the base's FILE SET,
+    * not on version lineage (immune to compaction and deletes, so it
+    * never recomputes), its header carries a file inventory rather than
+    * `mvBase`, and it runs inside [[snapshotMaintain]] on the table
+    * write path.
     */
   private def maintainBloomIndexCore(spark: org.apache.spark.sql.SparkSession,
       baseRoot: String, idxRoot: String, keyCol: String, mBits: Int,
@@ -3104,11 +3109,22 @@ object Layout {
             "to silently drop its batch")
       return v // genuine replay by the same writer: already committed
     }
-    val prev = snapshotVersions(spark, root).filter(_ < v)
-    require(prev.lastOption.getOrElse(0) == v - 1,
-      s"epoch $epoch commits v$v but the latest committed version is ${prev.lastOption.getOrElse(0)}")
-    val dataDir = s"$root/data/e=$epoch"
-    val hdr0 = prev.lastOption.map(manifestHeader(spark, root, _))
+    val prev = snapshotVersions(spark, root).filter(_ < v).lastOption
+    require(prev.getOrElse(0) == v - 1,
+      s"epoch $epoch commits v$v but the latest committed version is ${prev.getOrElse(0)}")
+    commitEpochBatch(spark, root, df, epoch, writerId, prev,
+      s"$root/data/e=$epoch", statsKey = None)
+  }
+
+  /** The epoch batch commit of both streaming appends: `df`'s files
+    * under `dataDir`, committed at `prev` + 1 with the (writer, epoch)
+    * header their replay checks read.
+    */
+  private def commitEpochBatch(spark: org.apache.spark.sql.SparkSession,
+      root: String, df: DataFrame, epoch: Long, writerId: String,
+      prev: Option[Int], dataDir: String, statsKey: Option[String]): Int = {
+    val v = prev.getOrElse(0) + 1
+    val hdr0 = prev.map(manifestHeader(spark, root, _))
       .getOrElse(Map.empty[String, String])
     enforceConstraints(carriedProps(hdr0), df, s"epoch $epoch append")
     // declared-layout carry (appendInternal's rule): a table that
@@ -3119,14 +3135,22 @@ object Layout {
       case _ => df
     }
     toPhysicalFrame(dfE, hdr0).write.mode("overwrite").parquet(dataDir)
-    val carried = carriedStateOf(spark, root, prev.lastOption)
+    val carried = carriedStateOf(spark, root, prev)
+    // the FIRST commit may declare the stats column (carried thereafter,
+    // exactly like snapshotAppend's statsKey); an existing declaration
+    // must not be contradicted
+    for (sk <- statsKey; declared <- carried.props.get("statsKey"))
+      require(declared == sk,
+        s"table at $root already declares statsKey=$declared (asked: $sk)")
+    val props = carried.props ++
+      (if (prev.isEmpty) statsKey.map("statsKey" -> _) else None)
     val schema =
       if (prev.isEmpty) mergeSchemas(None, df.schema)
       else carried.schema.flatMap(ps => mergeSchemas(Some(ps), df.schema))
     commitManifest(spark, root, v, carried.segs,
       carried.inline ++
-        entriesForNewFiles(spark, listDataFiles(spark, dataDir), carried.props),
-      carried.props ++ schemaHeaderOf(schema) ++
+        entriesForNewFiles(spark, listDataFiles(spark, dataDir), props),
+      props ++ schemaHeaderOf(schema) ++
         Map("writer" -> writerId, "epoch" -> epoch.toString),
       deletes = carried.deletes,
       // ownership lets a crash between claim and rename REPLAY instead
@@ -3192,39 +3216,8 @@ object Layout {
               "= true (sink option) if this NEW stream is deliberately " +
               "targeting the existing table.")
     }
-    val v = vs.lastOption.getOrElse(0) + 1
-    val dataDir = s"$root/data/w=${sanitize(writerId)}-e=$epoch"
-    val hdr0 = vs.lastOption.map(manifestHeader(spark, root, _))
-      .getOrElse(Map.empty[String, String])
-    enforceConstraints(carriedProps(hdr0), df, s"epoch $epoch append")
-    // declared-layout carry (appendInternal's rule): a table that
-    // declared partCol value-localizes streaming batches too, so files
-    // stay prunable/SPJ-eligible without a separate maintenance pass
-    val dfE = hdr0.get("partCol") match {
-      case Some(pc) if df.columns.contains(pc) => df.repartition(col(pc))
-      case _ => df
-    }
-    toPhysicalFrame(dfE, hdr0).write.mode("overwrite").parquet(dataDir)
-    val carried = carriedStateOf(spark, root, vs.lastOption)
-    // the FIRST commit may declare the stats column (carried thereafter,
-    // exactly like snapshotAppend's statsKey); an existing declaration
-    // must not be contradicted
-    for (sk <- statsKey; prev <- carried.props.get("statsKey"))
-      require(prev == sk,
-        s"table at $root already declares statsKey=$prev (asked: $sk)")
-    val props = carried.props ++
-      (if (vs.isEmpty) statsKey.map("statsKey" -> _) else None)
-    val schema =
-      if (vs.isEmpty) mergeSchemas(None, df.schema)
-      else carried.schema.flatMap(ps => mergeSchemas(Some(ps), df.schema))
-    commitManifest(spark, root, v, carried.segs,
-      carried.inline ++
-        entriesForNewFiles(spark, listDataFiles(spark, dataDir), props),
-      props ++ schemaHeaderOf(schema) ++
-        Map("writer" -> writerId, "epoch" -> epoch.toString),
-      deletes = carried.deletes,
-      claimOwner = Some(writerId))
-    v
+    commitEpochBatch(spark, root, df, epoch, writerId, vs.lastOption,
+      s"$root/data/w=${sanitize(writerId)}-e=$epoch", statsKey)
   }
 
   private def sanitize(s: String): String =
@@ -3709,25 +3702,50 @@ object Layout {
       .getOrElse(readSnapshot(spark, root, head).where(lit(false))
         .withColumn("_change_type", lit("insert")))
 
-  /** The base version a maintainer's view table currently reflects —
-    * from the view head's `mvBase` commit header when present (an
-    * O(manifest) METADATA read: the MV rewrite's per-query freshness
-    * check must not cost a Spark job), falling back to the max
-    * `base_version` row stamp for views committed before the header
-    * existed; 0 for an empty view. The header is EPHEMERAL (never
-    * carried), so only a maintainer's own commit can assert it — any
-    * other overwrite drops it and the row fallback stays authoritative.
+  /** Frames of one change-feed walk unioned by name and projected to
+    * `schema`: a column the span lacks (additive evolution widens later
+    * transitions) reads as null, and an empty span is an empty frame.
+    */
+  private[graft] def unionToSchema(spark: org.apache.spark.sql.SparkSession,
+      frames: Seq[DataFrame],
+      schema: org.apache.spark.sql.types.StructType): DataFrame = {
+    val unioned = frames.reduceOption(_.unionByName(_, allowMissingColumns = true))
+      .getOrElse(spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema))
+    unioned.select(schema.fields.toIndexedSeq.map { f =>
+      (if (unioned.columns.contains(f.name)) col(s"`${f.name}`") else lit(null))
+        .cast(f.dataType).as(f.name)
+    }: _*)
+  }
+
+  /** The base version a single-base maintained view reflects
+    * ([[viewProcessedHeads]]): no Spark job when its head has `mvBase`.
     */
   def viewProcessedVersion(spark: org.apache.spark.sql.SparkSession,
-      viewRoot: String): Int = {
+      viewRoot: String): Int =
+    viewProcessedHeads(spark, viewRoot, Seq("base_version")).head
+
+  /** The base heads a maintained view reflects, in its maintainer's
+    * base order: the view head's `mvBase` header, a comma list of heads
+    * read from the manifest alone (a single base reads `mvBase=7`). The
+    * header is EPHEMERAL, so only a maintainer's own commit asserts it; a
+    * head without it (committed before the header, or by any other
+    * overwrite) takes the max of each base's `stamps` column in one
+    * aggregate. 0 per base for an empty view.
+    */
+  private def viewProcessedHeads(spark: org.apache.spark.sql.SparkSession,
+      viewRoot: String, stamps: Seq[String]): Seq[Int] = {
     val vs = snapshotVersions(spark, viewRoot)
-    if (vs.isEmpty) 0
+    if (vs.isEmpty) stamps.map(_ => 0)
     else manifestHeader(spark, viewRoot, vs.last).get("mvBase")
-      .flatMap(s => scala.util.Try(s.toInt).toOption)
-      .getOrElse(readSnapshot(spark, viewRoot)
-        .agg(org.apache.spark.sql.functions.max(
-          org.apache.spark.sql.functions.col("base_version")))
-        .head().getInt(0))
+      .flatMap(s => scala.util.Try(s.split(",").toSeq.map(_.toInt)).toOption)
+      .filter(_.size == stamps.size)
+      .getOrElse {
+        val r = readSnapshot(spark, viewRoot)
+          .agg(max(col(stamps.head)), stamps.tail.map(c => max(col(c))): _*)
+          .head()
+        stamps.indices.map(i => if (r.isNullAt(i)) 0 else r.getInt(i))
+      }
   }
 
   /** LOGICAL CONFLICT ANALYSIS for read-dependent committers: what did
@@ -3770,11 +3788,10 @@ object Layout {
 
   /** Append-only lineage test between two versions: every `from` data
     * file still referenced at `to` AND no delete-sidecar change (a MOR
-    * delete removes rows without touching data files). This is the
-    * precondition every merge-only incremental maintainer checks before
-    * trusting the insert side of the change feed ([[maintainSumView]],
-    * [[maintainJoinView]], the dedup registry, the ANN index), and the
-    * test that sends [[snapshotChanges]] down its added-files path.
+    * delete removes rows without touching data files). [[maintainView]]
+    * checks it before an append-only fold trusts the insert side of the
+    * change feed, and it sends [[snapshotChanges]] down its added-files
+    * path.
     */
   def snapshotAppendLineage(spark: org.apache.spark.sql.SparkSession,
       root: String, from: Int, to: Int): Boolean =
@@ -3784,33 +3801,67 @@ object Layout {
       manifestDeleteFiles(spark, root, from).toSet ==
         manifestDeleteFiles(spark, root, to).toSet)
 
+  /** What a maintainer's fold publishes: rows to append, or the view's
+    * replacement. */
+  private[graft] final case class ViewUpdate(rows: DataFrame, append: Boolean)
+
+  /** Maintainer runs that found a prior view and recomputed it instead
+    * of folding the change feed into it (broken lineage, or a view
+    * layout the fold cannot merge) — the merge-or-recompute decision.
+    */
+  private[graft] val viewRecomputes = new java.util.concurrent.atomic.AtomicLong(0)
+
+  /** THE INCREMENTAL-VIEW MAINTAINER the sum views, q89's join view,
+    * d24's registry and s19's ANN index run through. One run:
+    *  1. reads each base head from its manifests;
+    *  2. reads the heads the view reflects ([[viewProcessedHeads]]) and
+    *     returns at once when none moved — no Spark job;
+    *  3. folds the change since then into the view — over append lineage
+    *     on every base when `appendOnly` — unless the fold declines
+    *     (None), else recomputes the heads ([[viewRecomputes]]);
+    *  4. commits ONE view snapshot (append or overwrite) whose rows carry
+    *     each base's head in its `stamps` column and whose `mvBase`
+    *     header lists the heads.
+    * CRASH-ATOMIC: a crash before the commit leaves the previous view,
+    * and a re-run re-reads the same view and feed and publishes the same
+    * commit. Returns the heads the view now reflects.
+    */
+  private[graft] def maintainView(spark: org.apache.spark.sql.SparkSession,
+      baseRoots: Seq[String], viewRoot: String, stamps: Seq[String],
+      appendOnly: Boolean)(recompute: Seq[Int] => DataFrame,
+      fold: (Seq[Int], Seq[Int]) => Option[ViewUpdate]): Seq[Int] = {
+    val heads = baseRoots.map(r => snapshotVersions(spark, r).lastOption
+      .getOrElse(throw new IllegalArgumentException(s"no base snapshots at $r")))
+    val processed = viewProcessedHeads(spark, viewRoot, stamps)
+    if (processed == heads) return heads
+    val prior = processed.forall(_ > 0)
+    val folded =
+      if (prior && (!appendOnly || baseRoots.indices.forall(i =>
+          snapshotAppendLineage(spark, baseRoots(i), processed(i), heads(i)))))
+        fold(processed, heads)
+      else None
+    if (prior && folded.isEmpty) viewRecomputes.incrementAndGet()
+    val update = folded.getOrElse(ViewUpdate(recompute(heads), append = false))
+    val rows = stamps.zip(heads).foldLeft(update.rows) {
+      case (df, (c, h)) => df.withColumn(c, lit(h)) }
+    val header = Map("mvBase" -> heads.mkString(","))
+    if (update.append)
+      appendInternal(spark, viewRoot, rows, None, None, extraHeader = header)
+    else snapshotOverwrite(spark, viewRoot, rows, extraHeader = header)
+    heads
+  }
+
   /** INCREMENTAL MATERIALIZED VIEW over a versioned table — q80's
-    * mergeable-partial discipline driven by the change feed
-    * ([[snapshotChangesUnion]]) instead of a hand-fed delta batch:
-    * maintain a per-group (sum, count) rollup of `valCol` grouped by
-    * `groupCol`, advancing from the last processed base version to the
-    * current head.
-    *
-    * CRASH-ATOMIC BY CONSTRUCTION: the view is ITSELF a snapshot table,
-    * and one maintenance run is ONE manifest commit whose rows carry the
-    * base version they reflect (`base_version` column). A crash anywhere
-    * before the commit leaves the previous view version intact; the next
-    * run re-reads the same old state + the same feed (deterministic)
-    * and publishes the same result — no double-apply window, no side
-    * transaction log.
-    *
-    * Lineage rule: this maintainer merges only over APPEND lineage;
-    * when the base lineage since the last processed version is not
-    * append-only (an overwrite, compaction or MOR delete intervened) it
-    * recomputes the head in full — correct for any lineage, priced at
-    * one base scan, and bit-identical to a fresh rollup, which is what
-    * its callers compare against. [[maintainSumViewCdc]] merges on every
-    * lineage instead; its incrementally merged double sums drift from a
-    * recompute in the last bits, so the two stay separate entry points.
-    * Returns the base version the view now reflects.
-    * 100 TB: the common path scans O(new bytes) + O(groups) state; the
-    * view table is O(groups) rows per version and vacuums like any
-    * snapshot table.
+    * mergeable-partial discipline driven by the change feed: a per-group
+    * (sum, count) rollup of `valCol` by `groupCol`, advanced through
+    * [[maintainView]] (rows stamped `base_version`, header `mvBase`).
+    * It merges only over APPEND lineage; after an overwrite, compaction
+    * or MOR delete it recomputes the head — one base scan, bit-identical
+    * to a fresh rollup, which its callers compare against.
+    * [[maintainSumViewCdc]] merges on every lineage instead; its merged
+    * double sums drift from a recompute in the last bits, so the two
+    * stay separate entry points. Returns the base version reflected.
+    * 100 TB: the common path scans O(new bytes) + O(groups) state.
     */
   def maintainSumView(spark: org.apache.spark.sql.SparkSession,
       baseRoot: String, viewRoot: String,
@@ -3818,91 +3869,76 @@ object Layout {
     maintainSum(spark, baseRoot, viewRoot, groupCol, valCol, retract = false)
 
   /** [[maintainSumView]] WITH RETRACTIONS — sum/count are SIGNED-
-    * mergeable, so this maintainer merges the op-typed change feed on
-    * every lineage: deletes and update preimages enter as NEGATIVE
-    * partials, and the MOR fast path inside [[snapshotChanges]] prices a
-    * delete at O(scoped files). A deletion request against a 100 TB
-    * corpus thus propagates to the standing rollup in O(scoped +
-    * groups), the property privacy-purge SLAs actually need. (min/max-
-    * style aggs are NOT subtractable — they keep the full-recompute
-    * maintainer; this being a separate entry point makes that
-    * distinction explicit rather than silent.) Groups whose count
-    * reaches zero DROP from the view, exactly as a full recompute would
-    * produce. True overwrite lineage (compaction, INSERT OVERWRITE)
-    * pays the row-level diff inside [[snapshotChanges]] — correct for
-    * every history. Same crash-atomic contract as [[maintainSumView]].
+    * mergeable, so this merges the op-typed change feed on every
+    * lineage: deletes and update preimages enter as NEGATIVE partials,
+    * and the MOR fast path inside [[snapshotChanges]] prices a delete at
+    * O(scoped files), so a privacy purge reaches the standing rollup in
+    * O(scoped + groups). (min/max aggs are not subtractable, hence a
+    * separate entry point.) Groups whose count reaches zero DROP, as a
+    * recompute would; true overwrite lineage pays the row-level diff
+    * inside [[snapshotChanges]]. Same [[maintainView]] contract.
     */
   def maintainSumViewCdc(spark: org.apache.spark.sql.SparkSession,
       baseRoot: String, viewRoot: String,
       groupCol: String, valCol: String): Int =
     maintainSum(spark, baseRoot, viewRoot, groupCol, valCol, retract = true)
 
-  /** The body of both sum-view maintainers: merge the signed change
-    * feed into the view's partials when `retract` is set or the lineage
-    * is append-only, recompute the head otherwise. Layout: sum_v (NULL
-    * iff the group has no non-null values — SQL SUM semantics),
-    * n = COUNT(*), nn = COUNT(valCol). nn is the AVG denominator (AVG
-    * divides by the NON-NULL count) and the guard that keeps sum_v
-    * NULL-preserving through merges.
+  /** The fold and recompute of both sum-view maintainers: merge the
+    * signed change feed into the view's partials (on every lineage when
+    * `retract` is set, on append lineage otherwise), recompute the head
+    * otherwise. Layout: sum_v (NULL iff the group has no non-null values
+    * — SQL SUM semantics), n = COUNT(*), nn = COUNT(valCol). nn is the
+    * AVG denominator (AVG divides by the NON-NULL count) and the guard
+    * that keeps sum_v NULL-preserving through merges.
     */
   private def maintainSum(spark: org.apache.spark.sql.SparkSession,
       baseRoot: String, viewRoot: String, groupCol: String, valCol: String,
-      retract: Boolean): Int = {
-    val baseVs = snapshotVersions(spark, baseRoot)
-    require(baseVs.nonEmpty, s"no base snapshots at $baseRoot")
-    val head = baseVs.last
-    val processed = viewProcessedVersion(spark, viewRoot)
-    if (processed == head) return head
-    // ONE view read serves the legacy check and the merge's old state.
-    // LEGACY MIGRATION: a view committed before the nn column existed
-    // cannot merge (its select of nn would crash) — one full recompute
-    // migrates it to the current layout
-    val viewDf =
-      if (processed > 0) Some(readSnapshot(spark, viewRoot)) else None
-    val canMerge = viewDf.exists(_.columns.contains("nn")) &&
-      (retract || snapshotAppendLineage(spark, baseRoot, processed, head))
-    val newState =
-      if (!canMerge)
-        readSnapshot(spark, baseRoot, head)
-          .groupBy(col(groupCol))
-          .agg(sum(col(valCol).cast("double")).as("sum_v"),
-            count(lit(1)).as("n"), count(col(valCol)).as("nn"))
-      else {
-        // additions are {insert, update_postimage}, retractions
-        // {delete, update_preimage} — on append lineage every row adds
-        val sign = when(col("_change_type")
-            .isin("insert", "update_postimage"), lit(1))
-          .otherwise(lit(-1))
-        val deltaAgg = snapshotChangesUnion(spark, baseRoot, processed, head)
-          .groupBy(col(groupCol))
-          .agg(sum(col(valCol).cast("double") * sign).as("d_sum"),
-            sum(sign.cast("long")).as("d_n"),
-            sum(when(col(valCol).isNotNull, sign).otherwise(lit(0))
-              .cast("long")).as("d_nn"))
-        val old = viewDf.get
-          .select(col(groupCol), col("sum_v").as("old_sum"),
-            col("n").as("old_n"), col("nn").as("old_nn"))
-        // q80's combine: full-outer on the group key, coalesce-add the
-        // MERGEABLE partials. sum_v stays NULL when the merged non-null
-        // count is 0 — an all-NULL group must answer SUM with NULL,
-        // never a coalesced 0.
-        val mergedNn = coalesce(col("old_nn"), lit(0L)) +
-          coalesce(col("d_nn"), lit(0L))
-        old.join(deltaAgg, Seq(groupCol), "full_outer")
-          .select(col(groupCol),
-            when(mergedNn === 0L, lit(null).cast("double"))
-              .otherwise(coalesce(col("old_sum"), lit(0.0)) +
-                coalesce(col("d_sum"), lit(0.0))).as("sum_v"),
-            (coalesce(col("old_n"), lit(0L)) +
-              coalesce(col("d_n"), lit(0L))).as("n"),
-            mergedNn.as("nn"))
-          .filter(col("n") > 0)
-      }
-    snapshotOverwrite(spark, viewRoot,
-      newState.withColumn("base_version", lit(head)),
-      extraHeader = Map("mvBase" -> head.toString))
-    head
-  }
+      retract: Boolean): Int =
+    maintainView(spark, Seq(baseRoot), viewRoot, Seq("base_version"),
+      appendOnly = !retract)(
+      recompute = heads => readSnapshot(spark, baseRoot, heads.head)
+        .groupBy(col(groupCol))
+        .agg(sum(col(valCol).cast("double")).as("sum_v"),
+          count(lit(1)).as("n"), count(col(valCol)).as("nn")),
+      fold = (processed, heads) => {
+        // LEGACY MIGRATION: a view committed before the nn column existed
+        // cannot merge (its select of nn would crash) — the fold declines
+        // and one full recompute migrates it to the current layout
+        val viewDf = readSnapshot(spark, viewRoot)
+        if (!viewDf.columns.contains("nn")) None
+        else {
+          // additions are {insert, update_postimage}, retractions
+          // {delete, update_preimage} — on append lineage every row adds
+          val sign = when(col("_change_type")
+              .isin("insert", "update_postimage"), lit(1))
+            .otherwise(lit(-1))
+          val deltaAgg = snapshotChangesUnion(spark, baseRoot,
+              processed.head, heads.head)
+            .groupBy(col(groupCol))
+            .agg(sum(col(valCol).cast("double") * sign).as("d_sum"),
+              sum(sign.cast("long")).as("d_n"),
+              sum(when(col(valCol).isNotNull, sign).otherwise(lit(0))
+                .cast("long")).as("d_nn"))
+          val old = viewDf
+            .select(col(groupCol), col("sum_v").as("old_sum"),
+              col("n").as("old_n"), col("nn").as("old_nn"))
+          // q80's combine: full-outer on the group key, coalesce-add the
+          // MERGEABLE partials. sum_v stays NULL when the merged non-null
+          // count is 0 — an all-NULL group must answer SUM with NULL,
+          // never a coalesced 0.
+          val mergedNn = coalesce(col("old_nn"), lit(0L)) +
+            coalesce(col("d_nn"), lit(0L))
+          Some(ViewUpdate(old.join(deltaAgg, Seq(groupCol), "full_outer")
+            .select(col(groupCol),
+              when(mergedNn === 0L, lit(null).cast("double"))
+                .otherwise(coalesce(col("old_sum"), lit(0.0)) +
+                  coalesce(col("d_sum"), lit(0.0))).as("sum_v"),
+              (coalesce(col("old_n"), lit(0L)) +
+                coalesce(col("d_n"), lit(0L))).as("n"),
+              mergedNn.as("nn"))
+            .filter(col("n") > 0), append = false))
+        }
+      }).head
 
   /** COPY-ON-WRITE MERGE AS A SNAPSHOT COMMIT — `MERGE INTO` on the
     * versioned table, the targeted-file-rewrite plan every incremental
@@ -4560,12 +4596,9 @@ object Layout {
     * disjoint multiset partition, so the view appends ΔV and never
     * retracts.
     *
-    * The view is itself a snapshot table: one maintenance run is ONE
-    * append commit whose rows carry (base_l, base_r) — the same
-    * crash-atomic, re-runnable contract as [[maintainSumView]]. Broken
-    * lineage on EITHER side (overwrite/compaction/MOR delete — removals
-    * can't be handled by an append-only view) falls back to a full
-    * recompute published as an overwrite. Requires disjoint non-key
+    * Runs through [[maintainView]] (rows stamped (base_l, base_r),
+    * header `mvBase=leftHead,rightHead`); broken lineage on EITHER side
+    * recomputes the join as an overwrite. Requires disjoint non-key
     * schemas. Returns (leftHead, rightHead) now reflected.
     * 100 TB: the common path's big side is the time-travel read, which
     * shuffles once on the join key; with both tables bucketed on the key
@@ -4574,54 +4607,29 @@ object Layout {
   def maintainJoinView(spark: org.apache.spark.sql.SparkSession,
       leftRoot: String, rightRoot: String, viewRoot: String,
       key: String): (Int, Int) = {
-    import org.apache.spark.sql.functions._
-    val lHead = snapshotVersions(spark, leftRoot).lastOption.getOrElse(
-      throw new IllegalArgumentException(s"no snapshots at $leftRoot"))
-    val rHead = snapshotVersions(spark, rightRoot).lastOption.getOrElse(
-      throw new IllegalArgumentException(s"no snapshots at $rightRoot"))
-    val viewVs = snapshotVersions(spark, viewRoot)
-    val (pL, pR) =
-      if (viewVs.isEmpty) (0, 0)
-      else {
-        val r = readSnapshot(spark, viewRoot)
-          .agg(max(col("base_l")), max(col("base_r"))).head()
-        (r.getInt(0), r.getInt(1))
-      }
-    if (pL == lHead && pR == rHead) return (lHead, rHead)
-    val stamp = (df: DataFrame) => df
-      .withColumn("base_l", lit(lHead)).withColumn("base_r", lit(rHead))
-    if (snapshotAppendLineage(spark, leftRoot, pL, lHead) &&
-        snapshotAppendLineage(spark, rightRoot, pR, rHead)) {
-      val dL = changeInserts(snapshotChangesUnion(spark, leftRoot, pL, lHead))
-      val dR = changeInserts(snapshotChangesUnion(spark, rightRoot, pR, rHead))
-      val rNew = readSnapshot(spark, rightRoot, rHead)
-      val lOld = readSnapshot(spark, leftRoot, pL) // time travel IS L_old
-      val dV = dL.join(rNew, Seq(key))
-        .unionByName(lOld.join(dR, Seq(key)))
-      snapshotAppend(spark, viewRoot, stamp(dV))
-    } else {
-      val full = readSnapshot(spark, leftRoot, lHead)
-        .join(readSnapshot(spark, rightRoot, rHead), Seq(key))
-      snapshotOverwrite(spark, viewRoot, stamp(full))
-    }
-    (lHead, rHead)
+    val heads = maintainView(spark, Seq(leftRoot, rightRoot), viewRoot,
+      Seq("base_l", "base_r"), appendOnly = true)(
+      recompute = hs => readSnapshot(spark, leftRoot, hs(0))
+        .join(readSnapshot(spark, rightRoot, hs(1)), Seq(key)),
+      fold = (ps, hs) => {
+        val dL = changeInserts(snapshotChangesUnion(spark, leftRoot, ps(0), hs(0)))
+        val dR = changeInserts(snapshotChangesUnion(spark, rightRoot, ps(1), hs(1)))
+        val rNew = readSnapshot(spark, rightRoot, hs(1))
+        val lOld = readSnapshot(spark, leftRoot, ps(0)) // time travel IS L_old
+        Some(ViewUpdate(dL.join(rNew, Seq(key))
+          .unionByName(lOld.join(dR, Seq(key))), append = true))
+      })
+    (heads(0), heads(1))
   }
 
-  /** ST31: STREAMING MAINTAINED VIEW — the end-to-end incremental
-    * pipeline every lakehouse deployment actually runs, composed from
-    * parts that are each exactly-once: stream → versioned base table
+  /** ST31: STREAMING MAINTAINED VIEW — stream → versioned base table
     * ([[snapshotAppendIdempotent]], ST29's idempotent epoch commit) →
-    * incrementally maintained rollup ([[maintainSumView]], one
-    * crash-atomic view commit per advance). The composition needs NO new
-    * transaction machinery: a replayed epoch no-ops at the base commit,
-    * and the maintainer is deterministic from (view state, base CDF) —
-    * if it already reflects the head it publishes nothing, if its last
-    * run crashed pre-commit it recomputes the identical commit. So the
-    * view is exactly-once end to end under any crash/replay interleaving
-    * (spec replays an epoch body and re-runs maintenance cold).
-    * 100 TB: per trigger O(batch) append + O(batch + groups) maintenance
-    * — the view lags the stream by at most one trigger, at incremental
-    * price; a nightly full rollup touches the whole table instead.
+    * incrementally maintained rollup ([[maintainSumView]]), composed from
+    * parts that are each exactly-once, with NO new transaction machinery:
+    * a replayed epoch no-ops at the base commit, and [[maintainView]]
+    * publishes nothing for a view that reflects the head and the same
+    * commit after a crash before its commit.
+    * 100 TB: per trigger O(batch) append + O(batch + groups) maintenance.
     */
   def streamingMaintainedView(spark: org.apache.spark.sql.SparkSession,
       inDir: String, schema: org.apache.spark.sql.types.StructType,
@@ -4631,14 +4639,10 @@ object Layout {
       s => { maintainSumView(s, baseRoot, viewRoot, groupCol, valCol); () })
 
   /** The MAINTAINER-GENERIC form of [[streamingMaintainedView]]: stream →
-    * idempotent epoch commit → `maintain` once per trigger. Any
-    * deterministic, idempotent maintainer keyed on the base's versions
-    * rides it unchanged — the sum view above, the dedup registry (ST32,
-    * `Dedup.maintainDedupRegistry`), the ANN index
-    * (`Similarity.maintainAnnIndex`) — because the exactly-once argument
-    * never mentions the maintainer's semantics: replays no-op at the base
-    * commit, and a maintainer that already reflects the head publishes
-    * nothing.
+    * idempotent epoch commit → `maintain` once per trigger. Every
+    * [[maintainView]] maintainer rides it unchanged (the dedup registry
+    * is ST32): the exactly-once argument never mentions the maintainer's
+    * semantics.
     */
   def streamingMaintained(spark: org.apache.spark.sql.SparkSession,
       inDir: String, schema: org.apache.spark.sql.types.StructType,

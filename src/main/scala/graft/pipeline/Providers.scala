@@ -149,26 +149,68 @@ final class MemoryCacheSink(acceptTypes: Set[String]) extends DataSink {
   }
 }
 
-/** Parquet directory sink/store: `put` writes <base>/<type>/<query-fp>,
-  * `lookup` serves it back if present — a durable cache tier. Entries are
-  * keyed by a deterministic fingerprint of the query params so a result
-  * cached for one query is never served for another.
+/** Parquet directory sink/store: `put` writes <base>/<type>/<query-key>,
+  * `lookup` serves it back if present — a durable cache tier. The key
+  * hashes an INJECTIVE encoding of the query (sorted keys, each key and
+  * value length-prefixed, each value tagged with its class), so
+  * `a -> "1&b=2"` never meets `(a -> "1", b -> "2")`, nor 1 meets "1"; a
+  * value with no stable encoding (an array, say) is refused with a
+  * [[QueryValidationError]], never keyed by its identity. A put writes a
+  * hidden sibling and renames it into place: a put that fails mid-write
+  * leaves the previous entry (or none), never a half-written one.
   */
 final class ParquetDirSink(baseDir: String, acceptTypes: Set[String]) extends DataSink {
+  import org.apache.hadoop.fs.Path
+
   private def fp(query: Query): String = {
+    def field(s: String) = s"${s.length}:$s"
     val canonical = query.params.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"$k=$v" }.mkString("&")
-    java.security.MessageDigest.getInstance("MD5")
+      .map { case (k, v) => field(k) + field(tagged(k, v)) }.mkString
+    java.security.MessageDigest.getInstance("SHA-256")
       .digest(canonical.getBytes("UTF-8")).map("%02x".format(_)).mkString
   }
+
+  /** The value's class name (never holds ':') and its text. */
+  private def tagged(key: String, v: Any): String = v match {
+    case null => "null"
+    case _: String | _: Boolean | _: Byte | _: Short | _: Int | _: Long |
+        _: Float | _: Double | _: Char | _: BigDecimal | _: BigInt |
+        _: java.math.BigDecimal | _: java.math.BigInteger |
+        _: java.time.LocalDate | _: java.time.Instant =>
+      s"${v.getClass.getName}:$v"
+    case x => throw new QueryValidationError(
+      s"query key '$key' holds a ${x.getClass.getName}, which has no stable " +
+        "encoding to key a durable cache entry by")
+  }
+
+  private def entry(dataType: String, query: Query, spark: SparkSession) = {
+    val p = new Path(s"$baseDir/$dataType/${fp(query)}")
+    (p, p.getFileSystem(spark.sparkContext.hadoopConfiguration))
+  }
+
   override def accepts: Set[String] = acceptTypes
   override def put(dataType: String, df: DataFrame): Unit =
     put(dataType, df, Query.empty)
-  override def put(dataType: String, df: DataFrame, query: Query): Unit =
-    df.write.mode("overwrite").parquet(s"$baseDir/$dataType/${fp(query)}")
+  override def put(dataType: String, df: DataFrame, query: Query): Unit = {
+    val (target, fs) = entry(dataType, query, df.sparkSession)
+    // '.'-prefixed siblings: never listed as data, never served
+    def sibling(tag: String) = new Path(target.getParent,
+      s".${target.getName}.${java.util.UUID.randomUUID()}.$tag")
+    val staged = sibling("staged")
+    try {
+      df.write.mode("error").parquet(staged.toString)
+      val old = sibling("old")
+      val replacing = fs.exists(target) && fs.rename(target, old)
+      if (!fs.rename(staged, target)) {
+        if (replacing) fs.rename(old, target)
+        throw new java.io.IOException(s"could not publish cache entry $target")
+      }
+      if (replacing) fs.delete(old, true)
+    } finally fs.delete(staged, true) // a failed or published put leaves no stage
+  }
   override def lookup(dataType: String, query: Query, spark: SparkSession): Option[DataFrame] = {
-    val p = java.nio.file.Paths.get(baseDir, dataType, fp(query))
-    if (java.nio.file.Files.exists(p)) Some(spark.read.parquet(p.toString)) else None
+    val (p, fs) = entry(dataType, query, spark)
+    if (fs.exists(p)) Some(spark.read.parquet(p.toString)) else None
   }
 }
 

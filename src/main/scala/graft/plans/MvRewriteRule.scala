@@ -26,9 +26,9 @@ import graft.sources.{GraftScan, GraftTable}
   * a full fact scan and reading a few thousand rollup rows.
   *
   * SOUND BY REFUSAL: the rewrite fires only when
-  *  - the scan is the base table's HEAD and the view's recorded
-  *    `base_version` equals it (a stale view never answers — freshness
-  *    is the maintenance cadence's contract, checked here per query);
+  *  - the scan is the base table's HEAD and the base version the view
+  *    reflects (`mvBase`, [[Layout.viewProcessedVersion]]) equals it (a
+  *    stale view never answers — checked here per query, with no job);
   *  - every aggregate is one of the mergeable forms above on exactly
   *    the maintained value column (DOUBLE-typed sums — the view stores
   *    double partials);

@@ -190,16 +190,15 @@ object Similarity {
       .select(col("vec_id"), col("v")).collect()
       .map(r => r.getLong(0).toInt -> r.getSeq[Double](1).toArray).toSeq
 
-  def s3AnnIvf(spark: SparkSession, sfDir: String): DataFrame = {
-    val e = Tables(spark, sfDir, "embeddings")
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      .withColumn("norm", sqrt(dot(col("v"), col("v"))))
-    val cents = stubCentroids(e)
-    val assign = e.withColumn("cid", assignCid(col("v"), cents))
-      .select(col("vec_id"), col("v"), col("norm"), col("cid"))
+  /** The exact-rerank tail of the IVF searches: each query (vec_id <
+    * NQueries) probes its `nProbe` nearest lists of `assign` and keeps
+    * its top-K neighbors by rounded cosine.
+    */
+  private def ivfTopK(e: DataFrame, assign: DataFrame,
+      cents: Seq[(Int, Array[Double])], nProbe: Int): DataFrame = {
     val probes = e.filter(col("vec_id") < NQueries)
       .select(col("vec_id").as("q_id"), col("v").as("qv"), col("norm").as("qnorm"))
-      .withColumn("cid", explode(probeCids(col("qv"), cents, NProbe)))
+      .withColumn("cid", explode(probeCids(col("qv"), cents, nProbe)))
     val wRank = Window.partitionBy(col("q_id"))
       .orderBy(col("cos").desc, col("vec_id"))
     probes.join(assign, Seq("cid"))
@@ -210,6 +209,16 @@ object Similarity {
       .filter(col("rank") <= TopK)
       .select(col("q_id"), col("rank"), col("vec_id").as("neighbor_id"), col("cos"))
       .orderBy(col("q_id"), col("rank"))
+  }
+
+  def s3AnnIvf(spark: SparkSession, sfDir: String): DataFrame = {
+    val e = Tables(spark, sfDir, "embeddings")
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+      .withColumn("norm", sqrt(dot(col("v"), col("v"))))
+    val cents = stubCentroids(e)
+    val assign = e.withColumn("cid", assignCid(col("v"), cents))
+      .select(col("vec_id"), col("v"), col("norm"), col("cid"))
+    ivfTopK(e, assign, cents, NProbe)
   }
 
   val s3Sql: String =
@@ -400,19 +409,7 @@ object Similarity {
     val centSeq = cents.zipWithIndex.map { case (v, i) => (i, v) }.toSeq
     val assign = e.withColumn("cid", assignCid(col("v"), centSeq))
       .select(col("vec_id"), col("v"), col("norm"), col("cid"))
-    val probes = e.filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("norm").as("qnorm"))
-      .withColumn("cid", explode(probeCids(col("qv"), centSeq, NProbe)))
-    val wRank = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc, col("vec_id"))
-    probes.join(assign, Seq("cid"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("cos",
-        round(dot(col("qv"), col("v")) / (col("qnorm") * col("norm")), 9))
-      .withColumn("rank", row_number().over(wRank))
-      .filter(col("rank") <= TopK)
-      .select(col("q_id"), col("rank"), col("vec_id").as("neighbor_id"), col("cos"))
-      .orderBy(col("q_id"), col("rank"))
+    ivfTopK(e, assign, centSeq, NProbe)
   }
 
   // ---------------------------------------------------------------- s4
@@ -1044,6 +1041,8 @@ object Similarity {
     * Search runs over the view exactly as over a hand-built index; the
     * oracle is s8's FULL-REBUILD SQL verbatim — maintained ≡ rebuilt,
     * row for row, after three interleaved appends.
+    * Runs through [[graft.ops.Layout.maintainView]]: one index commit
+    * per advance, rows stamped `base_version`, header `mvBase`.
     * 100 TB: the nightly job reads O(new bytes), the index table
     * vacuums/compacts like any snapshot table, and crash-atomicity is
     * the manifest commit — no bespoke index-build orchestration.
@@ -1053,26 +1052,20 @@ object Similarity {
   def maintainAnnIndex(spark: SparkSession, baseRoot: String,
       indexRoot: String): Int = {
     import graft.ops.Layout
-    val baseVs = Layout.snapshotVersions(spark, baseRoot)
-    require(baseVs.nonEmpty, s"no base snapshots at $baseRoot")
-    val head = baseVs.last
-    val processed = Layout.viewProcessedVersion(spark, indexRoot)
-    if (processed == head) return head
     // frozen model: the coarse seeds are v1 rows by contract
-    val cents = stubCentroids(Layout.readSnapshot(spark, baseRoot, 1))
-    require(cents.size == NLists,
-      s"v1 must carry the $NLists coarse seed vectors (got ${cents.size})")
-    if (Layout.snapshotAppendLineage(spark, baseRoot, processed, head)) {
-      val delta = Layout.changeInserts(
-        Layout.snapshotChangesUnion(spark, baseRoot, processed, head))
-      Layout.snapshotAppend(spark, indexRoot,
-        residualEncode(delta, cents).withColumn("base_version", lit(head)))
-    } else {
-      Layout.snapshotOverwrite(spark, indexRoot,
-        residualEncode(Layout.readSnapshot(spark, baseRoot, head), cents)
-          .withColumn("base_version", lit(head)))
+    lazy val cents = {
+      val cs = stubCentroids(Layout.readSnapshot(spark, baseRoot, 1))
+      require(cs.size == NLists,
+        s"v1 must carry the $NLists coarse seed vectors (got ${cs.size})")
+      cs
     }
-    head
+    Layout.maintainView(spark, Seq(baseRoot), indexRoot, Seq("base_version"),
+      appendOnly = true)(
+      recompute = heads =>
+        residualEncode(Layout.readSnapshot(spark, baseRoot, heads.head), cents),
+      fold = (processed, heads) => Some(Layout.ViewUpdate(residualEncode(
+        Layout.changeInserts(Layout.snapshotChangesUnion(
+          spark, baseRoot, processed.head, heads.head)), cents), append = true))).head
   }
 
   def s19AnnIndexView(spark: SparkSession, sfDir: String): DataFrame = {
@@ -1086,15 +1079,12 @@ object Similarity {
           .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
         // v1 carries the model seeds (vec_id < NLists) plus a third of
         // the corpus; later appends are pure data
-        Layout.snapshotAppend(spark, baseRoot,
-          e.filter(col("vec_id") < NLists || col("vec_id") % 3 === 0))
-        maintainAnnIndex(spark, baseRoot, indexRoot)
-        Layout.snapshotAppend(spark, baseRoot,
-          e.filter(col("vec_id") >= NLists && col("vec_id") % 3 === 1))
-        maintainAnnIndex(spark, baseRoot, indexRoot)
-        Layout.snapshotAppend(spark, baseRoot,
-          e.filter(col("vec_id") >= NLists && col("vec_id") % 3 === 2))
-        maintainAnnIndex(spark, baseRoot, indexRoot)
+        Seq(col("vec_id") < NLists || col("vec_id") % 3 === 0,
+          col("vec_id") >= NLists && col("vec_id") % 3 === 1,
+          col("vec_id") >= NLists && col("vec_id") % 3 === 2).foreach { slice =>
+          Layout.snapshotAppend(spark, baseRoot, e.filter(slice))
+          maintainAnnIndex(spark, baseRoot, indexRoot)
+        }
       }
     }
     val corpus = Layout.readSnapshot(spark, baseRoot)
@@ -1137,19 +1127,7 @@ object Similarity {
     val assign = e.filter(col("label") < S13LabelMax)
       .withColumn("cid", assignCid(col("v"), cents))
       .select(col("vec_id"), col("v"), col("norm"), col("cid"))
-    val probes = e.filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("norm").as("qnorm"))
-      .withColumn("cid", explode(probeCids(col("qv"), cents, NProbeFiltered)))
-    val wRank = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc, col("vec_id"))
-    probes.join(assign, Seq("cid"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("cos",
-        round(dot(col("qv"), col("v")) / (col("qnorm") * col("norm")), 9))
-      .withColumn("rank", row_number().over(wRank))
-      .filter(col("rank") <= TopK)
-      .select(col("q_id"), col("rank"), col("vec_id").as("neighbor_id"), col("cos"))
-      .orderBy(col("q_id"), col("rank"))
+    ivfTopK(e, assign, cents, NProbeFiltered)
   }
 
   val s13Sql: String =

@@ -783,7 +783,7 @@ case class GraftMetaTable(root: String, kind: String, identName: String)
             override def sqlContext: SQLContext = context
             override def schema: StructType = outSchema
             override def buildScan(): org.apache.spark.rdd.RDD[Row] = {
-              import org.apache.spark.sql.functions.{col, lit}
+              import org.apache.spark.sql.functions.lit
               val stamps = Layout.snapshotTimestamps(tbl.spark, tbl.root)
               val all = stamps.map(_._1)
               // the walk starts at the last version below the range and
@@ -795,16 +795,9 @@ case class GraftMetaTable(root: String, kind: String, identName: String)
                 case (v, ch) => ch.withColumn("_graft_version", lit(v))
                   .withColumn("_commit_ts", lit(ts(v)))
               }
-              val unioned = deltas
-                .reduceOption(_.unionByName(_, allowMissingColumns = true))
-                .getOrElse(tbl.spark.createDataFrame(
-                  tbl.spark.sparkContext.emptyRDD[Row], outSchema))
-              // project (and null-fill) to the declared schema: additive
-              // evolution mid-history must not change this table's shape
-              unioned.select(outSchema.fields.toIndexedSeq.map { f =>
-                (if (unioned.columns.contains(f.name)) col(s"`${f.name}`")
-                 else lit(null)).cast(f.dataType).as(f.name)
-              }: _*).rdd
+              // additive evolution mid-history must not change this
+              // table's declared shape
+              Layout.unionToSchema(tbl.spark, deltas, outSchema).rdd
             }
           }.asInstanceOf[T]
       }

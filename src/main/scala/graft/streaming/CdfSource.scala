@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SQLContext}
 import org.apache.spark.sql.execution.streaming.{Offset, Source}
 import org.apache.spark.sql.execution.streaming.runtime.LongOffset
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.sources.{DataSourceRegister, StreamSourceProvider}
 import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
@@ -198,20 +198,10 @@ class CdfSource(sqlContext: SQLContext, root: String,
       case (v, ch) => (if (cdc) ch else Layout.changeInserts(ch))
         .withColumn(CdfSource.VersionCol, lit(v))
     }
-    val dataCols = declaredSchema.fields
-    val unioned =
-      if (deltas.isEmpty)
-        // engine contract: getBatch can be called with an empty
-        // interval on recovery — answer with an empty, schema-exact frame
-        spark.createDataFrame(spark.sparkContext.emptyRDD[
-          org.apache.spark.sql.Row], declaredSchema)
-      else deltas.reduce(_.unionByName(_, allowMissingColumns = true))
-    // project (and null-fill) to the PINNED schema: additive evolution
-    // mid-stream widens the union, not this stream's contract
-    val projected = unioned.select(dataCols.map { f =>
-      (if (unioned.columns.contains(f.name)) col(f.name)
-       else lit(null)).cast(f.dataType).as(f.name)
-    }.toSeq: _*)
+    // an empty interval (getBatch on recovery) answers an empty frame;
+    // additive evolution mid-stream widens the union, not this stream's
+    // PINNED schema
+    val projected = Layout.unionToSchema(spark, deltas, declaredSchema)
     // the engine asserts isStreaming on the returned frame
     org.apache.spark.sql.GraftDatasetBridge.streamingDataFrame(
       spark, projected)

@@ -228,6 +228,48 @@ class PipelineSpec extends GraftSuite {
     val res = p.getMany("orders", Seq(Query.of("a" -> 1), Query.of("a" -> 2)))
     assert(res.size === 2 && calls() === 2)
   }
+
+  test("durable store keys are injective: spelled-out pairs and retyped values miss each other") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-inj").toString
+    val store = new ParquetDirSink(tmp, Set("t"))
+    val rows = spark.range(3).toDF("id")
+    store.put("t", rows, Query.of("a" -> "1&b=2"))
+    assert(store.lookup("t", Query.of("a" -> "1", "b" -> "2"), spark).isEmpty,
+      "a value spelling another query's pairs must MISS")
+    assert(store.lookup("t", Query.of("a" -> "1&b=2"), spark).isDefined)
+    store.put("t", rows, Query.of("n" -> 1))
+    assert(store.lookup("t", Query.of("n" -> "1"), spark).isEmpty,
+      "the number 1 and the string \"1\" must MISS each other")
+    assert(store.lookup("t", Query.of("n" -> 1), spark).isDefined)
+    // no stable encoding: refused, never keyed by identity
+    intercept[QueryValidationError](
+      store.lookup("t", Query.of("ids" -> Array(1, 2)), spark))
+  }
+
+  test("a put that fails mid-write leaves the previous entry; a get then falls through to the source") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-atomic").toString
+    val store = new ParquetDirSink(tmp, Set("t"))
+    val good = spark.range(10).toDF("id")
+    // one task of four throws after the others wrote their files
+    val failing = spark.range(0, 100, 1, 4).select(
+      when(col("id") === 57L, raise_error(lit("mid-write failure")))
+        .otherwise(col("id")).as("id"))
+    val (q1, q2) = (Query.of("k" -> 1), Query.of("k" -> 2))
+    store.put("t", good, q1)
+    intercept[Exception](store.put("t", failing, q1))
+    assert(store.lookup("t", q1, spark)
+      .map(_.collect().map(_.getLong(0)).sorted.toSeq) === Some(0L until 10L),
+      "a failed put must leave the previous entry as it was")
+    intercept[Exception](store.put("t", failing, q2))
+    assert(store.lookup("t", q2, spark).isEmpty, "a half-written entry is a miss")
+    assert(new java.io.File(s"$tmp/t").list().forall(n => !n.startsWith(".")),
+      "a failed put leaves no staged sibling behind")
+    val (src, calls) = countingSource(Map("t" -> good))
+    val p = new DataPipeline(Seq(Right(store), Left(src)))
+    assert(p.get("t", q2).count() === 10 && calls() === 1)
+    assert(p.get("t", q2).count() === 10 && calls() === 1,
+      "the source's answer is published for the next get")
+  }
 }
 
 /** P7 partitioned writes: a sink that partitions by a column, pruned reads. */
