@@ -7,33 +7,36 @@ import graft.functions.zvalue
 import graft.ops.Pin.Pinned
 
 /** A snapshot commit lost its version claim to a concurrent writer —
-  * the OPTIMISTIC-CONCURRENCY signal. Appends catch it internally and
-  * REBASE (their new files commute with any interleaved commit).
-  * Read-dependent committers (merge, compaction) resolve LOGICALLY:
-  * when the interleaved commit is a pure append disjoint from their
-  * read set they rebase too (both commits land); an overlapping
-  * interleaving surfaces the typed
-  * [[ConcurrentWriteConflictException]] instead, because silently
-  * rebasing would drop the winner's effect — the caller re-runs
-  * against the new head ([[Layout.withCommitRetry]]'s slot). A raw
-  * `CommitConflictException` still surfaces when retries exhaust or
-  * for committers with no rebase path (overwrite). Subclasses
-  * `IllegalStateException` so pre-existing handlers keyed on the
-  * message keep working.
+  * the OPTIMISTIC-CONCURRENCY signal. The rebasing committers (append,
+  * ANALYZE, partition overwrite, both compactions, MERGE) share ONE
+  * claim–conflict–rebase loop, [[Layout.commitRebasing]]: a lost claim
+  * whose interleaving commutes rebases internally (both commits land);
+  * one that does not surfaces the typed
+  * [[ConcurrentWriteConflictException]]. This raw exception still
+  * surfaces when that loop's `spark.graft.commit.maxRetries` exhaust,
+  * when an append's staged files lost their column mapping to a
+  * concurrent rename/drop, and from every committer with no rebase
+  * path: overwrite, restore, both MOR deletes (equality and position),
+  * clone (and the schema/property edits). [[Layout.withCommitRetry]]
+  * re-runs the whole operation on it. Subclasses
+  * `IllegalStateException` so pre-existing handlers keep working.
   */
 class CommitConflictException(val root: String, val version: Int,
     detail: String = "a concurrent writer claimed this version first")
     extends IllegalStateException(
       s"snapshot commit lost the race for v$version at $root: $detail")
 
-/** A read-dependent commit (merge, compaction) lost its claim AND the
-  * interleaved commit's changes OVERLAP its read set — the losing
-  * output was computed from state the winner changed, so a rebase
-  * would be silently wrong. DISJOINT interleavings (pure appends whose
-  * rows this operation would not have read) never surface this: they
-  * rebase internally and both commits land. The typed error tells the
-  * caller the one honest remedy: re-run the operation against the new
-  * head.
+/** A read-dependent commit (ANALYZE, partition overwrite, compaction,
+  * MERGE) lost its claim AND the interleaved commit's changes OVERLAP
+  * its read set — the losing output was computed from state the winner
+  * changed, so a rebase would be silently wrong. Raised by the one
+  * rebase loop, [[Layout.commitRebasing]], naming the operation; DISJOINT
+  * interleavings (pure appends whose rows this operation would not have
+  * read) never surface this: they rebase and both commits land.
+  * Committers with no rebase path (overwrite, restore, both MOR
+  * deletes, clone) never raise it — they lose with the raw
+  * [[CommitConflictException]]. The typed error tells the caller the
+  * one honest remedy: re-run the operation against the new head.
   */
 class ConcurrentWriteConflictException(val root: String, val base: Int,
     val head: Int, val op: String, why: String)
@@ -1328,6 +1331,81 @@ object Layout {
       .map(_.getPath.toString).toSeq.sorted
   }
 
+  /** One commit's content: carried segment refs, inline entries, header
+    * and delete refs — what [[commitRebasing]]'s `build` returns. */
+  private case class Commit(segs: Seq[String], entries: Seq[FileEntry],
+      header: Map[String, String], deletes: Seq[String] = Nil)
+
+  /** THE OPTIMISTIC COMMIT every rebasing committer (append, ANALYZE,
+    * partition overwrite, both compactions, MERGE) runs: claim `cur + 1`
+    * for `build(cur, added)`, starting at `cur = base`. A lost claim
+    * re-reads the head and asks `admit(cur, head)` what the interleaving
+    * added: `Right(entries)` when it commutes with `op` — the entries join
+    * `added` and the commit is rebuilt against the head, reusing every
+    * staged data file — `Left(why)` when it does not, surfaced as the
+    * typed [[ConcurrentWriteConflictException]]. Bounded by
+    * `spark.graft.commit.maxRetries`; the last lost claim surfaces raw.
+    * The happy path is one claim and only the reads `build` makes.
+    * Returns the committed version.
+    */
+  private def commitRebasing(spark: org.apache.spark.sql.SparkSession,
+      root: String, base: Int, op: String)(
+      build: (Int, Seq[FileEntry]) => Commit)(
+      admit: (Int, Int) => Either[String, Seq[FileEntry]]): Int = {
+    val maxRetries = spark.conf
+      .get("spark.graft.commit.maxRetries", "3").toInt
+    @scala.annotation.tailrec
+    def attempt(cur: Int, added: Seq[FileEntry], n: Int): Int = {
+      val c = build(cur, added)
+      val lost =
+        try {
+          commitManifest(spark, root, cur + 1, c.segs, c.entries, c.header,
+            c.deletes)
+          None
+        } catch { case e: CommitConflictException => Some(e) }
+      lost match {
+        case None => cur + 1
+        case Some(e) if n >= maxRetries => throw e
+        case Some(_) =>
+          val head = snapshotVersions(spark, root).lastOption.getOrElse(cur)
+          admit(cur, head) match {
+            case Left(why) => throw new ConcurrentWriteConflictException(
+              root, cur, head, op, why)
+            case Right(more) => attempt(head, added ++ more, n + 1)
+          }
+      }
+    }
+    attempt(base, Nil, 0)
+  }
+
+  /** SEGMENT-GRANULAR CARRY of version `v` (its `tagged` entries) past a
+    * rewrite of the entries `touched` selects: a segment with no touched
+    * entry is carried by ONE `seg:` reference; only partially-touched
+    * segments (and legacy inline lines) re-serialize their untouched
+    * entries, stats and partition sets intact. Metadata written stays
+    * O(touched + new), not O(table). Returns (carried segs, residual).
+    */
+  private def carrySegments(spark: org.apache.spark.sql.SparkSession,
+      root: String, v: Int, tagged: Seq[(String, FileEntry)])(
+      touched: FileEntry => Boolean): (Seq[String], Seq[FileEntry]) = {
+    val touchedSegs = tagged.collect { case (s, e) if touched(e) => s }.toSet
+    (manifestSegRefs(spark, root, v).filterNot(touchedSegs),
+      tagged.collect {
+        case (s, e) if !touched(e) && (s == "" || touchedSegs(s)) => e
+      })
+  }
+
+  /** Stage `df` for version `v` in its own attempt directory
+    * ([[attemptDir]], mode `error`) and return the new files' entries
+    * under `props`. */
+  private def stageEntries(spark: org.apache.spark.sql.SparkSession,
+      root: String, v: Int, df: DataFrame,
+      props: Map[String, String]): Seq[FileEntry] = {
+    val dir = attemptDir(root, "data", v)
+    df.write.mode("error").parquet(dir)
+    entriesForNewFiles(spark, listDataFiles(spark, dir), props)
+  }
+
   private def uriPath(s: String): String =
     new org.apache.hadoop.fs.Path(s).toUri.getPath
 
@@ -1459,38 +1537,16 @@ object Layout {
     // entries UN-enriched (they simply wait for the next ANALYZE /
     // their own commit-time ndv pass; statistics reporting stays
     // refused until every file carries a synopsis — conservative).
-    val maxRetries = spark.conf
-      .get("spark.graft.commit.maxRetries", "3").toInt
-    var attempt = 0
-    var curBase = head
-    var allEntries = enriched
-    while (true) {
-      val carried = carriedStateOf(spark, root, Some(curBase))
-      try {
-        val declHdr = carried.props ++
-          (if (cols.nonEmpty) Map("ndvKey" -> cols.mkString(","))
-           else Map.empty) ++
-          (if (histCols.nonEmpty) Map("histKey" -> histCols.mkString(","))
-           else Map.empty)
-        commitManifest(spark, root, curBase + 1, Nil, allEntries,
-          header = declHdr ++ schemaHeaderOf(carried.schema),
-          deletes = carried.deletes)
-        return curBase + 1
-      } catch {
-        case e: CommitConflictException =>
-          if (attempt >= maxRetries) throw e
-          attempt += 1
-          val newHead = snapshotVersions(spark, root).last
-          appendOnlyDiff(spark, root, curBase, newHead) match {
-            case Left(why) => throw new ConcurrentWriteConflictException(
-              root, curBase, newHead, "ANALYZE", why)
-            case Right(added) =>
-              allEntries = allEntries ++ added
-              curBase = newHead
-          }
-      }
-    }
-    -1 // unreachable
+    commitRebasing(spark, root, head, "ANALYZE") { (cur, added) =>
+      val carried = carriedStateOf(spark, root, Some(cur))
+      val declHdr = carried.props ++
+        (if (cols.nonEmpty) Map("ndvKey" -> cols.mkString(","))
+         else Map.empty) ++
+        (if (histCols.nonEmpty) Map("histKey" -> histCols.mkString(","))
+         else Map.empty)
+      Commit(Nil, enriched ++ added, declHdr ++ schemaHeaderOf(carried.schema),
+        carried.deletes)
+    }(appendOnlyDiff(spark, root, _, _))
   }
 
   private def entriesForNewFiles(spark: org.apache.spark.sql.SparkSession,
@@ -1768,15 +1824,11 @@ object Layout {
     // rewritten. Read-dependent committers (merge/overwrite/delete)
     // deliberately do NOT get this: their output derives from the base
     // version, and rebasing could silently drop the winner's effect.
-    val maxRetries = spark.conf
-      .get("spark.graft.commit.maxRetries", "3").toInt
-    var attempt = 0
-    var attemptV = v
     var attemptProps = props
     var entries = entriesForNewFiles(spark, newFiles, props)
-    while (true) {
-      val head = snapshotVersions(spark, root).lastOption
-      attemptV = head.getOrElse(0) + 1
+    val headNow = snapshotVersions(spark, root).lastOption.getOrElse(0)
+    commitRebasing(spark, root, headNow, "append") { (cur, _) =>
+      val head = Some(cur).filter(_ > 0)
       val hdr = head.map(manifestHeader(spark, root, _))
         .getOrElse(Map.empty[String, String])
       val effProps = propsAgainst(hdr) // re-validate vs the CURRENT head
@@ -1785,7 +1837,7 @@ object Layout {
       // names now; the whole append must re-run ([[withCommitRetry]]'s
       // slot), not just the manifest
       if (colMapOf(hdr) != entryCmap || tombstonesOf(hdr) != entryTombs)
-        throw new CommitConflictException(root, attemptV,
+        throw new CommitConflictException(root, cur + 1,
           "a concurrent schema change (rename/drop) altered the column " +
             "mapping while this append was staged; re-run the append to " +
             "rewrite the batch under the new mapping")
@@ -1815,21 +1867,11 @@ object Layout {
       val schema =
         if (head.isEmpty) mergeSchemas(None, df.schema)
         else carried.schema.flatMap(ps => mergeSchemas(Some(ps), df.schema))
-      try {
-        // extraHeader: PER-COMMIT metadata (EphemeralHeaders — never
-        // carried), e.g. the bloom index's covered base head
-        commitManifest(spark, root, attemptV, carried.segs,
-          carried.inline ++ entries,
-          header = effProps ++ extraHeader ++ schemaHeaderOf(schema),
-          deletes = carried.deletes)
-        return attemptV
-      } catch {
-        case e: CommitConflictException =>
-          if (attempt >= maxRetries) throw e
-          attempt += 1
-      }
-    }
-    attemptV // unreachable
+      // extraHeader: PER-COMMIT metadata (EphemeralHeaders — never
+      // carried), e.g. the bloom index's covered base head
+      Commit(carried.segs, carried.inline ++ entries,
+        effProps ++ extraHeader ++ schemaHeaderOf(schema), carried.deletes)
+    } ((_, _) => Right(Nil)) // build re-reads the head's whole carry
   }
 
   /** Replace the table content in a new snapshot (compaction / COW merge
@@ -1849,12 +1891,9 @@ object Layout {
         "deleteKey" - "colmap" - "tombstones")
       .getOrElse(Map.empty[String, String])
     enforceConstraints(props, df, "overwrite")
-    val dataDir = attemptDir(root, "data", v)
-    df.write.mode("error").parquet(dataDir)
     // extraHeader: PER-COMMIT metadata (EphemeralHeaders — never
     // carried), e.g. the maintainers' mvBase freshness stamp
-    commitManifest(spark, root, v, Nil,
-      entriesForNewFiles(spark, listDataFiles(spark, dataDir), props),
+    commitManifest(spark, root, v, Nil, stageEntries(spark, root, v, df, props),
       header = props ++ extraHeader ++
         schemaHeaderOf(mergeSchemas(None, df.schema)))
     v
@@ -1911,7 +1950,6 @@ object Layout {
       case _ => 1                                          // mixed/unknown
     }
     val mixed = tagged.collect { case (_, e) if scopeOf(e) == 1 => e }
-    val dataDir = attemptDir(root, "data", base + 1)
     val props = carriedProps(hdr)
     enforceConstraints(props, df, "partition overwrite")
     // survivors of mixed files: rows OUTSIDE the replaced partitions
@@ -1932,9 +1970,7 @@ object Layout {
         case None => replacement
       }
     }
-    newContent.write.mode("error").parquet(dataDir)
-    val newEntries =
-      entriesForNewFiles(spark, listDataFiles(spark, dataDir), props)
+    val newEntries = stageEntries(spark, root, base + 1, newContent, props)
     // LOGICAL CONFLICT RESOLUTION, the daily-reload edition: losing the
     // claim to a pure append whose files lie PROVABLY WHOLLY OUTSIDE
     // the replaced partitions commutes — rebase, carrying the appended
@@ -1942,49 +1978,21 @@ object Layout {
     // An appended file inside the scope — or one whose partition set is
     // unrecorded (can't prove) — conflicts: the reload's output was
     // computed without those rows.
-    val maxRetries = spark.conf
-      .get("spark.graft.commit.maxRetries", "3").toInt
-    var attempt = 0
-    var curBase = base
-    var curTagged = tagged
-    while (true) {
-      val touchedSegsNow =
-        curTagged.filter(t => scopeOf(t._2) > 0).map(_._1).toSet
-      val carriedSegsNow = manifestSegRefs(spark, root, curBase)
-        .filterNot(touchedSegsNow)
-      val residualNow = curTagged.collect {
-        case (seg, e) if scopeOf(e) == 0 &&
-          (seg == "" || touchedSegsNow(seg)) => e
-      }
-      val schema = manifestSchema(spark, root, curBase)
+    commitRebasing(spark, root, base, "partition overwrite") { (cur, _) =>
+      val taggedNow =
+        if (cur == base) tagged else manifestEntriesTagged(spark, root, cur)
+      val (segs, residual) =
+        carrySegments(spark, root, cur, taggedNow)(scopeOf(_) > 0)
+      val schema = manifestSchema(spark, root, cur)
         .flatMap(ps => mergeSchemas(Some(ps), df.schema))
-      try {
-        commitManifest(spark, root, curBase + 1, carriedSegsNow,
-          residualNow ++ newEntries, header = props ++ schemaHeaderOf(schema))
-        return curBase + 1
-      } catch {
-        case e: CommitConflictException =>
-          if (attempt >= maxRetries) throw e
-          attempt += 1
-          val newHead = snapshotVersions(spark, root).last
-          val added = appendOnlyDiff(spark, root, curBase, newHead) match {
-            case Left(why) => throw new ConcurrentWriteConflictException(
-              root, curBase, newHead, "partition overwrite", why)
-            case Right(a) => a
-          }
-          val inScope = added.filterNot(e =>
-            e.parts.exists(ps => ps.nonEmpty && !ps.exists(want)))
-          if (inScope.nonEmpty)
-            throw new ConcurrentWriteConflictException(root, curBase,
-              newHead, "partition overwrite",
-              "concurrently appended files carry rows inside (or not " +
-                "provably outside) the replaced partition scope — the " +
-                "reload was computed without them")
-          curBase = newHead
-          curTagged = manifestEntriesTagged(spark, root, newHead)
-      }
+      Commit(segs, residual ++ newEntries, props ++ schemaHeaderOf(schema))
+    } { (cur, head) =>
+      appendOnlyDiff(spark, root, cur, head).filterOrElse(
+        _.forall(_.parts.exists(ps => ps.nonEmpty && !ps.exists(want))),
+        "concurrently appended files carry rows inside (or not " +
+          "provably outside) the replaced partition scope — the " +
+          "reload was computed without them")
     }
-    -1 // unreachable
   }
 
   /** DYNAMIC partition overwrite (`partitionOverwriteMode=dynamic`):
@@ -3608,58 +3616,31 @@ object Layout {
     // maintenance-vs-writer race every standing snapshotMaintain cycle
     // hits; only overwrite-class interleavings (removed files, sidecar/
     // mapping/property/schema changes) surface the typed conflict.
-    val dataDir = attemptDir(root, "data", base + 1)
-    packed.write.mode("error").parquet(dataDir)
     // statsKey/partCol survive the compaction (stats recomputed for the
     // packed files); deleteKey is dropped — the sidecar debt is folded
     // in. colmap/tombstones clear too: the FULL rewrite above read the
     // LOGICAL frame, so the packed files' physical names ARE the logical
     // names — compaction is the mapping-debt escape hatch (frees dropped
     // names for reuse).
-    val props = carriedProps(manifestHeader(spark, root, base)) -
-      "deleteKey" - "colmap" - "tombstones"
-    val packedEntries =
-      entriesForNewFiles(spark, listDataFiles(spark, dataDir), props)
-    val maxRetries = spark.conf
-      .get("spark.graft.commit.maxRetries", "3").toInt
-    var attempt = 0
-    var curBase = base
-    var carriedAdds: Seq[FileEntry] = Nil
-    while (true) {
-      try {
-        commitManifest(spark, root, curBase + 1, Nil,
-          packedEntries ++ carriedAdds,
-          // compaction preserves content, so the base's recorded schema
-          // (if any) carries verbatim
-          header = props ++
-            schemaHeaderOf(manifestSchema(spark, root, curBase)))
-        return curBase + 1
-      } catch {
-        case e: CommitConflictException =>
-          if (attempt >= maxRetries) throw e
-          attempt += 1
-          val newHead = snapshotVersions(spark, root).last
-          appendOnlyDiff(spark, root, curBase, newHead) match {
-            case Left(why) => throw new ConcurrentWriteConflictException(
-              root, curBase, newHead, "OPTIMIZE/compaction", why)
-            case Right(added) =>
-              // the packed commit CLEARS colmap/tombstones; appended
-              // files written UNDER a live mapping carry physical names
-              // that would then read wrong — only a mapping-free base
-              // may carry them verbatim
-              if (colMapOf(manifestHeader(spark, root, curBase)).nonEmpty ||
-                  tombstonesOf(manifestHeader(spark, root, curBase)).nonEmpty)
-                throw new ConcurrentWriteConflictException(root, curBase,
-                  newHead, "OPTIMIZE/compaction",
-                  "concurrent appends interleaved while this compaction " +
-                    "was folding column-mapping debt; carrying them " +
-                    "verbatim would strand their physical column names")
-              carriedAdds = carriedAdds ++ added
-              curBase = newHead
-          }
-      }
+    val hdr = manifestHeader(spark, root, base)
+    val props = carriedProps(hdr) - "deleteKey" - "colmap" - "tombstones"
+    val packedEntries = stageEntries(spark, root, base + 1, packed, props)
+    commitRebasing(spark, root, base, "OPTIMIZE/compaction") { (cur, added) =>
+      // compaction preserves content, so the base's recorded schema (if
+      // any) carries verbatim
+      Commit(Nil, packedEntries ++ added,
+        props ++ schemaHeaderOf(manifestSchema(spark, root, cur)))
+    } { (cur, head) =>
+      // the packed commit CLEARS colmap/tombstones; appended files
+      // written UNDER a live mapping carry physical names that would
+      // then read wrong — only a mapping-free base may carry them
+      // verbatim (every base shares `hdr`'s mapping: a change conflicts)
+      appendOnlyDiff(spark, root, cur, head).filterOrElse(
+        _ => colMapOf(hdr).isEmpty && tombstonesOf(hdr).isEmpty,
+        "concurrent appends interleaved while this compaction was " +
+          "folding column-mapping debt; carrying them verbatim would " +
+          "strand their physical column names")
     }
-    -1 // unreachable
   }
 
   /** THE VERSION WALK under every change-feed consumer: `(v, changes)`
@@ -3990,28 +3971,7 @@ object Layout {
     val ranges = keyRangesOfEntries(spark, tagged.map(_._2),
       physicalNameOf(hdr, keyCol))
     val touchedSet: Set[String] = touchedFilesFor(spark, ranges, changeKeys)
-    // SEGMENT-GRANULAR CARRY: a segment none of whose files are touched
-    // is carried by ONE `seg:` reference; only partially-touched
-    // segments have their untouched entries re-serialized (stats and
-    // partition sets preserved — no recompute) into the new segment
-    // alongside the rewrite's files. Metadata written stays O(touched +
-    // new), not O(table). Recomputable against any rebased head: the
-    // touched set is fixed (pure-append interleavings never remove
-    // files), so re-partitioning a later head's entries just routes the
-    // interleaved appends into the carried side.
-    def carryAgainst(taggedNow: Seq[(String, FileEntry)],
-        baseNow: Int): (Seq[String], Seq[FileEntry]) = {
-      val (touchedNow, untouchedNow) =
-        taggedNow.partition(t => touchedSet(t._2.path))
-      val touchedSegsNow = touchedNow.map(_._1).toSet
-      val carriedSegsNow = manifestSegRefs(spark, root, baseNow)
-        .filterNot(touchedSegsNow)
-      val residualNow = untouchedNow
-        .collect { case (seg, e) if seg == "" || touchedSegsNow(seg) => e }
-      (carriedSegsNow, residualNow)
-    }
     val touchedTagged = tagged.filter(t => touchedSet(t._2.path))
-    val dataDir = attemptDir(root, "data", base + 1)
     // typed from the manifest like every snapshot read: no footer job
     val touchedRaw =
       if (touchedTagged.isEmpty)
@@ -4033,9 +3993,8 @@ object Layout {
     // merged output re-checks constraints: an UPDATE/MERGE can introduce
     // a violating value even when every input row was valid
     enforceConstraints(props, rewritten, "merge")
-    toPhysicalFrame(rewritten, hdr).write.mode("error").parquet(dataDir)
-    val newEntries =
-      entriesForNewFiles(spark, listDataFiles(spark, dataDir), props)
+    val newEntries = stageEntries(spark, root, base + 1,
+      toPhysicalFrame(rewritten, hdr), props)
     // LOGICAL CONFLICT RESOLUTION (Delta's conflict-checker discipline):
     // losing the version claim is only a real conflict when the
     // interleaved commit's changes OVERLAP this merge's read set. A pure
@@ -4049,60 +4008,44 @@ object Layout {
     // rebasing would drop the winner's effect. Under standing
     // maintenance cycles (appenders racing snapshotMaintain), the
     // disjoint path is the routine one.
-    val maxRetries = spark.conf
-      .get("spark.graft.commit.maxRetries", "3").toInt
-    var attempt = 0
-    var curBase = base
-    var curTagged = tagged
-    while (true) {
-      val (carriedSegs, residual) = carryAgainst(curTagged, curBase)
-      val schema = manifestSchema(spark, root, curBase)
+    commitRebasing(spark, root, base, "MERGE") { (cur, _) =>
+      // [[carrySegments]] of any rebased head: the touched set is fixed
+      // (pure-append interleavings never remove files), so a later
+      // head's entries just route the interleaved appends into the carry
+      val taggedNow =
+        if (cur == base) tagged else manifestEntriesTagged(spark, root, cur)
+      val (segs, residual) =
+        carrySegments(spark, root, cur, taggedNow)(e => touchedSet(e.path))
+      val schema = manifestSchema(spark, root, cur)
         .flatMap(ps => mergeSchemas(Some(ps), rewritten.schema))
-      try {
-        // cdcKey: EPHEMERAL header (the mvBase pattern — never carried)
-        // telling the change feed this transition is a key-scoped COW
-        // rewrite, unlocking [[cowTypedChanges]]'s typed
-        // update_preimage/postimage rows at O(touched files)
-        commitManifest(spark, root, curBase + 1, carriedSegs,
-          residual ++ newEntries,
-          header = props ++ schemaHeaderOf(schema) + ("cdcKey" -> keyCol))
-        return curBase + 1
-      } catch {
-        case e: CommitConflictException =>
-          if (attempt >= maxRetries) throw e
-          attempt += 1
-          val newHead = snapshotVersions(spark, root).last
-          val added = appendOnlyDiff(spark, root, curBase, newHead) match {
-            case Left(why) => throw new ConcurrentWriteConflictException(
-              root, curBase, newHead, "MERGE", why)
-            case Right(a) => a
-          }
-          // a WHEN-NOT-MATCHED-BY-SOURCE merge reads (and may act on)
-          // EVERY target row: its read set is the whole table, so ANY
-          // concurrently appended row overlaps — an appended key absent
-          // from the source should have been updated/deleted by the
-          // NMBS clause, and carrying it verbatim would contradict
-          // every serial order. Key disjointness only applies to merges
-          // whose read set IS their key set.
-          if (readsWholeTable && added.nonEmpty)
-            throw new ConcurrentWriteConflictException(root, curBase,
-              newHead, "MERGE",
-              "this merge's NOT MATCHED BY SOURCE clause reads every " +
-                "target row; concurrently appended rows are inside its " +
-                "read set by definition")
-          // do the concurrently-appended file ranges overlap this
-          // merge's keys?
-          if (touchedFilesFor(spark, keyRangesOfEntries(spark, added,
-              physicalNameOf(hdr, keyCol)), changeKeys).nonEmpty)
-            throw new ConcurrentWriteConflictException(root, curBase,
-              newHead, "MERGE",
-              "concurrently appended files carry key ranges this merge " +
-                "matches — its rewrite would miss those rows")
-          curBase = newHead
-          curTagged = manifestEntriesTagged(spark, root, newHead)
+      // cdcKey: EPHEMERAL header (the mvBase pattern — never carried)
+      // telling the change feed this transition is a key-scoped COW
+      // rewrite, unlocking [[cowTypedChanges]]'s typed
+      // update_preimage/postimage rows at O(touched files)
+      Commit(segs, residual ++ newEntries,
+        props ++ schemaHeaderOf(schema) + ("cdcKey" -> keyCol))
+    } { (cur, head) =>
+      appendOnlyDiff(spark, root, cur, head).flatMap { added =>
+        // a WHEN-NOT-MATCHED-BY-SOURCE merge reads (and may act on)
+        // EVERY target row: its read set is the whole table, so ANY
+        // concurrently appended row overlaps — an appended key absent
+        // from the source should have been updated/deleted by the NMBS
+        // clause, and carrying it verbatim would contradict every serial
+        // order. Key disjointness only applies to merges whose read set
+        // IS their key set.
+        if (readsWholeTable && added.nonEmpty)
+          Left("this merge's NOT MATCHED BY SOURCE clause reads every " +
+            "target row; concurrently appended rows are inside its read " +
+            "set by definition")
+        // do the concurrently-appended file ranges overlap this merge's
+        // keys?
+        else if (touchedFilesFor(spark, keyRangesOfEntries(spark, added,
+            physicalNameOf(hdr, keyCol)), changeKeys).nonEmpty)
+          Left("concurrently appended files carry key ranges this merge " +
+            "matches — its rewrite would miss those rows")
+        else Right(added)
       }
     }
-    -1 // unreachable
   }
 
   /** RESTORE (Delta's `RESTORE TABLE t TO VERSION AS OF v`) — the undo
@@ -4160,16 +4103,11 @@ object Layout {
     val want = partitions.toSet
     require(want.nonEmpty, "no partitions given")
     val tagged = manifestEntriesTagged(spark, root, base)
-    val (touchedTagged, untouchedTagged) = tagged.partition(t =>
-      t._2.parts.exists(ps => ps.nonEmpty && ps.forall(want)))
-    if (touchedTagged.isEmpty) return base
-    val touchedSegs = touchedTagged.map(_._1).toSet
-    val carriedSegs = manifestSegRefs(spark, root, base)
-      .filterNot(touchedSegs)
-    val residual = untouchedTagged
-      .collect { case (seg, e) if seg == "" || touchedSegs(seg) => e }
-    val v = base + 1
-    val dataDir = attemptDir(root, "data", v)
+    val touched = tagged.collect {
+      case (_, e) if e.parts.exists(ps => ps.nonEmpty && ps.forall(want)) =>
+        e.path
+    }
+    if (touched.isEmpty) return base
     // bin-pack via the cloned-session split sizing ([[snapshotCompact]]'s
     // plain mode): the scan itself packs the small files; zero shuffle
     val scoped = spark.newSession()
@@ -4179,30 +4117,36 @@ object Layout {
     // parallelism (minPartitionNum) and a small hot partition never
     // packs below its input file count
     scoped.conf.set("spark.sql.files.minPartitionNum", "1")
-    val packed = scoped.read.option("mergeSchema", "true")
-      .parquet(touchedTagged.map(_._2.path): _*)
-    packed.write.mode("error").parquet(dataDir)
+    val packed = scoped.read.option("mergeSchema", "true").parquet(touched: _*)
     val props = carriedProps(hdr)
-    commitManifest(spark, root, v, carriedSegs,
-      residual ++
-        entriesForNewFiles(spark, listDataFiles(spark, dataDir), props),
-      header = props ++ schemaHeaderOf(manifestSchema(spark, root, base)))
-    v
+    val packedEntries = stageEntries(spark, root, base + 1, packed, props)
+    // compaction's rule: any pure append commutes — its files stay
+    // carried, un-packed, by the touched-PATH carry (an in-scope append
+    // was not packed, so it is carried too)
+    val touchedSet = touched.toSet
+    commitRebasing(spark, root, base, "OPTIMIZE/compaction") { (cur, _) =>
+      val taggedNow =
+        if (cur == base) tagged else manifestEntriesTagged(spark, root, cur)
+      val (segs, residual) =
+        carrySegments(spark, root, cur, taggedNow)(e => touchedSet(e.path))
+      Commit(segs, residual ++ packedEntries,
+        props ++ schemaHeaderOf(manifestSchema(spark, root, cur)))
+    }(appendOnlyDiff(spark, root, _, _))
   }
 
   /** OPTIMISTIC-CONCURRENCY RETRY — the multi-writer loop every snapshot
-    * commit caller runs in production: the protocol makes a losing racer
-    * fail LOUDLY (rename-if-absent arbitration, or the `mode("error")`
-    * data write when the racer claimed the same version's data
-    * directory), and this wrapper is the other half — recompute against
-    * the NEW head and try again, bounded. Only the two loss signatures
-    * retry; any other failure propagates untouched (retrying an
+    * commit caller runs in production: a losing racer fails LOUDLY with
+    * a [[CommitConflictException]] (its claim lost and
+    * [[commitRebasing]]'s own bounded rebase exhausted, or a committer
+    * with no rebase path), and this wrapper is the other half — recompute
+    * against the NEW head and try again, bounded. Only that type
+    * retries; any other failure propagates untouched (retrying an
     * arbitrary error would mask real bugs). The op MUST be
     * self-contained re-runnable (read head inside, like
     * [[snapshotAppend]]/[[snapshotCompact]] are): a loser's partial
     * data-dir writes are invisible (nothing references a file until its
-    * manifest commits) and each attempt writes a fresh version
-    * directory.
+    * manifest commits) and each attempt stages into its own
+    * [[attemptDir]].
     * 100 TB: contention cost is one wasted attempt's I/O; correctness
     * never degrades — the committed history is always a linear sequence
     * of winners.
@@ -4213,14 +4157,7 @@ object Layout {
     var i = 0
     while (i < attempts) {
       try return op
-      catch {
-        case e: IllegalStateException
-            if e.getMessage != null && e.getMessage.contains("lost the race") =>
-          last = e
-        case e: org.apache.spark.sql.AnalysisException
-            if e.getMessage != null && e.getMessage.contains("already exists") =>
-          last = e
-      }
+      catch { case e: CommitConflictException => last = e }
       i += 1
     }
     throw new IllegalStateException(

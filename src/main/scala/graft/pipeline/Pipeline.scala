@@ -208,7 +208,9 @@ final class CompositeDataSink(children: Seq[DataSink]) extends DataSink {
   *  2. the first source that provides the type (directly, or via the
   *     cheapest transformer chain from any type it provides) yields;
   *  3. the result is `put` into every sink that appeared BEFORE the
-  *     providing element (populating faster tiers), then returned.
+  *     providing element (populating faster tiers), then returned. A
+  *     sink whose fill fails never fails the served read: the failure
+  *     counts in [[DataPipeline.fillFailures]].
   *
   * Transformer chains come from Dijkstra over (type → type, cost) edges —
   * resolved once per (source type, target) on the driver; the chain itself
@@ -255,8 +257,7 @@ final class DataPipeline(
           sink.lookup(dataType, query, spark) match {
             case Some(df) =>
               // promote the hit into the faster tiers in front of this one
-              sinksBefore.filter(_.accepts(dataType))
-                .foreach(_.put(dataType, df, query))
+              fill(sinksBefore, dataType, df, query)
               return df
             case None => ()
           }
@@ -276,8 +277,7 @@ final class DataPipeline(
             try {
               val raw = source.get(srcType, validated, spark)
               val result = transforms.foldLeft(raw)((df, t) => t.transform(df))
-              sinksBefore.filter(_.accepts(dataType))
-                .foreach(_.put(dataType, result, query))
+              fill(sinksBefore, dataType, result, query)
               return result
             } catch { case _: NotFoundError => () } // fall through to later elements
           case None => ()
@@ -285,6 +285,17 @@ final class DataPipeline(
     }
     throw new NotFoundError(s"no pipeline element could provide '$dataType'")
   }
+
+  /** Fill the tiers in front of the serving element; a tier that cannot
+    * take the frame (full disk, unwritable directory) is counted, not
+    * allowed to fail a read that has already been served. */
+  private def fill(sinks: Iterable[DataSink], dataType: String, df: DataFrame,
+      query: Query): Unit =
+    sinks.filter(_.accepts(dataType)).foreach { sink =>
+      try sink.put(dataType, df, query)
+      catch { case scala.util.control.NonFatal(_) =>
+        DataPipeline.fillFailures.incrementAndGet() }
+    }
 
   def getMany(dataType: String, queries: Seq[Query])
       (implicit spark: SparkSession): Seq[DataFrame] =
@@ -322,4 +333,10 @@ final class DataPipeline(
   def putMany(dataType: String, dfs: Seq[DataFrame],
       query: Query = Query.empty): Unit =
     dfs.foreach(put(dataType, _, query))
+}
+
+object DataPipeline {
+  /** Sink fills on the `get` path (miss fill or hit promotion) that
+    * failed while the read itself was served. */
+  private[graft] val fillFailures = new java.util.concurrent.atomic.AtomicLong(0)
 }

@@ -250,6 +250,82 @@ class OptimisticConcurrencySpec extends GraftSuite {
     }
   }
 
+  test("LOGICAL RESOLUTION: partition-scoped compaction racing an append — both land, the packed files are reused") {
+    withArbiter {
+      import spark.implicits._
+      val root = freshRoot("occ-compact-parts")
+      for (p <- Seq("p0", "p1"))
+        Layout.snapshotAppendPartitioned(spark, root,
+          (1L to 40L).map(k => (k, p)).toDF("k", "p").repartition(4),
+          "p", shuffleByPartition = false) // v1, v2: four small files each
+      // writer B appends INSIDE the compacted partition while the
+      // OPTIMIZE claims v3: its file was not packed, so it rides along
+      RacingArbiter.racer = () => Layout.snapshotAppendPartitioned(
+        spark, root, Seq((999L, "p0")).toDF("k", "p"), "p")
+      RacingArbiter.armed = true
+      val committed = Layout.snapshotCompactPartitions(spark, root,
+        128L * 1024 * 1024, Seq("p0"))
+      assert(committed == 4,
+        s"the scoped OPTIMIZE must rebase past the append (got v$committed)")
+      assert(Layout.snapshotVersions(spark, root) == Seq(1, 2, 3, 4))
+      val head = Layout.readSnapshot(spark, root)
+      assert(head.count() == 81 && head.filter(col("k") === 999L).count() == 1,
+        "packed content AND the interleaved append both present")
+      assert(head.groupBy("k", "p").count().filter(col("count") > 1)
+        .count() == 0, "nothing doubled")
+      // the packed files were staged for the v3 attempt and committed
+      // verbatim at v4; everything else is carried by path
+      val v4New = Layout.snapshotMeta(spark, root, 4).paths
+        .filterNot(Layout.snapshotMeta(spark, root, 3).paths.toSet)
+      assert(v4New.nonEmpty && v4New.forall(_.contains("/v3-")),
+        s"rebase must reuse the staged packing: $v4New")
+    }
+  }
+
+  test("LOGICAL RESOLUTION: ANALYZE racing an append — both land, the appended file stays un-enriched") {
+    withArbiter {
+      import spark.implicits._
+      val root = freshRoot("occ-analyze-append")
+      Layout.snapshotAppend(spark, root,
+        (1L to 50L).map(k => (k, s"v${k % 7}")).toDF("k", "v")) // v1
+      RacingArbiter.racer = () => Layout.snapshotAppend(spark, root,
+        Seq((999L, "during-analyze")).toDF("k", "v"))
+      RacingArbiter.armed = true
+      val committed = Layout.snapshotAnalyze(spark, root, Seq("v"))
+      assert(committed == 3, s"ANALYZE must rebase past the append (got v$committed)")
+      assert(Layout.snapshotVersions(spark, root) == Seq(1, 2, 3))
+      assert(Layout.readSnapshot(spark, root).count() == 51)
+      val appended = Layout.snapshotMeta(spark, root, 2).paths
+        .filterNot(Layout.snapshotMeta(spark, root, 1).paths.toSet).toSet
+      val ndv = Layout.snapshotFilesTable(spark, root).collect()
+        .map(r => r.getString(0) -> r.getMap[String, Long](6)).toMap
+      assert(appended.nonEmpty && ndv.keySet.exists(appended))
+      ndv.foreach { case (path, m) =>
+        if (appended(path)) assert(m.isEmpty, s"appended $path was enriched")
+        else assert(m.contains("v"), s"analyzed $path carries no synopsis")
+      }
+    }
+  }
+
+  test("LOGICAL RESOLUTION: ANALYZE racing an OVERWRITE refuses with the typed conflict") {
+    withArbiter {
+      import spark.implicits._
+      val root = freshRoot("occ-analyze-ovr")
+      Layout.snapshotAppend(spark, root,
+        (1L to 50L).map(k => (k, "a")).toDF("k", "v"))
+      RacingArbiter.racer = () => Layout.snapshotOverwrite(spark, root,
+        Seq((7L, "replaced")).toDF("k", "v"))
+      RacingArbiter.armed = true
+      val ex = intercept[ConcurrentWriteConflictException] {
+        Layout.snapshotAnalyze(spark, root, Seq("v"))
+      }
+      assert(ex.op == "ANALYZE" && ex.getMessage.startsWith("ANALYZE"),
+        ex.getMessage)
+      assert(Layout.snapshotVersions(spark, root) == Seq(1, 2))
+      assert(Layout.readSnapshot(spark, root).count() == 1)
+    }
+  }
+
   test("LOGICAL RESOLUTION: a NOT-MATCHED-BY-SOURCE merge refuses ANY concurrent append — even key-disjoint ones") {
     withArbiter {
       import spark.implicits._

@@ -246,6 +246,24 @@ class PipelineSpec extends GraftSuite {
       store.lookup("t", Query.of("ids" -> Array(1, 2)), spark))
   }
 
+  test("a tier that cannot take the fill never fails a served read: miss fill and hit promotion are counted") {
+    // the durable tier's base directory sits under a regular file, so
+    // every put into it fails
+    val blocker = java.nio.file.Files.createTempFile("graft-blocker", ".f")
+    val broken = new ParquetDirSink(s"$blocker/pq", Set("t"))
+    val rows = spark.range(5).toDF("id")
+    val before = DataPipeline.fillFailures.get()
+    val miss = new DataPipeline(
+      Seq(Right(broken), Left(new MemorySource(Map("t" -> rows)))))
+    assert(miss.get("t").count() === 5, "the source's rows are served")
+    assert(DataPipeline.fillFailures.get() === before + 1)
+    val mem = new MemoryCacheSink(Set("t"))
+    mem.put("t", rows, Query.empty)
+    val hit = new DataPipeline(Seq(Right(broken), Right(mem)))
+    assert(hit.get("t").count() === 5, "the lower tier's hit is served")
+    assert(DataPipeline.fillFailures.get() === before + 2)
+  }
+
   test("a put that fails mid-write leaves the previous entry; a get then falls through to the source") {
     val tmp = java.nio.file.Files.createTempDirectory("graft-atomic").toString
     val store = new ParquetDirSink(tmp, Set("t"))
