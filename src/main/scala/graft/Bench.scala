@@ -24,32 +24,44 @@ import org.apache.spark.sql.SparkSession
   *    the load factor measured at rerun time — `[load 3.2x]` says "the
   *    machine was 3x contended, discount this"; `[load 1.0x]` says "quiet
   *    machine, this one is real".
+  *
+  * `runMain graft.Bench calibrate` instead measures the probe on THIS
+  * machine (run quiet) and prints per-run seconds — the min of the warm
+  * runs is what tools/bench_anchor.json commits as `calibration_sec`.
+  * Same session as the sweep ([[GraftSession.local]]) — the probe's
+  * runtime is session-shape sensitive (AQE coalesces the partial-agg
+  * stage) — so the timing transfers.
   */
-/** Measures the calibration probe on THIS machine (run quiet) and prints
-  * per-run seconds — the min is what tools/bench_anchor.json commits as
-  * `calibration_sec`. Same session as Bench ([[GraftSession.local]]) —
-  * the probe's runtime is session-shape sensitive (AQE coalesces the
-  * partial-agg stage) — so the timing transfers.
-  */
-object Calibrate {
-  def main(args: Array[String]): Unit = {
-    val spark = GraftSession.local()
-    val times = (1 to 6).map { _ =>
-      val t0 = System.nanoTime()
-      spark.range(1L << 31).selectExpr("sum(id % 1000003)").collect()
-      (System.nanoTime() - t0) / 1e9
-    }
-    // drop run 1 (codegen compile); commit the min of the rest
-    println(f"calibration probe runs: ${times.map(t => f"$t%.3f").mkString(", ")}")
-    println(f"calibration_sec (min of warm runs): ${times.tail.min}%.3f")
-    spark.stop()
-  }
-}
-
 object Bench {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val calibrate = args.toSeq match {
+      case Seq() => false
+      case Seq("calibrate") => true
+      case other => throw new IllegalArgumentException(
+        s"unknown Bench argument '${other.mkString(" ")}': expected none or calibrate")
+    }
     val spark = GraftSession.local()
+    if (calibrate) {
+      val times = (1 to 6).map(_ => probeSec(spark))
+      // drop run 1 (codegen compile); commit the min of the rest
+      println(f"calibration probe runs: ${times.map(t => f"$t%.3f").mkString(", ")}")
+      println(f"calibration_sec (min of warm runs): ${times.tail.min}%.3f")
+    } else sweep(spark)
+    spark.stop()
+  }
+
+  /** Fixed CPU-bound calibration probe: 2^31 modular folds across all
+    * cores, data-independent and shuffle-free — its runtime moves only
+    * with machine load.
+    */
+  private def probeSec(spark: SparkSession): Double = {
+    val t0 = System.nanoTime()
+    spark.range(1L << 31).selectExpr("sum(id % 1000003)").collect()
+    (System.nanoTime() - t0) / 1e9
+  }
+
+  private def sweep(spark: SparkSession): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // Warm up the JVM/codegen paths once (scheduler, parquet reader,
     // whole-stage codegen compiler) so the first measured query isn't
     // charged the session's one-time costs.
@@ -79,18 +91,10 @@ object Bench {
         .map(m => m.group(1) -> m.group(2).toDouble).toMap
     }
 
-    // Fixed CPU-bound calibration probe: 2^31 modular folds across all
-    // cores, data-independent and shuffle-free — its runtime moves only
-    // with machine load. Warm once (codegen compile) before first timing.
-    def probeSec(): Double = {
-      val t0 = System.nanoTime()
-      spark.range(1L << 31).selectExpr("sum(id % 1000003)").collect()
-      (System.nanoTime() - t0) / 1e9
-    }
-    probeSec() // warm the probe's codegen so timings measure load, not JIT
+    probeSec(spark) // warm the probe's codegen so timings measure load, not JIT
     val calAnchor = anchor.getOrElse("calibration_sec", 0.0)
     def loadFactor(): Double =
-      if (calAnchor <= 0) 1.0 else probeSec() / calAnchor
+      if (calAnchor <= 0) 1.0 else probeSec(spark) / calAnchor
     val loadStart = loadFactor()
 
     val errors = scala.collection.mutable.ListBuffer.empty[String]
@@ -202,6 +206,5 @@ object Bench {
     val qs = picked.sortBy(_._1).map { case (k, v) => "\"" + k + "\":" + r3(v) }
       .mkString("{", ",", "}")
     println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs,"errors":$errJson,"n_regressions":${regressions.size},"load_factor":${r2(loadStart)},"n_queries":${results.size},"full":"BENCH_FULL.json","sf":"$sfDir"}""")
-    spark.stop()
   }
 }

@@ -88,7 +88,23 @@ object Curation {
       .pin()
   }
 
+  /** The `spark.graft.curation.<name>` switch, default off. A value other
+    * than `true`/`false` (any case) fails naming the key, so a typo fails
+    * the run instead of silently measuring the default.
+    */
+  private def curationFlag(spark: SparkSession, name: String): Boolean = {
+    val key = s"spark.graft.curation.$name"
+    val v = spark.conf.get(key, "false")
+    v.trim.toBooleanOption.getOrElse(throw new IllegalArgumentException(
+      s"$key must be true or false, got '$v'"))
+  }
+
   private def gatedUncapped(spark: SparkSession, sfDir: String): DataFrame = {
+    // the optional gates' switches (2, 2b, 2c), read before the signature
+    // pass's job so a malformed value costs none
+    val estimateMode = curationFlag(spark, "estimateDedup")
+    val editMode = curationFlag(spark, "editDedup")
+    val substrMode = curationFlag(spark, "substringDedup")
     val sig = signaturePass(spark, sfDir)
 
     // 1. exact dedup
@@ -103,9 +119,6 @@ object Curation {
     //    estimate, the shingle arrays never join back) — d11's calibration
     //    quantifies the trade, CurationKnobSpec asserts the output barely
     //    moves on this corpus.
-    val estimateMode =
-      try spark.conf.get("spark.graft.curation.estimateDedup", "false").toBoolean
-      catch { case _: Exception => false }
     val dupPairs =
       if (estimateMode) graft.dedup.Dedup
         .d12PairsFromSignatures(sig.select(col("doc_id"), col("mh")))
@@ -120,9 +133,6 @@ object Curation {
     //     default — the stage costs a segment explode and the st8 oracle
     //     pins the default knob geometry; d19 picks the d15/d17 blocking
     //     by corpus size, so the flagship inherits the crossover switch.
-    val editMode =
-      try spark.conf.get("spark.graft.curation.editDedup", "false").toBoolean
-      catch { case _: Exception => false }
     val editJ =
       if (editMode) graft.dedup.Dedup
         .d19Pairs(sig.select(col("doc_id"), col("text")))
@@ -138,9 +148,6 @@ object Curation {
     //     on the self-repetition side BY DESIGN (this gate is span-
     //     ownership-based, theirs are segment/k-gram ratios).
     //     Off by default for the same oracle-pinning reason as 2b.
-    val substrMode =
-      try spark.conf.get("spark.graft.curation.substringDedup", "false").toBoolean
-      catch { case _: Exception => false }
     val substrJ =
       if (substrMode) graft.dedup.Dedup
         .d21Of(sig.select(col("doc_id"), col("text")))
@@ -187,9 +194,10 @@ object Curation {
   }
 
   /** Stages 1–7 + row gates, PRE-CAP: exposed (package-private) so
-    * FlagshipBench can identity-compare this survivor id set against the
-    * round-3-style per-operator wiring — the capped output can't serve
-    * that A/B because the cap keeps a per-source prefix.
+    * `CurationOpsSpec` can identity-compare this survivor id set against
+    * the per-operator wiring (each gate from its standalone operator) —
+    * the capped output can't serve that check because the cap keeps a
+    * per-source prefix.
     */
   private[graft] def uncappedSurvivorIds(spark: SparkSession,
       sfDir: String): DataFrame =

@@ -3637,14 +3637,18 @@ object Relational {
     val agg = (df: DataFrame) => df
       .groupBy(col("o_orderstatus"))
       .agg(sum(col("p")).as("rev"), count(lit(1)).as("n"))
-    // once-per-session+SF materialization of the standing state table
-    val stateDir = sessionRoot(sfDir, "ivm")
-    val fs = new org.apache.hadoop.fs.Path(stateDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(stateDir)))
-      agg(t(spark, sfDir, "orders")
-        .select(col("o_orderstatus"), dec(col("o_totalprice")).as("p")))
-        .write.mode("overwrite").parquet(stateDir)
+    // once-per-session+SF materialization of the standing state table:
+    // built until a write commits its `_SUCCESS` marker (a failed write
+    // leaves the directory behind without one)
+    val stateDir = baseBuildLock.synchronized {
+      val dir = sessionRoot(sfDir, "ivm")
+      val done = new org.apache.hadoop.fs.Path(dir, "_SUCCESS")
+      if (!done.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(done))
+        agg(t(spark, sfDir, "orders")
+          .select(col("o_orderstatus"), dec(col("o_totalprice")).as("p")))
+          .write.mode("overwrite").parquet(dir)
+      dir
+    }
     val state = spark.read.parquet(stateDir)
       .select(col("o_orderstatus"), col("rev").as("rev_s"), col("n").as("n_s"))
     // the arriving batch: re-keyed discount re-bookings (every 13th order,

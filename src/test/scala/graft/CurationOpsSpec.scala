@@ -133,6 +133,75 @@ class CurationOpsSpec extends GraftSuite {
     assert(blocked.count() > 0)
   }
 
+  test("flagship survivors (pre-cap) equal the per-operator wiring on sf0.001 plus one planted near-duplicate") {
+    // On the generated corpora (sf0.001, sf0.01, sf0.1) no doc is dropped
+    // by the near-dup gate alone — another gate drops every d2 pair's j
+    // side too — so the check plants one: a surviving doc shifted by one
+    // leading word (no 16-token segment lines up with the original's)
+    // plus a seventh as many words of another survivor, a d2 pair of the
+    // original that stays below containment's 0.9. The first assertion
+    // below checks that only the near-dup gate drops it.
+    val base = Tables(spark, sf, "documents")
+    // the two best-scoring survivors outside t9's benchmark set, so the
+    // planted doc clears the quality gate too
+    val survivors = ops.Curation.uncappedSurvivorIds(spark, sf)
+      .filter(col("doc_id") % 97 =!= 0).join(base, "doc_id")
+      .orderBy(text.TextOps.qualityScore(col("text")).desc, col("doc_id"))
+      .limit(2).collect()
+    val Array(x, y) = survivors.map(_.getAs[String]("text"))
+    val xWords = x.split(" ")
+    val planted = ("note" +: xWords) ++ y.split(" ").take(xWords.length / 7)
+    val newId = base.agg(max(col("doc_id"))).head().getLong(0) + 1
+    assert(newId % 97 != 0, "the planted doc must not join the benchmark set")
+    val dir = java.nio.file.Files.createTempDirectory("graft-neardup").toString
+    base.unionByName(base.filter(col("doc_id") === survivors(0).getAs[Long]("doc_id"))
+        .withColumn("doc_id", lit(newId))
+        .withColumn("text", lit(planted.mkString(" ")))
+        .withColumn("n_chars", length(col("text")).cast("long")))
+      .write.parquet(s"$dir/documents.parquet")
+
+    // every gate rebuilt from its standalone operator, each with its own
+    // documents scan and signature derivation — the wiring the shared
+    // signature pass replaced
+    val docs = Tables(spark, dir, "documents")
+    val keep = docs
+      .groupBy(md5(col("text").cast("binary")).as("h"))
+      .agg(min(col("doc_id")).as("doc_id")).select(col("doc_id"))
+    val dupJ = dedup.Dedup.d2MinHashLsh(spark, dir)
+      .select(col("j").as("doc_id")).distinct()
+    val contaminated = text.TextOps.t9Contamination(spark, dir)
+      .filter(col("contaminated") === 1 && col("doc_id") % 97 =!= 0)
+      .select(col("doc_id"))
+    val boilerplate = dedup.Dedup.d9SegmentDedup(spark, dir)
+      .filter(col("n_seg_kept") * 2 <= col("n_seg_total"))
+      .select(col("doc_id"))
+    val contained = dedup.Dedup.d10Containment(spark, dir)
+      .filter(col("j") < col("i"))
+      .select(col("i").as("doc_id")).distinct()
+    def gated(nearDup: Boolean) = docs
+      .join(keep, Seq("doc_id"), "left_semi")
+      .transform(df =>
+        if (nearDup) df.join(dupJ, Seq("doc_id"), "left_anti") else df)
+      .join(contaminated, Seq("doc_id"), "left_anti")
+      .join(boilerplate, Seq("doc_id"), "left_anti")
+      .join(contained, Seq("doc_id"), "left_anti")
+      .transform(ops.Curation.rowGates)
+      .select(col("doc_id")).collect().map(_.getLong(0)).toSet
+    val perOperator = gated(nearDup = true)
+    // the check has teeth only where the near-dup gate removes a doc
+    // every other gate keeps
+    assert(gated(nearDup = false) -- perOperator === Set(newId),
+      "the planted doc must be dropped by the near-dup gate alone")
+    val shared = ops.Curation.uncappedSurvivorIds(spark, dir)
+      .collect().map(_.getLong(0))
+    assert(shared.length === shared.distinct.length, "duplicate survivor ids")
+    val (onlyShared, onlyPerOperator) =
+      (shared.toSet -- perOperator, perOperator -- shared.toSet)
+    assert(onlyShared.isEmpty && onlyPerOperator.isEmpty,
+      s"shared-pass survivors diverge from the per-operator wiring: " +
+        s"only-shared $onlyShared, only-per-operator $onlyPerOperator")
+  }
+
   test("s6 returns only true neighbors and recalls most of the exact answer set") {
     val e = Tables(spark, sf, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))

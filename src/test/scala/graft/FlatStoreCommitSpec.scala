@@ -452,7 +452,9 @@ class FlatStoreCommitSpec extends GraftSuite {
           }
           assert(ex.getMessage.contains("STORE error"),
             s"named store-fault diagnostic, got: ${ex.getMessage}")
-          assert(!ex.isInstanceOf[CommitConflictException])
+          assert(Iterator.iterate[Throwable](ex)(_.getCause)
+            .takeWhile(_ != null).forall(!_.isInstanceOf[CommitConflictException]),
+            "a store fault surfaced as a lost race in its cause chain")
         } finally FlatFs.faultBeforePut = null
         // the failed attempt left no claim behind: the version is free
         assert(new ConditionalPutArbiter().holder(spark, root, 2).isEmpty)

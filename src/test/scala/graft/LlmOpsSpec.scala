@@ -1840,6 +1840,18 @@ class CurationSpec extends GraftSuite {
     assert(base.exceptAll(again).count() === 0 && base.count() === again.count())
   }
 
+  test("a malformed curation switch fails naming its key instead of reading as off") {
+    for (name <- Seq("estimateDedup", "editDedup", "substringDedup")) {
+      val key = s"spark.graft.curation.$name"
+      spark.conf.set(key, "ture")
+      try {
+        val e = intercept[IllegalArgumentException](
+          ops.Curation.uncappedSurvivorIds(spark, sf))
+        assert(e.getMessage.contains(key), e.getMessage)
+      } finally spark.conf.unset(key)
+    }
+  }
+
   test("flagship shares one signature pass: no table scan in the returned plan") {
     import org.apache.spark.sql.execution.datasources.LogicalRelation
     // the ONE scan of `documents` happens inside the eager signature-pass
@@ -2784,7 +2796,22 @@ class KnnGraphIvmSpec extends GraftSuite {
     val ordersScans = "orders\\.parquet".r.findAllIn(plan).size
     assert(ordersScans === 1,
       s"expected exactly 1 orders scan (the delta); plan has $ordersScans")
-    // value contract: merge ≡ full recompute (computed independently here)
+    assertFullRecompute(out)
+  }
+
+  test("q80 rebuilds a state directory that a failed write left without _SUCCESS") {
+    val stateDir = new org.apache.hadoop.fs.Path(
+      ops.Relational.sessionRoot(sf, "ivm"))
+    val fs = stateDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(stateDir, true)
+    fs.mkdirs(stateDir)
+    assertFullRecompute(ops.Relational.q80IvmAgg(spark, sf))
+  }
+
+  /** q80's value contract: merge ≡ full recompute over base ∪ delta
+    * (computed independently here).
+    */
+  private def assertFullRecompute(out: org.apache.spark.sql.DataFrame): Unit = {
     val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(18,2)")
     val base = Tables(spark, sf, "orders")
       .select(col("o_orderstatus"), dec(col("o_totalprice")).as("p"))
