@@ -11,11 +11,13 @@ import org.apache.spark.sql.SparkSession
   *
   *  - CALIBRATION PROBE: a fixed CPU-bound job (no I/O, no data
   *    dependence) timed against a committed quiet-machine anchor
-  *    (`calibration_sec` in tools/bench_anchor.json). Its ratio is the
-  *    LOAD FACTOR — 1.0 on a quiet machine, ~N when N-fold contention
-  *    steals the cores. Probed once before the sweep and once before each
-  *    flagged rerun, and recorded in BENCH_FULL.json, so the artifact
-  *    carries the evidence needed to adjudicate its own flags.
+  *    (`calibration_sec` in tools/bench_anchor.json, measured with
+  *    `calibration_cores` cores). Its ratio to the anchor scaled to this
+  *    session's cores ([[loadFactor]]) is the LOAD FACTOR — 1.0 on a
+  *    quiet machine, ~N when N-fold contention steals the cores. Probed
+  *    once before the sweep and once before each flagged rerun, and
+  *    recorded in BENCH_FULL.json, so the artifact carries the evidence
+  *    needed to adjudicate its own flags.
   *  - END-OF-SWEEP RERUN: an apparent regression is re-measured in a
   *    second pass AFTER the whole sweep (minutes later — outlasting load
   *    spikes that an immediate rerun sits inside), keeping the min. A real
@@ -27,7 +29,8 @@ import org.apache.spark.sql.SparkSession
   *
   * `runMain graft.Bench calibrate` instead measures the probe on THIS
   * machine (run quiet) and prints per-run seconds — the min of the warm
-  * runs is what tools/bench_anchor.json commits as `calibration_sec`.
+  * runs is what tools/bench_anchor.json commits as `calibration_sec`, and
+  * the session's cores as `calibration_cores`.
   * Same session as the sweep ([[GraftSession.local]]) — the probe's
   * runtime is session-shape sensitive (AQE coalesces the partial-agg
   * stage) — so the timing transfers.
@@ -46,9 +49,20 @@ object Bench {
       // drop run 1 (codegen compile); commit the min of the rest
       println(f"calibration probe runs: ${times.map(t => f"$t%.3f").mkString(", ")}")
       println(f"calibration_sec (min of warm runs): ${times.tail.min}%.3f")
+      println(s"calibration_cores: ${spark.sparkContext.defaultParallelism}")
     } else sweep(spark)
     spark.stop()
   }
+
+  /** A probe run's load factor: `probeSec` over the anchor `calSec`
+    * scaled by `calCores / cores`. The probe spreads over every core, so
+    * an idle host with a quarter of the anchor's cores takes four times
+    * the anchor. 1.0 without an anchor; no scaling without `calCores`.
+    */
+  private[graft] def loadFactor(probeSec: Double, calSec: Double,
+      calCores: Double, cores: Int): Double =
+    if (calSec <= 0) 1.0
+    else probeSec / (calSec * (if (calCores > 0) calCores / cores else 1.0))
 
   /** Fixed CPU-bound calibration probe: 2^31 modular folds across all
     * cores, data-independent and shuffle-free — its runtime moves only
@@ -92,10 +106,11 @@ object Bench {
     }
 
     probeSec(spark) // warm the probe's codegen so timings measure load, not JIT
-    val calAnchor = anchor.getOrElse("calibration_sec", 0.0)
-    def loadFactor(): Double =
-      if (calAnchor <= 0) 1.0 else probeSec(spark) / calAnchor
-    val loadStart = loadFactor()
+    def probeLoad(): Double = loadFactor(probeSec(spark),
+      anchor.getOrElse("calibration_sec", 0.0),
+      anchor.getOrElse("calibration_cores", 0.0),
+      spark.sparkContext.defaultParallelism)
+    val loadStart = probeLoad()
 
     val errors = scala.collection.mutable.ListBuffer.empty[String]
     // SPARK_GRAFT_BENCH_VERBOSE=1 → per-query progress on stderr (long
@@ -157,7 +172,7 @@ object Bench {
     val rerunLoad = scala.collection.mutable.Map.empty[String, Double]
     val results = firstPass.map { case (name, fn, sec) =>
       if (regressed(name, sec) && !errors.contains(name)) {
-        rerunLoad(name) = loadFactor()
+        rerunLoad(name) = probeLoad()
         name -> math.min(sec, time(name, fn, recordError = false))
       } else name -> sec
     }

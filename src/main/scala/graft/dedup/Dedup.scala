@@ -397,22 +397,40 @@ object Dedup {
     * components (min-doc_id label per component) — the step that converts
     * pairwise similarity into an actionable keep/drop set when dup chains
     * overlap (a~b, b~c ⇒ one cluster {a,b,c}, keep a).
-    * Spark side: iterative min-label propagation over the symmetric edge
-    * list (each round: label = min(own, neighbors'); converges in
-    * O(component diameter) rounds — components here are tiny, and at
-    * 100 TB this is the standard large-graph CC loop, one join+agg per
-    * round). The oracle computes the same components with a recursive-CTE
-    * transitive closure.
+    * Spark side: [[labelClusters]] — union-find on the driver while the
+    * pinned pair list fits the broadcast threshold, else iterative
+    * min-label propagation over the symmetric edge list (each round:
+    * label = min(own, neighbors'); converges in O(component diameter)
+    * rounds — at 100 TB the standard large-graph CC loop, one join+agg
+    * per round). The oracle computes the same components with a
+    * recursive-CTE transitive closure.
     */
-  /** Shared CC engine: iterative min-label propagation over an undirected
-    * (i, j) pair list. Returns (<idCol>, cluster, is_kept) for every node
-    * with at least one edge. One join+agg per round, a pin to truncate
-    * the growing lineage, the round's label sum as the only driver-side
-    * state — the standard large-graph CC loop.
+  /** Shared CC engine over an undirected (i, j) pair list of integral
+    * ids. Returns (<idCol>, cluster, is_kept) for every node with at
+    * least one edge, ordered by <idCol>, cluster = the component's min id.
+    *
+    * SIZE RULE: the pairs are pinned first, and the pin measures their
+    * size without a job. When that size is at most
+    * `spark.sql.autoBroadcastJoinThreshold` (≥ 0), the pairs are
+    * collected once and solved on the driver by union-find
+    * ([[componentsOnDriver]]) — 2 jobs per call, the pin and the collect.
+    * That is the same rule under which the loop below would broadcast the
+    * whole label set through the driver every round anyway. Above it (or
+    * with the threshold at -1) runs iterative min-label propagation: one
+    * join+agg per round, a pin to truncate the growing lineage, the
+    * round's label sum as the only driver-side state — the standard
+    * large-graph CC loop, about 3 AQE jobs per round (the broadcast, the
+    * shuffle-map stage and the pin's result job), counted in [[ccRounds]].
     */
   private[graft] def labelClusters(pairs: DataFrame, idCol: String,
       maxRounds: Int = 50): DataFrame = {
     val p = pairs.pin()
+    val threshold = p.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    if (threshold >= 0 &&
+        p.queryExecution.optimizedPlan.stats.sizeInBytes <= threshold) {
+      val solved = componentsOnDriver(p, idCol)
+      if (solved.isDefined) { Pin.unpin(p); return solved.get }
+    }
     val nPart = p.sparkSession.sessionState.conf.numShufflePartitions
     // ROUND-18 SHUFFLE REUSE (guide §2.4): the edge list — the loop's only
     // O(n·k) frame — is hash-partitioned on the probe key ONCE and pinned
@@ -462,7 +480,9 @@ object Dedup {
     // second job over the pinned rows — same aggregate over the same rows,
     // so the value is identical whichever path delivers it; on observation
     // timeout fall back to that second job (see
-    // [[graft.functions.observedOrNone]]). One scheduled job per CC round.
+    // [[graft.functions.observedOrNone]]). About 3 AQE jobs per round: the
+    // labels' broadcast, the transpose's shuffle-map stage and this pin's
+    // result job — which is why small edge lists skip the loop entirely.
     def pinSummed(df: DataFrame): (DataFrame, Option[Any]) = {
       val o = org.apache.spark.sql.Observation()
       val pinned = df
@@ -498,6 +518,7 @@ object Dedup {
       converged = s == prevSum
       prevSum = s
       rounds += 1
+      ccRounds.incrementAndGet()
     }
     // the oracle computes the FULL transitive closure — returning
     // non-converged labels would surface as an opaque hash mismatch
@@ -507,6 +528,49 @@ object Dedup {
     labels
       .withColumn("is_kept", (col(idCol) === col("cluster")).cast("int"))
       .orderBy(col(idCol))
+  }
+
+  /** Loop rounds run by [[labelClusters]]' propagation loop (a driver
+    * solve adds none) — the CC decision of each call, recorded. */
+  private[graft] val ccRounds = new java.util.concurrent.atomic.AtomicLong(0)
+
+  /** Driver-side CC of the pinned pair list `p`: one collect, then
+    * union-find over primitive arrays — the sorted distinct ids and one
+    * int parent per id, each root the smallest index (= the min id) of
+    * its component. Rows come out in id order, ids in their original
+    * type. None (the caller runs the loop) when an id is null.
+    */
+  private def componentsOnDriver(p: DataFrame, idCol: String): Option[DataFrame] = {
+    val rows = p.select(col("i").cast("long"), col("j").cast("long")).collect()
+    if (rows.exists(r => r.isNullAt(0) || r.isNullAt(1))) return None
+    val ends = rows.flatMap(r => Array(r.getLong(0), r.getLong(1)))
+    val ids = {
+      val s = ends.clone()
+      java.util.Arrays.sort(s)
+      var n = 0
+      s.indices.foreach { k => if (n == 0 || s(k) != s(n - 1)) { s(n) = s(k); n += 1 } }
+      java.util.Arrays.copyOf(s, n)
+    }
+    val parent = Array.range(0, ids.length)
+    def find(x0: Int): Int = {
+      var x = x0
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    def index(id: Long): Int = java.util.Arrays.binarySearch(ids, id)
+    rows.indices.foreach { k =>
+      val a = find(index(ends(2 * k)))
+      val b = find(index(ends(2 * k + 1)))
+      parent(math.max(a, b)) = math.min(a, b)
+    }
+    val labels = ids.indices.map { k =>
+      val root = find(k)
+      (ids(k), ids(root), if (root == k) 1 else 0)
+    }
+    val t = p.schema("i").dataType
+    Some(p.sparkSession.createDataFrame(labels).toDF(idCol, "cluster", "is_kept")
+      .select(col(idCol).cast(t).as(idCol), col("cluster").cast(t).as("cluster"),
+        col("is_kept")))
   }
 
   def d7DedupClusters(spark: SparkSession, sfDir: String): DataFrame =
@@ -1567,7 +1631,7 @@ object Dedup {
     * published form (cluster → within-cluster graph → keep one) is
     * exactly this composition. Edges ride s15's production output — the
     * graph is built once and reused across dedup, clustering and
-    * retrieval — then d7/d8's iterative min-label CC engine labels
+    * retrieval — then d7/d8's CC engine [[labelClusters]] labels
     * components; singletons keep themselves.
     * 100 TB: s15's candidate stage is the bounded (t, bucket) self-join;
     * CC runs over ≤ n·k/2 8-byte edges; the keep decision is one

@@ -489,7 +489,7 @@ object Multimodal {
     * the asset-dedup decision a media pipeline actually applies (pairs
     * alone double-drop when a re-encode chain A~B~C arrives; the CC
     * closure keeps exactly one of the chain). Engine = d7/d8's shared
-    * iterative min-label [[graft.dedup.Dedup.labelClusters]] over the
+    * CC engine [[graft.dedup.Dedup.labelClusters]] over the
     * m6 pigeonhole-blocked pairs; output covers every asset WITH at
     * least one near-dup edge (singletons are trivially their own keeper
     * — same contract as d7). The oracle composes m6's dHash CTEs with

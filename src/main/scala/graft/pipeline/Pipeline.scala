@@ -213,17 +213,25 @@ final class CompositeDataSink(children: Seq[DataSink]) extends DataSink {
   *     counts in [[DataPipeline.fillFailures]].
   *
   * Transformer chains come from Dijkstra over (type → type, cost) edges —
-  * resolved once per (source type, target) on the driver; the chain itself
-  * is function composition over the lazy DataFrame.
+  * resolved once per (from, to) on the driver and memoized, since the
+  * transformer set is fixed at construction; the chain itself is function
+  * composition over the lazy DataFrame.
   */
 final class DataPipeline(
     elements: Seq[Either[DataSource, DataSink]],
     transformers: Seq[Transformer] = Nil) {
 
+  private val byFrom = transformers.groupBy(_.from)
+  private val chains =
+    scala.collection.concurrent.TrieMap.empty[(String, String),
+      Option[(Seq[Transformer], Double)]]
+
   /** Cheapest transformer chain from → to (empty chain if from == to). */
-  def chain(from: String, to: String): Option[(Seq[Transformer], Double)] = {
+  def chain(from: String, to: String): Option[(Seq[Transformer], Double)] =
+    chains.getOrElseUpdate((from, to), cheapest(from, to))
+
+  private def cheapest(from: String, to: String): Option[(Seq[Transformer], Double)] = {
     if (from == to) return Some((Nil, 0.0))
-    val byFrom = transformers.groupBy(_.from)
     val dist = mutable.Map(from -> 0.0)
     val prev = mutable.Map.empty[String, Transformer]
     val pq = mutable.PriorityQueue((0.0, from))(Ordering.by(-_._1))

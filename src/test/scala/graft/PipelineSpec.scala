@@ -67,6 +67,23 @@ class PipelineSpec extends GraftSuite {
     assert(p.chain("A", "C").get._2 === 2.0)
   }
 
+  test("P4: chains are memoized per (from, to): a second get reads no transformer cost") {
+    import spark.implicits._
+    val (src, _) = countingSource(Map("A" -> Seq(1).toDF("x")))
+    var costReads = 0
+    val aToB = new Transformer {
+      val from = "A"; val to = "B"
+      override def cost: Double = { costReads += 1; 1.0 }
+      def transform(df: DataFrame): DataFrame = df
+    }
+    val p = new DataPipeline(Seq(Left(src)), Seq(aToB))
+    p.get("B")
+    assert(costReads > 0, "the first get resolves the chain")
+    val afterFirst = costReads
+    p.get("B")
+    assert(costReads === afterFirst, "the second get re-ran the chain search")
+  }
+
   test("P5: composite source falls through NotFound; Unsupported propagates") {
     import spark.implicits._
     val empty = new MemorySource(Map.empty, advertised = Set("T"))

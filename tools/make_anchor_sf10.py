@@ -27,6 +27,10 @@ with open("tools/bench_anchor.json") as f:
     a = json.load(f)
     cal = a.get("calibration_sec") or a.get("queries", {}).get(
         "calibration_sec")
+    # the cores the probe anchor was measured with: Bench scales the
+    # anchor by calibration_cores / cores
+    cores = a.get("calibration_cores") or a.get("queries", {}).get(
+        "calibration_cores")
 if cal is None:
     sys.exit("calibration_sec not found in tools/bench_anchor.json")
 
@@ -38,6 +42,8 @@ if bench.get("errors"):
           f"(regression gate skips them): {bench['errors']}")
 
 anchor = {"calibration_sec": cal}
+if cores is not None:
+    anchor["calibration_cores"] = cores
 anchor.update({k: round(v, 3) for k, v in sorted(bench["queries"].items())})
 # metadata keys UPPERCASE so Bench's regex scraper ("([a-z0-9_]+)": <num>)
 # cannot mistake them for query anchors
