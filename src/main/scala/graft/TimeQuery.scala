@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -10,7 +11,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Usage: runMain graft.TimeQuery <name[,name...]> [sfDir] [reps] [explain|stages]
   *
   *  - no mode: one line per query, `<name>: t1, t2, … s (min t)`
-  *    (tools/dualcontrol.sh parses it), then `<name> rows: n`;
+  *    (tools/dualcontrol.sh parses it), then `<name> rows: n` and
+  *    `<name> compiles: n, n, …`, the classes codegen compiled in each
+  *    rep (0 once the session's codegen cache holds the query's classes);
   *  - `explain`: each formatted physical plan first (`reps` = 0 only
   *    prints the plans);
   *  - `stages`: one warm run (codegen, one-time index builds), then the
@@ -18,7 +21,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    metrics — executor run/CPU time, shuffle read/write bytes, spill —
   *    summed over the reps, so a slow query's seconds can be attributed
   *    to a stage (and through its callsite, to an operator) without the
-  *    Spark UI.
+  *    Spark UI. The total line counts the classes compiled over the
+  *    timed reps, so a warm run that left codegen work behind shows.
   *
   * Besides the SparkEntry names, `flagship` is the full
   * [[ops.Curation.curate]] pipeline at `sfDir`; its production
@@ -78,10 +82,11 @@ object TimeQuery {
             println(s"===== $name =====")
             df().explain("formatted")
           }
-          val (times, rows) = timed(a.reps, df)
+          val (times, rows, compiled) = timed(a.reps, df)
           if (times.nonEmpty) {
             println(f"$name: ${fmt(times)} s (min ${times.min}%.3f)")
             println(s"$name rows: $rows")
+            println(s"$name compiles: ${compiled.mkString(", ")}")
           }
       }
     }
@@ -91,15 +96,25 @@ object TimeQuery {
   private def fmt(times: Seq[Double]): String =
     times.map(t => f"$t%.3f").mkString(", ")
 
-  /** `reps` timed `.count()`s: the seconds of each, and the last count. */
-  private def timed(reps: Int, df: () => DataFrame): (Seq[Double], Long) = {
+  /** Classes Spark's codegen has compiled in this JVM so far (one per
+    * codegen cache miss, driver and local executors alike).
+    */
+  private[graft] def compiles(): Long =
+    CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  /** `reps` timed `.count()`s: the seconds and the classes compiled of
+    * each, and the last count.
+    */
+  private def timed(reps: Int,
+      df: () => DataFrame): (Seq[Double], Long, Seq[Long]) = {
     var rows = 0L
-    val times = (1 to reps).map { _ =>
+    val runs = (1 to reps).map { _ =>
+      val c0 = compiles()
       val t0 = System.nanoTime()
       rows = df().count()
-      (System.nanoTime() - t0) / 1e9
+      ((System.nanoTime() - t0) / 1e9, compiles() - c0)
     }
-    (times, rows)
+    (runs.map(_._1), rows, runs.map(_._2))
   }
 
   private final case class StageRow(id: Int, name: String, tasks: Int,
@@ -125,7 +140,7 @@ object TimeQuery {
       }
     }
     spark.sparkContext.addSparkListener(listener)
-    val (times, rowsOut) = timed(reps, df)
+    val (times, rowsOut, compiled) = timed(reps, df)
     // drain the listener bus deterministically (a fixed sleep raced late
     // stage-completed events), then snapshot under the same lock the
     // listener appends with
@@ -138,6 +153,6 @@ object TimeQuery {
     snap.sortBy(-_.wallMs).take(40).foreach { r =>
       println(f"${r.id}%-6d${r.tasks}%6d${r.wallMs}%9d${r.runMs}%9d${r.cpuMs}%9d${r.srMB}%9.1f${r.swMB}%9.1f${r.spillMB}%7.1f  ${r.name}")
     }
-    println(f"total stage wall ${snap.map(_.wallMs).sum}ms, run ${snap.map(_.runMs).sum}ms, cpu ${snap.map(_.cpuMs).sum}ms over ${snap.size} stages")
+    println(f"total stage wall ${snap.map(_.wallMs).sum}ms, run ${snap.map(_.runMs).sum}ms, cpu ${snap.map(_.cpuMs).sum}ms over ${snap.size} stages; ${compiled.sum} classes compiled")
   }
 }
